@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver-run per round at sf0.1). Methodology:
   *  - queries run in sorted name order, after one untimed warmup query
   *    that absorbs JVM/codegen/parquet-footer warmup (round-1 bench
@@ -79,16 +77,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = tools.Harness.cpus
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = tools.Harness.session("WARN")
     // Calibration first, on a fresh JVM state identical across rounds
     // (the probe carries its own untimed warmup for codegen compile).
     val cpusInt = scala.util.Try(cpus.toInt).getOrElse(4)
@@ -101,11 +92,7 @@ object Bench {
     // Optional args restrict the run to the named queries (exact names
     // or short keys), for local single-query probes; the driver passes
     // no args and always benches the full registry.
-    val all = SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (args.isEmpty) all
-      else all.filter(n => args.contains(n) || args.contains(n.takeWhile(_ != '_')))
-    require(names.nonEmpty, s"no queries match args ${args.mkString(",")}")
+    val names = tools.Harness.select(args.toSeq)
     // One query failing must not zero the timing signal for the other
     // ~120 (the round-10/11 blackout): every execution is wrapped, the
     // first failure per query is recorded (name -> exception summary),

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -59,23 +59,15 @@ object Verify {
   }
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // Optional extra args: run only the named queries (dev iteration).
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Optional extra args: run only the named queries (exact names or
+    // short keys, for dev iteration).
+    val names = tools.Harness.select(args.drop(2).toSeq)
+    val spark = tools.Harness.session("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    val queries = SparkEntry.queries
+    names.foreach { name =>
       try {
-        val out = fn(spark, sfDir)
+        val out = queries(name)(spark, sfDir)
         lintNoDecimalOutput(name, out)
         lintNoComplexOutput(name, out)
         out.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")

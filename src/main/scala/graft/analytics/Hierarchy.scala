@@ -40,29 +40,27 @@ object Hierarchy {
     val nodes = df.select(col(nodeCol).as("node"),
       col(parentCol).as("parent"),
       col(measureCol).cast("long").as("own"))
-    var p = graft.core.Iterate.barrier(nodes.filter(col("parent").isNotNull)
-      .select(col("parent").as("anc"), col("node").as("des"))
-      .distinct())
-    var size = p.count()
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      round += 1
+    val (p0, size0) = graft.core.Iterate.barrierCounted(
+      nodes.filter(col("parent").isNotNull)
+        .select(col("parent").as("anc"), col("node").as("des"))
+        .distinct(), lit(true))
+    // State: (closure, its size, converged); the size rides each
+    // barrier's own action (no separate count job).
+    val (p, _, _) = graft.core.Iterate.fixpoint((p0, size0, false),
+        maxRounds,
+        s"subtreeRollup closure still growing after $maxRounds squaring " +
+          "rounds (depth over 2^rounds); refusing to emit wrong totals")(
+        _._3) { case ((p, size, _), _) =>
       // barrier, not plain localCheckpoint: p appears three times in
       // this round's plan — the stats-feedback reset of
       // [[graft.core.Iterate]] keeps estimate digits flat
-      val next = graft.core.Iterate.barrier(p.union(
+      val (next, nextSize) = graft.core.Iterate.barrierCounted(p.union(
           p.select(col("anc"), col("des").as("__mid"))
             .join(p.select(col("anc").as("__mid"), col("des")), "__mid")
             .select(col("anc"), col("des")))
-        .distinct())
-      val nextSize = next.count()
-      if (nextSize == size) done = true
-      else { p = next; size = nextSize }
+        .distinct(), lit(true))
+      if (nextSize == size) (p, size, true) else (next, nextSize, false)
     }
-    if (!done) throw new IllegalStateException(
-      s"subtreeRollup closure still growing after $maxRounds squaring " +
-        "rounds (depth over 2^rounds); refusing to emit wrong totals")
     if (!p.filter(col("anc") === col("des")).isEmpty)
       throw new IllegalStateException(
         "subtreeRollup: cycle detected (a node is its own proper " +
@@ -117,18 +115,19 @@ object Hierarchy {
       col(parentCol).as("parent"))
     val nNodes = nodes.count()
     // segments: top --(hops, path suffix "/n1/n2")--> node
-    var seg = graft.core.Iterate.barrier(
+    val (seg0, size0) = graft.core.Iterate.barrierCounted(
       nodes.filter(col("parent").isNotNull)
         .select(col("parent").as("top"), col("node"),
           lit(1L).as("hops"),
           concat(lit("/"), col("node").cast("string")).as("path"))
-        .distinct())
-    var size = seg.count()
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      round += 1
-      val next = graft.core.Iterate.barrier(seg.union(
+        .distinct(), lit(true))
+    // State: (segments, their count, converged).
+    val (seg, _, _) = graft.core.Iterate.fixpoint((seg0, size0, false),
+        maxRounds,
+        s"materializedPaths closure still growing after $maxRounds " +
+          "squaring rounds (depth over 2^rounds); refusing partial paths")(
+        _._3) { case ((seg, size, _), _) =>
+      val (next, nextSize) = graft.core.Iterate.barrierCounted(seg.union(
           seg.select(col("top"), col("node").as("__mid"),
               col("hops").as("__h1"), col("path").as("__p1"))
             .join(seg.select(col("top").as("__mid"), col("node"),
@@ -137,14 +136,9 @@ object Hierarchy {
               (col("__h1") + col("__h2")).as("hops"),
               concat(col("__p1"), col("__p2")).as("path"))
             .filter(col("hops") < nNodes))
-        .distinct())
-      val nextSize = next.count()
-      if (nextSize == size) done = true
-      else { seg = next; size = nextSize }
+        .distinct(), lit(true))
+      if (nextSize == size) (seg, size, true) else (next, nextSize, false)
     }
-    if (!done) throw new IllegalStateException(
-      s"materializedPaths closure still growing after $maxRounds " +
-        "squaring rounds (depth over 2^rounds); refusing partial paths")
     val roots = nodes.filter(col("parent").isNull)
       .select(col("node").as("top"))
     // maximal segments = those whose top is a root; roots themselves
@@ -179,9 +173,9 @@ object Hierarchy {
     * Iteration is one level per round (allocation is inherently
     * level-sequential — a child's amount needs its parent's FINAL
     * amount), each round one join + two partitioned windows, frontier
-    * = the just-allocated level ([[graft.core.Iterate.barrier]]
-    * per round). Depth is the round count — hierarchies are shallow
-    * (stated). Zero/negative weights refused loudly (a zero-weight
+    * = the just-allocated level ([[graft.core.Iterate.barrierCounted]]
+    * per round; an empty level ends the descent). Depth is the round
+    * count — hierarchies are shallow (stated). Zero/negative weights refused loudly (a zero-weight
     * sibling group cannot split anything); nodes not reachable from
     * the seeded roots are absent from the output (seeding a subtree
     * is a legitimate call), but a round cap throws rather than spin
@@ -205,26 +199,27 @@ object Hierarchy {
       throw new IllegalArgumentException(
         "allocateDown: non-positive child weight — largest-remainder " +
           "allocation needs strictly positive sibling weights")
-    var frontier = amounts.select(col(nodeCol).as("node"),
+    val seed = amounts.select(col(nodeCol).as("node"),
         col(amountCol).cast("long").as("amount"))
       .withColumn("depth", lit(0L)).localCheckpoint()
-    if (!frontier.filter(col("amount") < 0).isEmpty)
+    if (!seed.filter(col("amount") < 0).isEmpty)
       throw new IllegalArgumentException(
         "allocateDown: negative seed amount — truncating div breaks " +
           "the exact-sum invariant for negative parents (children " +
           "would sum to more than the parent)")
-    var result = frontier
-    var round = 0
-    var done = false
     val wSib = org.apache.spark.sql.expressions.Window
       .partitionBy(col("parent"))
-    while (!done && round < maxRounds) {
-      round += 1
-      val kids = t.join(frontier.select(col("node").as("parent"),
-        col("amount").as("__pa"), col("depth").as("__pd")), "parent")
-      if (kids.isEmpty) done = true
-      else {
-        val alloc = graft.core.Iterate.barrier(kids
+    // State: (allocated levels, root level first; done). A round that
+    // allocates no child ends the descent; its count rides the level's
+    // own barrier (no separate emptiness job).
+    val (levels, _) = graft.core.Iterate.fixpoint((Vector(seed), false),
+        maxRounds,
+        s"allocateDown still descending after $maxRounds rounds " +
+          "(depth over the cap, or a cyclic parent relation)")(_._2) {
+      case ((levels, _), _) =>
+        val kids = t.join(levels.last.select(col("node").as("parent"),
+          col("amount").as("__pa"), col("depth").as("__pd")), "parent")
+        val (alloc, nAlloc) = graft.core.Iterate.barrierCounted(kids
           .withColumn("__sw", sum(col("__w")).over(wSib))
           .withColumn("__base", expr("(__pa * __w) div __sw"))
           .withColumn("__rem", expr("(__pa * __w) % __sw"))
@@ -237,14 +232,10 @@ object Hierarchy {
             (col("__base") +
               when(col("__rnk") <= col("__leftover"), 1L).otherwise(0L))
               .as("amount"))
-          .select(col("node"), col("amount"), col("depth")))
-        frontier = alloc
-        result = result.unionByName(alloc)
-      }
+          .select(col("node"), col("amount"), col("depth")), lit(true))
+        if (nAlloc == 0L) (levels, true) else (levels :+ alloc, false)
     }
-    if (!done) throw new IllegalStateException(
-      s"allocateDown still descending after $maxRounds rounds " +
-        "(depth over the cap, or a cyclic parent relation)")
-    result.select(col("node"), col("depth"), col("amount"))
+    levels.reduce(_ unionByName _)
+      .select(col("node"), col("depth"), col("amount"))
   }
 }

@@ -1,11 +1,15 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.broadcast
-import org.apache.spark.sql.functions.{sum, when}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{broadcast, col, lit, max, min, sum, when}
 
-/** Round barrier for iterative dataframe algorithms (label
+/** Round barrier and loop for iterative dataframe algorithms (label
   * propagation, frontier relaxation, closure squaring, fixpoints).
+  * Every convergence loop in LinkGraph, Dedup.componentLabels and
+  * Hierarchy runs through [[fixpoint]] (round index, convergence test,
+  * cap, loud error); each round body materializes its state through
+  * [[barrier]] / [[barrierCounted]], whose observed count is the
+  * loop's convergence signal.
   *
   * `localCheckpoint()` alone cuts LINEAGE but not the STATS feedback:
   * the checkpointed `LogicalRDD` leaf inherits the origin plan's
@@ -100,31 +104,80 @@ object Iterate {
     * which is right when nothing better is known — but the loops that
     * call this KNOW the state's exact row count for free (it rides the
     * round's own barrier as an observe metric), so the decision can be
-    * made on DATA, not estimates: below the floor the state side of
-    * the round's join broadcasts, removing every exchange of the
-    * (at scale, far larger) edge/relation side; above it the join
-    * keeps the shuffle path that big state genuinely needs. The floor
-    * is rows, not bytes, because these state frames are uniformly
-    * narrow (an id and a label/count); 500k rows of two ids is a few
-    * tens of MB framed — well inside the guide's "a few hundred MB is
-    * usually fine" broadcast budget, and far under the 8 GB / 512M-row
-    * hard cap. Overridable via `spark.graft.iterate.broadcastRowFloor`
-    * (0 disables). Unlike the removed AQE gate this mutates nothing
-    * session-global: the hint rides the one plan it belongs to. */
+    * made on DATA, not estimates: below [[BroadcastRowFloor]] the
+    * state side of the round's join broadcasts, removing every
+    * exchange of the (at scale, far larger) edge/relation side; at or
+    * above it the join keeps the shuffle path that big state genuinely
+    * needs. The floor is rows, not bytes, because these state frames
+    * are uniformly narrow (an id and a label/count); 500k rows of two
+    * ids is a few tens of MB framed — well inside the guide's "a few
+    * hundred MB is usually fine" broadcast budget, and far under the
+    * 8 GB / 512M-row hard cap. Unlike the removed AQE gate this
+    * mutates nothing session-global: the hint rides the one plan it
+    * belongs to. */
   def broadcastIfSmall(df: DataFrame, measuredRows: Long): DataFrame =
-    if (fitsBroadcast(df.sparkSession, measuredRows)) broadcast(df) else df
+    if (measuredRows >= 0 && measuredRows < BroadcastRowFloor) broadcast(df)
+    else df
 
-  /** The [[broadcastIfSmall]] decision, exposed so loops can also pick
-    * the round SHAPE from the same measured-rows signal (e.g. a deeper
-    * pointer jump is one extra map-side join when the state
-    * broadcasts, but one extra full shuffle when it does not). */
-  def fitsBroadcast(spark: SparkSession, measuredRows: Long): Boolean = {
-    val key = "spark.graft.iterate.broadcastRowFloor"
-    val floor = spark.conf.getOption(key).map { v =>
-      scala.util.Try(v.trim.toLong).getOrElse(
-        throw new IllegalArgumentException(
-          s"$key must be a whole number of rows, got '$v'"))
-    }.getOrElse(500000L)
-    measuredRows >= 0 && measuredRows < floor
+  private val BroadcastRowFloor = 500000L
+
+  /** The one convergence loop of every fixpoint operator: starting
+    * from `seed`, run `round(state, i)` for i = 1, 2, … until `done`
+    * holds. `done` is checked BEFORE each round, so a seed that is
+    * already done runs zero rounds. Once `maxRounds` rounds have run
+    * and `done` still fails, throws `IllegalStateException(onCap)` —
+    * a capped fixpoint is a wrong answer, never a silent
+    * approximation (the componentLabels contract). Only the control
+    * logic lives here; each round body materializes its own state
+    * through [[barrier]]/[[barrierCounted]] (the loops take one to
+    * five barriers per round). */
+  def fixpoint[S](seed: S, maxRounds: Int, onCap: => String)
+                 (done: S => Boolean)(round: (S, Int) => S): S = {
+    @annotation.tailrec
+    def go(s: S, i: Int): S =
+      if (done(s)) s
+      else if (i >= maxRounds) throw new IllegalStateException(onCap)
+      else go(round(s, i + 1), i + 1)
+    go(seed, 0)
+  }
+
+  /** One fused min-label relaxation round, shared by
+    * `Dedup.componentLabels` and `LinkGraph.stronglyConnected`: every
+    * node d receives label(s) over ONE relation R = `rel` ∪ pointer
+    * edges (label(v), v) ∪ tagged self-loops (v, v), so "pull labels
+    * across edges", "pointer-jump to label(label(v))" and "keep own
+    * label" are one join + one (d) aggregate per round (r19 opt,
+    * guide §2.1: the three relaxations as separate joins cost ≈5–7
+    * exchanges per round, each its own AQE stage-job). `rel` carries
+    * (s, d); `labels` carries (node, label) with exactly one row per
+    * node, `labelRows` of them (measured), so below the broadcast
+    * floor the labels side broadcasts and the aggregate is the
+    * round's only exchange. The self branch is the only one tagged
+    * `__self`, so max(when(__self, label)) is each node's previous
+    * label: returns the barrier-materialized (node, label, __old)
+    * frame and the count of nodes whose label changed, from the same
+    * action (one job per round).
+    *
+    * A second pointer jump per round (label³) was measured slower in
+    * both callers, in r19 as an extra shuffled join and in r20 as a
+    * broadcast-gated map-side join (11-query fixpoint suite 45.8 s
+    * with it vs 43.9 s without, min of 3): extra rounds of this cheap
+    * fused round beat an extra join per round. */
+  def minLabelRound(rel: DataFrame, labels: DataFrame,
+                    labelRows: Long): (DataFrame, Long) = {
+    val labelType = labels.schema("label").dataType
+    val relation = rel.select(col("s"), col("d"), lit(false).as("__self"))
+      .union(labels.select(col("label").as("s"), col("node").as("d"),
+        lit(false).as("__self")))
+      .union(labels.select(col("node").as("s"), col("node").as("d"),
+        lit(true).as("__self")))
+    barrierCounted(relation
+      .join(broadcastIfSmall(
+        labels.select(col("node").as("s"), col("label")), labelRows), "s")
+      .groupBy(col("d").as("node"))
+      .agg(min("label").as("label"),
+        max(when(col("__self"), col("label"))
+          .otherwise(lit(null).cast(labelType))).as("__old")),
+      col("label") =!= col("__old"))
   }
 }

@@ -650,79 +650,37 @@ object Dedup {
     val (labels0, nNodes) = graft.core.Iterate.barrierCounted(
       edges.select(col("src").as("node")).distinct()
         .withColumn("label", col("node")), lit(true))
-    var labels = labels0
-    val labelType = labels.schema("label").dataType
     // no checkpoint on the empty seed notices: materializing a frame
     // that is empty BY CONSTRUCTION cost one job per call (r19 opt);
     // round 1's barrier evaluates the filter(false) at filter cost
-    var notices = labels.filter(lit(false))
-      .select(col("node"), col("label"))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      // r19 opt (guide §2.1, remove shuffles): every relaxation of a
-      // round — neighbor labels across edges, pointer jump to
-      // label(label(v)), parent notify, keep-own-label — is the same
-      // shape "node d receives label(s)". Earlier rounds ran them as
-      // THREE separate hash joins feeding a 5-branch union (≈7
-      // exchanges per round; with AQE each exchange is its own
-      // stage-job). Building ONE relation R and doing ONE join + one
-      // aggregate per round cuts that to 3 exchanges:
+    val notices0 = labels0.filter(lit(false)).select(col("node"), col("label"))
+    // State: (labels, notices, converged).
+    graft.core.Iterate.fixpoint((labels0, notices0, false), maxIterations,
+        s"componentLabels did not converge in $maxIterations rounds " +
+          "(far beyond any real component's need under jump + notify " +
+          "acceleration — this indicates a bug, not a data property)")(
+        _._3) { case ((labels, notices, _), _) =>
+      // One fused round (graft.core.Iterate.minLabelRound, r19 opt)
+      // over R = edges ∪ notify ∪ pointer ∪ self:
       //   edges      (src, dst)       -> neighbor labels
-      //   pointer    (label(v), v)    -> label(label(v))
-      //   self       (v, v) [tagged]  -> own label + __old carrier
       //   notify     (changed v, its former label)
       //              -> the former parent hears the new min in one
       //                 round (Rastogi et al. ICDE 2013; the changed
       //                 node's CURRENT label is exactly the value the
       //                 old notice rows carried)
-      // The second pointer jump (label³) that round-18 measured as a
-      // win against the 3-join shape was re-measured against THIS
-      // shape and lost: it needs its own extra join stage per round,
-      // and the fused round is cheap enough that extra rounds cost
-      // less than extra per-round joins. Each node contributes
-      // exactly one __self row, so max(when(__self, label)) is the
-      // node's previous label and the convergence count rides the
-      // same barrier action (barrierCounted), one job per round.
-      // (r20 re-measured a broadcast-gated label³ deep jump here —
-      // one extra map-side join per round when the state broadcasts —
-      // and it LOST again: min-of-3 across the 11 fixpoint bench
-      // queries 45.8 s with the jump vs 43.9 s without. The fused
-      // round is cheap enough that extra rounds beat extra joins
-      // even when the extra join never shuffles. Kept label².)
-      val ptr = labels.select(col("label").as("s"), col("node").as("d"))
-      val relation = edges.select(col("src").as("s"), col("dst").as("d"),
-          lit(false).as("__self"))
-        .union(ptr.select(col("s"), col("d"), lit(false).as("__self")))
-        .union(labels.select(col("node").as("s"), col("node").as("d"),
-          lit(true).as("__self")))
-        .union(notices.select(col("node").as("s"), col("label").as("d"),
-          lit(false).as("__self")))
-      // r20 (guide §3.1): labels is one row per node — its exact count
-      // is known (nNodes, measured at the seed). Below the floor it
-      // broadcasts, so the round's only exchange is the (d) aggregate:
-      // the edge/pointer/notify relation — the BIG side at scale —
-      // never shuffles for the join (3 exchanges/round → 1). Above the
-      // floor the shuffle path stays.
-      val (next, nChanged) = graft.core.Iterate.barrierCounted(relation
-        .join(graft.core.Iterate.broadcastIfSmall(
-          labels.select(col("node").as("s"), col("label")), nNodes), "s")
-        .groupBy(col("d").as("node"))
-        .agg(min("label").as("label"),
-          max(when(col("__self"), col("label"))
-            .otherwise(lit(null).cast(labelType))).as("__old")),
-        col("label") =!= col("__old"))
-      notices = next.filter(col("label") =!= col("__old"))
-        .select(col("node"), col("__old").as("label"))
-      converged = nChanged == 0L
-      labels = next.select("node", "label")
-      i += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"componentLabels did not converge in $maxIterations rounds " +
-        "(far beyond any real component's need under jump + notify " +
-        "acceleration — this indicates a bug, not a data property)")
-    labels
+      // Below the broadcast floor (nNodes, measured at the seed) the
+      // labels side broadcasts, so the round's only exchange is the
+      // (d) aggregate: the edge/pointer/notify relation — the BIG side
+      // at scale — never shuffles for the join.
+      val (next, nChanged) = graft.core.Iterate.minLabelRound(
+        edges.select(col("src").as("s"), col("dst").as("d"))
+          .union(notices.select(col("node").as("s"), col("label").as("d"))),
+        labels, nNodes)
+      (next.select("node", "label"),
+        next.filter(col("label") =!= col("__old"))
+          .select(col("node"), col("__old").as("label")),
+        nChanged == 0L)
+    }._1
   }
 
   /** Transitive-CHAINING audit over near-dup components — the known

@@ -329,11 +329,9 @@ object LinkGraph {
     //  - p is accumulated as a lazy union of the per-level
     //    checkpointed frames instead of re-checkpointing the whole
     //    accumulation every level (the stressForward device).
-    var prevLevel = graft.core.Iterate.barrier(
+    val deepest = graft.core.Iterate.barrier(
       visited.filter(col("dist") === lit(d))
         .select(col("s"), col("node"), lit(0L).as("p")))
-    val pLevels = scala.collection.mutable.ArrayBuffer(prevLevel)
-    var level = d - 1
     // r20 (guide §3.1): every frame of a backward level — the level's
     // visited slice, the previous level's p rows, the aggregated
     // contrib — is bounded by the measured pair total (nVisited, free
@@ -343,7 +341,7 @@ object LinkGraph {
     // the big side at scale — then never shuffles per level.
     def ifSmall(df: DataFrame): DataFrame =
       graft.core.Iterate.broadcastIfSmall(df, nVisited)
-    while (level >= 0) {
+    val pLevels = (d - 1 to 0L by -1L).scanLeft(deepest) { (prevLevel, level) =>
       val contrib = ifSmall(visited.filter(col("dist") === lit(level))
           .select(col("s"), col("node")))
         .join(e.withColumnRenamed("src", "node"), Seq("node"))
@@ -352,13 +350,10 @@ object LinkGraph {
           col("p"))), Seq("s", "dst"))
         .groupBy(col("s"), col("node"))
         .agg(sum(col("p") + 1L).as("p"))
-      val thisLevel = visited.filter(col("dist") === lit(level))
+      graft.core.Iterate.barrier(visited.filter(col("dist") === lit(level))
         .select(col("s"), col("node"))
         .join(ifSmall(contrib), Seq("s", "node"), "left")
-        .select(col("s"), col("node"), coalesce(col("p"), lit(0L)).as("p"))
-      prevLevel = graft.core.Iterate.barrier(thisLevel)
-      pLevels += prevLevel
-      level -= 1
+        .select(col("s"), col("node"), coalesce(col("p"), lit(0L)).as("p")))
     }
     val p = pLevels.reduce(_ unionByName _)
 
@@ -382,7 +377,7 @@ object LinkGraph {
     * found pairs). */
   private[graph] def stressForward(e: DataFrame, srcSet: DataFrame,
                                    maxDepth: Int): (DataFrame, Long, Long) = {
-    var (frontier, nSeed) = graft.core.Iterate.barrierCounted(srcSet
+    val (seed, nSeed) = graft.core.Iterate.barrierCounted(srcSet
       .select(col("s"), col("s").as("node"), lit(0L).as("dist"),
         lit(1L).as("sigma")), lit(true))
     // r19 opt: `visited` is kept as a LAZY union of the per-level
@@ -392,52 +387,44 @@ object LinkGraph {
     // levels); each leaf is already materialized, so the union costs
     // plan nodes only, and the anti-join scans the same row volume
     // either way.
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    def visitedUnion: DataFrame = levels.reduce(_ unionByName _)
-    var visited = visitedUnion
-    var d = 0L
-    var growing = true
-    // Loop bound is maxDepth + 1: the round at d == maxDepth + 1 is an
+    def visitedOf(levels: Seq[DataFrame]): DataFrame =
+      levels.reduce(_ unionByName _)
+    // Round cap is maxDepth + 1: the round at d == maxDepth + 1 is an
     // emptiness PROBE — a BFS that completes at exactly depth maxDepth
     // is a complete answer (the probe finds nothing and growing flips),
     // and the throw fires only when pairs exist BEYOND the cap. Without
     // the probe, diameter == maxDepth was spuriously refused. The probe
     // costs one round only when the frontier is still live at maxDepth.
-    var total = nSeed
-    var nFrontier = nSeed
-    while (growing && d <= maxDepth) {
-      d += 1
-      // r20 (guide §3.1): the frontier's and visited's exact row
-      // counts are measured (they ride each round's own barrier), so
-      // both joins can broadcast the small side when it fits — the
-      // edge table, the big side at scale, then never shuffles for
-      // the expansion join, and the (s, node) aggregate is the
-      // round's only exchange (was 5). Above the floor both joins
-      // keep the shuffle path that big pair-state genuinely needs.
-      val (next, nNew) = graft.core.Iterate.barrierCounted(
-        graft.core.Iterate.broadcastIfSmall(frontier, nFrontier)
-          .join(e.withColumnRenamed("src", "node"), "node")
-          .select(col("s"), col("dst").as("node"), col("sigma"))
-          .join(graft.core.Iterate.broadcastIfSmall(
-            visited.select(col("s"), col("node")), total),
-            Seq("s", "node"), "left_anti")
-          .groupBy(col("s"), col("node"))
-          .agg(sum(col("sigma")).as("sigma"))
-          .withColumn("dist", lit(d)), lit(true))
-      if (nNew == 0L) growing = false
-      else {
-        total += nNew
-        nFrontier = nNew
-        frontier = next.select("s", "node", "dist", "sigma")
-        levels += frontier
-        visited = visitedUnion
-      }
+    // State: (levels, frontier rows, visited rows, growing).
+    val (levels, _, total, _) = graft.core.Iterate.fixpoint(
+        (Vector(seed), nSeed, nSeed, true), maxDepth + 1,
+        s"stressCentrality: pairs exist past depth $maxDepth — graph " +
+          "diameter exceeds the cap; raise maxDepth (a silent cap would " +
+          "undercount brokerage)")(!_._4) {
+      case ((levels, nFrontier, total, _), d) =>
+        // r20 (guide §3.1): the frontier's and visited's exact row
+        // counts are measured (they ride each round's own barrier), so
+        // both joins can broadcast the small side when it fits — the
+        // edge table, the big side at scale, then never shuffles for
+        // the expansion join, and the (s, node) aggregate is the
+        // round's only exchange (was 5). Above the floor both joins
+        // keep the shuffle path that big pair-state genuinely needs.
+        val (next, nNew) = graft.core.Iterate.barrierCounted(
+          graft.core.Iterate.broadcastIfSmall(levels.last, nFrontier)
+            .join(e.withColumnRenamed("src", "node"), "node")
+            .select(col("s"), col("dst").as("node"), col("sigma"))
+            .join(graft.core.Iterate.broadcastIfSmall(
+              visitedOf(levels).select(col("s"), col("node")), total),
+              Seq("s", "node"), "left_anti")
+            .groupBy(col("s"), col("node"))
+            .agg(sum(col("sigma")).as("sigma"))
+            .withColumn("dist", lit(d.toLong)), lit(true))
+        if (nNew == 0L) (levels, nFrontier, total, false)
+        else (levels :+ next.select("s", "node", "dist", "sigma"), nNew,
+          total + nNew, true)
     }
-    if (growing) throw new IllegalStateException(
-      s"stressCentrality: pairs exist past depth $maxDepth — graph " +
-        "diameter exceeds the cap; raise maxDepth (a silent cap would " +
-        "undercount brokerage)")
-    (visited, d, total)
+    // every round but the last (empty) one added a level
+    (visitedOf(levels), levels.size.toLong, total)
   }
 
   /** Truncated Katz centrality (Katz, Psychometrika 1953) — the
@@ -529,31 +516,26 @@ object LinkGraph {
       .where(col("src") =!= col("dst")).distinct().localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    var visited = graft.core.Iterate.barrier(
+    val seed = graft.core.Iterate.barrier(
       nodes.select(col("node").as("s"), col("node"), lit(0L).as("dist")))
-    var frontier = visited
-    var d = 0L
-    var growing = true
-    // maxDepth + 1 bound = one emptiness-probe round past the cap, so a
+    // maxDepth + 1 cap = one emptiness-probe round past the cap, so a
     // diameter of exactly maxDepth succeeds (see stressCentrality).
-    while (growing && d <= maxDepth) {
-      d += 1
-      val (next, nNew) = graft.core.Iterate.barrierCounted(
-        frontier.join(e.withColumnRenamed("src", "node"), "node")
-          .select(col("s"), col("dst").as("node"))
-          .join(visited.select(col("s"), col("node")),
-            Seq("s", "node"), "left_anti")
-          .distinct()
-          .withColumn("dist", lit(d)), lit(true))
-      if (nNew == 0L) growing = false
-      else {
-        frontier = next
-        visited = graft.core.Iterate.barrier(visited.unionByName(frontier))
-      }
+    // State: (visited, frontier, growing).
+    val (visited, _, _) = graft.core.Iterate.fixpoint((seed, seed, true),
+        maxDepth + 1,
+        s"eccentricity: pairs exist past depth $maxDepth — graph " +
+          "diameter exceeds the cap; raise maxDepth")(!_._3) {
+      case ((visited, frontier, _), d) =>
+        val (next, nNew) = graft.core.Iterate.barrierCounted(
+          frontier.join(e.withColumnRenamed("src", "node"), "node")
+            .select(col("s"), col("dst").as("node"))
+            .join(visited.select(col("s"), col("node")),
+              Seq("s", "node"), "left_anti")
+            .distinct()
+            .withColumn("dist", lit(d.toLong)), lit(true))
+        if (nNew == 0L) (visited, frontier, false)
+        else (graft.core.Iterate.barrier(visited.unionByName(next)), next, true)
     }
-    if (growing) throw new IllegalStateException(
-      s"eccentricity: pairs exist past depth $maxDepth — graph " +
-        "diameter exceeds the cap; raise maxDepth")
     nodes.join(
         visited.filter(col("s") =!= col("node"))
           .groupBy(col("s").as("node"))
@@ -850,13 +832,13 @@ object LinkGraph {
         col(weight).cast("long").as("__w"))
       .groupBy(col("src"), col("dst")).agg(min(col("__w")).as("__w"))
       .localCheckpoint()
-    var dist = seeds.select(col(seedCol).as("node"))
+    val seed = seeds.select(col(seedCol).as("node"))
       .distinct().withColumn("dist", lit(0L)).localCheckpoint()
-    var frontier = dist
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      round += 1
+    // State: (dist, frontier, converged).
+    graft.core.Iterate.fixpoint((seed, seed, false), maxRounds,
+        s"seedDistances did not converge in $maxRounds rounds " +
+          "(frontier still improving); raise maxRounds or lower maxDist")(
+        _._3) { case ((dist, frontier, _), _) =>
       val cand = e.join(frontier.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), (col("dist") + col("__w")).as("dist"))
         .filter(col("dist") <= maxDist)
@@ -872,17 +854,11 @@ object LinkGraph {
           dist.withColumnsRenamed(Map("dist" -> "__old")), Seq("node"), "left")
         .filter(col("__old").isNull || col("dist") < col("__old"))
         .select(col("node"), col("dist")), lit(true))
-      if (nImproved == 0L) done = true
-      else {
-        dist = graft.core.Iterate.barrier(dist.unionByName(improved)
-          .groupBy(col("node")).agg(min(col("dist")).as("dist")))
-        frontier = improved
-      }
-    }
-    if (!done) throw new IllegalStateException(
-      s"seedDistances did not converge in $maxRounds rounds " +
-        "(frontier still improving); raise maxRounds or lower maxDist")
-    dist
+      if (nImproved == 0L) (dist, frontier, true)
+      else (graft.core.Iterate.barrier(dist.unionByName(improved)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))),
+        improved, false)
+    }._1
   }
 
   /** Weighted PageRank — [[pagerank]] with edge weights (anchor-count
@@ -1041,25 +1017,22 @@ object LinkGraph {
              maxIterations: Int = 30): DataFrame = {
     require(k >= 3, "k must be >= 3 (every edge is a 2-truss)")
     val minSup = (k - 2).toLong
-    var (e, nEdges) = graft.core.Iterate.barrierCounted(
+    val (e0, nEdges0) = graft.core.Iterate.barrierCounted(
       edges.select(least(col(src), col(dst)).as("a"),
           greatest(col(src), col(dst)).as("b"))
         .where(col("a") =!= col("b")).distinct(), lit(true))
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxIterations) {
-      rounds += 1
-      val kept = e.join(edgeSupport(e), Seq("a", "b"), "left")
-        .filter(coalesce(col("support"), lit(0L)) >= minSup)
-        .select(col("a"), col("b"))
-      val (next, nKept) = graft.core.Iterate.barrierCounted(kept, lit(true))
-      if (nKept == nEdges) converged = true
-      e = next
-      nEdges = nKept
+    // State: (edges, edge count, converged).
+    val (e, _, _) = graft.core.Iterate.fixpoint((e0, nEdges0, false),
+        maxIterations,
+        s"kTruss: still peeling after $maxIterations rounds — raise " +
+          "maxIterations (a half-peeled subgraph is not a k-truss)")(_._3) {
+      case ((e, nEdges, _), _) =>
+        val (next, nKept) = graft.core.Iterate.barrierCounted(
+          e.join(edgeSupport(e), Seq("a", "b"), "left")
+            .filter(coalesce(col("support"), lit(0L)) >= minSup)
+            .select(col("a"), col("b")), lit(true))
+        (next, nKept, nKept == nEdges)
     }
-    if (!converged) throw new IllegalStateException(
-      s"kTruss: still peeling after $maxIterations rounds — raise " +
-        "maxIterations (a half-peeled subgraph is not a k-truss)")
     e.join(edgeSupport(e), Seq("a", "b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support"))
@@ -1340,16 +1313,16 @@ object LinkGraph {
     val e0 = edges.select(col(src).as("src"), col(dst).as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
-    var e = e0.localCheckpoint()
-    var nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
+    val edges0 = e0.localCheckpoint()
+    val nodes = edges0.select(col("src").as("node"))
+      .union(edges0.select(col("dst").as("node")))
       .distinct() // materialized (with its count) by the first barrier below
-    val labelType = nodes.schema("node").dataType
 
     /** Min-label fixpoint with pointer doubling: label(v) starts at v
       * and relaxes per round over (a) `rel` edges — label(s) flows
-      * s→d — and (b) the label AT the current label's node. Fixpoint
-      * = min id over `rel`-ancestors ∪ {v}. Throws past the cap. */
+      * s→d — and (b) the label AT the current label's node
+      * ([[graft.core.Iterate.minLabelRound]]). Fixpoint = min id over
+      * `rel`-ancestors ∪ {v}. Throws past the cap. */
     def minLabelFixpoint(universe: DataFrame, universeRows: Long,
                          rel: DataFrame, what: String): DataFrame = {
       // no checkpoint on the seed labels: `universe` is already a
@@ -1357,74 +1330,31 @@ object LinkGraph {
       // — checkpointing it again cost one extra job per fixpoint call
       // (2 per peel round), measured as pure overhead (r19 opt; the
       // round-1 plan re-derives the projection at projection cost)
-      var labels = universe.withColumn("label", col("node"))
-      var converged = false
-      var i = 0
-      while (!converged && i < maxPropIters) {
-        // r19 opt (guide §2.1, remove shuffles): the three relaxations
-        // of a round — keep own label, pull labels across `rel`
-        // edges, pointer-jump to label(label(v)) — used to run as two
-        // separate hash joins plus a 3-branch union (≈5 exchanges per
-        // round; with AQE each exchange is its own stage-job, and the
-        // fixture's ~50 total rounds made q199 a 445-job query). All
-        // three are the SAME shape: "node d receives label(s)". So
-        // build ONE relation R = rel ∪ pointer-edges ∪ self-loops and
-        // do ONE join + one aggregate per round (3 exchanges). The
-        // self-loop branch doubles as the previous-label carrier for
-        // the convergence count (it is the only branch tagged
-        // __self, and each node has exactly one such row).
-        // (A second jump per round — label³ — was MEASURED SLOWER
-        // here: q199 9.24→9.35 s; the peel fixtures' chains are
-        // short. Kept single-jump.)
-        // (r20 re-measured the deep jump as a broadcast-gated extra
-        // map-side join — no shuffle added — and it still lost:
-        // min-of-3 fixpoint-suite total 45.8 s with vs 43.9 s
-        // without. Kept single-jump.)
-        val ptr = labels.select(col("label").as("s"), col("node").as("d"))
-        val relation = rel.select(col("s"), col("d"),
-            lit(false).as("__self"))
-          .union(ptr.select(col("s"), col("d"), lit(false).as("__self")))
-          .union(labels.select(col("node").as("s"), col("node").as("d"),
-            lit(true).as("__self")))
-        // barrier, not plain localCheckpoint: the stats-feedback
-        // reset (see graft.core.Iterate) — this union would triple
-        // estimate digits per round; the convergence count rides the
-        // same action as an observe metric (barrierCounted)
-        // r20 (guide §3.1): labels is one row per universe node — its
-        // exact count is the caller-measured universeRows. Below the
-        // floor it broadcasts and the round's only exchange is the (d)
-        // aggregate; the rel/pointer/self relation (the big side at
-        // scale) never shuffles for the join. Above the floor the
-        // shuffle path stays.
-        val (next, nChanged) = graft.core.Iterate.barrierCounted(relation
-          .join(graft.core.Iterate.broadcastIfSmall(
-            labels.select(col("node").as("s"), col("label")), universeRows), "s")
-          .groupBy(col("d").as("node"))
-          .agg(min("label").as("label"),
-            max(when(col("__self"), col("label"))
-              .otherwise(lit(null).cast(labelType))).as("__old")),
-          col("label") =!= col("__old"))
-        converged = nChanged == 0L
-        labels = next.select("node", "label")
-        i += 1
-      }
-      if (!converged) throw new IllegalStateException(
-        s"stronglyConnected $what did not converge in $maxPropIters " +
-          "iterations (even doubled, the chain exceeds the cap); labels " +
-          "would be silently wrong — raise maxPropIters")
-      labels
+      // State: (labels, converged).
+      graft.core.Iterate.fixpoint(
+          (universe.withColumn("label", col("node")), false), maxPropIters,
+          s"stronglyConnected $what did not converge in $maxPropIters " +
+            "iterations (even doubled, the chain exceeds the cap); labels " +
+            "would be silently wrong — raise maxPropIters")(_._2) {
+        case ((labels, _), _) =>
+          val (next, nChanged) =
+            graft.core.Iterate.minLabelRound(rel, labels, universeRows)
+          (next.select("node", "label"), nChanged == 0L)
+      }._1
     }
 
-    var assigned: DataFrame = null
-    var round = 0
     // r19 opt: the remaining-node count rides each peel's own barrier
     // as an observe metric (the barrierCounted device) instead of a
     // separate isEmpty job per round; the final round skips rebuilding
     // `e` entirely once the count hits zero. Same labels, fewer jobs.
+    // State: (remaining nodes, their count, remaining edges, captured
+    // SCC frames so far).
     val (nodes0, count0) = graft.core.Iterate.barrierCounted(nodes, lit(true))
-    nodes = nodes0
-    var nRemaining = count0
-    while (nRemaining > 0L && round < maxRounds) {
+    val (_, _, _, captures) = graft.core.Iterate.fixpoint(
+        (nodes0, count0, edges0, Vector.empty[DataFrame]), maxRounds,
+        s"stronglyConnected did not assign every node in $maxRounds rounds " +
+          "(SCC-condensation chain exceeds the cap); raise maxRounds")(
+        _._2 == 0L) { case ((nodes, nRemaining, e, captures), _) =>
       // -- 1. forward coloring: color = min ancestor-or-self --------
       // no extra barrier: the fixpoint's result IS a materialized
       // barrier frame; the rename is a projection replayed at
@@ -1455,22 +1385,19 @@ object LinkGraph {
         .filter(col("label") === col("color"))
         .select(col("node"), col("color").as("scc")))
       // -- 3. peel ---------------------------------------------------
-      assigned = if (assigned == null) captured else assigned.union(captured)
       val (nNext, cNext) = graft.core.Iterate.barrierCounted(
         nodes.join(ifSmall(captured.select("node")), Seq("node"), "left_anti"),
         lit(true))
-      nodes = nNext; nRemaining = cNext
-      if (nRemaining > 0L)
-        e = graft.core.Iterate.barrier(
+      val eNext =
+        if (cNext == 0L) e
+        else graft.core.Iterate.barrier(
           e.join(ifSmall(captured.select(col("node").as("src"))),
             Seq("src"), "left_anti")
             .join(ifSmall(captured.select(col("node").as("dst"))),
               Seq("dst"), "left_anti"))
-      round += 1
+      (nNext, cNext, eNext, captures :+ captured)
     }
-    if (nRemaining > 0L) throw new IllegalStateException(
-      s"stronglyConnected did not assign every node in $maxRounds rounds " +
-        "(SCC-condensation chain exceeds the cap); raise maxRounds")
+    val assigned = captures.reduce(_ union _)
     val sizes = assigned.groupBy(col("scc")).agg(count(lit(1)).as("scc_size"))
     assigned.join(sizes, "scc")
       .select(col("node"), col("scc"), col("scc_size"))

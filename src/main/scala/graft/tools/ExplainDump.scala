@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registry queries to files —
   * the plan-evidence tool for the optimization rounds (guide §1:
   * capture the plan shape before and after every change).
   *
   * Usage: runMain graft.tools.ExplainDump <sfDir> <outDir> [query ...]
   * Writes <outDir>/<name>.txt per query (full names or short keys,
-  * same matching rule as Bench args).
+  * the [[Harness.select]] rule shared with Bench).
   *
   * Cost caveat (r19 advice): for most queries only the plan is
   * compiled, nothing runs — but ITERATIVE queries (q199/q255/q277 …)
@@ -24,21 +22,8 @@ object ExplainDump {
     val sfDir = args(0)
     val outDir = new java.io.File(args(1))
     outDir.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val all = graft.SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (args.length == 2) all
-      else all.filter(n => args.drop(2).contains(n) ||
-        args.drop(2).contains(n.takeWhile(_ != '_')))
-    require(names.nonEmpty, s"no queries match ${args.drop(2).mkString(",")}")
+    val names = Harness.select(args.drop(2).toSeq)
+    val spark = Harness.session("ERROR")
     for (name <- names) {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage/task profile — the measure-first companion to
   * [[ExplainDump]] for ITERATIVE queries, whose per-round plans never
@@ -20,21 +19,8 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobProfile <sfDir> [query ...]")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val all = graft.SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (args.length == 1) all
-      else all.filter(n => args.drop(1).contains(n) ||
-        args.drop(1).contains(n.takeWhile(_ != '_')))
-    require(names.nonEmpty, s"no queries match ${args.drop(1).mkString(",")}")
+    val names = Harness.select(args.drop(1).toSeq)
+    val spark = Harness.session("ERROR")
     @volatile var jobs = 0L
     @volatile var stages = 0L
     @volatile var tasks = 0L

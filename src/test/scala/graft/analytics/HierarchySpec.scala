@@ -96,6 +96,16 @@ class HierarchySpec extends SparkSpec {
       Hierarchy.materializedPaths(cyc, "node", "parent")
   }
 
+  test("materializedPaths: an insufficient round cap on a chain throws") {
+    import spark.implicits._
+    val chain = ((0L, None) +: (1 to 12).map(i => (i.toLong, Some(i - 1L))))
+      .toDF("node", "parent")
+    val e = intercept[IllegalStateException] {
+      Hierarchy.materializedPaths(chain, "node", "parent", maxRounds = 2)
+    }
+    e.getMessage should include("still growing after 2")
+  }
+
   test("materializedPaths is invariant under input partitioning") {
     import spark.implicits._
     val t = (0 to 80).map(i =>
@@ -149,6 +159,18 @@ class HierarchySpec extends SparkSpec {
     val amounts = Seq((1L, -10L)).toDF("node", "amount")
     an[IllegalArgumentException] should be thrownBy
       Hierarchy.allocateDown(t, amounts, "node", "parent", "w", "amount")
+  }
+
+  test("allocateDown: seeded on a parent cycle, the round cap throws") {
+    import spark.implicits._
+    val cyc = Seq((1L, Some(2L), 1L), (2L, Some(1L), 1L))
+      .toDF("node", "parent", "w")
+    val seed = Seq((1L, 100L)).toDF("node", "amount")
+    val e = intercept[IllegalStateException] {
+      Hierarchy.allocateDown(cyc, seed, "node", "parent", "w", "amount",
+        maxRounds = 4)
+    }
+    e.getMessage should include("still descending after 4 rounds")
   }
 
   test("allocateDown is invariant under input partitioning") {

@@ -7,9 +7,12 @@ import org.apache.spark.sql.functions._
   * the barrier-materialized input (stats reset, lineage cut — same as
   * [[Iterate.barrier]]) and the returned count equals the number of
   * rows matching the predicate, collected from the checkpoint's own
-  * action (no second job on the fast path). The fixpoint loops in
-  * Dedup.componentLabels and LinkGraph.stronglyConnected ride this
-  * for their convergence check. */
+  * action (no second job on the fast path). It also pins
+  * [[Iterate.fixpoint]]'s control contract (zero rounds for a done
+  * seed, 1-based round indices, exactly `maxRounds` rounds then a loud
+  * throw) — the loop every convergence operator in LinkGraph,
+  * Dedup.componentLabels and Hierarchy runs through, with
+  * barrierCounted as its convergence check. */
 class IterateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,21 +56,39 @@ class IterateSpec extends SparkSpec {
     hinted.queryExecution.executedPlan.toString should
       include("BroadcastHashJoin")
     hinted.collect().map(_.getLong(0)).sorted shouldBe Array(1L, 2L)
-    // at/above the floor (override via conf): no hint, same rows
-    spark.conf.set("spark.graft.iterate.broadcastRowFloor", "2")
-    try {
-      val unhinted = big.join(Iterate.broadcastIfSmall(small, 2L), "k")
-      unhinted.queryExecution.executedPlan.toString should
-        not include "BroadcastHashJoin"
-      unhinted.collect().map(_.getLong(0)).sorted shouldBe Array(1L, 2L)
-    } finally spark.conf.unset("spark.graft.iterate.broadcastRowFloor")
-    // malformed floor fails loudly, naming the conf key
-    spark.conf.set("spark.graft.iterate.broadcastRowFloor", "lots")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Iterate.broadcastIfSmall(small, 1L)
+    // at the floor (500,000 measured rows): no hint, same rows
+    val unhinted = big.join(Iterate.broadcastIfSmall(small, 500000L), "k")
+    unhinted.queryExecution.executedPlan.toString should
+      not include "BroadcastHashJoin"
+    unhinted.collect().map(_.getLong(0)).sorted shouldBe Array(1L, 2L)
+  }
+
+  test("fixpoint: a seed that is already done runs zero rounds") {
+    var rounds = 0
+    Iterate.fixpoint(7, maxRounds = 5, "unreachable")(_ == 7) { (s, _) =>
+      rounds += 1; s + 1
+    } shouldBe 7
+    rounds shouldBe 0
+  }
+
+  test("fixpoint: never done runs exactly maxRounds rounds, then throws onCap") {
+    var rounds = 0
+    val e = intercept[IllegalStateException] {
+      Iterate.fixpoint(0, maxRounds = 4, "still going at the cap")(_ => false) {
+        (s, _) => rounds += 1; s + 1
       }
-      e.getMessage should include("broadcastRowFloor")
-    } finally spark.conf.unset("spark.graft.iterate.broadcastRowFloor")
+    }
+    rounds shouldBe 4
+    e.getMessage shouldBe "still going at the cap"
+  }
+
+  test("fixpoint: round indices run 1..n and the state threads through") {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    // done on the cap's last round: converging exactly at maxRounds is
+    // a result, not a throw
+    Iterate.fixpoint(List.empty[Int], maxRounds = 3, "capped")(_.size == 3) {
+      (s, i) => seen += i; s :+ i
+    } shouldBe List(1, 2, 3)
+    seen.toList shouldBe List(1, 2, 3)
   }
 }

@@ -143,6 +143,15 @@ class DedupSpec extends SparkSpec {
     labels shouldBe Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
   }
 
+  test("componentLabels: a cap too small to converge throws, never emits partial labels") {
+    import spark.implicits._
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.componentLabels(path, maxIterations = 1)
+    }
+    e.getMessage should include("did not converge in 1 rounds")
+  }
+
   test("dropNearDups keeps one canonical doc per cluster, unpaired docs untouched") {
     import spark.implicits._
     val d = docs(1L -> "a", 2L -> "b", 3L -> "c", 5L -> "d", 6L -> "e", 9L -> "f")
