@@ -23,41 +23,84 @@ trait Validator {
   def validate(df: DataFrame): ValidationResult
 }
 
+/** One quality gate: the named aggregate probes it reads and the reader
+  * that turns their values into a result. The reader sees only its own
+  * probes, so gates sharing an aggregation never collide. A gate with no
+  * probes is decided on the driver and runs no job. */
+final case class Gate(probes: Seq[Column], read: Row => ValidationResult)
+
 /** Data-quality gates (SURVEY.md §2.3 P10–P17, §3.2; reference
-  * `dags/utils/validators.py:64-459`). Design rule: each validator is
-  * ONE `df.agg(...)` pass — every probe (null counts, min/max,
-  * thresholds, dup counts) is an aggregate expression in a single job,
-  * the distributed analog of the reference's one-pass-over-pandas.
-  * The reference's serial per-symbol loops become shuffle aggregations.
+  * `dags/utils/validators.py:64-459`) as one mechanism: every probe
+  * (null counts, min/max, thresholds, the symbol set) is an aggregate
+  * expression, [[runGates]] evaluates any number of [[Gate]]s over one
+  * frame in ONE `df.agg`, and [[validateRawSources]] evaluates the raw
+  * gate over N frames as ONE grouped aggregation — the shared-scan
+  * constraint suite of Deequ (Schelter et al., VLDB 2018). No probe is
+  * a distinct aggregate, so no gate pays the distinct-aggregate
+  * rewrite's second shuffle. The public validators are one-gate calls.
+  *
+  * Measured job counts on a 4-core local session (AQE on): each public
+  * validator submits 2 jobs over an in-memory frame (the partial
+  * aggregate, then the final row) and 3 over the merged frame (its
+  * keep-first shuffle adds one). `countDistinct(symbol)` used to make
+  * `validateRaw` 3 and `validateTransformed` 4 of those. Three gates
+  * fused over the merged frame cost the 3 jobs of one.
   */
 object Validators {
 
   private def nullCount(c: String): Column =
     count(when(col(c).isNull, 1)).as(s"null_$c")
 
-  /** Shared single-pass core: run the base probes plus any
-    * caller-supplied extra aggregate probes in ONE `df.agg`, and build
-    * the base error list. Returns (row, result-so-far) so callers can
-    * layer rule-specific warnings without a second Spark job. */
-  private def probe(
-      df: DataFrame,
-      requiredColumns: Seq[String],
-      today: Column,
-      extraAggs: Seq[Column],
-      ageWarnDays: Int = 365): Either[ValidationResult, (Row, ValidationResult)] = {
-    val missing = requiredColumns.filterNot(df.columns.contains)
+  private val rawColumns =
+    Seq("date", "symbol", "open", "high", "low", "close", "volume", "data_source")
+
+  private val transformedColumns =
+    rawColumns ++ Seq("processed_at", "daily_change_pct", "daily_volatility")
+
+  private val ageWarnDays = 365
+
+  private val emptyInput = ValidationResult(passed = false, errors = Seq("empty input"),
+    warnings = Nil, metrics = Map("row_count" -> 0L))
+
+  /** Run every gate over `df` in ONE `df.agg` (each gate's probes in
+    * their own struct column); results in gate order. */
+  def runGates(df: DataFrame, gates: Seq[Gate]): Seq[ValidationResult] = {
+    val cols = gates.zipWithIndex.collect {
+      case (g, i) if g.probes.nonEmpty => struct(g.probes: _*).as(s"gate$i")
+    }
+    lazy val row = df.agg(cols.head, cols.tail: _*).collect()(0)
+    gates.zipWithIndex.map { case (g, i) =>
+      g.read(if (g.probes.isEmpty) Row.empty else row.getStruct(row.fieldIndex(s"gate$i")))
+    }
+  }
+
+  /** The raw-data gate (reference `validators.py:64-162`): empty input,
+    * negative close, future dates and null close are errors; data older
+    * than `ageWarnDays` is a warning; every probe value is a metric.
+    * Probes exist only for the columns the caller requires — a column
+    * list without `close`/`symbol`/`date` degrades to fewer probes, not
+    * an unresolved-column error. A frame with these `columns` that
+    * misses a required column gets its result on the driver.
+    *
+    * `unique_symbols` is exact: `size(collect_set(symbol))`, whose
+    * aggregation buffer holds every distinct symbol, so its memory is
+    * bounded by the distinct-symbol count, not the row count. */
+  def rawGate(
+      columns: Seq[String],
+      requiredColumns: Seq[String] = rawColumns,
+      today: Column = current_date()): Gate = {
+    val missing = requiredColumns.filterNot(columns.contains)
     if (missing.nonEmpty)
-      return Left(ValidationResult(passed = false,
+      return Gate(Nil, _ => ValidationResult(passed = false,
         errors = Seq(s"missing required columns: ${missing.mkString(",")}"),
         warnings = Nil, metrics = Map("missing_columns" -> missing)))
 
-    // Build probes only for columns the caller actually requires — a
-    // column list without `close`/`symbol`/`date` is legitimate and must
-    // degrade to fewer probes, not an unresolved-column error.
     val has = requiredColumns.toSet
     val dateCol = to_date(col("date"))
-    val aggs: Seq[Column] = Seq(count(lit(1)).as("row_count")) ++
-      (if (has("symbol")) Seq(countDistinct(col("symbol")).as("unique_symbols")) else Nil) ++
+    val probes: Seq[Column] = Seq(count(lit(1)).as("row_count")) ++
+      (if (has("symbol"))
+        Seq(size(collect_set(col("symbol"))).cast("long").as("unique_symbols"))
+      else Nil) ++
       (if (has("close")) Seq(
         min(col("close")).as("min_close"),
         max(col("close")).as("max_close"),
@@ -67,82 +110,112 @@ object Validators {
         min(dateCol).as("oldest_date"),
         max(dateCol).as("newest_date"),
         // P14 (reference validators.py:146-150): any bars older than a
-        // year draw a warning — probed in the same single pass.
+        // year draw a warning.
         max(when(dateCol < date_sub(today, ageWarnDays), 1).otherwise(0))
           .as("age_warn")) else Nil) ++
-      requiredColumns.map(nullCount) ++ extraAggs
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+      requiredColumns.map(nullCount)
 
-    if (r.getLong(r.fieldIndex("row_count")) == 0)
-      return Left(ValidationResult(passed = false, errors = Seq("empty input"),
-        warnings = Nil, metrics = Map("row_count" -> 0L)))
+    Gate(probes, r => if (r.getLong(r.fieldIndex("row_count")) == 0) emptyInput else {
+      def longOr0(f: String): Long =
+        if (r.schema.fieldNames.contains(f)) r.getLong(r.fieldIndex(f)) else 0L
+      val errors = Seq(
+        (longOr0("negative_close") > 0) ->
+          s"${longOr0("negative_close")} rows with negative close",
+        (longOr0("future_dates") > 0) ->
+          s"${longOr0("future_dates")} rows with future dates",
+        (longOr0("null_close") > 0) -> s"${longOr0("null_close")} null close values"
+      ).collect { case (true, msg) => msg }
 
-    def longOr0(f: String): Long =
-      if (r.schema.fieldNames.contains(f)) r.getLong(r.fieldIndex(f)) else 0L
-    val errors = Seq(
-      (longOr0("negative_close") > 0) ->
-        s"${longOr0("negative_close")} rows with negative close",
-      (longOr0("future_dates") > 0) ->
-        s"${longOr0("future_dates")} rows with future dates"
-    ).collect { case (true, msg) => msg }
+      val ageWarning =
+        if (r.schema.fieldNames.contains("age_warn") && r.getInt(r.fieldIndex("age_warn")) == 1)
+          Seq(s"data older than $ageWarnDays days present " +
+            s"(oldest=${r.get(r.fieldIndex("oldest_date"))})")
+        else Nil
 
-    val nullClose = longOr0("null_close")
-    val allErrors = errors ++
-      (if (nullClose > 0) Seq(s"$nullClose null close values") else Nil)
-
-    def intOr0(f: String): Int =
-      if (r.schema.fieldNames.contains(f)) r.getInt(r.fieldIndex(f)) else 0
-    val warnings =
-      if (intOr0("age_warn") == 1)
-        Seq(s"data older than $ageWarnDays days present " +
-          s"(oldest=${r.get(r.fieldIndex("oldest_date"))})")
-      else Nil
-
-    Right((r, ValidationResult(
-      passed = allErrors.isEmpty,
-      errors = allErrors,
-      warnings = warnings,
-      metrics = r.schema.fieldNames.map(f => f -> r.get(r.fieldIndex(f))).toMap)))
+      ValidationResult(
+        passed = errors.isEmpty,
+        errors = errors,
+        warnings = ageWarning,
+        metrics = r.schema.fieldNames.map(f => f -> r.get(r.fieldIndex(f))).toMap)
+    })
   }
 
   /** Raw-data validation (reference `validators.py:64-162`): empty
     * check, required columns, negative close, future dates, null
-    * profile — one aggregation pass. */
+    * profile — one aggregation. */
   def validateRaw(
       df: DataFrame,
-      requiredColumns: Seq[String] =
-        Seq("date", "symbol", "open", "high", "low", "close", "volume", "data_source"),
+      requiredColumns: Seq[String] = rawColumns,
       today: Column = current_date()): ValidationResult =
-    probe(df, requiredColumns, today, Nil).fold(identity, _._2)
+    runGates(df, Seq(rawGate(df.columns, requiredColumns, today))).head
 
-  /** Transformed-data validation (reference `validators.py:165-251`):
-    * the raw checks plus threshold warnings (close>10000, volume>1e9,
-    * volatility>20) — still ONE aggregation pass: the threshold probes
-    * ride in the same agg as the base probes. */
+  /** [[validateRaw]] over N sources as ONE grouped aggregation: each
+    * source's required columns are tagged with its index, the sources
+    * are unioned by name, and the raw gate's probes run under
+    * `groupBy(__src)`. Results are in source order and equal
+    * `validateRaw` per source. A source missing a required column gets
+    * its result on the driver and joins no job; a source with no rows
+    * has no group and reads "empty input". Fails fast when two sources
+    * disagree on a required column's type: the union would widen it and
+    * change the metrics' types. */
+  def validateRawSources(
+      sources: Seq[DataFrame],
+      requiredColumns: Seq[String] = rawColumns,
+      today: Column = current_date()): Seq[ValidationResult] = {
+    val gates = sources.map(s => rawGate(s.columns, requiredColumns, today))
+    val live = sources.indices.filter(i => gates(i).probes.nonEmpty)
+    for (i <- live.drop(1); c <- requiredColumns) {
+      val (t0, t) = (sources(live.head).schema(c).dataType, sources(i).schema(c).dataType)
+      require(t0 == t, s"raw sources disagree on the type of column '$c': " +
+        s"source ${live.head} has ${t0.simpleString}, source $i has ${t.simpleString}")
+    }
+    val rows: Map[Int, Row] =
+      if (live.isEmpty) Map.empty
+      else live.map(i => sources(i).select(requiredColumns.map(col) :+ lit(i).as("__src"): _*))
+        .reduce(_ unionByName _)
+        .groupBy(col("__src")).agg(struct(gates(live.head).probes: _*).as("gate"))
+        .collect().map(r => r.getInt(0) -> r.getStruct(1)).toMap
+    gates.zipWithIndex.map { case (g, i) =>
+      if (g.probes.isEmpty) g.read(Row.empty) else rows.get(i).fold(emptyInput)(g.read)
+    }
+  }
+
+  /** The transformed-data gate (reference `validators.py:165-251`): the
+    * raw checks plus threshold warnings (close>10000, volume>1e9,
+    * volatility>20), whose probes ride in the same gate. On empty input
+    * every threshold count is 0, so the result stays "empty input". */
+  def transformedGate(
+      columns: Seq[String],
+      today: Column = current_date(),
+      priceCap: Double = 10000.0,
+      volumeCap: Double = 1e9,
+      volatilityCap: Double = 20.0): Gate = {
+    val thresholds = Seq(
+      count(when(col("close") > priceCap, 1)).as("over_price_cap"),
+      count(when(col("volume") > volumeCap, 1)).as("over_volume_cap"),
+      count(when(col("daily_volatility") > volatilityCap, 1)).as("over_volatility_cap"))
+    val base = rawGate(columns, transformedColumns, today)
+    if (base.probes.isEmpty) base
+    else Gate(base.probes ++ thresholds, r => {
+      def n(f: String): Long = r.getLong(r.fieldIndex(f))
+      val b = base.read(r)
+      b.copy(warnings = b.warnings ++ Seq(
+        (n("over_price_cap") > 0) -> s"${n("over_price_cap")} rows with close > $priceCap",
+        (n("over_volume_cap") > 0) -> s"${n("over_volume_cap")} rows with volume > $volumeCap",
+        (n("over_volatility_cap") > 0) ->
+          s"${n("over_volatility_cap")} rows with volatility > $volatilityCap"
+      ).collect { case (true, msg) => msg })
+    })
+  }
+
+  /** Transformed-data validation: [[transformedGate]] in one aggregation. */
   def validateTransformed(
       df: DataFrame,
       today: Column = current_date(),
       priceCap: Double = 10000.0,
       volumeCap: Double = 1e9,
-      volatilityCap: Double = 20.0): ValidationResult = {
-    val thresholds = Seq(
-      count(when(col("close") > priceCap, 1)).as("over_price_cap"),
-      count(when(col("volume") > volumeCap, 1)).as("over_volume_cap"),
-      count(when(col("daily_volatility") > volatilityCap, 1)).as("over_volatility_cap"))
-    probe(df,
-      requiredColumns = Seq("date", "symbol", "open", "high", "low", "close",
-        "volume", "data_source", "processed_at", "daily_change_pct", "daily_volatility"),
-      today = today, extraAggs = thresholds).fold(identity, { case (r, base) =>
-      def n(f: String): Long = r.getLong(r.fieldIndex(f))
-      val warnings = Seq(
-        (n("over_price_cap") > 0) -> s"${n("over_price_cap")} rows with close > $priceCap",
-        (n("over_volume_cap") > 0) -> s"${n("over_volume_cap")} rows with volume > $volumeCap",
-        (n("over_volatility_cap") > 0) ->
-          s"${n("over_volatility_cap")} rows with volatility > $volatilityCap"
-      ).collect { case (true, msg) => msg }
-      base.copy(warnings = base.warnings ++ warnings)
-    })
-  }
+      volatilityCap: Double = 20.0): ValidationResult =
+    runGates(df, Seq(transformedGate(df.columns, today, priceCap, volumeCap, volatilityCap))).head
 
   /** Duplicate-key count (reference `validators.py:153,227`):
     * total extra rows beyond the first per key. */
@@ -154,41 +227,57 @@ object Validators {
     r.getLong(0)
   }
 
-  /** Freshness gate (reference `validate_data_freshness`,
-    * `validators.py:254-309`): newest date must be within
-    * `maxAgeDays` of `today`. The batch analog of a watermark. */
-  def validateFreshness(
-      df: DataFrame, dateCol: String = "date",
-      maxAgeDays: Int = 1, today: Column = current_date()): ValidationResult = {
-    val r = df.agg(
+  /** The freshness gate (reference `validate_data_freshness`,
+    * `validators.py:254-309`): newest date must be within `maxAgeDays`
+    * of `today`. The batch analog of a watermark. */
+  def freshnessGate(
+      dateCol: String = "date", maxAgeDays: Int = 1, today: Column = current_date()): Gate =
+    Gate(Seq(
       max(col(dateCol)).as("newest"),
       min(col(dateCol)).as("oldest"),
-      max(when(col(dateCol) >= date_sub(today, maxAgeDays), 1).otherwise(0)).as("fresh"))
-      .collect()(0)
-    val fresh = !r.isNullAt(2) && r.getInt(2) == 1
-    ValidationResult(
-      passed = fresh,
-      errors = if (fresh) Nil else Seq(s"stale data: newest=${r.get(0)} older than $maxAgeDays days"),
-      warnings = Nil,
-      metrics = Map("newest_date" -> r.get(0), "oldest_date" -> r.get(1)))
-  }
+      max(when(col(dateCol) >= date_sub(today, maxAgeDays), 1).otherwise(0)).as("fresh")),
+      r => {
+        val fresh = !r.isNullAt(2) && r.getInt(2) == 1
+        ValidationResult(
+          passed = fresh,
+          errors = if (fresh) Nil
+            else Seq(s"stale data: newest=${r.get(0)} older than $maxAgeDays days"),
+          warnings = Nil,
+          metrics = Map("newest_date" -> r.get(0), "oldest_date" -> r.get(1)))
+      })
 
-  /** Symbol-coverage gate (reference `validate_symbol_coverage`,
-    * `validators.py:312-365`): required − actual = missing,
-    * actual − required = extra. Distinct symbol sets are tiny, so the
-    * set diff collects then compares driver-side. */
+  /** Freshness validation: [[freshnessGate]] in one aggregation. */
+  def validateFreshness(
+      df: DataFrame, dateCol: String = "date",
+      maxAgeDays: Int = 1, today: Column = current_date()): ValidationResult =
+    runGates(df, Seq(freshnessGate(dateCol, maxAgeDays, today))).head
+
+  /** The symbol-coverage gate (reference `validate_symbol_coverage`,
+    * `validators.py:312-365`): required − actual = missing, actual −
+    * required = extra. The actual set is a `collect_set` probe, so its
+    * size is bounded by the distinct-symbol count; null symbols are not
+    * symbols and are skipped. */
+  def coverageGate(required: Seq[String], symbolCol: String = "symbol"): Gate =
+    Gate(Seq(collect_set(col(symbolCol)).as("symbols")), r => {
+      val actual = r.getSeq[String](0).toSet
+      val missing = required.toSet -- actual
+      val extra = actual -- required.toSet
+      ValidationResult(
+        passed = missing.isEmpty,
+        errors = if (missing.isEmpty) Nil
+          else Seq(s"missing symbols: ${missing.toSeq.sorted.mkString(",")}"),
+        warnings = if (extra.isEmpty) Nil
+          else Seq(s"unexpected symbols: ${extra.toSeq.sorted.mkString(",")}"),
+        metrics = Map("missing" -> missing.toSeq.sorted, "extra" -> extra.toSeq.sorted))
+    })
+
+  /** Symbol-coverage validation: [[coverageGate]] in one aggregation —
+    * 2 jobs over an in-memory frame, 3 over the merged frame, as many as
+    * the former `distinct()` then `collect()`. Its gain is that the gate
+    * can share another gate's aggregation. */
   def validateCoverage(df: DataFrame, required: Seq[String],
-      symbolCol: String = "symbol"): ValidationResult = {
-    val actual = df.select(col(symbolCol)).distinct()
-      .collect().map(_.getString(0)).toSet
-    val missing = required.toSet -- actual
-    val extra = actual -- required.toSet
-    ValidationResult(
-      passed = missing.isEmpty,
-      errors = if (missing.isEmpty) Nil else Seq(s"missing symbols: ${missing.toSeq.sorted.mkString(",")}"),
-      warnings = if (extra.isEmpty) Nil else Seq(s"unexpected symbols: ${extra.toSeq.sorted.mkString(",")}"),
-      metrics = Map("missing" -> missing.toSeq.sorted, "extra" -> extra.toSeq.sorted))
-  }
+      symbolCol: String = "symbol"): ValidationResult =
+    runGates(df, Seq(coverageGate(required, symbolCol))).head
 
   /** Cross-source consistency (J2, reference `validators.py:233-244`):
     * the reference's O(symbols×dates) nested loop re-expressed as one
@@ -282,8 +371,8 @@ object Validators {
   }
 
   /** ZERO-extra-pass quality metrics via Spark's Observation API: the
-    * validator `df.agg(...)` probes above each cost one dedicated job
-    * over the data — correct for a gate that must run BEFORE the
+    * validator `df.agg(...)` probes above each cost one dedicated
+    * aggregation over the data — correct for a gate that must run BEFORE the
     * write, but a pipeline that is writing the data anyway shouldn't
     * scan 100 TB twice for row/null counts. `observed` piggybacks the
     * probes on whatever action the caller was about to run: metrics

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -43,6 +47,25 @@ trait SparkSpec extends AnyFunSuite with Matchers {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Runs `body` and counts the Spark jobs it submits. The listener bus
+    * is drained before the listener is added, so no earlier job leaks
+    * in, and again before the count is read, so no job of `body` is
+    * missed. */
+  def countJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Order-insensitive frame compare on fully-collected rows. */

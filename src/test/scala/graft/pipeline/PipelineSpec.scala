@@ -3,11 +3,13 @@ package graft.pipeline
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.etl.{Merge, Schemas, Transform}
+import graft.quality.Validators
 
 class PipelineSpec extends SparkSpec {
 
@@ -44,6 +46,16 @@ class PipelineSpec extends SparkSpec {
 
   private def source(src: String, rows: Row*) = df(rawSchema, rows: _*)
 
+  private def table() = Files.createTempDirectory("graft-pipe").resolve("bars").toString
+
+  private def twoSources = (
+    source("alpha_vantage",
+      bar("2024-01-05", "AAA", 100.0, "alpha_vantage"),
+      bar("2024-01-05", "BBB", 50.0, "alpha_vantage")),
+    source("yahoo_finance",
+      bar("2024-01-05", "AAA", 100.5, "yahoo_finance"),
+      bar("2024-01-05", "BBB", 50.5, "yahoo_finance")))
+
   test("config loader parses the reference variables.json shape") {
     val cfg = PipelineConfig.fromJson(cfgJson)
     cfg.stock_etl_config.stock_symbols shouldBe Seq("AAA", "BBB")
@@ -54,29 +66,23 @@ class PipelineSpec extends SparkSpec {
 
   test("end-to-end run: gates pass, dedup keeps first source, table written") {
     val cfg = PipelineConfig.fromJson(cfgJson)
-    val av = source("alpha_vantage",
-      bar("2024-01-05", "AAA", 100.0, "alpha_vantage"),
-      bar("2024-01-05", "BBB", 50.0, "alpha_vantage"))
-    val yh = source("yahoo_finance",
-      bar("2024-01-05", "AAA", 100.5, "yahoo_finance"),
-      bar("2024-01-05", "BBB", 50.5, "yahoo_finance"))
-    val table = Files.createTempDirectory("graft-pipe").resolve("bars").toString
-    val res = Pipeline.run(spark, Seq(av, yh), cfg, table,
+    val (av, yh) = twoSources
+    val path = table()
+    val res = Pipeline.run(spark, Seq(av, yh), cfg, path,
       today = lit("2024-01-06").cast("date"))
     res.passed shouldBe true
     res.rowsWritten shouldBe 4L // distinct (date,symbol,data_source)
     res.reports.map(_.stage) should contain allOf
       ("validate_raw_0", "validate_transformed", "validate_coverage", "validate_freshness")
     // month-partitioned layout on disk
-    new java.io.File(table).listFiles().map(_.getName) should contain("month=2024-01")
+    new java.io.File(path).listFiles().map(_.getName) should contain("month=2024-01")
   }
 
   test("raw validation failure aborts the pipeline (negative close)") {
     val cfg = PipelineConfig.fromJson(cfgJson)
     val bad = source("alpha_vantage", bar("2024-01-05", "AAA", -5.0, "alpha_vantage"))
-    val table = Files.createTempDirectory("graft-pipe").resolve("bars").toString
     an[IllegalArgumentException] should be thrownBy
-      Pipeline.run(spark, Seq(bad), cfg, table, today = lit("2024-01-06").cast("date"))
+      Pipeline.run(spark, Seq(bad), cfg, table(), today = lit("2024-01-06").cast("date"))
   }
 
   test("q306 wires the full README DAG: view-after-upsert equals the piecewise composition (README.md:96-131)") {
@@ -104,14 +110,107 @@ class PipelineSpec extends SparkSpec {
   test("coverage and freshness issues report without aborting") {
     val cfg = PipelineConfig.fromJson(cfgJson)
     val av = source("alpha_vantage", bar("2024-01-05", "AAA", 100.0, "alpha_vantage"))
-    val table = Files.createTempDirectory("graft-pipe").resolve("bars").toString
     // BBB missing; data 10 days older than `today` -> both gates report
-    val res = Pipeline.run(spark, Seq(av), cfg, table,
+    val res = Pipeline.run(spark, Seq(av), cfg, table(),
       today = lit("2024-01-15").cast("date"))
     res.passed shouldBe false
     val by = res.reports.map(r => r.stage -> r.result).toMap
     by("validate_coverage").passed shouldBe false
     by("validate_freshness").passed shouldBe false
     by("validate_transformed").passed shouldBe true
+  }
+
+  /** `Pipeline.run`'s reports, or the message it aborts with. */
+  private def viaPipeline(sources: Seq[DataFrame], today: Column): Either[String, Seq[StageReport]] =
+    try Right(Pipeline.run(spark, sources, PipelineConfig.fromJson(cfgJson), table(),
+      today = today).reports)
+    catch { case e: IllegalArgumentException => Left(e.getMessage) }
+
+  /** The same gates called one validator at a time, over the frame
+    * `Pipeline.run` builds and with its abort rule. */
+  private def oneByOne(sources: Seq[DataFrame], today: Column): Either[String, Seq[StageReport]] = {
+    val raw = sources.zipWithIndex.map { case (s, i) =>
+      StageReport(s"validate_raw_$i", Validators.validateRaw(s, today = today))
+    }
+    if (!raw.forall(_.result.passed))
+      return Left(s"requirement failed: raw validation failed: " +
+        raw.flatMap(_.result.errors).mkString("; "))
+    val merged = Merge.mergeSources(
+        sources.zipWithIndex.map { case (s, i) =>
+          Transform.transform(s).withColumn("__src_order", lit(i))
+        },
+        keys = Schemas.mergeKey,
+        priority = Seq(col("__src_order"), col("extracted_at")),
+        sorted = false)
+      .drop("__src_order")
+    val t = Validators.validateTransformed(merged, today = today)
+    if (!t.passed)
+      return Left(s"requirement failed: transformed validation failed: ${t.errors.mkString("; ")}")
+    Right(raw ++ Seq(
+      StageReport("validate_transformed", t),
+      StageReport("validate_coverage",
+        Validators.validateCoverage(merged, Seq("AAA", "BBB"))),
+      StageReport("validate_freshness",
+        Validators.validateFreshness(merged, maxAgeDays = 1, today = today))))
+  }
+
+  test("Pipeline.run's reports equal the validators called one by one, on every gate arm") {
+    val (av, yh) = twoSources
+    val jan6 = lit("2024-01-06").cast("date")
+    val row = (date: String, sym: String, close: Double, volume: Long, src: String) =>
+      Row(date, sym, close - 1, close + 1, close - 2, close, volume, src, t0)
+    // (arm, sources, today, what the arm must show)
+    val arms: Seq[(String, Seq[DataFrame], Column, Either[String, Seq[StageReport]] => Boolean)] = Seq(
+      ("two clean sources", Seq(av, yh), jan6, r => r.exists(_.forall(_.result.passed))),
+      ("negative close in source 1 only",
+        Seq(av, source("yahoo_finance", bar("2024-01-05", "AAA", -5.0, "yahoo_finance"))), jan6,
+        r => r.fold(_.contains("1 rows with negative close"), _ => false)),
+      ("an empty source", Seq(av, source("yahoo_finance")), jan6,
+        r => r.fold(_.endsWith("empty input"), _ => false)),
+      ("a source missing close", Seq(av, yh.drop("close")), jan6,
+        r => r.fold(_.contains("missing required columns: close"), _ => false)),
+      ("future dates",
+        Seq(av, source("yahoo_finance", bar("2024-02-01", "AAA", 100.0, "yahoo_finance"))), jan6,
+        r => r.fold(_.contains("1 rows with future dates"), _ => false)),
+      ("threshold warnings",
+        Seq(source("alpha_vantage",
+          row("2024-01-05", "AAA", 20000.0, 100L, "alpha_vantage"),
+          row("2024-01-05", "BBB", 5.0, 2000000000L, "alpha_vantage")), yh), jan6,
+        r => r.exists(_.find(_.stage == "validate_transformed").get.result.warnings.size == 3)),
+      ("coverage with missing and extra symbols",
+        Seq(source("alpha_vantage", bar("2024-01-05", "AAA", 100.0, "alpha_vantage"),
+          bar("2024-01-05", "CCC", 10.0, "alpha_vantage"))), jan6,
+        r => r.exists(_.find(_.stage == "validate_coverage").get.result ==
+          graft.quality.ValidationResult(passed = false, Seq("missing symbols: BBB"),
+            Seq("unexpected symbols: CCC"), Map("missing" -> Seq("BBB"), "extra" -> Seq("CCC"))))),
+      ("stale data, with bars older than a year", Seq(av, source("yahoo_finance",
+          bar("2022-12-01", "AAA", 100.0, "yahoo_finance"))), lit("2024-01-15").cast("date"),
+        r => r.exists(rs => !rs.find(_.stage == "validate_freshness").get.result.passed &&
+          rs.find(_.stage == "validate_raw_1").get.result.warnings.nonEmpty)))
+    for ((arm, sources, today, shows) <- arms) {
+      val got = viaPipeline(sources, today)
+      withClue(s"$arm: ") {
+        got shouldBe oneByOne(sources, today)
+        assert(shows(got), s"the arm does not show what it is for: $got")
+      }
+    }
+  }
+
+  test("Pipeline.run on two sources submits 8 jobs: one raw aggregation, one post-merge aggregation, the write") {
+    val (av, yh) = twoSources
+    val cfg = PipelineConfig.fromJson(cfgJson)
+    val today = lit("2024-01-06").cast("date")
+    Pipeline.run(spark, Seq(av, yh), cfg, table(), today = today) // warm-up
+    val (res, jobs) = countJobs(Pipeline.run(spark, Seq(av, yh), cfg, table(), today = today))
+    res.passed shouldBe true
+    jobs shouldBe 8
+  }
+
+  test("sources that disagree on a required column's type fail fast, naming the column and both types") {
+    val (av, yh) = twoSources
+    val e = the[IllegalArgumentException] thrownBy Pipeline.run(spark,
+      Seq(av, yh.withColumn("volume", col("volume").cast("int"))),
+      PipelineConfig.fromJson(cfgJson), table(), today = lit("2024-01-06").cast("date"))
+    e.getMessage should (include("'volume'") and include("has bigint") and include("has int"))
   }
 }

@@ -87,6 +87,60 @@ class ValidatorsSpec extends SparkSpec {
     r2.passed shouldBe true
   }
 
+  test("validateRawSources equals validateRaw per source, in one grouped aggregation") {
+    val sources = Seq(
+      good(Row("2023-01-02", "B", 1.0, 2.0, 0.5, 2.5, 20L, "av")), // age warning
+      good(Row("2024-05-02", "A", 1.0, 2.0, 0.5, -3.0, 10L, "av"),
+        Row("2025-01-01", "C", 1.0, 2.0, 0.5, 1.0, 10L, "av"),
+        Row("2024-05-03", "A", 1.0, 2.0, 0.5, null, 10L, "av")),
+      df(schema),
+      good().drop("close"))
+    val (grouped, jobs) = countJobs(Validators.validateRawSources(sources, today = today))
+    grouped shouldBe sources.map(Validators.validateRaw(_, today = today))
+    grouped.map(_.errors) shouldBe Seq(Nil,
+      Seq("1 rows with negative close", "1 rows with future dates", "1 null close values"),
+      Seq("empty input"), Seq("missing required columns: close"))
+    grouped.head.warnings.head should include("older than 365 days")
+    grouped(1).metrics("unique_symbols") shouldBe 2L
+    all(grouped.flatMap(_.metrics.keys)) should not startWith "__"
+    jobs shouldBe 2
+    val reduced = Seq("date", "symbol", "volume")
+    Validators.validateRawSources(sources, reduced, today) shouldBe
+      sources.map(Validators.validateRaw(_, reduced, today))
+  }
+
+  test("runGates: fused gates read as the one-gate calls, for the jobs of one") {
+    val frame = good(Row("2024-05-02", "B", 1.0, 2.0, 0.5, 2.5, 20L, "av"),
+      Row("2024-05-03", "C", 1.0, 2.0, 0.5, 3.5, 30L, "yh"))
+    val gates = Seq(Validators.rawGate(frame.columns, today = today),
+      Validators.coverageGate(Seq("A", "B", "D")),
+      Validators.freshnessGate(maxAgeDays = 40, today = today),
+      Validators.rawGate(frame.drop("close").columns, today = today))
+    val (fused, jobs) = countJobs(Validators.runGates(frame, gates))
+    fused shouldBe Seq(Validators.validateRaw(frame, today = today),
+      Validators.validateCoverage(frame, Seq("A", "B", "D")),
+      Validators.validateFreshness(frame, maxAgeDays = 40, today = today),
+      Validators.validateRaw(frame.drop("close"), today = today))
+    fused(1).metrics shouldBe Map("missing" -> Seq("D"), "extra" -> Seq("C"))
+    jobs shouldBe countJobs(Validators.validateRaw(frame, today = today))._2
+    countJobs(Validators.runGates(frame, gates.takeRight(1)))._2 shouldBe 0
+  }
+
+  test("each public validator is one aggregation with no distinct-aggregate rewrite: 2 jobs") {
+    val tSchema = schema
+      .add("processed_at", TimestampType).add("daily_change_pct", DoubleType)
+      .add("daily_volatility", DoubleType)
+    val ts = java.sql.Timestamp.valueOf("2024-05-01 00:00:00")
+    val transformed = df(tSchema,
+      Row("2024-05-01", "A", 1.0, 2.0, 0.5, 1.5, 10L, "av", ts, 1.0, 2.0),
+      Row("2024-05-02", "B", 1.0, 2.0, 0.5, 1.5, 10L, "av", ts, 1.0, 2.0))
+    val frame = good(Row("2024-05-02", "B", 1.0, 2.0, 0.5, 2.5, 20L, "av"))
+    countJobs(Validators.validateRaw(frame, today = today))._2 shouldBe 2
+    countJobs(Validators.validateTransformed(transformed, today = today))._2 shouldBe 2
+    countJobs(Validators.validateCoverage(frame, Seq("A")))._2 shouldBe 2
+    countJobs(Validators.validateFreshness(frame, today = today))._2 shouldBe 2
+  }
+
   test("duplicateCount counts extra rows beyond first per key (A9)") {
     val d = good(
       Row("2024-05-01", "A", 1.0, 2.0, 0.5, 1.5, 10L, "av"),

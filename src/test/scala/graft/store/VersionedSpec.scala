@@ -137,22 +137,11 @@ class VersionedSpec extends SparkSpec {
     // loose wall bound backstops against O(partitions²) regressions.
     val dfv = Versioned.readVersion(spark, t, 1) // warm the FS cache
     dfv.count() shouldBe 1000
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val again = try Versioned.readVersion(spark, t, 1) finally {
-      Thread.sleep(2000) // listener bus delivery is async
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    val constructSec = (System.nanoTime() - t0) / 1e9 - 2.0
-    assert(jobs.get <= 1,
-      s"readVersion construction ran ${jobs.get} Spark jobs for 1000 " +
+    val (again, jobs) = countJobs(Versioned.readVersion(spark, t, 1))
+    val constructSec = (System.nanoTime() - t0) / 1e9
+    assert(jobs <= 1,
+      s"readVersion construction ran $jobs Spark jobs for 1000 " +
         "partitions; expected at most the one parallel-listing job")
     assert(constructSec < 30.0,
       f"readVersion construction took $constructSec%.1f s for 1000 partitions")
