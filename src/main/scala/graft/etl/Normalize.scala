@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.RunConstants
+
 /** Source normalization (SURVEY.md §2.1 S1/S2/S6): rename raw
   * source-specific columns to the standard bar schema, project away
   * noise columns, and tag provenance. The network-fetch half of the
@@ -30,6 +32,10 @@ object Normalize {
 
   /** Rename via map, tag symbol/source/extracted_at, project to the
     * standard keep-list. Works for any raw shape given its rename map.
+    *
+    * `extracted_at` is the instant this frame was built, fixed as a
+    * [[graft.functions.RunConstant]]: every action over the frame sees
+    * the same value, and its generated code does not change with it.
     */
   def normalize(
       raw: DataFrame,
@@ -40,7 +46,7 @@ object Normalize {
     val tagged = renamed
       .withColumn("symbol", lit(symbol))
       .withColumn("data_source", lit(dataSource))
-      .withColumn("extracted_at", current_timestamp())
+      .withColumn("extracted_at", RunConstants.now())
       .withColumn("date", date_format(col("date"), "yyyy-MM-dd"))
     tagged.select(standardColumns.map(col): _*)
   }

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.RunConstants
+
 /** The transform stage (SURVEY.md §2.3 P4–P9, reference
   * `dags/utils/transformers.py:10-76`): type normalization, date
   * parsing, null handling, derived metrics. Pure column expressions —
@@ -27,8 +29,12 @@ object Transform {
     * (P5, `transformers.py:54-55`), date parse (P6), derived metrics
     * (P8/P9), processed_at tag (P3). `processedAt` is injectable so
     * tests and oracle-checked runs stay deterministic.
+    *
+    * By default `processed_at` is the instant of this call, fixed as a
+    * [[graft.functions.RunConstant]]: every action over the result sees
+    * the same value, and its generated code does not change with it.
     */
-  def transform(df: DataFrame, processedAt: Column = current_timestamp()): DataFrame = {
+  def transform(df: DataFrame, processedAt: Column = RunConstants.now()): DataFrame = {
     df
       .withColumn("date", to_date(col("date")))
       .withColumn("open", col("open").cast("double"))

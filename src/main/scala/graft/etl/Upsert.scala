@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Join-based MERGE upsert (SURVEY.md §2.2 K7, reference
   * `dags/utils/loaders.py:107-190`): WHEN MATCHED → take the staging
@@ -101,7 +102,7 @@ object Upsert {
 
     val tmpPath = tmpFor(tablePath)
     merged.write.mode("overwrite").parquet(tmpPath)
-    commitFromTmp(spark, tablePath, tmpPath, partitionCol)
+    commitFromTmp(spark, tablePath, tmpPath, partitionCol, Some(merged.schema))
   }
 
   /** Incremental aggregate maintenance for insert-only streams — the
@@ -133,10 +134,13 @@ object Upsert {
   private def tmpFor(tablePath: String): String = s"$tablePath.__upsert_tmp"
 
   /** Staged dynamic-partition-overwrite commit, shared with
-    * [[graft.store.Compaction]] (same crash-safety protocol). */
+    * [[graft.store.Compaction]] (same crash-safety protocol). A caller
+    * that just wrote the slice passes its schema, which saves the job
+    * that infers it from the parquet footers. */
   private[graft] def commitFromTmp(spark: SparkSession, tablePath: String,
-                                   tmpPath: String, partitionCol: String): Unit = {
-    spark.read.parquet(tmpPath).write
+                                   tmpPath: String, partitionCol: String,
+                                   schema: Option[StructType] = None): Unit = {
+    schema.fold(spark.read)(spark.read.schema).parquet(tmpPath).write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)

@@ -6,6 +6,7 @@ import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.JsonMethods
 
 import graft.etl.{Merge, Schemas, Transform}
+import graft.functions.RunConstants
 import graft.quality.{ValidationResult, Validators}
 import graft.store.Store
 
@@ -58,6 +59,12 @@ case class PipelineResult(
   * Measured on a 4-core local session with two in-memory sources, a run
   * submits 8 jobs (2 raw, 3 post-merge, 3 write), down from 19 when
   * each gate ran its own aggregation and recomputed the merge.
+  *
+  * One clock per run: `today` is evaluated once on the driver and
+  * `processed_at` is taken once, both as
+  * [[graft.functions.RunConstant]]s, so the raw gate, the post-merge
+  * gates and the write all see the same "now", and a run on a new day
+  * reuses the code the previous day's run compiled.
   */
 object Pipeline {
 
@@ -67,15 +74,22 @@ object Pipeline {
     *
     * Gate policy mirrors the reference: raw/transformed validation
     * errors abort (DataQualityOperator raises); coverage/freshness
-    * issues are reported. Returns per-stage reports either way. */
+    * issues are reported. Returns per-stage reports either way.
+    *
+    * `today` is evaluated once, without a job, when it folds to a
+    * constant (the default `current_date()` is the session time zone's
+    * date at the start of the run); every row written carries the same
+    * `processed_at`, the start of the run. */
   def run(
       spark: SparkSession,
       rawSources: Seq[DataFrame],
       cfg: PipelineConfig,
       tablePath: String,
       today: Column = current_date()): PipelineResult = {
+    val runToday = RunConstants.fix(spark, today)
+    val processedAt = RunConstants.now()
 
-    val rawReports = Validators.validateRawSources(rawSources, today = today)
+    val rawReports = Validators.validateRawSources(rawSources, today = runToday)
       .zipWithIndex.map { case (r, i) => StageReport(s"validate_raw_$i", r) }
     require(rawReports.forall(_.result.passed),
       s"raw validation failed: ${rawReports.flatMap(_.result.errors).mkString("; ")}")
@@ -84,7 +98,7 @@ object Pipeline {
     // priority (the reference concatenates AV before Yahoo), row id
     // breaks ties within a source.
     val transformed = rawSources.zipWithIndex.map { case (src, i) =>
-      Transform.transform(src).withColumn("__src_order", lit(i))
+      Transform.transform(src, processedAt).withColumn("__src_order", lit(i))
     }
     val merged = Merge.mergeSources(transformed,
         keys = Schemas.mergeKey,
@@ -95,9 +109,9 @@ object Pipeline {
     val freshDays =
       math.max(1, cfg.stock_etl_config.data_freshness_threshold_hours / 24)
     val Seq(tReport, covReport, freshReport) = Validators.runGates(merged, Seq(
-        Validators.transformedGate(merged.columns, today = today),
+        Validators.transformedGate(merged.columns, today = runToday),
         Validators.coverageGate(cfg.stock_etl_config.stock_symbols),
-        Validators.freshnessGate(maxAgeDays = freshDays, today = today)))
+        Validators.freshnessGate(maxAgeDays = freshDays, today = runToday)))
       .zip(Seq("validate_transformed", "validate_coverage", "validate_freshness"))
       .map { case (r, stage) => StageReport(stage, r) }
     require(tReport.result.passed,

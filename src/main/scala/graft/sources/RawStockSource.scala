@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -35,6 +36,10 @@ import graft.etl.Schemas
   * grammar (header + comma rows, empty cell = null) rather than
   * delegating to the generic CSV source — the point of the connector
   * is to own the payload format.
+  *
+  * The session Hadoop conf (`fs.*` keys, s3a credentials, endpoint
+  * overrides) reaches the executor readers as one broadcast per scan,
+  * taken when the scan's reader factory is created.
   */
 abstract class RawStockSourceBase extends TableProvider with DataSourceRegister {
   def rawSchema: StructType
@@ -79,16 +84,13 @@ class RawStockScanBuilder(full: StructType, path: String)
 
 class RawStockScan(required: StructType, path: String) extends Scan with Batch {
   // The SESSION's Hadoop conf (s3a credentials, endpoints, hdfs
-  // overrides), not a bare `new Configuration()` — captured on the
-  // driver at plan time and shipped to executor readers through the
-  // task closure via its serializable wrapper.
-  private val serConf = new SerializableConfiguration(
-    SparkSession.active.sparkContext.hadoopConfiguration)
+  // overrides), not a bare `new Configuration()`.
+  private val sc = SparkSession.active.sparkContext
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(serConf.value)
+    val fs = p.getFileSystem(sc.hadoopConfiguration)
     val files =
       if (fs.getFileStatus(p).isDirectory)
         fs.listStatus(p).filter { st =>
@@ -98,17 +100,21 @@ class RawStockScan(required: StructType, path: String) extends Scan with Batch {
       else Array(path)
     files.sorted.map(f => RawStockPartition(f): InputPartition)
   }
+  // Broadcast once per scan, as Spark's own file scans do: the factory
+  // carries only the handle, so a task of a union of N scans
+  // deserializes N handles, not N copies of the whole conf.
   override def createReaderFactory(): PartitionReaderFactory =
-    new RawStockReaderFactory(required, serConf)
+    new RawStockReaderFactory(required,
+      sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
 }
 
 case class RawStockPartition(file: String) extends InputPartition
 
-class RawStockReaderFactory(required: StructType, conf: SerializableConfiguration)
+class RawStockReaderFactory(required: StructType, conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new RawStockReader(required,
-      partition.asInstanceOf[RawStockPartition].file, conf.value)
+      partition.asInstanceOf[RawStockPartition].file, conf.value.value)
 }
 
 /** Streams one landed file: header line maps payload columns to the

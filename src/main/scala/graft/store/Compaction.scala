@@ -81,7 +81,7 @@ object Compaction {
         .drop("__pv", "__nf", "__f")
       val tmpPath = tmpFor(tablePath)
       bucketed.write.mode("overwrite").parquet(tmpPath)
-      Upsert.commitFromTmp(spark, tablePath, tmpPath, partitionCol)
+      Upsert.commitFromTmp(spark, tablePath, tmpPath, partitionCol, Some(bucketed.schema))
     }
     plans
   }

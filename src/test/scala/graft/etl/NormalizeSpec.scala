@@ -106,6 +106,46 @@ class NormalizeSpec extends SparkSpec {
     }
   }
 
+  test("DSv2 connector ships the session Hadoop conf once per scan: its reader factory stays small however large the conf") {
+    import org.apache.spark.SparkEnv
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val dir = java.nio.file.Files.createTempDirectory("graft-av-conf")
+    java.nio.file.Files.writeString(dir.resolve("AAPL.csv"),
+      "date,1. open,2. high,3. low,4. close,5. volume\n" +
+        "2024-03-01,10.0,12.0,9.0,11.0,1000\n")
+    val ser = SparkEnv.get.closureSerializer.newInstance()
+    def factoryBytes(): Int = {
+      val factories = spark.read.format("alphavantage").load(dir.toString)
+        .queryExecution.executedPlan.collect { case s: BatchScanExec => s.readerFactory }
+      factories should have size 1
+      ser.serialize(factories.head).limit()
+    }
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = (0 until 2000).map(i => s"graft.test.padding.$i")
+    val plain = factoryBytes()
+    keys.foreach(k => hc.set(k, "x" * 40))
+    try {
+      val padded = factoryBytes()
+      padded should be < 4096
+      padded shouldBe plain
+      Normalize.alphaVantage(spark.read.format("alphavantage").load(dir.toString), "AAPL")
+        .collect().map(_.getAs[Double]("close")) shouldBe Array(11.0)
+    } finally keys.foreach(hc.unset)
+  }
+
+  test("extracted_at is fixed when the frame is built: every action reads the same instant") {
+    val raw = df(Schemas.rawAlphaVantage, Row("2024-03-01", 10.0, 12.0, 9.0, 11.0, 1000L))
+    val before = java.time.Instant.now()
+    val out = Normalize.alphaVantage(raw, symbol = "AAPL")
+    val after = java.time.Instant.now()
+    val first = out.collect()(0).getAs[java.sql.Timestamp]("extracted_at")
+    Thread.sleep(5)
+    out.collect()(0).getAs[java.sql.Timestamp]("extracted_at") shouldBe first
+    // microsecond precision: compare against the call's bounds truncated alike
+    first.toInstant.isBefore(before.truncatedTo(java.time.temporal.ChronoUnit.MICROS)) shouldBe false
+    first.toInstant.isAfter(after) shouldBe false
+  }
+
   test("per-source error isolation: failures collected, all-fail is fatal (S6)") {
     val ok = () => df(Schemas.rawAlphaVantage, Row("2024-03-01", 1.0, 2.0, 1.0, 2.0, 10L))
     val boom = () => throw new RuntimeException("api down")

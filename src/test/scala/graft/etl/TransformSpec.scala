@@ -66,4 +66,15 @@ class TransformSpec extends SparkSpec {
     out.schema("date").dataType shouldBe StringType
     out.collect()(0).getAs[String]("date") shouldBe "2024-03-01"
   }
+
+  test("the default processed_at is fixed when the frame is built: every action reads the same instant") {
+    val before = java.time.Instant.now()
+    val out = Transform.transform(raw(Row("2024-03-01", "A", "1", "2", "1", "2", "1", "x")))
+    val after = java.time.Instant.now()
+    val first = out.collect()(0).getAs[java.sql.Timestamp]("processed_at")
+    Thread.sleep(5)
+    out.collect()(0).getAs[java.sql.Timestamp]("processed_at") shouldBe first
+    first.toInstant.isBefore(before.truncatedTo(java.time.temporal.ChronoUnit.MICROS)) shouldBe false
+    first.toInstant.isAfter(after) shouldBe false
+  }
 }

@@ -62,6 +62,20 @@ class UpsertSpec extends SparkSpec {
     new java.io.File(s"$tbl.__upsert_tmp").exists() shouldBe false
   }
 
+  test("upsertPartitioned reads its slice back with the slice's own schema: no footer-inference job") {
+    val dir = Files.createTempDirectory("graft_upsert_jobs").toString
+    val tbl = s"$dir/tbl"
+    frame((1L, "2024-01-01", 10.0), (2L, "2024-01-02", 20.0))
+      .write.partitionBy("date").parquet(tbl)
+    val staging = frame((2L, "2024-01-02", 99.0), (3L, "2024-01-03", 30.0))
+    Upsert.upsertPartitioned(spark, tbl, staging, Seq("id"), "date") // warm-up
+    val (_, jobs) = countJobs(Upsert.upsertPartitioned(spark, tbl, staging, Seq("id"), "date"))
+    jobs shouldBe 7
+    val after = spark.read.parquet(tbl)
+    after.count() shouldBe 3
+    after.filter(col("id") === 2).collect()(0).getAs[Double]("v") shouldBe 99.0
+  }
+
   test("recoverPartitioned replays a complete pending slice and discards a torn one") {
     val dir = Files.createTempDirectory("graft_upsert_recover").toString
     val tbl = s"$dir/tbl"

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -204,6 +205,36 @@ class PipelineSpec extends SparkSpec {
     val (res, jobs) = countJobs(Pipeline.run(spark, Seq(av, yh), cfg, table(), today = today))
     res.passed shouldBe true
     jobs shouldBe 8
+  }
+
+  test("one clock per run: a run on the next day compiles no new code, and all its rows carry one processed_at") {
+    val (av, yh) = twoSources
+    val cfg = PipelineConfig.fromJson(cfgJson)
+    val (jan6, jan7) = (lit("2024-01-06").cast("date"), lit("2024-01-07").cast("date"))
+    Pipeline.run(spark, Seq(av, yh), cfg, table(), today = jan6)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val path = table()
+    val res = Pipeline.run(spark, Seq(av, yh), cfg, path, today = jan7)
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles shouldBe 0
+    // the new day's value reached the gates: Jan 5 bars are stale on Jan 7
+    Right(res.reports) shouldBe oneByOne(Seq(av, yh), jan7)
+    res.reports.find(_.stage == "validate_freshness").get.result.passed shouldBe false
+    res.rowsWritten shouldBe 4L
+    spark.read.parquet(path).select(countDistinct("processed_at")).head().getLong(0) shouldBe 1L
+  }
+
+  test("the current_date() default is today in the session time zone") {
+    val zone = "Pacific/Kiritimati" // UTC+14: its date differs from UTC's for 14 h a day
+    withSQLConf("spark.sql.session.timeZone" -> zone) {
+      val today = java.time.LocalDate.now(java.time.ZoneId.of(zone))
+      def run(day: java.time.LocalDate) = Pipeline.run(spark, Seq(source("alpha_vantage",
+          bar(day.toString, "AAA", 100.0, "alpha_vantage"),
+          bar(day.toString, "BBB", 50.0, "alpha_vantage"))),
+        PipelineConfig.fromJson(cfgJson), table())
+      run(today).passed shouldBe true
+      val e = the[IllegalArgumentException] thrownBy run(today.plusDays(1))
+      e.getMessage should include("2 rows with future dates")
+    }
   }
 
   test("sources that disagree on a required column's type fail fast, naming the column and both types") {
