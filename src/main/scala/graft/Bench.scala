@@ -19,6 +19,13 @@ package graft
   *    process exits nonzero AFTER printing — rounds 10/11 lost all
   *    timing signal for 122 healthy queries because one analysis
   *    error aborted the whole run before any JSON was emitted.
+  *  - each query's first timed sample runs under the local property
+  *    [[tools.TagCounter.Key]] set to its name, and the
+  *    `jobs_by_name` detail line reports the jobs, stages and tasks
+  *    that sample submitted — construction included, since the
+  *    constructor runs inside the sample. The tag is set outside the
+  *    timer and the counts are read after `spark.stop()` has drained
+  *    the listener bus.
   *
   * Cross-round adjudication caveat, measured (round 8): two
   * back-to-back full-registry runs at identical settings produced
@@ -80,6 +87,8 @@ object Bench {
     val cpus = tools.Harness.cpus
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
     val spark = tools.Harness.session("WARN")
+    val counter = new tools.TagCounter
+    spark.sparkContext.addSparkListener(counter)
     // Calibration first, on a fresh JVM state identical across rounds
     // (the probe carries its own untimed warmup for codegen compile).
     val cpusInt = scala.util.Try(cpus.toInt).getOrElse(4)
@@ -155,7 +164,11 @@ object Bench {
     // which sampling plan produced a number.
     val heavySec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAVY_SEC", "3.0").toDouble
-    for (name <- names) sample(name)
+    for (name <- names) {
+      spark.sparkContext.setLocalProperty(tools.TagCounter.Key, name)
+      sample(name)
+    }
+    spark.sparkContext.setLocalProperty(tools.TagCounter.Key, null)
     val heavy = names.filter(n => times(n).headOption.exists(_ > heavySec)).toSet
     for (name <- names; _ <- 2 until repeats) if (!heavy(name)) sample(name)
     for (name <- names) sample(name)
@@ -215,6 +228,10 @@ object Bench {
     println(s"""{"metric":"queries_median_by_name","queries":${render(results, short = false, median)}}""")
     println(s"""{"metric":"queries_min_short","queries":${render(results, short = true, _.min)}}""")
     println(s"""{"metric":"tiers","heavy_threshold_sec":${fmt(heavySec)},"heavy":${heavy.toSeq.sorted.map(k => "\"" + k.takeWhile(_ != '_') + "\"").mkString("[", ",", "]")}}""")
+    val jobCounts = counter.counts
+    println(names.flatMap(n => jobCounts.get(n).map { case (j, st, t) =>
+      s""""$n":{"jobs":$j,"stages":$st,"tasks":$t}"""
+    }).mkString("""{"metric":"jobs_by_name","queries":{""", ",", "}}"))
     // cpus is part of the calibration identity: the 0.66 s reference is
     // pinned at 4 CPUs, so a round benched with a different
     // SPARK_GRAFT_CPUS shifts the factor for host-independent reasons —

@@ -284,11 +284,12 @@ object Dedup {
     * input is the viral/mirrored page whose near-dup cluster GROWS
     * with corpus size, and every member of a clone cluster lands in
     * the SAME band buckets, so the ungoverned self-join is quadratic
-    * in the cluster size (measured on DedupScaleBench's
-    * clone+boilerplate corpus: one 0.1·n cluster drives candidate
-    * pairs ×15.2 per ×4 docs — the exact analogue of the
-    * correlated-hyperplane skew the ANN bench caught in round 17,
-    * here caused by the DATA, which no hash fix can remove).
+    * in the cluster size (measured on a synthetic clone+boilerplate
+    * corpus, `scripts/bench_scaling_r18.txt` and `.raw`: one 0.1·n
+    * cluster drives candidate pairs ×15.2 per ×4 docs — the exact
+    * analogue of the correlated-hyperplane skew the ANN bench caught
+    * in round 17, here caused by the DATA, which no hash fix can
+    * remove).
     *
     * `maxBucket` is the governor (the E6 maxDocFreq analogue at the
     * band-bucket level): a (band, key) bucket with more than

@@ -13,10 +13,10 @@ import org.apache.spark.sql.types.StructType
   *   target ⟕anti staging  ∪  staging
   * The broadcast decision is left to AQE by default: a daily increment
   * gets broadcast automatically, while a large backfill staging set
-  * falls back to a shuffled join instead of OOMing the driver. Callers
-  * that KNOW staging is tiny can force the hint. At 100 TB the rewrite
-  * must be bounded to the partitions staging touches —
-  * `upsertPartitioned` does that with dynamic partition overwrite.
+  * falls back to a shuffled join instead of OOMing the driver. At
+  * 100 TB the rewrite must be bounded to the partitions staging
+  * touches — `upsertPartitioned` does that with dynamic partition
+  * overwrite.
   */
 object Upsert {
 
@@ -28,12 +28,9 @@ object Upsert {
   def upsert(
       target: DataFrame,
       staging: DataFrame,
-      keys: Seq[String],
-      broadcastStaging: Boolean = false): DataFrame = {
-    val s = if (broadcastStaging) broadcast(staging) else staging
-    target.join(s, keys, "left_anti")
+      keys: Seq[String]): DataFrame =
+    target.join(staging, keys, "left_anti")
       .unionByName(staging.select(target.columns.map(col): _*))
-  }
 
   /** Throws if `staging` carries duplicate keys — the reference's
     * BigQuery MERGE raises in that case; run this gate when the

@@ -238,12 +238,14 @@ object Multimodal {
     * collision bucket's failing chain edges vanish at linear cost.
     * Pair-level output through an oversized bucket under-reports,
     * never inflates — the family contract, measured corpus-wide by
-    * DedupScaleBench's agreement probe. Candidate volume ≤
+    * the agreement probe in `scripts/bench_scaling_r19.txt` and
+    * `.raw`. Candidate volume ≤
     * n·4·maxBucket/2 + n·4: cap-linear in n. Only the 8-byte hash
     * shuffles; oversized-bucket windows reuse the self-join's
     * (band, key) hash partitioning. Input: (idCol, h64). Public: the
     * direct surface for PRE-HASHED corpora (any 64-bit perceptual
-    * hash), and the instrument DedupScaleBench drives. */
+    * hash), and the surface the r19 scaling runs in
+    * `scripts/bench_scaling_r19.txt` drove. */
   def bandedHammingPairs(hashes: DataFrame, idCol: String,
                          maxHamming: Int, maxBucket: Long = 1000): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,

@@ -94,9 +94,12 @@ object Pipeline {
     require(rawReports.forall(_.result.passed),
       s"raw validation failed: ${rawReports.flatMap(_.result.errors).mkString("; ")}")
 
-    // Deterministic keep-first across sources: source order is the
-    // priority (the reference concatenates AV before Yahoo), row id
-    // breaks ties within a source.
+    // Keep-first across sources: source order decides (the reference
+    // concatenates AV before Yahoo). `extracted_at` is one constant per
+    // normalized frame, so it separates two normalizations of the same
+    // source but breaks no tie within one frame: rows of one frame that
+    // share a merge key must be identical (as gen.py's duplicates are),
+    // or which of them survives is unspecified.
     val transformed = rawSources.zipWithIndex.map { case (src, i) =>
       Transform.transform(src, processedAt).withColumn("__src_order", lit(i))
     }

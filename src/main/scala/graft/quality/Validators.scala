@@ -17,12 +17,6 @@ case class ValidationResult(
     warnings ++ other.warnings, metrics ++ other.metrics)
 }
 
-/** Extension point mirroring the reference's `validation_callable`
-  * contract (`data_quality.py:24,40,79`). */
-trait Validator {
-  def validate(df: DataFrame): ValidationResult
-}
-
 /** One quality gate: the named aggregate probes it reads and the reader
   * that turns their values into a result. The reader sees only its own
   * probes, so gates sharing an aggregation never collide. A gate with no

@@ -44,9 +44,7 @@ object Store {
     * directory is written by one task (no small-file explosion: tasks ×
     * partitions files otherwise), then sort within tasks on
     * (partition, cluster...) so every parquet file is internally
-    * ordered on the cluster key. `bloomCols` adds per-row-group bloom
-    * filters (see [[bloomFilterOptions]]) for point-lookup keys the
-    * sort order doesn't serve.
+    * ordered on the cluster key.
     *
     * The codec defaults to zstd rather than Spark's snappy: at 100 TB
     * the ~25-35% size reduction is real money and network time, zstd
@@ -64,8 +62,6 @@ object Store {
     * (row-group skipping intact). */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String,
                        clusterCols: Seq[String],
-                       bloomCols: Seq[String] = Nil,
-                       bloomNdv: Long = 100000L,
                        codec: String = "zstd",
                        maxRecordsPerFile: Long = 0L): Unit =
     df.repartition(col(partitionCol))
@@ -73,7 +69,6 @@ object Store {
       .write.mode("overwrite")
       .option("compression", codec)
       .option("maxRecordsPerFile", maxRecordsPerFile)
-      .options(bloomFilterOptions(bloomCols, bloomNdv))
       .partitionBy(partitionCol).parquet(path)
 
   def readTable(spark: SparkSession, path: String): DataFrame =

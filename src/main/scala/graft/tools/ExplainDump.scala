@@ -14,8 +14,9 @@ package graft.tools
   * eager localCheckpoint/barrier job), and fixture-backed queries
   * build their disk fixture on first touch. Dumping the whole
   * registry therefore RUNS those workloads; their dumped plan is only
-  * the final frame's (per-round plans never appear — use
-  * [[JobProfile]] for those). */
+  * the final frame's (per-round plans never appear — count their jobs,
+  * stages and tasks with `graft.Bench <query>`, whose `jobs_by_name`
+  * line reports them). */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ExplainDump <sfDir> <outDir> [query ...]")

@@ -3,11 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** The session and query selection shared by the tools that drive the
-  * registry (`graft.Bench`, `graft.Verify`, [[JobProfile]],
-  * [[ExplainDump]]), so every one of them measures or dumps the same
-  * engine configuration. The scale tools keep their own builders:
-  * they default to 8 cores and size partitions from
-  * `SPARK_GRAFT_PARTS`. */
+  * registry (`graft.Bench`, `graft.Verify`, [[ExplainDump]]), so every
+  * one of them measures or dumps the same engine configuration. This
+  * is the only session builder in the library. */
 object Harness {
 
   /** Core count: `SPARK_GRAFT_CPUS`, default 4. */

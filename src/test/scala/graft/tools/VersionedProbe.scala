@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField}
 
 /** Dev-only: isolate readVersion construction cost at N partitions
@@ -8,11 +7,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField}
 object VersionedProbe {
   def main(args: Array[String]): Unit = {
     val nParts = args.headOption.map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR")
     import org.apache.spark.sql.functions.col
 
     def build(tag: String): String = {
