@@ -7,8 +7,8 @@ package graft
   *  - the timed action is a write to the `noop` sink, which executes
   *    the FULL physical plan (including deterministic final sorts that
   *    a `.count()` action would let Catalyst eliminate) with zero IO;
-  *  - each query runs `repeats` times (heavy-tier queries: two — see
-  *    the tier protocol at the sampling plan) and reports the MIN (the plan's
+  *  - each query runs `repeats` times (heavy-tier queries: at most
+  *    two — see the tier protocol at the sampling plan) and reports the MIN (the plan's
   *    cost; round-2 numbers showed 3-5x within-run variance on
   *    tiny-output aggregates from GC/JIT interactions across ~90
   *    sequential queries in one JVM) AND the MEDIAN (steady-state) —
@@ -85,14 +85,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = tools.Harness.cpus
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
+    val repeats = tools.Harness.positiveInt(sys.env, "SPARK_GRAFT_BENCH_REPEATS", 3)
     val spark = tools.Harness.session("WARN")
     val counter = new tools.TagCounter
     spark.sparkContext.addSparkListener(counter)
     // Calibration first, on a fresh JVM state identical across rounds
     // (the probe carries its own untimed warmup for codegen compile).
-    val cpusInt = scala.util.Try(cpus.toInt).getOrElse(4)
-    val probeSec = hostProbeSec(spark, cpusInt)
+    val probeSec = hostProbeSec(spark, cpus)
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -127,7 +126,8 @@ object Bench {
     tryRun(names.head) // untimed warmup
 
     // Sampling plan: (repeats-1) BACK-TO-BACK runs per query, then one
-    // final PHASE-SEPARATED round over the whole registry. Rationale
+    // final PHASE-SEPARATED round over the whole registry (none when
+    // repeats = 1: exactly `repeats` samples per query). Rationale
     // (round-8 measurements): a transient JVM phase (GC pressure, JIT
     // deopt, code-cache sweep) lasts seconds and parks on whichever
     // queries run inside it — back-to-back-only repeats put ALL of a
@@ -154,7 +154,7 @@ object Bench {
     // still gets a min-time record every round — coverage never
     // shrinks — but a query whose FIRST timed sample exceeds the
     // heavy threshold is tagged `heavy` and skips the extra
-    // back-to-back repeats, keeping two samples (the initial
+    // back-to-back repeats, keeping min(2, repeats) samples (the initial
     // back-to-back one and the final phase-separated one; the min of
     // two still dodges a single poisoned phase). Core queries keep
     // the full `repeats` plan. Cross-round adjudication of a heavy
@@ -162,8 +162,7 @@ object Bench {
     // the mover in isolation, only when it moved. The tier split is
     // emitted on its own detail line so the adjudicator can tell
     // which sampling plan produced a number.
-    val heavySec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAVY_SEC", "3.0").toDouble
+    val heavySec = tools.Harness.positiveDouble(sys.env, "SPARK_GRAFT_BENCH_HEAVY_SEC", 3.0)
     for (name <- names) {
       spark.sparkContext.setLocalProperty(tools.TagCounter.Key, name)
       sample(name)
@@ -171,7 +170,7 @@ object Bench {
     spark.sparkContext.setLocalProperty(tools.TagCounter.Key, null)
     val heavy = names.filter(n => times(n).headOption.exists(_ > heavySec)).toSet
     for (name <- names; _ <- 2 until repeats) if (!heavy(name)) sample(name)
-    for (name <- names) sample(name)
+    if (repeats >= 2) for (name <- names) sample(name)
     val results = names.filter(times(_).nonEmpty).map(name => name -> (times(name): Seq[Double]))
     // A future name collision on the short key (e.g. q53_funnel vs
     // q53_retention) would silently emit duplicate JSON keys in the
@@ -236,7 +235,7 @@ object Bench {
     // pinned at 4 CPUs, so a round benched with a different
     // SPARK_GRAFT_CPUS shifts the factor for host-independent reasons —
     // bench_diff.py refuses to divide factors from unequal cpu counts.
-    println(s"""{"metric":"host_factor","probe_sec":${fmt(probeSec)},"reference_sec":${fmt(HostProbeReferenceSec)},"factor":${fmt(probeSec / HostProbeReferenceSec)},"cpus":$cpusInt}""")
+    println(s"""{"metric":"host_factor","probe_sec":${fmt(probeSec)},"reference_sec":${fmt(HostProbeReferenceSec)},"factor":${fmt(probeSec / HostProbeReferenceSec)},"cpus":$cpus}""")
     println(s"""{"metric":"total","value":${fmt(total)},"median_total":${fmt(totalMedian)},"unit":"sec","n":${results.size},"sf":"$sfDir"$failedJson,"queries":${render(top10, short = true, _.min)},"detail":"top-10 min digest; full per-query maps on the 3 preceding lines"}""")
     // Exit nonzero AFTER the metric lines so a failure is loud in the
     // driver's rc without erasing the timings of healthy queries.

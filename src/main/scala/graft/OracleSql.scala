@@ -6,8 +6,12 @@ package graft
   * [[graft.core.Exact]] and [[graft.bars.Bars]]):
   *  - double aggregates go through exact DECIMAL sums;
   *  - `round` on doubles is emulated as
-  *    `CAST(ROUND(CAST(x AS DECIMAL(28,10)), 2) AS DOUBLE)` which
-  *    matches Spark's HALF_UP-on-shortest-repr semantics;
+  *    `CAST(ROUND(CAST(x AS DECIMAL(28,10)), 2) AS DOUBLE)`. Spark
+  *    rounds the double's shortest decimal form HALF_UP; the two agree
+  *    on every sf0.01 value but differ on 2 sf0.1 values, and
+  *    `Bars`' `row_id` leaves some sf0.1 keep-first survivors
+  *    undefined — the contract holds at sf0.01 and not at sf0.1
+  *    (ROADMAP.md, direction 1);
   *  - every query ORDER BYs a deterministic key, mirrored in Spark;
   *  - no clock functions — anchors are literals.
   */
@@ -57,6 +61,26 @@ merged AS (
   private val mergedCols =
     "row_id, date, symbol, data_source, open, high, low, close, volume, processed_at, daily_change_pct, daily_volatility"
 
+  /** Per-(symbol, date) close over `merged` (min close), the twin of
+    * SparkEntry's `dailyClose`. */
+  private val dailyCloseCte: String = """daily AS (
+  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date)"""
+
+  /** [[dailyCloseCte]] over the S0-S4 panel, the twin of SparkEntry's
+    * `panelDailyClose`. */
+  private val panelDailyCloseCte: String = """daily AS (
+  SELECT symbol, date, min(close) AS close_price FROM merged
+  WHERE symbol IN ('S0','S1','S2','S3','S4') GROUP BY symbol, date)"""
+
+  /** One bar per (symbol, date) from `merged`: the first non-null-open
+    * bar by (data_source, row_id), as a subquery plus its filter — the
+    * twin of SparkEntry's `firstBars`. */
+  private val firstBars: String = """(
+    SELECT *, row_number() OVER (PARTITION BY symbol, date
+      ORDER BY data_source, row_id) AS rn
+    FROM merged WHERE open IS NOT NULL)
+  WHERE rn = 1"""
+
   val q01_transform_derive: String = barsCte +
     s"SELECT $mergedCols FROM tbars ORDER BY row_id"
 
@@ -71,9 +95,8 @@ SELECT date, symbol,
   count(DISTINCT data_source) AS source_count
 FROM merged GROUP BY date, symbol ORDER BY date, symbol"""
 
-  val q04_moving_averages: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date)
+  val q04_moving_averages: String = barsCte + s"""
+, $dailyCloseCte
 SELECT symbol, date, close_price,
   avg(close_price) OVER (PARTITION BY symbol ORDER BY date
     ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS ma_5d,
@@ -128,18 +151,32 @@ SELECT CAST(processed_at AS DATE) AS ingestion_date,
   min(date) AS earliest_data_date, max(date) AS latest_data_date
 FROM merged GROUP BY CAST(processed_at AS DATE) ORDER BY ingestion_date"""
 
-  val q08_upsert: String = barsCte + s"""
+  /** q08's upsert slices of `merged` — the twin of SparkEntry's
+    * `q08Target`/`q08Staging`: target = bars before 1999, staging =
+    * Jun–Dec 1998 with close+1. */
+  private val q08Slices: String = s"""
 , target AS (SELECT $mergedCols FROM merged WHERE date < DATE '1999-01-01'),
 staging AS (
   SELECT row_id, date, symbol, data_source, open, high, low, close + 1.0 AS close,
          volume, processed_at, daily_change_pct, daily_volatility
-  FROM merged WHERE date >= DATE '1998-06-01' AND date < DATE '1999-01-01')
-SELECT $mergedCols FROM (
-  SELECT * FROM target t
+  FROM merged WHERE date >= DATE '1998-06-01' AND date < DATE '1999-01-01')"""
+
+  /** Keyed upsert of `staging` into `target` (anti-join + union), the
+    * logical result of [[graft.etl.Upsert.upsert]]. */
+  private val q08Upserted: String = """SELECT * FROM target t
   WHERE NOT EXISTS (SELECT 1 FROM staging s
     WHERE s.date = t.date AND s.symbol = t.symbol AND s.data_source = t.data_source)
   UNION ALL
-  SELECT * FROM staging)
+  SELECT * FROM staging"""
+
+  /** [[q08Slices]] plus their upsert as the `after` CTE. */
+  private val q08After: String = s"""$q08Slices,
+after AS (
+  $q08Upserted)"""
+
+  val q08_upsert: String = barsCte + s"""$q08Slices
+SELECT $mergedCols FROM (
+  $q08Upserted)
 ORDER BY row_id, close"""
 
   /** Snapshot-diff twin: q08's target/after versions reconciled via
@@ -150,18 +187,7 @@ ORDER BY row_id, close"""
       "processed_at", "daily_change_pct", "daily_volatility")
     val same = nonKey.map(c => s"t.$c IS NOT DISTINCT FROM a.$c")
       .mkString("\n      AND ")
-    barsCte + s"""
-, target AS (SELECT $mergedCols FROM merged WHERE date < DATE '1999-01-01'),
-staging AS (
-  SELECT row_id, date, symbol, data_source, open, high, low, close + 1.0 AS close,
-         volume, processed_at, daily_change_pct, daily_volatility
-  FROM merged WHERE date >= DATE '1998-06-01' AND date < DATE '1999-01-01'),
-after AS (
-  SELECT * FROM target t
-  WHERE NOT EXISTS (SELECT 1 FROM staging s
-    WHERE s.date = t.date AND s.symbol = t.symbol AND s.data_source = t.data_source)
-  UNION ALL
-  SELECT * FROM staging),
+    barsCte + s"""$q08After,
 d AS (
   SELECT CASE
     WHEN t.date IS NULL THEN 'added'
@@ -434,9 +460,8 @@ ORDER BY cnt DESC, value"""
     * close — quantile_cont matches Spark's exact `percentile`
     * interpolation bit-for-bit (the q38-proven parity); the 3·MAD
     * strict-> verdicts evaluate in identical double trees. */
-  val q102_mad_outliers: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
+  val q102_mad_outliers: String = barsCte + s"""
+, $dailyCloseCte,
 med AS (
   SELECT symbol, quantile_cont(close_price, 0.5) AS med FROM daily GROUP BY symbol),
 dev AS (
@@ -628,23 +653,50 @@ FROM predicted GROUP BY lang, predicted_lang ORDER BY lang, predicted_lang"""
 
   // --- dedup family (graft.dedup.Dedup) ------------------------------------
 
-  /** Tokens → word-3-gram shingles → mod-P shingle hashes, the SQL twin
-    * of [[graft.dedup.Dedup.shingleHashes]]. */
-  val shinglesCte: String = """
-WITH toks AS (
+  /** `toks` + `sh` over relation `from` (doc_id, text): lower-cased
+    * alphanumeric tokens and their word 3-gram shingles. */
+  private def shingleCtes(from: String): String = s"""toks AS (
   SELECT doc_id,
     list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
                 t -> t <> '') AS tokens
-  FROM documents),
+  FROM $from),
 sh AS (
   SELECT doc_id, list_transform(range(1, len(tokens)-1),
     i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]) AS shingles
-  FROM toks WHERE len(tokens) >= 3),
+  FROM toks WHERE len(tokens) >= 3)"""
+
+  /** [[shingleCtes]] plus `xs`, each shingle's mod-P hash — the SQL
+    * twin of [[graft.dedup.Dedup.shingleHashes]]. */
+  private def shingleHashCtes(from: String): String = s"""${shingleCtes(from)},
 xs AS (
   SELECT doc_id, list_transform(shingles,
     s -> CAST(('0x' || substr(md5(s),1,14)) AS BIGINT) % 1000000007) AS hs
-  FROM sh)
+  FROM sh)"""
+
+  /** Tokens → word-3-gram shingles → mod-P shingle hashes over the
+    * fixture documents. */
+  val shinglesCte: String = s"""
+WITH ${shingleHashCtes("documents")}
 """
+
+  /** Governed-bucket clone corpus for q346/q348/q369, the twin of
+    * SparkEntry's `cloneCorpus`: docs 0-59 plus 24 " zz<r>" clones
+    * each of docs 0 and 1. */
+  private val cloneCorpusCte: String = """corpus AS (
+  SELECT doc_id, text FROM documents WHERE doc_id < 60
+  UNION ALL
+  SELECT d.doc_id * 100 + r.r + 900000 AS doc_id,
+         d.text || ' zz' || CAST(r.r AS VARCHAR) AS text
+  FROM documents d CROSS JOIN (SELECT unnest(range(0, 24)) AS r) r
+  WHERE d.doc_id < 2)"""
+
+  /** q269/q288/q296's corpus: every doc plus its first two thirds as doc
+    * `doc_id + 10000`, the twin of SparkEntry's `prefixCorpus`. */
+  private val prefixCorpusCte: String = """corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 10000, substr(text, 1, (n_chars * 2) // 3)
+  FROM documents)"""
 
   /** Cleanup twin: identical explicit character classes on both
     * engines (\\s differs between Java and RE2 — never used). */
@@ -682,9 +734,26 @@ SELECT doc_id, lang, source, n_chars FROM (
   FROM documents)
 WHERE rn = 1 ORDER BY doc_id"""
 
+  /** Recursive `conn(a, b)`: every pair joined by a path in the
+    * undirected edge CTE `e(a, b)`, never stepping back to `a` — the
+    * closure whose `least(a, min(b))` labels connected components
+    * independently of Spark's min-label fixpoint. */
+  private val connCte: String = """
+conn(a, b) AS (
+  SELECT a, b FROM e
+  UNION
+  SELECT c.a, e.b FROM conn c JOIN e ON c.b = e.a WHERE e.b <> c.a)"""
+
   /** MinHash signature entries generated from the SAME coefficient
     * table the Spark operator uses ([[graft.dedup.Dedup.minhashCoeffs]])
     * — the two engines cannot diverge on constants. */
+  /** `p` = q18's near-dup pairs, `e` = those pairs undirected, and
+    * [[connCte]] over them: the near-dup clusters as a closure (for a
+    * `WITH RECURSIVE` list). */
+  private def minhashConnCtes: String = s"""p AS ($q18_minhash_neardup),
+e AS (SELECT DISTINCT a, b FROM (  -- UNION ALL + DISTINCT: the WITH RECURSIVE rule
+  SELECT doc_a AS a, doc_b AS b FROM p UNION ALL SELECT doc_b, doc_a FROM p)),$connCte"""
+
   val q18_minhash_neardup: String = {
     val sigEntries = graft.dedup.Dedup.minhashCoeffs.map { case (a, b) =>
       s"list_reduce(list_transform(hs, x -> (x*$a+$b)%1000000007), (u,v)->least(u,v))"
@@ -730,16 +799,8 @@ WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b"""
       s"CASE WHEN 2*len(list_filter(hs, h -> (h >> $j) & 1 = 1)) > len(hs)" +
         s" THEN CAST(1 AS BIGINT) << $j ELSE 0 END"
     }.mkString("\n    + ")
-    """
-WITH toks AS (
-  SELECT doc_id,
-    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
-                t -> t <> '') AS tokens
-  FROM documents),
-sh AS (
-  SELECT doc_id, list_transform(range(1, len(tokens)-1),
-    i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]) AS shingles
-  FROM toks WHERE len(tokens) >= 3),
+    s"""
+WITH ${shingleCtes("documents")},
 hs64 AS (
   SELECT doc_id, list_transform(shingles,
     s -> CAST(('0x' || substr(md5(s),1,14)) AS BIGINT)) AS hs
@@ -785,6 +846,55 @@ WHERE hamming <= 3 ORDER BY doc_a, doc_b"""
         .map(c => s"${c.toInt}.0").mkString("[", ",", "]"))
       .mkString("[\n  ", ",\n  ", "]")
 
+  /** Fixed IVF coarse quantizer, the twin of SparkEntry's
+    * `ivfSq8Index` centroids (hyperplanes 0-7 as cell directions): the
+    * `cm(cell, cv, cn)` CTE with centroid norms embedded as
+    * shortest-repr doubles (exact round-trip). */
+  private def ivfCm: String = {
+    val cvals = (0 until 8).map { j =>
+      val c = graft.similarity.Similarity.hyperplane(j, hpDim)
+      val cn = math.sqrt(c.map(x => x.toDouble * x).sum)
+        .max(java.lang.Double.MIN_VALUE)
+      s"($j, [${c.map(x => s"${x.toInt}.0").mkString(",")}], $cn)"
+    }.mkString(",\n  ")
+    s"""cm(cell, cv, cn) AS (SELECT * FROM (VALUES
+  $cvals) v(cell, cv, cn))"""
+  }
+
+  /** d = -cos(embedding, centroid), mirroring Similarity.centStructs:
+    * same fold, same norm; callers break ties on (d, cell). */
+  private def ivfD: String =
+    "(-(list_reduce(list_prepend(0.0, list_transform(range(1, len(embedding)+1), " +
+      "i -> CAST(embedding[i] AS DOUBLE) * cv[i])), (acc,v) -> acc + v))) / " +
+      s"(sqrt(${sqlDot("embedding", "embedding")}) * cn) AS d"
+
+  /** `cm` plus `a`: every fixture embedding against every centroid. */
+  private def ivfCellCtes: String = s"""$ivfCm,
+a AS (
+  SELECT vec_id, embedding, cell,
+    $ivfD
+  FROM embeddings CROSS JOIN cm)"""
+
+  /** [[ivfCellCtes]] plus q91's int8 codes: each row's nearest cell
+    * (`codes`) and each query's 3 probed cells (`qcodes`). */
+  private def ivfSq8Ctes: String = {
+    def sq8(e: String) =
+      s"list_transform(range(1, len($e)+1), " +
+        s"i -> CAST(floor(CAST($e[i] AS DOUBLE) " +
+        s"/ sqrt(${sqlDot(e, e)}) * 127 + 0.5) AS BIGINT))"
+    s"""$ivfCellCtes,
+codes AS (
+  SELECT vec_id, cell, ${sq8("embedding")} AS qv FROM (
+    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+    FROM a)
+  WHERE rn = 1),
+qcodes AS (
+  SELECT vec_id AS query_id, cell, ${sq8("embedding")} AS qq FROM (
+    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+    FROM a WHERE vec_id < 10)
+  WHERE rn <= 3)"""
+  }
+
   /** Sequential fold of embedding · hyperplane `p` — same float→double
     * promotion and accumulation order as the Spark vec_dot. */
   private def sqlHpDot(p: Int): String =
@@ -802,62 +912,58 @@ WHERE hamming <= 3 ORDER BY doc_a, doc_b"""
   private def sqlAnyBand(a: String, b: String): String =
     (0 until hpBands).map(j => s"$a.key$j = $b.key$j").mkString("(", " OR ", ")")
 
-  val q21_knn_bruteforce: String = s"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-scored AS (
-  SELECT q.query_id, e.vec_id, ${sqlCosine("q.qv", "e.embedding")} AS cosine
-  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-ranked AS (
+  /** `hp` + `s`: the hyperplane matrix and every embedding's LSH band
+    * keys (`key0`…), the twin of [[graft.similarity.Similarity]]'s
+    * band keys. */
+  private val lshCtes: String = s"""hp(m) AS (SELECT $hpMatrix),
+s AS (
+  SELECT vec_id, embedding,
+    $sqlKeyCols
+  FROM embeddings, hp)"""
+
+  /** [[lshCtes]] plus `q`: the band keys of query vectors 0-9. */
+  private val lshProbeCtes: String = s"""$lshCtes,
+q AS (SELECT vec_id AS query_id, embedding AS qv,
+        ${(0 until hpBands).map(b => s"key$b").mkString(", ")}
+      FROM s WHERE vec_id < 10)"""
+
+  /** Per-query top-10 of `scored` by (cosine DESC, vec_id). */
+  private val top10ByCosine: String = """ranked AS (
   SELECT query_id, vec_id AS neighbor_id, cosine,
     CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
   FROM scored)
 SELECT query_id, neighbor_id, rank, cosine FROM ranked
 WHERE rank <= 10 ORDER BY query_id, rank"""
 
+  /** Per-query top-10 of `scored` by (score DESC, vec_id). */
+  private val top10ByScore: String = """ranked AS (
+  SELECT query_id, vec_id AS neighbor_id, score,
+    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS INTEGER) AS rank
+  FROM scored)
+SELECT query_id, neighbor_id, rank, score FROM ranked
+WHERE rank <= 10 ORDER BY query_id, rank"""
+
+  val q21_knn_bruteforce: String = s"""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
+scored AS (
+  SELECT q.query_id, e.vec_id, ${sqlCosine("q.qv", "e.embedding")} AS cosine
+  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
+$top10ByCosine"""
+
   val q22_ann_lsh: String = s"""
-WITH hp(m) AS (SELECT $hpMatrix),
-s AS (
-  SELECT vec_id, embedding,
-    $sqlKeyCols
-  FROM embeddings, hp),
-q AS (SELECT vec_id AS query_id, embedding AS qv,
-        ${(0 until hpBands).map(b => s"key$b").mkString(", ")}
-      FROM s WHERE vec_id < 10),
+WITH $lshProbeCtes,
 scored AS (
   SELECT q.query_id, c.vec_id, ${sqlCosine("q.qv", "c.embedding")} AS cosine
   FROM s c JOIN q ON ${sqlAnyBand("c", "q")} AND c.vec_id <> q.query_id),
-ranked AS (
-  SELECT query_id, vec_id AS neighbor_id, cosine,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, cosine FROM ranked
-WHERE rank <= 10 ORDER BY query_id, rank"""
+$top10ByCosine"""
 
   /** q48: IVF search with the fixed centroid matrix the Spark entry
     * uses (hyperplanes 0-7 as cell directions). d = -cos(vec, centroid)
     * mirrors Similarity.centStructs exactly: same fold, same norm,
     * same (d, cell) tie-break; centroid norms are embedded as
     * shortest-repr doubles (exact round-trip). */
-  val q48_ann_ivf_static: String = {
-    val cvals = (0 until 8).map { j =>
-      val c = graft.similarity.Similarity.hyperplane(j, hpDim)
-      val cn = math.sqrt(c.map(x => x.toDouble * x).sum)
-        .max(java.lang.Double.MIN_VALUE)
-      s"($j, [${c.map(x => s"${x.toInt}.0").mkString(",")}], $cn)"
-    }.mkString(",\n  ")
-    def dotCv(e: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($e)+1), " +
-        s"i -> CAST($e[i] AS DOUBLE) * cv[i])), (acc,v) -> acc + v)"
-    def selfDot(e: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($e)+1), " +
-        s"i -> CAST($e[i] AS DOUBLE) * CAST($e[i] AS DOUBLE))), (acc,v) -> acc + v)"
-    s"""
-WITH cm(cell, cv, cn) AS (SELECT * FROM (VALUES
-  $cvals) v(cell, cv, cn)),
-a AS (
-  SELECT vec_id, embedding, cell,
-    (-(${dotCv("embedding")})) / (sqrt(${selfDot("embedding")}) * cn) AS d
-  FROM embeddings CROSS JOIN cm),
+  val q48_ann_ivf_static: String = s"""
+WITH $ivfCellCtes,
 assign AS (
   SELECT vec_id, embedding, cell FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
@@ -871,26 +977,13 @@ probes AS (
 scored AS (
   SELECT p.query_id, c.vec_id, ${sqlCosine("p.qv", "c.embedding")} AS cosine
   FROM assign c JOIN probes p ON c.cell = p.cell AND c.vec_id <> p.query_id),
-ranked AS (
-  SELECT query_id, vec_id AS neighbor_id, cosine,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, cosine FROM ranked
-WHERE rank <= 10 ORDER BY query_id, rank"""
-  }
+$top10ByCosine"""
 
   /** q95 twin: recall@10 of the q22 LSH result against the q21 exact
     * result, composed from the same CTE builders so the two sides are
     * bit-identical to their standalone oracles. */
   val q95_ann_recall: String = s"""
-WITH hp(m) AS (SELECT $hpMatrix),
-s AS (
-  SELECT vec_id, embedding,
-    $sqlKeyCols
-  FROM embeddings, hp),
-q AS (SELECT vec_id AS query_id, embedding AS qv,
-        ${(0 until hpBands).map(b => s"key$b").mkString(", ")}
-      FROM s WHERE vec_id < 10),
+WITH $lshProbeCtes,
 bruteranked AS (
   SELECT query_id, vec_id AS neighbor_id,
     row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
@@ -914,23 +1007,8 @@ GROUP BY 1 ORDER BY t.query_id"""
     * within-cell self-join marks every vec with a lower-id cosine
     * near-dup as dropped. Same fold-order dot/norm as the Spark side,
     * so the ≥ 0.4 verdicts are bit-identical. */
-  val q88_semantic_dedup: String = {
-    val cvals = (0 until 8).map { j =>
-      val c = graft.similarity.Similarity.hyperplane(j, hpDim)
-      val cn = math.sqrt(c.map(x => x.toDouble * x).sum)
-        .max(java.lang.Double.MIN_VALUE)
-      s"($j, [${c.map(x => s"${x.toInt}.0").mkString(",")}], $cn)"
-    }.mkString(",\n  ")
-    def dotCv(e: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($e)+1), " +
-        s"i -> CAST($e[i] AS DOUBLE) * cv[i])), (acc,v) -> acc + v)"
-    s"""
-WITH cm(cell, cv, cn) AS (SELECT * FROM (VALUES
-  $cvals) v(cell, cv, cn)),
-a AS (
-  SELECT vec_id, embedding, cell,
-    (-(${dotCv("embedding")})) / (sqrt(${sqlDot("embedding", "embedding")}) * cn) AS d
-  FROM embeddings CROSS JOIN cm),
+  val q88_semantic_dedup: String = s"""
+WITH $ivfCellCtes,
 assign AS (
   SELECT vec_id, embedding, cell FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
@@ -943,26 +1021,14 @@ dropped AS (
 SELECT s.vec_id, s.cell, (d.vec_id IS NULL) AS kept
 FROM assign s LEFT JOIN dropped d ON s.vec_id = d.vec_id
 ORDER BY s.vec_id"""
-  }
 
   /** q103 twin: q88's fixed-centroid assignment CTE carrying the label
     * column, then the per-cell contingency summary + purity. */
-  val q103_cluster_purity: String = {
-    val cvals = (0 until 8).map { j =>
-      val c = graft.similarity.Similarity.hyperplane(j, hpDim)
-      val cn = math.sqrt(c.map(x => x.toDouble * x).sum)
-        .max(java.lang.Double.MIN_VALUE)
-      s"($j, [${c.map(x => s"${x.toInt}.0").mkString(",")}], $cn)"
-    }.mkString(",\n  ")
-    def dotCv(e: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($e)+1), " +
-        s"i -> CAST($e[i] AS DOUBLE) * cv[i])), (acc,v) -> acc + v)"
-    s"""
-WITH cm(cell, cv, cn) AS (SELECT * FROM (VALUES
-  $cvals) v(cell, cv, cn)),
+  val q103_cluster_purity: String = s"""
+WITH $ivfCm,
 a AS (
   SELECT vec_id, label, cell,
-    (-(${dotCv("embedding")})) / (sqrt(${sqlDot("embedding", "embedding")}) * cn) AS d
+    $ivfD
   FROM embeddings CROSS JOIN cm),
 assign AS (
   SELECT vec_id, label, cell FROM (
@@ -981,7 +1047,6 @@ SELECT cell, CAST(sum(n) AS BIGINT) AS n_vecs,
   CAST(max(CASE WHEN rn = 1 THEN n END) AS DOUBLE)
     / CAST(sum(n) AS DOUBLE) AS purity
 FROM top GROUP BY cell ORDER BY cell"""
-  }
 
   /** q91: int8-quantized ANN twin. Quantization is floor(u·127 + 0.5)
     * on the unit vector — floor(x + 0.5) is engine-neutral where
@@ -1001,12 +1066,7 @@ scored AS (
       list_transform(range(1, len(n.qv)+1), i -> n.qv[i] * q.qq[i])),
       (a, v) -> a + v) AS score
   FROM n CROSS JOIN q WHERE n.vec_id <> q.query_id),
-ranked AS (
-  SELECT query_id, vec_id AS neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS INTEGER) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, score FROM ranked
-WHERE rank <= 10 ORDER BY query_id, rank"""
+$top10ByScore"""
 
   /** q111: composed IVF+SQ8 twin — q48's fixed-centroid assignment
     * and probe CTEs (full-precision coarse quantizer) feeding q91's
@@ -1014,50 +1074,15 @@ WHERE rank <= 10 ORDER BY query_id, rank"""
     * to each query's 3 probed cells. Each corpus row has exactly one
     * cell and a query's probe list holds distinct cells, so the
     * cell equi-join scores every candidate once. */
-  val q111_ivf_sq8_search: String = {
-    val cvals = (0 until 8).map { j =>
-      val c = graft.similarity.Similarity.hyperplane(j, hpDim)
-      val cn = math.sqrt(c.map(x => x.toDouble * x).sum)
-        .max(java.lang.Double.MIN_VALUE)
-      s"($j, [${c.map(x => s"${x.toInt}.0").mkString(",")}], $cn)"
-    }.mkString(",\n  ")
-    def dotCv(e: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($e)+1), " +
-        s"i -> CAST($e[i] AS DOUBLE) * cv[i])), (acc,v) -> acc + v)"
-    def sq8(e: String) =
-      s"list_transform(range(1, len($e)+1), " +
-        s"i -> CAST(floor(CAST($e[i] AS DOUBLE) " +
-        s"/ sqrt(${sqlDot(e, e)}) * 127 + 0.5) AS BIGINT))"
-    s"""
-WITH cm(cell, cv, cn) AS (SELECT * FROM (VALUES
-  $cvals) v(cell, cv, cn)),
-a AS (
-  SELECT vec_id, embedding, cell,
-    (-(${dotCv("embedding")})) / (sqrt(${sqlDot("embedding", "embedding")}) * cn) AS d
-  FROM embeddings CROSS JOIN cm),
-codes AS (
-  SELECT vec_id, cell, ${sq8("embedding")} AS qv FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-    FROM a)
-  WHERE rn = 1),
-qcodes AS (
-  SELECT vec_id AS query_id, cell, ${sq8("embedding")} AS qq FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-    FROM a WHERE vec_id < 10)
-  WHERE rn <= 3),
+  val q111_ivf_sq8_search: String = s"""
+WITH $ivfSq8Ctes,
 scored AS (
   SELECT q.query_id, c.vec_id,
     list_reduce(list_prepend(CAST(0 AS BIGINT),
       list_transform(range(1, len(c.qv)+1), i -> c.qv[i] * q.qq[i])),
       (acc, v) -> acc + v) AS score
   FROM codes c JOIN qcodes q ON c.cell = q.cell AND c.vec_id <> q.query_id),
-ranked AS (
-  SELECT query_id, vec_id AS neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS INTEGER) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, score FROM ranked
-WHERE rank <= 10 ORDER BY query_id, rank"""
-  }
+$top10ByScore"""
 
   /** q114 twin: the pixel stats from FIRST PRINCIPLES — the fixture's
     * generating formula over (doc_id, x, y), never touching a PNG
@@ -1218,13 +1243,7 @@ ORDER BY p.doc_id"""
     * are their own kept singleton cluster). */
   val q118_keep_best_neardup: String = s"""
 WITH RECURSIVE
-p AS ($q18_minhash_neardup),
-e AS (SELECT DISTINCT a, b FROM (  -- UNION ALL + DISTINCT: the WITH RECURSIVE rule
-  SELECT doc_a AS a, doc_b AS b FROM p UNION ALL SELECT doc_b, doc_a FROM p)),
-conn(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT c.a, e.b FROM conn c JOIN e ON c.b = e.a WHERE e.b <> c.a),
+$minhashConnCtes,
 lab AS (SELECT a AS doc_id, least(a, min(b)) AS label FROM conn GROUP BY a),
 sc AS (
   SELECT d.doc_id, coalesce(l.label, d.doc_id) AS cluster,
@@ -1311,16 +1330,10 @@ SELECT c.doc_id,
     AS first_link_canon
 FROM collapsed c ORDER BY c.doc_id"""
 
-  /** q121 twin: the dHash spec from first principles on the pixel
-    * FORMULA (no PNG anywhere) — 9×8 luma1000 cell grid with floor
-    * bounds, exact rational mean compare via quotient-then-remainder
-    * (the Spark expression's overflow-safe form), per-bit diff count
-    * as Hamming distance, exhaustive pairs (the oracle need not
-    * band-block). */
-  val q121_image_neardup: String = """
-WITH imgs AS (SELECT doc_id, doc_id // 5 AS g, doc_id % 5 AS m
-              FROM documents WHERE doc_id < 100),
-px AS (
+  /** dHash bits of `imgs(doc_id, g, m)` from the pixel formula of
+    * SparkEntry's `groupPng`: 9×8 luma1000 cell sums, one bit per
+    * left/right cell mean compare (quotient, then remainder). */
+  private val dhashBitsCtes: String = """px AS (
   SELECT doc_id,
     y * 8 // 10 AS gr, x * 9 // 12 AS gc,
     299 * ((37*g + (3 + g)*x + (5 + g%3)*y +
@@ -1337,7 +1350,18 @@ bits AS (
      (l.s // l.cnt = r.s // r.cnt AND
       (l.s % l.cnt) * r.cnt > (r.s % r.cnt) * l.cnt)) AS bit
   FROM cells l JOIN cells r
-    ON l.doc_id = r.doc_id AND l.gr = r.gr AND r.gc = l.gc + 1)
+    ON l.doc_id = r.doc_id AND l.gr = r.gr AND r.gc = l.gc + 1)"""
+
+  /** q121 twin: the dHash spec from first principles on the pixel
+    * FORMULA (no PNG anywhere) — 9×8 luma1000 cell grid with floor
+    * bounds, exact rational mean compare via quotient-then-remainder
+    * (the Spark expression's overflow-safe form), per-bit diff count
+    * as Hamming distance, exhaustive pairs (the oracle need not
+    * band-block). */
+  val q121_image_neardup: String = s"""
+WITH imgs AS (SELECT doc_id, doc_id // 5 AS g, doc_id % 5 AS m
+              FROM documents WHERE doc_id < 100),
+$dhashBitsCtes
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
   CAST(sum(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END) AS BIGINT) AS hamming
 FROM bits a JOIN bits b
@@ -1346,33 +1370,24 @@ GROUP BY a.doc_id, b.doc_id
 HAVING sum(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END) <= 3
 ORDER BY doc_a, doc_b"""
 
-  /** q123 twin: identical \x{...} code-point-range patterns (Java
-    * regex and RE2 share the syntax), identical fixed-order dominance
-    * CASE chain, exact integer permille. */
-  val q123_script_detect: String = """
-WITH mixed AS (
-  SELECT doc_id, text || ' ' ||
-    repeat((['', 'привет мир ', 'αβγδε ζ ', 'مرحبا بالعالم ',
-             '你好世界 ', '안녕하세요 '])[CAST(doc_id % 6 + 1 AS INT)],
-           CAST(doc_id % 3 * 40 AS INT)) AS t
-  FROM documents),
-counted AS (
-  SELECT doc_id,
-    CAST(len(regexp_extract_all(t, '[A-Za-z\x{00C0}-\x{024F}]')) AS BIGINT) AS n_latin,
-    CAST(len(regexp_extract_all(t, '[\x{0400}-\x{04FF}]')) AS BIGINT) AS n_cyrillic,
-    CAST(len(regexp_extract_all(t, '[\x{0370}-\x{03FF}]')) AS BIGINT) AS n_greek,
-    CAST(len(regexp_extract_all(t, '[\x{0600}-\x{06FF}]')) AS BIGINT) AS n_arabic,
-    CAST(len(regexp_extract_all(t, '[\x{0590}-\x{05FF}]')) AS BIGINT) AS n_hebrew,
-    CAST(len(regexp_extract_all(t, '[\x{0900}-\x{097F}]')) AS BIGINT) AS n_devanagari,
-    CAST(len(regexp_extract_all(t, '[\x{4E00}-\x{9FFF}]')) AS BIGINT) AS n_cjk,
-    CAST(len(regexp_extract_all(t, '[\x{AC00}-\x{D7AF}]')) AS BIGINT) AS n_hangul,
-    CAST(len(regexp_extract_all(t, '[\x{3040}-\x{30FF}]')) AS BIGINT) AS n_kana
-  FROM mixed),
-dom AS (
-  SELECT *,
-    n_latin + n_cyrillic + n_greek + n_arabic + n_hebrew + n_devanagari
-      + n_cjk + n_hangul + n_kana AS n_scripted,
-    CASE
+  /** Per-script code-point counts of column `c`, n_latin … n_kana —
+    * the twin of [[graft.text.Scripts.scriptProfile]]'s counts; `raw`
+    * keeps the `\x{...}` ranges (Java regex and RE2 share the
+    * syntax) verbatim. */
+  private def scriptCounts(c: String): String = raw"""    CAST(len(regexp_extract_all($c, '[A-Za-z\x{00C0}-\x{024F}]')) AS BIGINT) AS n_latin,
+    CAST(len(regexp_extract_all($c, '[\x{0400}-\x{04FF}]')) AS BIGINT) AS n_cyrillic,
+    CAST(len(regexp_extract_all($c, '[\x{0370}-\x{03FF}]')) AS BIGINT) AS n_greek,
+    CAST(len(regexp_extract_all($c, '[\x{0600}-\x{06FF}]')) AS BIGINT) AS n_arabic,
+    CAST(len(regexp_extract_all($c, '[\x{0590}-\x{05FF}]')) AS BIGINT) AS n_hebrew,
+    CAST(len(regexp_extract_all($c, '[\x{0900}-\x{097F}]')) AS BIGINT) AS n_devanagari,
+    CAST(len(regexp_extract_all($c, '[\x{4E00}-\x{9FFF}]')) AS BIGINT) AS n_cjk,
+    CAST(len(regexp_extract_all($c, '[\x{AC00}-\x{D7AF}]')) AS BIGINT) AS n_hangul,
+    CAST(len(regexp_extract_all($c, '[\x{3040}-\x{30FF}]')) AS BIGINT) AS n_kana"""
+
+  /** The fixed-order dominance CASE over those counts: the first
+    * script, in declaration order, with a nonzero count no smaller
+    * than any later one; 'none' when all are zero. */
+  private val dominantScript: String = """    CASE
       WHEN n_latin > 0 AND n_latin >= n_cyrillic AND n_latin >= n_greek
         AND n_latin >= n_arabic AND n_latin >= n_hebrew
         AND n_latin >= n_devanagari AND n_latin >= n_cjk
@@ -1394,7 +1409,27 @@ dom AS (
       WHEN n_cjk > 0 AND n_cjk >= n_hangul AND n_cjk >= n_kana THEN 'cjk'
       WHEN n_hangul > 0 AND n_hangul >= n_kana THEN 'hangul'
       WHEN n_kana > 0 THEN 'kana'
-      ELSE 'none' END AS dominant
+      ELSE 'none' END AS dominant"""
+
+  /** q123 twin: identical \x{...} code-point-range patterns (Java
+    * regex and RE2 share the syntax), identical fixed-order dominance
+    * CASE chain, exact integer permille. */
+  val q123_script_detect: String = s"""
+WITH mixed AS (
+  SELECT doc_id, text || ' ' ||
+    repeat((['', 'привет мир ', 'αβγδε ζ ', 'مرحبا بالعالم ',
+             '你好世界 ', '안녕하세요 '])[CAST(doc_id % 6 + 1 AS INT)],
+           CAST(doc_id % 3 * 40 AS INT)) AS t
+  FROM documents),
+counted AS (
+  SELECT doc_id,
+${scriptCounts("t")}
+  FROM mixed),
+dom AS (
+  SELECT *,
+    n_latin + n_cyrillic + n_greek + n_arabic + n_hebrew + n_devanagari
+      + n_cjk + n_hangul + n_kana AS n_scripted,
+$dominantScript
   FROM counted)
 SELECT doc_id, n_latin, n_cyrillic, n_greek, n_arabic, n_hebrew,
   n_devanagari, n_cjk, n_hangul, n_kana, n_scripted, dominant,
@@ -1438,6 +1473,22 @@ GROUP BY a.doc_id, b.doc_id
 HAVING sum(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END) <= 3
 ORDER BY doc_a, doc_b"""
 
+  /** Modular link-graph edge CTE body — the twin of SparkEntry's
+    * `modLinks`: two out-links per doc, from `d(doc_id % citers)` to
+    * `d((doc_id*3+1) % cited)` and `d((doc_id*5+2) % cited)`,
+    * self-loops and duplicates dropped. (23, 29) is the near-complete
+    * q124 graph, (97, 89) the sparser q165 one. */
+  private def linkEd(citers: Int, cited: Int): String = s"""
+  SELECT DISTINCT src, dst FROM (
+    SELECT 'd' || CAST(doc_id % $citers AS VARCHAR) AS src,
+           'd' || CAST((doc_id * 3 + 1) % $cited AS VARCHAR) AS dst
+    FROM documents
+    UNION ALL
+    SELECT 'd' || CAST(doc_id % $citers AS VARCHAR),
+           'd' || CAST((doc_id * 5 + 2) % $cited AS VARCHAR)
+    FROM documents)
+  WHERE src <> dst"""
+
   /** q124 twin: the same 3 PageRank iterations unrolled as chained
     * CTEs, entirely in BIGINT micro-units — `//` floor-div at the
     * out-degree split and the 85/100 damping multiply, exact integer
@@ -1446,17 +1497,8 @@ ORDER BY doc_a, doc_b"""
     * (1e12 * 15) // 100 = 150000000000. */
   /** Shared CTE prefix for q124/q125: edges → nodes → outdeg → 3
     * exact integer PageRank iterations (r3 = final ranks). */
-  private val pagerankCtes: String = """
-WITH e AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR) AS src,
-           'd' || CAST((doc_id * 3 + 1) % 29 AS VARCHAR) AS dst
-    FROM documents
-    UNION ALL
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR),
-           'd' || CAST((doc_id * 5 + 2) % 29 AS VARCHAR)
-    FROM documents)
-  WHERE src <> dst),
+  private val pagerankCtes: String = s"""
+WITH e AS (${linkEd(23, 29)}),
 nodes AS (SELECT DISTINCT node FROM (
   SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
 outdeg AS (SELECT src AS node, count(*) AS out_degree FROM e GROUP BY 1),
@@ -1493,17 +1535,8 @@ SELECT node, out_degree, rank_units FROM ranked ORDER BY node"""
     * same floor semantics (`//` over non-negative BIGINTs ≡ Spark's
     * `div`). The matvec lands on the full node frame (COALESCE 0)
     * BEFORE the rescale so both engines count the same n. */
-  val q155_hits: String = """
-WITH e AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR) AS src,
-           'd' || CAST((doc_id * 3 + 1) % 29 AS VARCHAR) AS dst
-    FROM documents
-    UNION ALL
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR),
-           'd' || CAST((doc_id * 5 + 2) % 29 AS VARCHAR)
-    FROM documents)
-  WHERE src <> dst),
+  val q155_hits: String = s"""
+WITH e AS (${linkEd(23, 29)}),
 nodes AS (SELECT DISTINCT node FROM (
   SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
 mass AS (SELECT CAST(count(*) * 1000000 AS BIGINT) AS m FROM nodes),
@@ -1578,9 +1611,8 @@ FROM g CROSS JOIN t ORDER BY source, lang"""
     * the same quantization chain (VARCHAR-detour decimal→double, one
     * IEEE division, cast+round — the q62-documented DuckDB traps
     * apply here too), and the identical final double β tree. */
-  val q154_market_beta: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
+  val q154_market_beta: String = barsCte + s"""
+, $dailyCloseCte,
 rets AS (
   SELECT symbol, date,
     CAST(ROUND(CAST((close_price - prev) / prev * 100 AS DECIMAL(28,10)), 6)
@@ -1648,17 +1680,8 @@ ORDER BY contained, container"""
 
   /** q197 twin of [[graft.graph.LinkGraph.seedReach]]: the q165
     * edges, three unrolled one-hop expansions with distinct unions. */
-  val q197_seed_reach: String = """
-WITH e AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT 'd' || CAST(doc_id % 97 AS VARCHAR) AS src,
-           'd' || CAST((doc_id * 3 + 1) % 89 AS VARCHAR) AS dst
-    FROM documents
-    UNION ALL
-    SELECT 'd' || CAST(doc_id % 97 AS VARCHAR),
-           'd' || CAST((doc_id * 5 + 2) % 89 AS VARCHAR)
-    FROM documents)
-  WHERE src <> dst),
+  val q197_seed_reach: String = s"""
+WITH e AS (${linkEd(97, 89)}),
 nodes AS (SELECT DISTINCT node FROM (  -- UNION ALL + DISTINCT: the WITH RECURSIVE rule
   SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
 n AS (SELECT count(*) AS n FROM nodes),
@@ -1725,16 +1748,11 @@ sz AS (SELECT scc, count(*) AS scc_size FROM lab GROUP BY scc)
 SELECT l.node, l.scc, CAST(sz.scc_size AS BIGINT) AS scc_size
 FROM lab l JOIN sz USING (scc) ORDER BY l.node"""
 
-  /** q206 twin of [[graft.similarity.Similarity.knnPq]] with the
-    * static codebook: DuckDB re-derives the SQ8 quantization (the
-    * q91 sq8 form), slices the first 16 rows into the 8 subspace
-    * codebooks, re-encodes every corpus row by argmin (tie → lowest
-    * codebook index ≡ ORDER BY d, c), rebuilds each query's LUT, and
-    * sums the 8 looked-up BIGINT cells per pair. All integers — the
-    * group-by SUM over 8 BIGINTs is order-free, so the compare is
-    * exact with no epsilon. */
-  val q206_pq_adc: String = s"""
-WITH n AS (
+  /** `n` … `qlut`: q91's SQ8 codes of every embedding, the static
+    * 8-subspace codebook sliced from rows 0-15, each row's PQ code by
+    * argmin (ties to the lower codebook index) and the query LUTs — the
+    * twin of [[graft.similarity.Similarity.knnPq]]'s static encode. */
+  private def pqCtes: String = s"""n AS (
   SELECT vec_id,
     list_transform(range(1, len(embedding)+1),
       i -> CAST(floor(CAST(embedding[i] AS DOUBLE)
@@ -1758,19 +1776,33 @@ codes AS (
   SELECT vec_id, j, c FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn
     FROM dist) WHERE rn = 1),
-qlut AS (SELECT vec_id AS query_id, j, c, d FROM dist WHERE vec_id < 10),
-scored AS (
-  SELECT q.query_id, x.vec_id, CAST(sum(q.d) AS BIGINT) AS score
-  FROM codes x JOIN qlut q ON x.j = q.j AND x.c = q.c
-  WHERE x.vec_id <> q.query_id
-  GROUP BY 1, 2),
-ranked AS (
+qlut AS (SELECT vec_id AS query_id, j, c, d FROM dist WHERE vec_id < 10)"""
+
+  /** Per-query top-10 of `scored` by (score ASC, vec_id). */
+  private val top10ByDistance: String = """ranked AS (
   SELECT query_id, vec_id AS neighbor_id, score,
     CAST(row_number() OVER (PARTITION BY query_id ORDER BY score, vec_id)
       AS INTEGER) AS rank
   FROM scored)
 SELECT query_id, neighbor_id, rank, score FROM ranked
 WHERE rank <= 10 ORDER BY query_id, rank"""
+
+  /** q206 twin of [[graft.similarity.Similarity.knnPq]] with the
+    * static codebook: DuckDB re-derives the SQ8 quantization (the
+    * q91 sq8 form), slices the first 16 rows into the 8 subspace
+    * codebooks, re-encodes every corpus row by argmin (tie → lowest
+    * codebook index ≡ ORDER BY d, c), rebuilds each query's LUT, and
+    * sums the 8 looked-up BIGINT cells per pair. All integers — the
+    * group-by SUM over 8 BIGINTs is order-free, so the compare is
+    * exact with no epsilon. */
+  val q206_pq_adc: String = s"""
+WITH $pqCtes,
+scored AS (
+  SELECT q.query_id, x.vec_id, CAST(sum(q.d) AS BIGINT) AS score
+  FROM codes x JOIN qlut q ON x.j = q.j AND x.c = q.c
+  WHERE x.vec_id <> q.query_id
+  GROUP BY 1, 2),
+$top10ByDistance"""
 
   /** q235 twin: the q227 policy, q212 novelty, and q228 batching
     * twins chained verbatim as subqueries — composition reuses the
@@ -1866,18 +1898,7 @@ FROM sj GROUP BY source_a, source_b ORDER BY source_a, source_b"""
     * validation gates are pass-through probes with no row effect on
     * this data (spec-pinned), so the end-to-end answer is exactly
     * view(upsert(target, staging)). */
-  val q306_pipeline_e2e: String = barsCte + s"""
-, target AS (SELECT $mergedCols FROM merged WHERE date < DATE '1999-01-01'),
-staging AS (
-  SELECT row_id, date, symbol, data_source, open, high, low, close + 1.0 AS close,
-         volume, processed_at, daily_change_pct, daily_volatility
-  FROM merged WHERE date >= DATE '1998-06-01' AND date < DATE '1999-01-01'),
-after AS (
-  SELECT * FROM target t
-  WHERE NOT EXISTS (SELECT 1 FROM staging s
-    WHERE s.date = t.date AND s.symbol = t.symbol AND s.data_source = t.data_source)
-  UNION ALL
-  SELECT * FROM staging)
+  val q306_pipeline_e2e: String = barsCte + s"""$q08After
 SELECT date, symbol,
   min(close) AS close_price,
   CAST(sum(CAST(daily_volatility AS DECIMAL(38,4))) AS DOUBLE)
@@ -2255,14 +2276,10 @@ SELECT doc_id, true AS decoded, doc_id % 2 = 0 AS version89,
     AS n_extensions
 FROM documents ORDER BY doc_id"""
 
-  /** q318 twin: q313's Pettitt CTEs locate the change date, the
-    * regime tag splits each series, and q96's OLS arithmetic (same
-    * decimal quantization, same VARCHAR-detour double conversion,
-    * same final expression tree) fits per (symbol, regime). */
-  val q318_segmented_trend: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
-v AS (
+  /** Pettitt's U_t over `daily`: close in cents, doubled midranks
+    * (2·rank + ties − 1), U_t = t(n+1) − Σ 2r_i per symbol — the twin
+    * of [[graft.analytics.Correlation.pettittTest]]. */
+  private val pettittCtes: String = """v AS (
   SELECT symbol, date, CAST(round(close_price * 100) AS BIGINT) AS x
   FROM daily WHERE close_price IS NOT NULL),
 r AS (
@@ -2278,7 +2295,15 @@ pre AS (
   FROM r),
 u AS (
   SELECT symbol, date, n, t * (n + 1) - s2 AS uu
-  FROM pre WHERE n >= 4 AND t < n),
+  FROM pre WHERE n >= 4 AND t < n)"""
+
+  /** q318 twin: q313's Pettitt CTEs locate the change date, the
+    * regime tag splits each series, and q96's OLS arithmetic (same
+    * decimal quantization, same VARCHAR-detour double conversion,
+    * same final expression tree) fits per (symbol, regime). */
+  val q318_segmented_trend: String = barsCte + s"""
+, $dailyCloseCte,
+$pettittCtes,
 best AS (
   SELECT symbol, uu, date,
     row_number() OVER (PARTITION BY symbol ORDER BY abs(uu) DESC, date) AS pk
@@ -2358,20 +2383,48 @@ SELECT n.node, CAST(coalesce(e.eccentricity, 0) AS BIGINT) AS eccentricity,
 FROM nodes n LEFT JOIN ecc e ON e.node = n.node
 ORDER BY n.node"""
 
-  /** q312 twin of [[graft.analytics.Ranking.reciprocalRankFusion]]
-    * over the hybrid exact-cosine + int8-quantized retrieval pair:
-    * the q21 brute-force leg and the q91 SQ8 leg (same CTE devices,
-    * k = 20 each), fused by the e6-floor 1e6 // (60 + rank)
-    * contribution and re-ranked (sum DESC, doc ASC). */
-  val q312_hybrid_rrf: String = s"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
+  /** The hybrid-search exact leg: queries 0-9 ranked against every
+    * other vector by cosine (`ex_ranked`). */
+  private def exactLegCtes: String = s"""q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
 ex_scored AS (
   SELECT q.query_id, e.vec_id, ${sqlCosine("q.qv", "e.embedding")} AS cosine
   FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
 ex_ranked AS (
   SELECT query_id, vec_id AS doc_id,
     row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-  FROM ex_scored),
+  FROM ex_scored)"""
+
+  /** Rank `sq_scored`, then fuse it with `ex_ranked` by reciprocal
+    * rank (k = 60, e6 floor contributions, top-20 of each leg) into
+    * the top-10 per query — the twin of
+    * [[graft.analytics.Ranking.reciprocalRankFusion]]. */
+  private val rrfFusion: String = """sq_ranked AS (
+  SELECT query_id, vec_id AS doc_id,
+    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank
+  FROM sq_scored),
+legs AS (
+  SELECT query_id, doc_id, 1000000 // (60 + rank) AS c
+  FROM ex_ranked WHERE rank <= 20
+  UNION ALL
+  SELECT query_id, doc_id, 1000000 // (60 + rank) AS c
+  FROM sq_ranked WHERE rank <= 20),
+fused AS (
+  SELECT query_id, doc_id,
+    CAST(sum(c) AS BIGINT) AS rrf_e6,
+    CAST(count(*) AS BIGINT) AS n_systems,
+    CAST(row_number() OVER (PARTITION BY query_id
+      ORDER BY sum(c) DESC, doc_id) AS BIGINT) AS fused_rank
+  FROM legs GROUP BY 1, 2)
+SELECT query_id, doc_id, rrf_e6, n_systems, fused_rank
+FROM fused WHERE fused_rank <= 10 ORDER BY query_id, fused_rank"""
+
+  /** q312 twin of [[graft.analytics.Ranking.reciprocalRankFusion]]
+    * over the hybrid exact-cosine + int8-quantized retrieval pair:
+    * the q21 brute-force leg and the q91 SQ8 leg (same CTE devices,
+    * k = 20 each), fused by the e6-floor 1e6 // (60 + rank)
+    * contribution and re-ranked (sum DESC, doc ASC). */
+  val q312_hybrid_rrf: String = s"""
+WITH $exactLegCtes,
 n AS (
   SELECT vec_id,
     list_transform(range(1, len(embedding)+1),
@@ -2385,121 +2438,31 @@ sq_scored AS (
       list_transform(range(1, len(n.qv)+1), i -> n.qv[i] * nq.qq[i])),
       (a, v) -> a + v) AS score
   FROM n CROSS JOIN nq WHERE n.vec_id <> nq.query_id),
-sq_ranked AS (
-  SELECT query_id, vec_id AS doc_id,
-    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank
-  FROM sq_scored),
-legs AS (
-  SELECT query_id, doc_id, 1000000 // (60 + rank) AS c
-  FROM ex_ranked WHERE rank <= 20
-  UNION ALL
-  SELECT query_id, doc_id, 1000000 // (60 + rank) AS c
-  FROM sq_ranked WHERE rank <= 20),
-fused AS (
-  SELECT query_id, doc_id,
-    CAST(sum(c) AS BIGINT) AS rrf_e6,
-    CAST(count(*) AS BIGINT) AS n_systems,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY sum(c) DESC, doc_id) AS BIGINT) AS fused_rank
-  FROM legs GROUP BY 1, 2)
-SELECT query_id, doc_id, rrf_e6, n_systems, fused_rank
-FROM fused WHERE fused_rank <= 10 ORDER BY query_id, fused_rank"""
+$rrfFusion"""
 
   /** q327 twin: q312's fusion with the int8 leg swapped to the q111
     * staged CTEs — exact-cosine brute leg + IVF-pruned SQ8 leg (each
     * query scores only its 3 probed cells' rows), both cut at k=20,
     * fused by the same e6-floor contribution and (sum DESC, doc ASC)
     * re-rank. */
-  val q327_hybrid_staged_rrf: String = {
-    val cvals = (0 until 8).map { j =>
-      val c = graft.similarity.Similarity.hyperplane(j, hpDim)
-      val cn = math.sqrt(c.map(x => x.toDouble * x).sum)
-        .max(java.lang.Double.MIN_VALUE)
-      s"($j, [${c.map(x => s"${x.toInt}.0").mkString(",")}], $cn)"
-    }.mkString(",\n  ")
-    def dotCv(e: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($e)+1), " +
-        s"i -> CAST($e[i] AS DOUBLE) * cv[i])), (acc,v) -> acc + v)"
-    def sq8(e: String) =
-      s"list_transform(range(1, len($e)+1), " +
-        s"i -> CAST(floor(CAST($e[i] AS DOUBLE) " +
-        s"/ sqrt(${sqlDot(e, e)}) * 127 + 0.5) AS BIGINT))"
-    s"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-ex_scored AS (
-  SELECT q.query_id, e.vec_id, ${sqlCosine("q.qv", "e.embedding")} AS cosine
-  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-ex_ranked AS (
-  SELECT query_id, vec_id AS doc_id,
-    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-  FROM ex_scored),
-cm(cell, cv, cn) AS (SELECT * FROM (VALUES
-  $cvals) v(cell, cv, cn)),
-a AS (
-  SELECT vec_id, embedding, cell,
-    (-(${dotCv("embedding")})) / (sqrt(${sqlDot("embedding", "embedding")}) * cn) AS d
-  FROM embeddings CROSS JOIN cm),
-codes AS (
-  SELECT vec_id, cell, ${sq8("embedding")} AS qv FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-    FROM a)
-  WHERE rn = 1),
-qcodes AS (
-  SELECT vec_id AS query_id, cell, ${sq8("embedding")} AS qq FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-    FROM a WHERE vec_id < 10)
-  WHERE rn <= 3),
+  val q327_hybrid_staged_rrf: String = s"""
+WITH $exactLegCtes,
+$ivfSq8Ctes,
 sq_scored AS (
   SELECT qc.query_id, c.vec_id,
     list_reduce(list_prepend(CAST(0 AS BIGINT),
       list_transform(range(1, len(c.qv)+1), i -> c.qv[i] * qc.qq[i])),
       (acc, v) -> acc + v) AS score
   FROM codes c JOIN qcodes qc ON c.cell = qc.cell AND c.vec_id <> qc.query_id),
-sq_ranked AS (
-  SELECT query_id, vec_id AS doc_id,
-    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank
-  FROM sq_scored),
-legs AS (
-  SELECT query_id, doc_id, 1000000 // (60 + rank) AS c
-  FROM ex_ranked WHERE rank <= 20
-  UNION ALL
-  SELECT query_id, doc_id, 1000000 // (60 + rank) AS c
-  FROM sq_ranked WHERE rank <= 20),
-fused AS (
-  SELECT query_id, doc_id,
-    CAST(sum(c) AS BIGINT) AS rrf_e6,
-    CAST(count(*) AS BIGINT) AS n_systems,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY sum(c) DESC, doc_id) AS BIGINT) AS fused_rank
-  FROM legs GROUP BY 1, 2)
-SELECT query_id, doc_id, rrf_e6, n_systems, fused_rank
-FROM fused WHERE fused_rank <= 10 ORDER BY query_id, fused_rank"""
-  }
+$rrfFusion"""
 
   /** q313 twin of [[graft.analytics.Correlation.pettittTest]]: the
     * same doubled midranks (2·rank + ties − 1), the same prefix-sum
     * identity U_t = t(n+1) − Σ 2r_i, the same earliest-date argmax
     * tiebreak. */
-  val q313_pettitt: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
-v AS (
-  SELECT symbol, date, CAST(round(close_price * 100) AS BIGINT) AS x
-  FROM daily WHERE close_price IS NOT NULL),
-r AS (
-  SELECT symbol, date,
-    2 * rank() OVER (PARTITION BY symbol ORDER BY x)
-      + count(*) OVER (PARTITION BY symbol, x) - 1 AS r2
-  FROM v),
-pre AS (
-  SELECT symbol, date,
-    CAST(row_number() OVER (PARTITION BY symbol ORDER BY date) AS BIGINT) AS t,
-    sum(r2) OVER (PARTITION BY symbol ORDER BY date) AS s2,
-    CAST(count(*) OVER (PARTITION BY symbol) AS BIGINT) AS n
-  FROM r),
-u AS (
-  SELECT symbol, date, n, t * (n + 1) - s2 AS uu
-  FROM pre WHERE n >= 4 AND t < n),
+  val q313_pettitt: String = barsCte + s"""
+, $dailyCloseCte,
+$pettittCtes,
 best AS (
   SELECT symbol, n, uu, date,
     row_number() OVER (PARTITION BY symbol ORDER BY abs(uu) DESC, date) AS pk
@@ -2574,6 +2537,26 @@ FROM e4 e LEFT JOIN sf s ON s.a = e.a AND s.b = e.b
 ORDER BY e.a, e.b"""
   }
 
+  /** Keep each query's 40 best `sq_scored` candidates and re-rank
+    * them by exact cosine (`ranked`) — q314's second stage. */
+  private def rerankCtes: String = s"""cands AS (
+  SELECT query_id, vec_id FROM (
+    SELECT query_id, vec_id,
+      row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank
+    FROM sq_scored)
+  WHERE rank <= 40),
+rescored AS (
+  SELECT c.query_id, c.vec_id AS neighbor_id,
+    ${sqlCosine("q.embedding", "e.embedding")} AS cosine
+  FROM cands c
+  JOIN embeddings e ON e.vec_id = c.vec_id
+  JOIN embeddings q ON q.vec_id = c.query_id),
+ranked AS (
+  SELECT query_id, neighbor_id, cosine,
+    CAST(row_number() OVER (PARTITION BY query_id
+      ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
+  FROM rescored)"""
+
   /** q314 twin of [[graft.similarity.Similarity.twoStageKnn]]: q91's
     * SQ8 integer-dot CTEs keep 40 candidates per query, then the
     * exact-cosine re-rank (q21's scoring) runs over those rows only. */
@@ -2591,23 +2574,7 @@ sq_scored AS (
       list_transform(range(1, len(n.qv)+1), i -> n.qv[i] * nq.qq[i])),
       (a, v) -> a + v) AS score
   FROM n CROSS JOIN nq WHERE n.vec_id <> nq.query_id),
-cands AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank
-    FROM sq_scored)
-  WHERE rank <= 40),
-rescored AS (
-  SELECT c.query_id, c.vec_id AS neighbor_id,
-    ${sqlCosine("q.embedding", "e.embedding")} AS cosine
-  FROM cands c
-  JOIN embeddings e ON e.vec_id = c.vec_id
-  JOIN embeddings q ON q.vec_id = c.query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-  FROM rescored)
+$rerankCtes
 SELECT query_id, neighbor_id, rank, cosine FROM ranked
 WHERE rank <= 10 ORDER BY query_id, rank"""
 
@@ -2615,61 +2582,15 @@ WHERE rank <= 10 ORDER BY query_id, rank"""
     * assignment + probe + SQ8 CTEs cut at k'=40 candidates per query,
     * then q314's exact-cosine re-rank producing `ranked` (the staged
     * stack's scored output, pre-cut). */
-  private val ivfTwoStageCtes: String = {
-    val cvals = (0 until 8).map { j =>
-      val c = graft.similarity.Similarity.hyperplane(j, hpDim)
-      val cn = math.sqrt(c.map(x => x.toDouble * x).sum)
-        .max(java.lang.Double.MIN_VALUE)
-      s"($j, [${c.map(x => s"${x.toInt}.0").mkString(",")}], $cn)"
-    }.mkString(",\n  ")
-    def dotCv(e: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($e)+1), " +
-        s"i -> CAST($e[i] AS DOUBLE) * cv[i])), (acc,v) -> acc + v)"
-    def sq8(e: String) =
-      s"list_transform(range(1, len($e)+1), " +
-        s"i -> CAST(floor(CAST($e[i] AS DOUBLE) " +
-        s"/ sqrt(${sqlDot(e, e)}) * 127 + 0.5) AS BIGINT))"
-    s"""
-WITH cm(cell, cv, cn) AS (SELECT * FROM (VALUES
-  $cvals) v(cell, cv, cn)),
-a AS (
-  SELECT vec_id, embedding, cell,
-    (-(${dotCv("embedding")})) / (sqrt(${sqlDot("embedding", "embedding")}) * cn) AS d
-  FROM embeddings CROSS JOIN cm),
-codes AS (
-  SELECT vec_id, cell, ${sq8("embedding")} AS qv FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-    FROM a)
-  WHERE rn = 1),
-qcodes AS (
-  SELECT vec_id AS query_id, cell, ${sq8("embedding")} AS qq FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-    FROM a WHERE vec_id < 10)
-  WHERE rn <= 3),
+  private val ivfTwoStageCtes: String = s"""
+WITH $ivfSq8Ctes,
 sq_scored AS (
   SELECT q.query_id, c.vec_id,
     list_reduce(list_prepend(CAST(0 AS BIGINT),
       list_transform(range(1, len(c.qv)+1), i -> c.qv[i] * q.qq[i])),
       (acc, v) -> acc + v) AS score
   FROM codes c JOIN qcodes q ON c.cell = q.cell AND c.vec_id <> q.query_id),
-cands AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank
-    FROM sq_scored)
-  WHERE rank <= 40),
-rescored AS (
-  SELECT c.query_id, c.vec_id AS neighbor_id,
-    ${sqlCosine("q.embedding", "e.embedding")} AS cosine
-  FROM cands c
-  JOIN embeddings e ON e.vec_id = c.vec_id
-  JOIN embeddings q ON q.vec_id = c.query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-  FROM rescored)"""
-  }
+$rerankCtes"""
 
   /** q322 twin of [[graft.similarity.Similarity.twoStageKnnIvf]]: the
     * shared staged-stack CTEs (coarse assignment + probe + SQ8 at
@@ -2757,9 +2678,8 @@ ORDER BY lang, doc_id"""
   /** q304 twin of [[graft.analytics.Correlation.historicalVaR]]: the
     * q158 rets CTE, the same ceil-rank tail, the VARCHAR-detour
     * decimal→double for the ES division. */
-  val q304_historical_var: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
+  val q304_historical_var: String = barsCte + s"""
+, $dailyCloseCte,
 rets AS (
   SELECT symbol, date,
     CAST(ROUND(CAST((close_price - prev) / prev * 100 AS DECIMAL(28,10)), 6)
@@ -2970,25 +2890,9 @@ ORDER BY q.q_permille"""
 
   /** q296 twin of [[graft.dedup.Dedup.weightedJaccardPairs]]: the
     * q288 shingle chain, floor-log2 IDF weights, weighted sums. */
-  val q296_weighted_jaccard: String = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 10000, substr(text, 1, (n_chars * 2) // 3)
-  FROM documents),
-toks AS (
-  SELECT doc_id,
-    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
-                t -> t <> '') AS tokens
-  FROM corpus),
-sh AS (
-  SELECT doc_id, list_transform(range(1, len(tokens)-1),
-    i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]) AS shingles
-  FROM toks WHERE len(tokens) >= 3),
-xs AS (
-  SELECT doc_id, list_transform(shingles,
-    s -> CAST(('0x' || substr(md5(s),1,14)) AS BIGINT) % 1000000007) AS hs
-  FROM sh),
+  val q296_weighted_jaccard: String = s"""
+WITH $prefixCorpusCte,
+${shingleHashCtes("corpus")},
 ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs),
 posting AS (SELECT doc_id, unnest(ss) AS shingle FROM ds),
 dfs AS (SELECT shingle, count(*) AS df FROM posting GROUP BY 1),
@@ -3032,15 +2936,10 @@ SELECT f.user_id, n_events, n_types, value_cents, recency_days,
   a.user_id IS NULL AS churned
 FROM f LEFT JOIN a USING (user_id) ORDER BY user_id"""
 
-  /** q294 twin of the forecast bake-off: the q279 recursive Holt
-    * fold over daily event counts + a lag-7 naive, both scored on
-    * the same rows with the identical round-then-cast micro-units. */
-  val q294_forecast_bakeoff: String = """
-WITH RECURSIVE daily AS (
-  SELECT event_type AS symbol, CAST(ts AS DATE) AS date,
-    CAST(count(*) AS DOUBLE) AS close_price
-  FROM events GROUP BY 1, 2),
-d AS (
+  /** `d` + `st`: the Holt level/trend fold over `daily(symbol, date,
+    * close_price)` as a recursive CTE (for a `WITH RECURSIVE` list),
+    * the twin of [[graft.analytics.Indicators.holtSmooth]]. */
+  private val holtCtes: String = """d AS (
   SELECT symbol, date, close_price,
     row_number() OVER (PARTITION BY symbol ORDER BY date) AS rn
   FROM daily),
@@ -3060,7 +2959,17 @@ st AS (
         + CAST('0.5' AS DOUBLE) * (st.level + st.trend) AS lvl,
       st.level AS plvl, st.trend AS ptr,
       d.close_price - (st.level + st.trend) AS res
-    FROM st JOIN d ON d.symbol = st.symbol AND d.rn = st.rn + 1)),
+    FROM st JOIN d ON d.symbol = st.symbol AND d.rn = st.rn + 1))"""
+
+  /** q294 twin of the forecast bake-off: the q279 recursive Holt
+    * fold over daily event counts + a lag-7 naive, both scored on
+    * the same rows with the identical round-then-cast micro-units. */
+  val q294_forecast_bakeoff: String = s"""
+WITH RECURSIVE daily AS (
+  SELECT event_type AS symbol, CAST(ts AS DATE) AS date,
+    CAST(count(*) AS DOUBLE) AS close_price
+  FROM events GROUP BY 1, 2),
+$holtCtes,
 b AS (
   SELECT symbol, close_price, residual,
     lag(close_price, 7) OVER (PARTITION BY symbol ORDER BY date) AS prev7
@@ -3197,25 +3106,9 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""
     * injected corpus, the q236 prefix-filter chain at tau 700
     * (positives, Jaccard weight), and the q285 keyHash negatives
     * keyed (anchor|pos|slot) over the corpus id universe. */
-  val q288_contrastive_pairs: String = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 10000, substr(text, 1, (n_chars * 2) // 3)
-  FROM documents),
-toks AS (
-  SELECT doc_id,
-    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
-                t -> t <> '') AS tokens
-  FROM corpus),
-sh AS (
-  SELECT doc_id, list_transform(range(1, len(tokens)-1),
-    i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]) AS shingles
-  FROM toks WHERE len(tokens) >= 3),
-xs AS (
-  SELECT doc_id, list_transform(shingles,
-    s -> CAST(('0x' || substr(md5(s),1,14)) AS BIGINT) % 1000000007) AS hs
-  FROM sh),
+  val q288_contrastive_pairs: String = s"""
+WITH $prefixCorpusCte,
+${shingleHashCtes("corpus")},
 ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs),
 posting AS (SELECT doc_id, unnest(ss) AS shingle FROM ds),
 dfs AS (SELECT shingle, count(*) AS df FROM posting GROUP BY 1),
@@ -3447,31 +3340,9 @@ FROM r ORDER BY test_id"""
     * expression trees — dyadic α=0.5/β=0.25 literals, level from a
     * nested subquery so the trend reuses the same lvl value. */
   val q279_holt_smooth: String =
-    barsCte.replaceFirst("WITH ", "WITH RECURSIVE ") + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged
-  WHERE symbol IN ('S0','S1','S2','S3','S4') GROUP BY symbol, date),
-d AS (
-  SELECT symbol, date, close_price,
-    row_number() OVER (PARTITION BY symbol ORDER BY date) AS rn
-  FROM daily),
-st AS (
-  SELECT symbol, date, close_price, rn,
-    close_price AS level, CAST(0 AS DOUBLE) AS trend,
-    CAST(NULL AS DOUBLE) AS residual
-  FROM d WHERE rn = 1
-  UNION ALL
-  SELECT symbol, date, close_price, rn, lvl AS level,
-    CAST('0.25' AS DOUBLE) * (lvl - plvl)
-      + CAST('0.75' AS DOUBLE) * ptr AS trend,
-    res AS residual
-  FROM (
-    SELECT d.symbol, d.date, d.close_price, d.rn,
-      CAST('0.5' AS DOUBLE) * d.close_price
-        + CAST('0.5' AS DOUBLE) * (st.level + st.trend) AS lvl,
-      st.level AS plvl, st.trend AS ptr,
-      d.close_price - (st.level + st.trend) AS res
-    FROM st JOIN d ON d.symbol = st.symbol AND d.rn = st.rn + 1))
+    barsCte.replaceFirst("WITH ", "WITH RECURSIVE ") + s"""
+, $panelDailyCloseCte,
+$holtCtes
 SELECT symbol, date, close_price, level, trend,
   level + trend AS forecast_next, residual
 FROM st ORDER BY symbol, date"""
@@ -3483,10 +3354,8 @@ FROM st ORDER BY symbol, date"""
     * every double operation in the operator's stated order, all
     * constants binary-exact. */
   val q365_holt_winters: String =
-    barsCte.replaceFirst("WITH ", "WITH RECURSIVE ") + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged
-  WHERE symbol IN ('S0','S1','S2','S3','S4') GROUP BY symbol, date),
+    barsCte.replaceFirst("WITH ", "WITH RECURSIVE ") + s"""
+, $panelDailyCloseCte,
 d AS (
   SELECT symbol, date, close_price,
     CAST((date - DATE '1970-01-05') % 7 AS INT) AS slot,
@@ -3645,9 +3514,8 @@ ORDER BY volume, close_cents, symbol, date"""
   /** q274 twin of [[graft.analytics.Correlation.mannKendall]]: the
     * same 60-row recency window, pairwise sign sum, and nonneg-mod
     * floor-quantized pairwise slopes with the lower-median pick. */
-  val q274_mann_kendall: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
+  val q274_mann_kendall: String = barsCte + s"""
+, $dailyCloseCte,
 c AS (
   SELECT symbol, CAST(round(close_price * 100) AS BIGINT) AS x,
     CAST(date - DATE '1970-01-01' AS BIGINT) AS t,
@@ -3677,9 +3545,8 @@ FROM rk GROUP BY symbol ORDER BY symbol"""
     * replay with the pair join additionally keyed on the weekday
     * slot — within-season pairs only — and the larger 84-row
     * window. */
-  val q366_seasonal_mk: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
+  val q366_seasonal_mk: String = barsCte + s"""
+, $dailyCloseCte,
 c AS (
   SELECT symbol, CAST(round(close_price * 100) AS BIGINT) AS x,
     CAST((date - DATE '1970-01-05') % 7 AS INTEGER) AS slot,
@@ -3744,9 +3611,8 @@ FROM a WHERE n_rows >= 2 ORDER BY symbol"""
     * prefix-sum/running-extrema identity in DuckDB windows; HUGEINT
     * sums ride through and the emitted statistics cast back to
     * BIGINT. */
-  val q272_cusum_alarms: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
+  val q272_cusum_alarms: String = barsCte + s"""
+, $dailyCloseCte,
 c AS (
   SELECT symbol, date, CAST(round(close_price * 100) AS BIGINT) AS c FROM daily),
 mu AS (
@@ -3835,25 +3701,9 @@ SELECT node, root, depth, path FROM p ORDER BY node"""
     * tau 500, the 700 cut as a filter over its floor permille
     * (provably the same pair set), and TWO recursive-CTE closures
     * for the per-cut components (the q131 discipline). */
-  lazy val q269_threshold_audit: String = """
-WITH RECURSIVE corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 10000, substr(text, 1, (n_chars * 2) // 3)
-  FROM documents),
-toks AS (
-  SELECT doc_id,
-    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
-                t -> t <> '') AS tokens
-  FROM corpus),
-sh AS (
-  SELECT doc_id, list_transform(range(1, len(tokens)-1),
-    i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]) AS shingles
-  FROM toks WHERE len(tokens) >= 3),
-xs AS (
-  SELECT doc_id, list_transform(shingles,
-    s -> CAST(('0x' || substr(md5(s),1,14)) AS BIGINT) % 1000000007) AS hs
-  FROM sh)
+  lazy val q269_threshold_audit: String = s"""
+WITH RECURSIVE $prefixCorpusCte,
+${shingleHashCtes("corpus")}
 , ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs),
 posting AS (SELECT doc_id, unnest(ss) AS shingle FROM ds),
 dfs AS (SELECT shingle, count(*) AS df FROM posting GROUP BY 1),
@@ -4306,15 +4156,10 @@ FROM lab GROUP BY entity_id ORDER BY entity_id"""
   /** q254 twin of [[graft.events.EventAnalytics.sessionWindows]]: the
     * q24 gaps-and-islands sweep with session_window's OUTPUT contract
     * (w_end = last event + gap) and its measured strict-> boundary. */
-  val q254_session_window_native: String = """
+  val q254_session_window_native: String = s"""
 WITH e AS (
   SELECT ts, user_id, value, epoch_us(ts) AS us FROM events),
-m AS (
-  SELECT *, CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY ts)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS is_new
-  FROM e),
+${sessionStarts("ts")},
 s AS (
   SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seq
@@ -4331,16 +4176,11 @@ FROM s GROUP BY user_id, seq ORDER BY user_id, w_start"""
     * under keep-first dedup BY CONSTRUCTION (asserting that is the
     * query's point), and what remains is the q254 session sweep over
     * `event_id % 7 <> 0`. */
-  val q328_capstone_batch: String = """
+  val q328_capstone_batch: String = s"""
 WITH e AS (
   SELECT ts, user_id, value, epoch_us(ts) AS us FROM events
   WHERE event_id % 7 <> 0),
-m AS (
-  SELECT *, CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY ts)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS is_new
-  FROM e),
+${sessionStarts("ts")},
 s AS (
   SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seq
@@ -4708,18 +4548,11 @@ SELECT symbol, date,
   close_i IS NULL AS is_interp
 FROM k ORDER BY symbol, date"""
 
-  /** q238 twin of [[graft.etl.FuzzyMatch.snmPairs]]: both passes'
-    * row_number orders replayed exactly — (key, name, rec_id) is a
-    * total order, so rank ties cannot exist — then the same offset
-    * window join, pair normalization, and (unbounded, equivalent on
-    * kept rows) levenshtein verify. */
-  val q238_snm_linkage: String = """
-WITH recs AS (
-  SELECT p_partkey * 2 AS rec_id, p_name AS name FROM part
-  UNION ALL
-  SELECT p_partkey * 2 + 1, substr(p_name, 1, 7) || 'q' || substr(p_name, 9)
-  FROM part WHERE p_partkey % 5 = 0),
-p1 AS (
+  /** Sorted-neighbourhood candidates over `recs(rec_id, name)`: two
+    * passes (name, reversed name), window 4, pairs normalized to
+    * rec_a < rec_b with their names — the twin of
+    * [[graft.etl.FuzzyMatch.snmPairs]]'s blocking. */
+  private val snmCandCtes: String = """p1 AS (
   SELECT rec_id, name,
     row_number() OVER (ORDER BY name, name, rec_id) AS rnk
   FROM recs),
@@ -4742,7 +4575,20 @@ cand AS (
     CASE WHEN id_a < id_b THEN nm_a ELSE nm_b END AS name_a,
     CASE WHEN id_a < id_b THEN nm_b ELSE nm_a END AS name_b
   FROM (SELECT * FROM c1 UNION ALL SELECT * FROM c2)
-  WHERE id_a <> id_b)
+  WHERE id_a <> id_b)"""
+
+  /** q238 twin of [[graft.etl.FuzzyMatch.snmPairs]]: both passes'
+    * row_number orders replayed exactly — (key, name, rec_id) is a
+    * total order, so rank ties cannot exist — then the same offset
+    * window join, pair normalization, and (unbounded, equivalent on
+    * kept rows) levenshtein verify. */
+  val q238_snm_linkage: String = s"""
+WITH recs AS (
+  SELECT p_partkey * 2 AS rec_id, p_name AS name FROM part
+  UNION ALL
+  SELECT p_partkey * 2 + 1, substr(p_name, 1, 7) || 'q' || substr(p_name, 9)
+  FROM part WHERE p_partkey % 5 = 0),
+$snmCandCtes
 SELECT rec_a, rec_b, name_a, name_b,
   CAST(levenshtein(name_a, name_b) AS BIGINT) AS dist
 FROM cand
@@ -4918,7 +4764,7 @@ FROM s, t"""
     * CONTRACT is full recomputation over the union of both edge
     * batches — recursive symmetric closure, label = least reachable
     * node (the q118 machinery). */
-  val q231_incremental_components: String = """
+  val q231_incremental_components: String = s"""
 WITH RECURSIVE
 e0 AS (
   SELECT doc_id % 211 AS a, 211 + doc_id % 13 AS b FROM documents
@@ -4926,11 +4772,7 @@ e0 AS (
   SELECT doc_id % 211, 224 + doc_id % 7 FROM documents),
 e AS (SELECT DISTINCT a, b FROM (
   SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0)),
-n AS (SELECT DISTINCT a AS node FROM e),
-conn(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT c.a, e.b FROM conn c JOIN e ON c.b = e.a WHERE e.b <> c.a),
+n AS (SELECT DISTINCT a AS node FROM e),$connCte,
 lab AS (SELECT a AS node, least(a, min(b)) AS label FROM conn GROUP BY a)
 SELECT n.node, coalesce(l.label, n.node) AS label
 FROM n LEFT JOIN lab l USING (node)
@@ -5654,23 +5496,8 @@ FROM i, b, c ORDER BY p_permille"""
     * FAISS coarse quantizer) feeding q206's static-codebook PQ
     * encode/LUT scoring, restricted to candidates sharing a probed
     * cell. Every number BIGINT; rank ascends (distance). */
-  val q207_ivf_pq_search: String = {
-    val cvals = (0 until 8).map { j =>
-      val c = graft.similarity.Similarity.hyperplane(j, hpDim)
-      val cn = math.sqrt(c.map(x => x.toDouble * x).sum)
-        .max(java.lang.Double.MIN_VALUE)
-      s"($j, [${c.map(x => s"${x.toInt}.0").mkString(",")}], $cn)"
-    }.mkString(",\n  ")
-    def dotCv(e: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($e)+1), " +
-        s"i -> CAST($e[i] AS DOUBLE) * cv[i])), (acc,v) -> acc + v)"
-    s"""
-WITH cm(cell, cv, cn) AS (SELECT * FROM (VALUES
-  $cvals) v(cell, cv, cn)),
-a AS (
-  SELECT vec_id, embedding, cell,
-    (-(${dotCv("embedding")})) / (sqrt(${sqlDot("embedding", "embedding")}) * cn) AS d
-  FROM embeddings CROSS JOIN cm),
+  val q207_ivf_pq_search: String = s"""
+WITH $ivfCellCtes,
 asg AS (
   SELECT vec_id, cell FROM (
     SELECT vec_id, cell,
@@ -5682,31 +5509,7 @@ probe AS (
       row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
     FROM a WHERE vec_id < 10)
   WHERE rn <= 3),
-n AS (
-  SELECT vec_id,
-    list_transform(range(1, len(embedding)+1),
-      i -> CAST(floor(CAST(embedding[i] AS DOUBLE)
-             / sqrt(${sqlDot("embedding", "embedding")}) * 127 + 0.5)
-           AS BIGINT)) AS qv
-  FROM embeddings),
-js AS (SELECT unnest(range(0, 8)) AS j),
-cb AS (
-  SELECT js.j AS j, n.vec_id AS c,
-    list_slice(n.qv, js.j * 8 + 1, js.j * 8 + 8) AS cv
-  FROM n CROSS JOIN js WHERE n.vec_id < 16),
-sub AS (
-  SELECT n.vec_id, js.j, list_slice(n.qv, js.j * 8 + 1, js.j * 8 + 8) AS sv
-  FROM n CROSS JOIN js),
-dist AS (
-  SELECT s.vec_id, s.j, c.c,
-    list_sum(list_transform(range(1, 9),
-      i -> (s.sv[i] - c.cv[i]) * (s.sv[i] - c.cv[i]))) AS d
-  FROM sub s JOIN cb c ON s.j = c.j),
-codes AS (
-  SELECT vec_id, j, c FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn
-    FROM dist) WHERE rn = 1),
-qlut AS (SELECT vec_id AS query_id, j, c, d FROM dist WHERE vec_id < 10),
+$pqCtes,
 cand AS (
   SELECT p.query_id, g.vec_id FROM probe p JOIN asg g ON p.cell = g.cell
   WHERE g.vec_id <> p.query_id),
@@ -5715,14 +5518,7 @@ scored AS (
   FROM cand cd JOIN codes x ON x.vec_id = cd.vec_id
     JOIN qlut q ON q.query_id = cd.query_id AND q.j = x.j AND q.c = x.c
   GROUP BY 1, 2),
-ranked AS (
-  SELECT query_id, vec_id AS neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score, vec_id)
-      AS INTEGER) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, score FROM ranked
-WHERE rank <= 10 ORDER BY query_id, rank"""
-  }
+$top10ByDistance"""
 
   /** q205 twin of [[graft.etl.Cdc.applyCdc]]: the same synthesized
     * log; winners via row_number over (version, op, payload) DESC —
@@ -5904,15 +5700,10 @@ FROM documents ORDER BY doc_id"""
 
   /** q198 twin of [[graft.events.EventAnalytics.entryExit]]: the q24
     * session CTEs + arg-min/max by (us, event_id). */
-  val q198_entry_exit: String = """
+  val q198_entry_exit: String = s"""
 WITH e AS (
   SELECT event_id, ts, user_id, event_type, epoch_us(ts) AS us FROM events),
-m AS (
-  SELECT *, CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS is_new
-  FROM e),
+${sessionStarts("ts, event_id")},
 s AS (
   SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS seq
@@ -6011,15 +5802,10 @@ FROM c ORDER BY digit"""
   /** q192 twin of [[graft.events.EventAnalytics.peakConcurrency]]:
     * the q24 session CTEs, the same midnight split / clamp / ±1
     * sweep with the starts-first tie order. */
-  val q192_peak_concurrency: String = """
+  val q192_peak_concurrency: String = s"""
 WITH e AS (
   SELECT event_id, ts, user_id, epoch_us(ts) AS us FROM events),
-m AS (
-  SELECT *, CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS is_new
-  FROM e),
+${sessionStarts("ts, event_id")},
 s AS (
   SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS seq
@@ -6101,44 +5887,14 @@ FROM a ORDER BY cohort_month, month_offset"""
   /** q188 twin: the q123 family counts + fixed-order dominance over
     * the RAW text, rolled up per declared lang against the expected
     * script. */
-  val q188_lang_script: String = """
+  val q188_lang_script: String = s"""
 WITH counted AS (
   SELECT doc_id, lang,
-    CAST(len(regexp_extract_all(text, '[A-Za-z\x{00C0}-\x{024F}]')) AS BIGINT) AS n_latin,
-    CAST(len(regexp_extract_all(text, '[\x{0400}-\x{04FF}]')) AS BIGINT) AS n_cyrillic,
-    CAST(len(regexp_extract_all(text, '[\x{0370}-\x{03FF}]')) AS BIGINT) AS n_greek,
-    CAST(len(regexp_extract_all(text, '[\x{0600}-\x{06FF}]')) AS BIGINT) AS n_arabic,
-    CAST(len(regexp_extract_all(text, '[\x{0590}-\x{05FF}]')) AS BIGINT) AS n_hebrew,
-    CAST(len(regexp_extract_all(text, '[\x{0900}-\x{097F}]')) AS BIGINT) AS n_devanagari,
-    CAST(len(regexp_extract_all(text, '[\x{4E00}-\x{9FFF}]')) AS BIGINT) AS n_cjk,
-    CAST(len(regexp_extract_all(text, '[\x{AC00}-\x{D7AF}]')) AS BIGINT) AS n_hangul,
-    CAST(len(regexp_extract_all(text, '[\x{3040}-\x{30FF}]')) AS BIGINT) AS n_kana
+${scriptCounts("text")}
   FROM documents),
 dom AS (
   SELECT doc_id, lang,
-    CASE
-      WHEN n_latin > 0 AND n_latin >= n_cyrillic AND n_latin >= n_greek
-        AND n_latin >= n_arabic AND n_latin >= n_hebrew
-        AND n_latin >= n_devanagari AND n_latin >= n_cjk
-        AND n_latin >= n_hangul AND n_latin >= n_kana THEN 'latin'
-      WHEN n_cyrillic > 0 AND n_cyrillic >= n_greek AND n_cyrillic >= n_arabic
-        AND n_cyrillic >= n_hebrew AND n_cyrillic >= n_devanagari
-        AND n_cyrillic >= n_cjk AND n_cyrillic >= n_hangul
-        AND n_cyrillic >= n_kana THEN 'cyrillic'
-      WHEN n_greek > 0 AND n_greek >= n_arabic AND n_greek >= n_hebrew
-        AND n_greek >= n_devanagari AND n_greek >= n_cjk
-        AND n_greek >= n_hangul AND n_greek >= n_kana THEN 'greek'
-      WHEN n_arabic > 0 AND n_arabic >= n_hebrew AND n_arabic >= n_devanagari
-        AND n_arabic >= n_cjk AND n_arabic >= n_hangul
-        AND n_arabic >= n_kana THEN 'arabic'
-      WHEN n_hebrew > 0 AND n_hebrew >= n_devanagari AND n_hebrew >= n_cjk
-        AND n_hebrew >= n_hangul AND n_hebrew >= n_kana THEN 'hebrew'
-      WHEN n_devanagari > 0 AND n_devanagari >= n_cjk
-        AND n_devanagari >= n_hangul AND n_devanagari >= n_kana THEN 'devanagari'
-      WHEN n_cjk > 0 AND n_cjk >= n_hangul AND n_cjk >= n_kana THEN 'cjk'
-      WHEN n_hangul > 0 AND n_hangul >= n_kana THEN 'hangul'
-      WHEN n_kana > 0 THEN 'kana'
-      ELSE 'none' END AS dominant
+$dominantScript
   FROM counted)
 SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
   CAST(sum(CASE WHEN dominant <>
@@ -6280,17 +6036,8 @@ ORDER BY n.node"""
     * deliberately the NAIVE construction — undirected pairs a<b and
     * the 3-way a<b<c join — a different algorithm that must land on
     * the same triangles the degree-oriented wedge plan finds. */
-  val q181_triangles: String = """
-WITH e0 AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT 'd' || CAST(doc_id % 97 AS VARCHAR) AS src,
-           'd' || CAST((doc_id * 3 + 1) % 89 AS VARCHAR) AS dst
-    FROM documents
-    UNION ALL
-    SELECT 'd' || CAST(doc_id % 97 AS VARCHAR),
-           'd' || CAST((doc_id * 5 + 2) % 89 AS VARCHAR)
-    FROM documents)
-  WHERE src <> dst),
+  val q181_triangles: String = s"""
+WITH e0 AS (${linkEd(97, 89)}),
 und AS (SELECT DISTINCT src, dst FROM (
   SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)),
 deg AS (SELECT src AS node, count(*) AS deg FROM und GROUP BY 1),
@@ -6448,13 +6195,9 @@ FROM rep ORDER BY check_name"""
   /** q175 twin: the q174 CTEs joined with a gain/loss frame whose
     * weakness test is the exact comparison Σgain < Σloss
     * (≡ RSI₁₄ < 50) on the same per-day source-deduped bars. */
-  val q175_reversal_screen: String = barsCte + """
+  val q175_reversal_screen: String = barsCte + s"""
 , daily AS (
-  SELECT symbol, date, open, high, low, close FROM (
-    SELECT *, row_number() OVER (PARTITION BY symbol, date
-      ORDER BY data_source, row_id) AS rn
-    FROM merged WHERE open IS NOT NULL)
-  WHERE rn = 1),
+  SELECT symbol, date, open, high, low, close FROM $firstBars),
 lagged AS (
   SELECT symbol, date, open, high, low, close,
     lag(open) OVER w AS po, lag(close) OVER w AS pc,
@@ -6481,13 +6224,9 @@ ORDER BY f.symbol, f.date"""
   /** q174 twin of [[graft.analytics.Indicators.candlestickScreen]]:
     * the barsCte, the same per-day source dedup, lag, and
     * multiply-never-divide rational comparisons. */
-  val q174_candlesticks: String = barsCte + """
+  val q174_candlesticks: String = barsCte + s"""
 , daily AS (
-  SELECT symbol, date, open, high, low, close FROM (
-    SELECT *, row_number() OVER (PARTITION BY symbol, date
-      ORDER BY data_source, row_id) AS rn
-    FROM merged WHERE open IS NOT NULL)
-  WHERE rn = 1),
+  SELECT symbol, date, open, high, low, close FROM $firstBars),
 lagged AS (
   SELECT symbol, date, open, high, low, close,
     lag(open) OVER (PARTITION BY symbol ORDER BY date) AS po,
@@ -6690,15 +6429,10 @@ FROM sc GROUP BY 1 ORDER BY bm25_units DESC, doc_id LIMIT 50"""
   /** q166 twin of [[graft.events.EventAnalytics.associationRules]]:
     * the q24 session CTEs, distinct (session, type) items, the same
     * ordered-pair self-join and floor-div permille triple. */
-  val q166_assoc_rules: String = """
+  val q166_assoc_rules: String = s"""
 WITH e AS (
   SELECT event_id, ts, user_id, event_type, epoch_us(ts) AS us FROM events),
-m AS (
-  SELECT *, CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS is_new
-  FROM e),
+${sessionStarts("ts, event_id")},
 s AS (
   SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
@@ -6730,17 +6464,8 @@ ORDER BY co.antecedent, co.consequent"""
   /** q165 twin of [[graft.graph.LinkGraph.coCitation]]: same capped
     * edge set on both numerator and denominator, same unordered
     * self-join and floor-div Jaccard. */
-  val q165_cocitation: String = """
-WITH e AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT 'd' || CAST(doc_id % 97 AS VARCHAR) AS src,
-           'd' || CAST((doc_id * 3 + 1) % 89 AS VARCHAR) AS dst
-    FROM documents
-    UNION ALL
-    SELECT 'd' || CAST(doc_id % 97 AS VARCHAR),
-           'd' || CAST((doc_id * 5 + 2) % 89 AS VARCHAR)
-    FROM documents)
-  WHERE src <> dst),
+  val q165_cocitation: String = s"""
+WITH e AS (${linkEd(97, 89)}),
 keep AS (SELECT src FROM e GROUP BY src HAVING count(*) <= 100),
 f AS (SELECT e.src, e.dst FROM e JOIN keep USING (src)),
 pairs AS (
@@ -6781,17 +6506,8 @@ FROM documents GROUP BY source ORDER BY source"""
     * q155 fixture edges undirected, then 4 synchronous rounds each
     * unrolled as a count CTE + a (count desc, label) row_number pick
     * — the same adoption rule, tie to the smallest label. */
-  val q162_label_prop: String = """
-WITH e0 AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR) AS src,
-           'd' || CAST((doc_id * 3 + 1) % 29 AS VARCHAR) AS dst
-    FROM documents
-    UNION ALL
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR),
-           'd' || CAST((doc_id * 5 + 2) % 29 AS VARCHAR)
-    FROM documents)
-  WHERE src <> dst),
+  val q162_label_prop: String = s"""
+WITH e0 AS (${linkEd(23, 29)}),
 e AS (SELECT DISTINCT src, dst FROM (
   SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)),
 l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
@@ -6951,9 +6667,8 @@ ORDER BY b.customer"""
   /** q158 twin: the q62 rets CTE, the same lag pairing, and the q62
     * conversion traps (widen-before-multiply, VARCHAR-detour
     * decimal→double) with the identical final double ρ tree. */
-  val q158_autocorr: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
+  val q158_autocorr: String = barsCte + s"""
+, $dailyCloseCte,
 rets AS (
   SELECT symbol, date,
     CAST(ROUND(CAST((close_price - prev) / prev * 100 AS DECIMAL(28,10)), 6)
@@ -7092,15 +6807,10 @@ ORDER BY doc_id, copy"""
   /** q148 twin: the q24 session CTEs carried to ordered string_agg
     * paths, counted, top-20 by (count desc, path) — the same
     * deterministic boundary cut. */
-  val q148_session_paths: String = """
+  val q148_session_paths: String = s"""
 WITH e AS (
   SELECT event_id, ts, user_id, event_type, epoch_us(ts) AS us FROM events),
-m AS (
-  SELECT *, CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS is_new
-  FROM e),
+${sessionStarts("ts, event_id")},
 s AS (
   SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
@@ -7187,17 +6897,8 @@ FROM reach GROUP BY s ORDER BY node"""
   /** q130 twin: TrustRank = the q124 iteration with the teleport base
     * restricted to the seed set (numeric suffix % 3 = 0) and a
     * seeds-only start vector; same BIGINT floor arithmetic. */
-  val q130_trustrank: String = """
-WITH e AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR) AS src,
-           'd' || CAST((doc_id * 3 + 1) % 29 AS VARCHAR) AS dst
-    FROM documents
-    UNION ALL
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR),
-           'd' || CAST((doc_id * 5 + 2) % 29 AS VARCHAR)
-    FROM documents)
-  WHERE src <> dst),
+  val q130_trustrank: String = s"""
+WITH e AS (${linkEd(23, 29)}),
 nodes AS (SELECT DISTINCT node FROM (
   SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
 outdeg AS (SELECT src AS node, count(*) AS out_degree FROM e GROUP BY 1),
@@ -7325,17 +7026,8 @@ ORDER BY phase"""
     * returning to the start node), MIN(d) per pair recovers the
     * shortest-path distance, and the same floor(1e6/d) micro-unit
     * sum must match Spark's BFS-frontier accumulation bit for bit. */
-  val q133_harmonic: String = """
-WITH RECURSIVE e AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR) AS src,
-           'd' || CAST((doc_id * 3 + 1) % 29 AS VARCHAR) AS dst
-    FROM documents
-    UNION ALL
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR),
-           'd' || CAST((doc_id * 5 + 2) % 29 AS VARCHAR)
-    FROM documents)
-  WHERE src <> dst),
+  val q133_harmonic: String = s"""
+WITH RECURSIVE e AS (${linkEd(23, 29)}),
 -- DISTINCT spelled explicitly: under WITH RECURSIVE, DuckDB 1.0 does
 -- NOT deduplicate a plain UNION in a non-self-referencing CTE (q131's
 -- oracle never noticed because its downstream GROUP BY absorbs dupes).
@@ -7358,17 +7050,8 @@ FROM nodes n LEFT JOIN h USING (node) ORDER BY node"""
 
   /** q134 twin: degrees + reciprocated-edge counts over the shared
     * q124 edge fixture — plain aggregations and one pair self-join. */
-  val q134_graph_audit: String = """
-WITH e AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR) AS src,
-           'd' || CAST((doc_id * 3 + 1) % 29 AS VARCHAR) AS dst
-    FROM documents
-    UNION ALL
-    SELECT 'd' || CAST(doc_id % 23 AS VARCHAR),
-           'd' || CAST((doc_id * 5 + 2) % 29 AS VARCHAR)
-    FROM documents)
-  WHERE src <> dst),
+  val q134_graph_audit: String = s"""
+WITH e AS (${linkEd(23, 29)}),
 nodes AS (SELECT DISTINCT node FROM
   (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
 outd AS (SELECT src AS node, count(*) AS c FROM e GROUP BY 1),
@@ -7385,12 +7068,10 @@ FROM nodes n LEFT JOIN outd o USING (node)
   LEFT JOIN ind i USING (node) LEFT JOIN recip r USING (node)
 ORDER BY node"""
 
-  /** q137 twin: the same k-gram postings / df cap / diagonal
-    * gaps-and-islands construction from first principles — DuckDB's
-    * 1-based list slice l[i+1:i+5] is exactly Spark's
-    * slice(toks, i+1, 5), and both engines' \s+ split and md5 agree
-    * on identical input strings. */
-  val q137_shared_spans: String = """
+  /** q137's k-gram postings: the planted shared span, 5-gram md5
+    * postings, the df ≤ 64 cap, and every (doc_a < doc_b) posting
+    * match with its diagonal. */
+  private val sharedSpanCtes: String = """
 WITH s AS (
   SELECT doc_id,
     CASE WHEN doc_id % 25 = 3
@@ -7410,7 +7091,14 @@ pr AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa,
     a.pos - b.pos AS diag
   FROM kept a JOIN kept b USING (g)
-  WHERE a.doc_id < b.doc_id),
+  WHERE a.doc_id < b.doc_id)"""
+
+  /** q137 twin: the same k-gram postings / df cap / diagonal
+    * gaps-and-islands construction from first principles — DuckDB's
+    * 1-based list slice l[i+1:i+5] is exactly Spark's
+    * slice(toks, i+1, 5), and both engines' \s+ split and md5 agree
+    * on identical input strings. */
+  val q137_shared_spans: String = sharedSpanCtes + """,
 runs AS (
   SELECT doc_a, doc_b, diag,
     pa - row_number() OVER (PARTITION BY doc_a, doc_b, diag ORDER BY pa) AS island
@@ -7430,27 +7118,7 @@ ORDER BY doc_a, doc_b"""
     * NOT EXISTS anti-filter over token positions, ordered string_agg
     * reassembly, md5 compare; a fully-excised doc reads back as
     * md5('') via the universe left join. */
-  val q138_span_removal: String = """
-WITH s AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 25 = 3
-         THEN text || ' shared span alpha beta gamma delta epsilon zeta eta theta iota kappa'
-         ELSE text END AS t
-  FROM documents),
-tok AS (SELECT doc_id, regexp_split_to_array(t, '\s+') AS l FROM s),
-post AS (
-  SELECT doc_id, i AS pos, md5(array_to_string(l[i+1:i+5], ' ')) AS g
-  FROM tok, unnest(range(0, len(l) - 4)) AS u(i)
-  WHERE len(l) >= 5),
-capped AS (
-  SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df FROM post GROUP BY g)
-  WHERE df <= 64),
-kept AS (SELECT p.* FROM post p JOIN capped USING (g)),
-pr AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS pa,
-    a.pos - b.pos AS diag
-  FROM kept a JOIN kept b USING (g)
-  WHERE a.doc_id < b.doc_id),
+  val q138_span_removal: String = sharedSpanCtes + """,
 runs AS (
   SELECT doc_a, doc_b, diag, pa,
     pa - row_number() OVER (PARTITION BY doc_a, doc_b, diag ORDER BY pa) AS island
@@ -7746,11 +7414,7 @@ FROM r ORDER BY doc_id"""
   }
 
   val q23_embed_neardup: String = s"""
-WITH hp(m) AS (SELECT $hpMatrix),
-s AS (
-  SELECT vec_id, embedding,
-    $sqlKeyCols
-  FROM embeddings, hp)
+WITH $lshCtes
 SELECT id_a, id_b, cosine FROM (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
     ${sqlCosine("a.embedding", "b.embedding")} AS cosine
@@ -8006,7 +7670,7 @@ ORDER BY doc_id"""
     * (paired with SparkEntry.fsCustomerPairs): recs construction,
     * q238's proven SNM replay, the attribute join, the four boolean
     * agreement columns. */
-  private val fsPairsCtes: String = """recs AS (
+  private val fsPairsCtes: String = s"""recs AS (
   SELECT c_custkey * 2 AS rec_id, c_name AS name,
     c_nationkey AS nation, c_mktsegment AS segment, c_acctbal AS bal
   FROM customer
@@ -8017,30 +7681,7 @@ ORDER BY doc_id"""
     CASE WHEN c_custkey % 15 = 0 THEN 'STALE' ELSE c_mktsegment END,
     CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 100.0 ELSE c_acctbal END
   FROM customer WHERE c_custkey % 5 = 0),
-p1 AS (
-  SELECT rec_id, name,
-    row_number() OVER (ORDER BY name, name, rec_id) AS rnk
-  FROM recs),
-p2 AS (
-  SELECT rec_id, name,
-    row_number() OVER (ORDER BY reverse(name), name, rec_id) AS rnk
-  FROM recs),
-c1 AS (
-  SELECT a.rec_id AS id_a, a.name AS nm_a, b.rec_id AS id_b, b.name AS nm_b
-  FROM p1 a, unnest(range(1, 4)) AS s(off)
-  JOIN p1 b ON b.rnk = a.rnk + s.off),
-c2 AS (
-  SELECT a.rec_id AS id_a, a.name AS nm_a, b.rec_id AS id_b, b.name AS nm_b
-  FROM p2 a, unnest(range(1, 4)) AS s(off)
-  JOIN p2 b ON b.rnk = a.rnk + s.off),
-cand AS (
-  SELECT DISTINCT
-    CASE WHEN id_a < id_b THEN id_a ELSE id_b END AS rec_a,
-    CASE WHEN id_a < id_b THEN id_b ELSE id_a END AS rec_b,
-    CASE WHEN id_a < id_b THEN nm_a ELSE nm_b END AS name_a,
-    CASE WHEN id_a < id_b THEN nm_b ELSE nm_a END AS name_b
-  FROM (SELECT * FROM c1 UNION ALL SELECT * FROM c2)
-  WHERE id_a <> id_b),
+$snmCandCtes,
 kept AS (
   SELECT rec_a, rec_b, levenshtein(name_a, name_b) AS dist
   FROM cand WHERE levenshtein(name_a, name_b) <= 2),
@@ -8131,23 +7772,16 @@ ${(fieldSelects :+ priorSelect).mkString("\nUNION ALL\n")}
 ORDER BY component"""
   }
 
-  /** q354 twin of [[graft.etl.Packing.sftPack]]: the same raw-space
-    * tokenization (the fixture text is already normalized — NOT the
-    * toksCte regex clean), the shared md5 token hash ('0x'||substr
-    * cast, the q237 idiom), the q64 recursive-CTE packing replay at
-    * capacity 256, ordered list flatten per window, and
-    * generate_series padding (generate_series(1,0) = [] — the full
-    * window pads nothing). */
-  val q354_sft_pack: String = """
-WITH RECURSIVE ex0 AS (
-  SELECT lang AS shard, doc_id,
-    list_filter(string_split(text, ' '), t -> t <> '') AS toks
-  FROM documents),
+  /** q354's SFT assembly CTEs after `ex0(shard, doc_id, <toks>)`:
+    * md5 token ids (first 8 prompt, the rest completion), the
+    * 256-token filter, the recursive packing and the padded
+    * per-window flatten — q357 reuses them verbatim. */
+  private def sftPackTail(toks: String): String = s"""
 ex1 AS (
   SELECT shard, doc_id,
-    list_transform(toks[1:8],
+    list_transform($toks[1:8],
       t -> CAST(('0x' || substr(md5(t), 1, 14)) AS BIGINT)) AS p_ids,
-    list_transform(toks[9:],
+    list_transform($toks[9:],
       t -> CAST(('0x' || substr(md5(t), 1, 14)) AS BIGINT)) AS c_ids
   FROM ex0),
 ex AS (
@@ -8189,6 +7823,19 @@ SELECT shard, pack_seq, n_examples, n_tokens,
   array_to_string(flatten([m0, list_transform(generate_series(1, 256 - n_tokens),
     x -> 0)]), ',') AS loss_mask
 FROM agg ORDER BY shard, pack_seq"""
+
+  /** q354 twin of [[graft.etl.Packing.sftPack]]: the same raw-space
+    * tokenization (the fixture text is already normalized — NOT the
+    * toksCte regex clean), the shared md5 token hash ('0x'||substr
+    * cast, the q237 idiom), the q64 recursive-CTE packing replay at
+    * capacity 256, ordered list flatten per window, and
+    * generate_series padding (generate_series(1,0) = [] — the full
+    * window pads nothing). */
+  val q354_sft_pack: String = s"""
+WITH RECURSIVE ex0 AS (
+  SELECT lang AS shard, doc_id,
+    list_filter(string_split(text, ' '), t -> t <> '') AS toks
+  FROM documents),${sftPackTail("toks")}"""
 
   /** q355 twin of [[graft.etl.FuzzyMatch.soundexConflation]]: the
     * full textbook pipeline re-derived — same translate map (H/W
@@ -8302,57 +7949,11 @@ FROM u ORDER BY strategy"""
     * text verbatim. toksCte's WITH is promoted to WITH RECURSIVE for
     * the packing CTE. */
   def q357_sft_capstone: String =
-    toksCte.replaceFirst("WITH", "WITH RECURSIVE") + curationGateCtes + """
+    toksCte.replaceFirst("WITH", "WITH RECURSIVE") + curationGateCtes + s"""
 , ex0 AS (
   SELECT lang AS shard, doc_id,
     list_filter(string_split(text, ' '), t -> t <> '') AS toks2
-  FROM ded),
-ex1 AS (
-  SELECT shard, doc_id,
-    list_transform(toks2[1:8],
-      t -> CAST(('0x' || substr(md5(t), 1, 14)) AS BIGINT)) AS p_ids,
-    list_transform(toks2[9:],
-      t -> CAST(('0x' || substr(md5(t), 1, 14)) AS BIGINT)) AS c_ids
-  FROM ex0),
-ex AS (
-  SELECT shard, doc_id,
-    flatten([p_ids, c_ids, [CAST(-1 AS BIGINT)]]) AS ids,
-    flatten([list_transform(p_ids, x -> 0),
-             list_transform(c_ids, x -> 1), [1]]) AS mask,
-    len(p_ids) + len(c_ids) + 1 AS sz
-  FROM ex1
-  WHERE len(p_ids) + len(c_ids) + 1 <= 256),
-d AS (
-  SELECT shard, doc_id, ids, mask, sz,
-    row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-  FROM ex),
-st AS (
-  SELECT shard, rn, doc_id, sz,
-    CAST(1 AS BIGINT) AS pack_seq, sz AS pack_fill
-  FROM d WHERE rn = 1
-  UNION ALL
-  SELECT d.shard, d.rn, d.doc_id, d.sz,
-    CASE WHEN st.pack_fill + d.sz <= 256
-         THEN st.pack_seq ELSE st.pack_seq + 1 END,
-    CASE WHEN st.pack_fill + d.sz <= 256
-         THEN st.pack_fill + d.sz ELSE d.sz END
-  FROM d JOIN st ON d.shard = st.shard AND d.rn = st.rn + 1),
-w AS (
-  SELECT st.shard, st.pack_seq, d.doc_id, d.ids, d.mask, d.sz
-  FROM st JOIN d ON st.shard = d.shard AND st.doc_id = d.doc_id),
-agg AS (
-  SELECT shard, pack_seq,
-    CAST(count(*) AS BIGINT) AS n_examples,
-    CAST(sum(sz) AS BIGINT) AS n_tokens,
-    flatten(list(ids ORDER BY doc_id)) AS i0,
-    flatten(list(mask ORDER BY doc_id)) AS m0
-  FROM w GROUP BY shard, pack_seq)
-SELECT shard, pack_seq, n_examples, n_tokens,
-  array_to_string(flatten([i0, list_transform(generate_series(1, 256 - n_tokens),
-    x -> CAST(-2 AS BIGINT))]), ',') AS token_ids,
-  array_to_string(flatten([m0, list_transform(generate_series(1, 256 - n_tokens),
-    x -> 0)]), ',') AS loss_mask
-FROM agg ORDER BY shard, pack_seq"""
+  FROM ded),${sftPackTail("toks2")}"""
 
   /** Shared robots-fixture rule CTEs for the q358/q360 twins (paired
     * with SparkEntry.robotsHosts — same CASE shapes, chr(10) where
@@ -8455,15 +8056,11 @@ FROM w WHERE rn = 1 ORDER BY doc_id"""
     * negatives), per-symbol centering, residual. The weekday slot is
     * days-since-1970-01-05 mod 7 — engine-neutral where dayofweek()
     * origins differ. */
-  val q359_seasonal_decompose: String = barsCte + """
+  val q359_seasonal_decompose: String = barsCte + s"""
 , daily AS (
   SELECT symbol, date, CAST(close AS BIGINT) AS close_units,
     CAST((date - DATE '1970-01-05') % 7 AS INTEGER) AS slot
-  FROM (
-    SELECT *, row_number() OVER (PARTITION BY symbol, date
-      ORDER BY data_source, row_id) AS rn
-    FROM merged WHERE open IS NOT NULL)
-  WHERE rn = 1),
+  FROM $firstBars),
 t AS (
   SELECT symbol, date, close_units, slot,
     CASE WHEN count(*) OVER win = 7
@@ -8687,23 +8284,9 @@ FROM x"""
       s"CASE WHEN 2*len(list_filter(hs, h -> (h >> $j) & 1 = 1)) > len(hs)" +
         s" THEN CAST(1 AS BIGINT) << $j ELSE 0 END"
     }.mkString("\n    + ")
-    """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 60
-  UNION ALL
-  SELECT d.doc_id * 100 + r.r + 900000 AS doc_id,
-         d.text || ' zz' || CAST(r.r AS VARCHAR) AS text
-  FROM documents d CROSS JOIN (SELECT unnest(range(0, 24)) AS r) r
-  WHERE d.doc_id < 2),
-toks AS (
-  SELECT doc_id,
-    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
-                t -> t <> '') AS tokens
-  FROM corpus),
-sh AS (
-  SELECT doc_id, list_transform(range(1, len(tokens)-1),
-    i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]) AS shingles
-  FROM toks WHERE len(tokens) >= 3),
+    s"""
+WITH $cloneCorpusCte,
+${shingleCtes("corpus")},
 hs64 AS (
   SELECT doc_id, list_transform(shingles,
     s -> CAST(('0x' || substr(md5(s),1,14)) AS BIGINT)) AS hs
@@ -8745,7 +8328,7 @@ WHERE hamming <= 3 ORDER BY doc_a, doc_b"""
     * PngPixelUtil.dhash convention), 16-bit bands, and the q346
     * governor replay (window count + lead() chain) before the exact
     * bit_count(xor) filter. */
-  val q370_image_neardup_governed: String = """
+  val q370_image_neardup_governed: String = s"""
 WITH imgs AS (
   SELECT doc_id, doc_id // 5 AS g, doc_id % 5 AS m
   FROM documents WHERE doc_id < 100
@@ -8753,24 +8336,7 @@ WITH imgs AS (
   SELECT r.r + 900000 AS doc_id, 0 AS g, r.r + 5 AS m
   FROM documents d CROSS JOIN (SELECT unnest(range(0, 40)) AS r) r
   WHERE d.doc_id < 1),
-px AS (
-  SELECT doc_id,
-    y * 8 // 10 AS gr, x * 9 // 12 AS gc,
-    299 * ((37*g + (3 + g)*x + (5 + g%3)*y +
-            CASE WHEN x = 0 AND y = 0 THEN m ELSE 0 END) % 256)
-    + 587 * ((91*g + (7 + 2*g)*x + (2 + g%2)*y) % 256)
-    + 114 * ((53*g + (1 + g%3)*x + (11 + g)*y) % 256) AS luma
-  FROM imgs, unnest(range(0, 12)) AS tx(x), unnest(range(0, 10)) AS ty(y)),
-cells AS (
-  SELECT doc_id, gr, gc, sum(luma) AS s, count(*) AS cnt
-  FROM px GROUP BY doc_id, gr, gc),
-bits AS (
-  SELECT l.doc_id, l.gr, l.gc AS c,
-    (l.s // l.cnt > r.s // r.cnt OR
-     (l.s // l.cnt = r.s // r.cnt AND
-      (l.s % l.cnt) * r.cnt > (r.s % r.cnt) * l.cnt)) AS bit
-  FROM cells l JOIN cells r
-    ON l.doc_id = r.doc_id AND l.gr = r.gr AND r.gc = l.gc + 1),
+$dhashBitsCtes,
 h64 AS (
   -- bit 63 (gr = 7, c = 7) is the sign bit: 1::BIGINT << 63 overflows
   -- in DuckDB, so that one bit ORs in the min-long constant instead
@@ -9443,23 +9009,11 @@ FROM vt ORDER BY position"""
       masks.map(m => s"c.key$b = xor(q.key$b, $m)").mkString("(", " OR ", ")")
     }.mkString("(", "\n    OR ", ")")
     s"""
-WITH hp(m) AS (SELECT $hpMatrix),
-s AS (
-  SELECT vec_id, embedding,
-    $sqlKeyCols
-  FROM embeddings, hp),
-q AS (SELECT vec_id AS query_id, embedding AS qv,
-        ${(0 until hpBands).map(b => s"key$b").mkString(", ")}
-      FROM s WHERE vec_id < 10),
+WITH $lshProbeCtes,
 scored AS (
   SELECT q.query_id, c.vec_id, ${sqlCosine("q.qv", "c.embedding")} AS cosine
   FROM s c JOIN q ON $anyProbe AND c.vec_id <> q.query_id),
-ranked AS (
-  SELECT query_id, vec_id AS neighbor_id, cosine,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, cosine FROM ranked
-WHERE rank <= 10 ORDER BY query_id, rank"""
+$top10ByCosine"""
   }
 
   /** q336 twin of [[graft.events.EventAnalytics.behaviorSurprisal]]:
@@ -9503,13 +9057,7 @@ ORDER BY u.user_id"""
     * aggregation, HUGEINT products (the DECIMAL(38,0) twin). */
   val q337_chaining_audit: String = s"""
 WITH RECURSIVE
-p AS ($q18_minhash_neardup),
-e AS (SELECT DISTINCT a, b FROM (  -- UNION ALL + DISTINCT: the WITH RECURSIVE rule
-  SELECT doc_a AS a, doc_b AS b FROM p UNION ALL SELECT doc_b, doc_a FROM p)),
-conn(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT c.a, e.b FROM conn c JOIN e ON c.b = e.a WHERE e.b <> c.a),
+$minhashConnCtes,
 lab AS (SELECT a AS node, least(a, min(b)) AS label FROM conn GROUP BY a),
 sizes AS (SELECT label, count(*) AS n_docs FROM lab GROUP BY 1),
 ed AS (
@@ -9589,26 +9137,8 @@ FROM fin ORDER BY group_a, group_b"""
     }.mkString(",\n    ")
     val nh = graft.dedup.Dedup.numHashes
     s"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 60
-  UNION ALL
-  SELECT d.doc_id * 100 + r.r + 900000 AS doc_id,
-         d.text || ' zz' || CAST(r.r AS VARCHAR) AS text
-  FROM documents d CROSS JOIN (SELECT unnest(range(0, 24)) AS r) r
-  WHERE d.doc_id < 2),
-toks AS (
-  SELECT doc_id,
-    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
-                t -> t <> '') AS tokens
-  FROM corpus),
-sh AS (
-  SELECT doc_id, list_transform(range(1, len(tokens)-1),
-    i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]) AS shingles
-  FROM toks WHERE len(tokens) >= 3),
-xs AS (
-  SELECT doc_id, list_transform(shingles,
-    s -> CAST(('0x' || substr(md5(s),1,14)) AS BIGINT) % 1000000007) AS hs
-  FROM sh),
+WITH $cloneCorpusCte,
+${shingleHashCtes("corpus")},
 sigs AS (SELECT doc_id, [$sigEntries] AS sig FROM xs),
 bands AS (
   SELECT doc_id, sig, b,
@@ -9650,15 +9180,6 @@ WHERE est_jaccard >= 0.5 ORDER BY doc_a, doc_b"""
     * assignment + same-cell drop, one row per planted clone with
     * both verdicts. */
   val q347_semdedup_agreement: String = {
-    val cvals = (0 until 8).map { j =>
-      val c = graft.similarity.Similarity.hyperplane(j, hpDim)
-      val cn = math.sqrt(c.map(x => x.toDouble * x).sum)
-        .max(java.lang.Double.MIN_VALUE)
-      s"($j, [${c.map(x => s"${x.toInt}.0").mkString(",")}], $cn)"
-    }.mkString(",\n  ")
-    def dotCv(e: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, len($e)+1), " +
-        s"i -> CAST($e[i] AS DOUBLE) * cv[i])), (acc,v) -> acc + v)"
     val corpusCte = """corpus AS (
   SELECT vec_id, embedding FROM embeddings
   UNION ALL
@@ -9678,11 +9199,10 @@ conn2(a, b) AS (
   UNION
   SELECT c.a, e2.b FROM conn2 c JOIN e2 ON c.b = e2.a WHERE e2.b <> c.a),
 lab AS (SELECT a AS vec_id, least(a, min(b)) AS label FROM conn2 GROUP BY a),
-cm(cell, cv, cn) AS (SELECT * FROM (VALUES
-  $cvals) v(cell, cv, cn)),
+$ivfCm,
 aa AS (
   SELECT vec_id, embedding, cell,
-    (-(${dotCv("embedding")})) / (sqrt(${sqlDot("embedding", "embedding")}) * cn) AS d
+    $ivfD
   FROM corpus CROSS JOIN cm),
 assign AS (
   SELECT vec_id, embedding, cell FROM (
@@ -9739,13 +9259,7 @@ bands$suf AS (
     CAST(sig[b*4+3] AS VARCHAR) || '_' || CAST(sig[b*4+4] AS VARCHAR) AS key
   FROM sigs$suf CROSS JOIN (SELECT unnest([0,1,2,3]) AS b))"""
     s"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 60
-  UNION ALL
-  SELECT d.doc_id * 100 + r.r + 900000 AS doc_id,
-         d.text || ' zz' || CAST(r.r AS VARCHAR) AS text
-  FROM documents d CROSS JOIN (SELECT unnest(range(0, 24)) AS r) r
-  WHERE d.doc_id < 2),
+WITH $cloneCorpusCte,
 batch AS (
   SELECT r.r + 990000 AS doc_id,
          d.text || ' qq' || CAST(r.r AS VARCHAR) AS text
@@ -9852,18 +9366,25 @@ ORDER BY stage"""
 
   // --- events (graft.events.EventAnalytics) --------------------------------
 
+  /** The `m` CTE of the 30-minute gap sessionization (q24 and its
+    * reusers), the twin of [[graft.events.EventAnalytics.sessionize]]:
+    * over CTE `e` (with `us` = epoch microseconds), `is_new` = 1 where
+    * a user's previous event in `order` is absent or more than 30
+    * minutes earlier. */
+  private def sessionStarts(order: String): String = s"""m AS (
+  SELECT *, CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY $order) IS NULL
+                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY $order)
+                      > 1800000000
+                 THEN 1 ELSE 0 END AS is_new
+  FROM e)"""
+
   /** Gap sessionization twin: integer-microsecond gap compare,
     * (ts, event_id) order, running sum of session starts. DuckDB's
     * window SUM yields HUGEINT — cast to match Spark's long. */
-  val q24_sessionize: String = """
+  val q24_sessionize: String = s"""
 WITH e AS (
   SELECT event_id, ts, user_id, event_type, value, epoch_us(ts) AS us FROM events),
-m AS (
-  SELECT *, CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS is_new
-  FROM e),
+${sessionStarts("ts, event_id")},
 s AS (
   SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
@@ -9919,9 +9440,8 @@ SELECT data_source, count(*) AS n_rows,
 FROM merged GROUP BY data_source ORDER BY data_source"""
 
   /** W1 pandas rolling(n): NULL until n rows exist in the frame. */
-  val q29_ma_pandas: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date)
+  val q29_ma_pandas: String = barsCte + s"""
+, $dailyCloseCte
 SELECT symbol, date, close_price,
   CASE WHEN row_number() OVER (PARTITION BY symbol ORDER BY date) >= 5 THEN
     avg(close_price) OVER (PARTITION BY symbol ORDER BY date
@@ -10009,9 +9529,8 @@ FROM r ORDER BY symbol, date"""
     * returns quantized once to DECIMAL(18,6), five exact decimal sums
     * per pair, each cast to double, then the SAME double corr formula
     * — accumulation order can no longer matter. */
-  val q62_corr_matrix: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
+  val q62_corr_matrix: String = barsCte + s"""
+, $dailyCloseCte,
 rets AS (
   SELECT symbol, date,
     CAST(ROUND(CAST((close_price - prev) / prev * 100 AS DECIMAL(28,10)), 6)
@@ -10049,9 +9568,8 @@ FROM agg WHERE n_days >= 2 ORDER BY sym_a, sym_b"""
   /** q96 twin: per-symbol least-squares trend — q62's determinism
     * recipe (decimal-quantized y held as scaled int64, exact integer
     * sums via the VARCHAR double-cast, identical final trees). */
-  val q96_ols_trend: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date),
+  val q96_ols_trend: String = barsCte + s"""
+, $dailyCloseCte,
 q AS (
   SELECT symbol,
     CAST(date_diff('day', DATE '1970-01-01', date) AS BIGINT) AS x,
@@ -10185,13 +9703,7 @@ FROM documents"""
     * connected doc_id. */
   val q36_neardup_dedup: String = s"""
 WITH RECURSIVE
-p AS ($q18_minhash_neardup),
-e AS (SELECT DISTINCT a, b FROM (  -- UNION ALL + DISTINCT: the WITH RECURSIVE rule
-  SELECT doc_a AS a, doc_b AS b FROM p UNION ALL SELECT doc_b, doc_a FROM p)),
-conn(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT c.a, e.b FROM conn c JOIN e ON c.b = e.a WHERE e.b <> c.a),
+$minhashConnCtes,
 removed AS (SELECT DISTINCT a FROM conn WHERE b < a)
 SELECT doc_id, lang, source, n_chars FROM documents
 WHERE doc_id NOT IN (SELECT a FROM removed)
@@ -10202,13 +9714,7 @@ ORDER BY doc_id"""
     * the q74/q75 md5-derived value hash, applied to the CLUSTER id. */
   val q84_leakage_split: String = s"""
 WITH RECURSIVE
-p AS ($q18_minhash_neardup),
-e AS (SELECT DISTINCT a, b FROM (  -- UNION ALL + DISTINCT: the WITH RECURSIVE rule
-  SELECT doc_a AS a, doc_b AS b FROM p UNION ALL SELECT doc_b, doc_a FROM p)),
-conn(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT c.a, e.b FROM conn c JOIN e ON c.b = e.a WHERE e.b <> c.a),
+$minhashConnCtes,
 lab AS (SELECT a AS doc_id, least(a, min(b)) AS label FROM conn GROUP BY a)
 SELECT d.doc_id, d.lang,
   coalesce(l.label, d.doc_id) AS cluster,
@@ -10324,9 +9830,8 @@ FROM merged GROUP BY symbol ORDER BY symbol"""
     * q03's daily metrics, so the oracle is the same SQL. */
   val q42_catalog_view: String = q03_daily_metrics
 
-  val q68_window_ranks: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged GROUP BY symbol, date)
+  val q68_window_ranks: String = barsCte + s"""
+, $dailyCloseCte
 SELECT symbol, date, close_price,
   rank() OVER (PARTITION BY symbol ORDER BY close_price DESC) AS close_rank,
   dense_rank() OVER (PARTITION BY symbol ORDER BY close_price DESC) AS close_dense_rank,
@@ -10361,15 +9866,10 @@ ORDER BY row_id"""
   /** q45's oracle: the q24 session CTEs + a plain BETWEEN range join —
     * DuckDB's nested-loop is fine at oracle scale; the Spark side must
     * produce the identical pair set through the bucketed equi-join. */
-  val q45_range_join: String = """
+  val q45_range_join: String = s"""
 WITH e AS (
   SELECT event_id, ts, user_id, event_type, value, epoch_us(ts) AS us FROM events),
-m AS (
-  SELECT *, CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS is_new
-  FROM e),
+${sessionStarts("ts, event_id")},
 s AS (
   SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
@@ -10600,13 +10100,7 @@ ORDER BY rule"""
     * before/after rollups and HUGEINT permille shares. */
   val q343_dedup_impact: String = s"""
 WITH RECURSIVE
-p AS ($q18_minhash_neardup),
-e AS (SELECT DISTINCT a, b FROM (  -- UNION ALL + DISTINCT: the WITH RECURSIVE rule
-  SELECT doc_a AS a, doc_b AS b FROM p UNION ALL SELECT doc_b, doc_a FROM p)),
-conn(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT c.a, e.b FROM conn c JOIN e ON c.b = e.a WHERE e.b <> c.a),
+$minhashConnCtes,
 lab AS (SELECT a AS node, least(a, min(b)) AS label FROM conn GROUP BY a),
 rm AS (SELECT node AS doc_id FROM lab WHERE label < node),
 b AS (
@@ -10742,9 +10236,7 @@ FROM e GROUP BY label, p ORDER BY label, dim"""
     val as = 2.0 / 27.0; val bs = 1.0 - as
     // the recursive member needs RECURSIVE on the WHOLE with-chain
     barsCte.replaceFirst("WITH ", "WITH RECURSIVE ") + s"""
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price FROM merged
-  WHERE symbol IN ('S0','S1','S2','S3','S4') GROUP BY symbol, date),
+, $panelDailyCloseCte,
 d AS (
   SELECT symbol, date, close_price,
     row_number() OVER (PARTITION BY symbol ORDER BY date) AS rn
@@ -10786,18 +10278,7 @@ ORDER BY row_id"""
     * view (its target/staging CTEs verbatim) minus the tombstoned
     * slice (days 1-10 of Q4-1998). The versioned delete commit must be
     * semantically exactly SQL DELETE. */
-  val q112_delete_read: String = barsCte + s"""
-, target AS (SELECT $mergedCols FROM merged WHERE date < DATE '1999-01-01'),
-staging AS (
-  SELECT row_id, date, symbol, data_source, open, high, low, close + 1.0 AS close,
-         volume, processed_at, daily_change_pct, daily_volatility
-  FROM merged WHERE date >= DATE '1998-06-01' AND date < DATE '1999-01-01'),
-after AS (
-  SELECT * FROM target t
-  WHERE NOT EXISTS (SELECT 1 FROM staging s
-    WHERE s.date = t.date AND s.symbol = t.symbol AND s.data_source = t.data_source)
-  UNION ALL
-  SELECT * FROM staging)
+  val q112_delete_read: String = barsCte + s"""$q08After
 SELECT $mergedCols FROM after
 WHERE NOT (date >= DATE '1998-09-01' AND day(date) <= 10)
 ORDER BY row_id, close"""

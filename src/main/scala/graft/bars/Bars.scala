@@ -14,7 +14,11 @@ import graft.core.Tables
   *  - prices are integer-valued doubles (floor of the 2-decimal
   *    source prices), so window/group sums are exact in any order;
   *  - nulls are injected by key arithmetic, not sampling;
-  *  - `row_id` is a unique total-order tiebreaker for keep-first dedup;
+  *  - `row_id` (l_orderkey·100 + l_linenumber) is the keep-first
+  *    tiebreaker. It is unique at sf0.01 but NOT at sf0.1 (456,861
+  *    distinct values over 600,000 rows), so some sf0.1 merge keys have
+  *    no defined survivor: the cross-engine contract holds at sf0.01
+  *    and not at sf0.1 (ROADMAP.md, direction 1);
   *  - timestamps derive from `l_shipdate`, never from the clock.
   *
   * The equivalent SQL construction lives in

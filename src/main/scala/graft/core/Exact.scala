@@ -31,10 +31,6 @@ object Exact {
   def exactAvg(c: Column, scale: Int = 4): Column =
     sum(c.cast(DecimalType(38, scale))).cast("double") / count(c).cast("double")
 
-  /** Decimal sum kept as decimal (for outputs compared as decimals). */
-  def decSum(c: Column, scale: Int = 4): Column =
-    sum(c.cast(DecimalType(38, scale)))
-
   /** floor(log2(den/num)) for DECIMAL(38,0) rationals with num ≤ den,
     * clipped at 62 bits — exact at any scale, dodging TWO engine
     * traps: Spark's `div` on decimals silently WRAPS when the

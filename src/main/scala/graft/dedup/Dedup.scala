@@ -229,13 +229,6 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** MinHash signature: per permutation i, min over shingle hashes of
-    * (a_i·x + b_i) mod P. Arrays of longs — 128 bytes per doc. */
-  def minhashSignature(hashes: Column): Column =
-    array(minhashCoeffs.map { case (a, b) =>
-      array_min(transform(hashes, x => (x * lit(a) + lit(b)) % lit(P)))
-    }: _*)
-
   /** Per-doc MinHash signature via the exploded path: 16 codegen'd
     * `min` aggregates with map-side partial combine — the shuffle
     * carries one 16-long row per doc, not the shingles. */

@@ -32,11 +32,6 @@ object Merge {
       .drop("__rn")
   }
 
-  /** Exact-dedup without an ordering requirement (arbitrary survivor) —
-    * the scalable default when any representative row will do. */
-  def dedupAny(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** Keyed snapshot diff (the reconciliation report after an upsert /
     * backfill / migration): per key, whether the row was added,
     * removed, changed, or unchanged between two table versions. One

@@ -153,8 +153,14 @@ object Upsert {
     * WITHOUT the marker is a torn write — the table was never touched,
     * so discard it; the caller's retry re-merges from scratch. */
   def recoverPartitioned(spark: SparkSession, tablePath: String,
-                         partitionCol: String): Unit = {
-    val tmpPath = tmpFor(tablePath)
+                         partitionCol: String): Unit =
+    recoverStaged(spark, tablePath, tmpFor(tablePath), partitionCol)
+
+  /** The staged-commit recovery behind [[recoverPartitioned]] and
+    * [[graft.store.Compaction.recover]], for the slice staged at
+    * `tmpPath`: replay it if `_SUCCESS`-marked, else discard it. */
+  private[graft] def recoverStaged(spark: SparkSession, tablePath: String,
+                                   tmpPath: String, partitionCol: String): Unit = {
     val p = new Path(tmpPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {

@@ -91,13 +91,6 @@ object Compaction {
   /** Same crash recovery as the upsert: a `_SUCCESS`-marked staged
     * slice is replayed (idempotent — same rows, same partitions), a
     * torn one is discarded. */
-  def recover(spark: SparkSession, tablePath: String, partitionCol: String): Unit = {
-    val p = new Path(tmpFor(tablePath))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      if (fs.exists(new Path(p, "_SUCCESS")))
-        Upsert.commitFromTmp(spark, tablePath, p.toString, partitionCol)
-      else fs.delete(p, true)
-    }
-  }
+  def recover(spark: SparkSession, tablePath: String, partitionCol: String): Unit =
+    Upsert.recoverStaged(spark, tablePath, tmpFor(tablePath), partitionCol)
 }

@@ -9,7 +9,23 @@ import org.apache.spark.sql.SparkSession
 object Harness {
 
   /** Core count: `SPARK_GRAFT_CPUS`, default 4. */
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  def cpus: Int = positiveInt(sys.env, "SPARK_GRAFT_CPUS", 4)
+
+  /** `env(key)` as a positive Int, `default` when the key is unset;
+    * any other value fails with a message naming the key. */
+  def positiveInt(env: Map[String, String], key: String, default: Int): Int =
+    env.get(key).fold(default) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive integer, got '$v'"))
+    }
+
+  /** `env(key)` as a positive Double, `default` when the key is unset;
+    * any other value fails with a message naming the key. */
+  def positiveDouble(env: Map[String, String], key: String, default: Double): Double =
+    env.get(key).fold(default) { v =>
+      v.trim.toDoubleOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive number, got '$v'"))
+    }
 
   /** `local[cpus]` with shuffle partitions equal to the cores, UTC
     * session time zone, ANSI off and the UI off. */
