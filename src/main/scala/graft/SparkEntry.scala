@@ -269,8 +269,8 @@ object SparkEntry {
   private def ivfSq8Index(emb: DataFrame, dir: String): String =
     fixture("ivf_sq8_index", dir) {
       val p = scratch("ivf_sq8_index", dir)
-      graft.similarity.Similarity.writeIvfIndexQuantized(emb, p,
-        centroids = Some(ivfCentroids))
+      graft.similarity.Similarity.writeIvfIndex(emb, p,
+        graft.similarity.IvfCodes.Sq8, centroids = Some(ivfCentroids))
       p
     }
 
@@ -421,11 +421,14 @@ object SparkEntry {
       (t, c)
     }
 
-  /** Per-sf scratch dir under the repo's build tree for queries that
-    * exercise sinks (q26–q28): sf-tagged so verify/bench runs at
-    * different scale factors never collide. */
+  /** Per-sf scratch dir under `target/scratch` of the JVM working
+    * directory (the checkout root under sbt) for queries that exercise
+    * sinks or persisted fixtures: sf-tagged so verify/bench runs at
+    * different scale factors never collide, and per checkout so two
+    * checkouts never share a fixture. */
   private def scratch(name: String, sfDir: String): String =
-    s"/root/repo/target/scratch/${name}_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
+    new java.io.File("target/scratch").getAbsolutePath + s"/${name}_" +
+      sfDir.replaceAll("[^A-Za-z0-9]", "_")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // P1-P9: normalization, casts, null handling, derived metrics.
@@ -748,7 +751,7 @@ object SparkEntry {
       val idxPath = fixture("ivf_index", dir) {
         val p = scratch("ivf_index", dir)
         graft.similarity.Similarity.writeIvfIndex(emb, p,
-          centroids = Some(ivfCentroids))
+          graft.similarity.IvfCodes.Flat, centroids = Some(ivfCentroids))
         p
       }
       graft.similarity.Similarity.searchIvfIndex(s, idxPath,
@@ -777,7 +780,8 @@ object SparkEntry {
         if (fs.exists(new org.apache.hadoop.fs.Path(p)))
           fs.delete(new org.apache.hadoop.fs.Path(p), true)
         graft.similarity.Similarity.writeIvfIndex(
-          emb.filter(col("vec_id") % 2 === 0), p, centroids = Some(ivfCentroids))
+          emb.filter(col("vec_id") % 2 === 0), p, graft.similarity.IvfCodes.Flat,
+          centroids = Some(ivfCentroids))
         graft.similarity.Similarity.appendIvfIndex(s, p,
           emb.filter(col("vec_id") % 2 === 1))
         p
@@ -797,7 +801,7 @@ object SparkEntry {
     "q111_ivf_sq8_search" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idxPath = ivfSq8Index(emb, dir)
-      graft.similarity.Similarity.searchIvfIndexQuantized(s, idxPath,
+      graft.similarity.Similarity.searchIvfIndex(s, idxPath,
           emb.filter(col("vec_id") < 10), k = 10, nprobe = 3)
         .orderBy(col("query_id"), col("rank"))
     }),
@@ -1284,7 +1288,7 @@ object SparkEntry {
       val exact = graft.similarity.Similarity
         .knnBruteForce(emb, queries, k = 20)
       val staged = graft.similarity.Similarity
-        .searchIvfIndexQuantized(s, idxPath, queries, k = 20, nprobe = 3)
+        .searchIvfIndex(s, idxPath, queries, k = 20, nprobe = 3)
       graft.analytics.Ranking.reciprocalRankFusion(
           Seq(exact, staged), rrfK = 60, topK = 10, docCol = "neighbor_id")
         .orderBy(col("query_id"), col("fused_rank"))
@@ -4172,11 +4176,11 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val idxPath = fixture("ivf_pq_index", dir) {
         val p = scratch("ivf_pq_index", dir)
-        graft.similarity.Similarity.writeIvfIndexPq(emb, p,
-          centroids = Some(ivfCentroids))
+        graft.similarity.Similarity.writeIvfIndex(emb, p,
+          graft.similarity.IvfCodes.Pq(), centroids = Some(ivfCentroids))
         p
       }
-      graft.similarity.Similarity.searchIvfIndexPq(s, idxPath,
+      graft.similarity.Similarity.searchIvfIndex(s, idxPath,
           emb.filter(col("vec_id") < 10), k = 10, nprobe = 3)
         .orderBy(col("query_id"), col("rank"))
     }),

@@ -32,11 +32,13 @@ object Tables {
     *  - timezone-less timestamp[us] parquet: Spark 4 reads it as
     *    TIMESTAMP_NTZ; cast to TimestampType, an identity instant
     *    under the pinned UTC session zone (oracle hashes unchanged);
-    *  - plain TIMESTAMP: passes through untouched. */
+    *  - plain TIMESTAMP: passes through untouched.
+    * The nanos arm needs `spark.sql.legacy.parquet.nanosAsLong=true` in
+    * the caller's session (`graft.tools.Harness.session` and the test
+    * session set it); this reader leaves session conf alone. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, sfDir, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

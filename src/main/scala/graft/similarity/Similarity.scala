@@ -1,16 +1,49 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hyperplanes
+import graft.functions.PqFunctions.{pqEncode, pqLut, pqScore}
 import graft.functions.VectorFunctions.{vecBandKeys, vecDot, vecNorm}
 
-/** Similarity search over an embedding column (`array<float>`):
-  * brute-force cosine top-k as the exactness baseline, and two scale
-  * paths: a sign-signature LSH-bucketed variant and an IVF-Flat
-  * (trained inverted-file) index.
+/** What the rows of a persisted IVF index hold
+  * ([[Similarity.writeIvfIndex]]). The index records its kind, so
+  * append and search read it back instead of taking it as an argument. */
+sealed abstract class IvfCodes(val name: String)
+
+object IvfCodes {
+  /** Full-precision vectors with their norms; scored by exact cosine,
+    * highest first. */
+  case object Flat extends IvfCodes("flat")
+
+  /** SQ8 codes ([[Similarity.quantize]]); scored by the BIGINT code
+    * dot against the quantized query, highest first. */
+  case object Sq8 extends IvfCodes("sq8")
+
+  /** PQ codes, `m` indices into `ksub` centroids per subspace
+    * ([[Similarity.knnPq]]); scored by the BIGINT ADC distance, lowest
+    * first. An unset `codebook` is [[Similarity.pqStaticCodebook]] of
+    * the indexed corpus. */
+  final case class Pq(m: Int = 8, ksub: Int = 16,
+                      codebook: Option[Array[Int]] = None) extends IvfCodes("pq")
+}
+
+/** Similarity search over an embedding column (`array<float>`).
+  * Every k-NN path has one shape — prune the candidates, score them,
+  * take one top-k per query ([[topKPerQuery]]) — and these ANN paths:
+  *  - exact: [[knnBruteForce]] (and [[hardNegatives]] on the same scan);
+  *  - sign-LSH: [[knnLsh]], [[knnLshMultiprobe]], and the LSH-seeded
+  *    NN-Descent k-NN graph [[knnGraphDescent]];
+  *  - IVF in memory: [[knnIvf]] (trained or fixed centroids);
+  *  - IVF persisted: [[writeIvfIndex]] / [[appendIvfIndex]] /
+  *    [[searchIvfIndex]] over one cell-partitioned layout whose rows
+  *    hold [[IvfCodes]] — flat vectors, SQ8 codes or PQ codes;
+  *  - compressed flat scans: [[knnQuantized]] (SQ8) and [[knnPq]]
+  *    (PQ-ADC);
+  *  - two-stage: an SQ8 candidate stage ([[twoStageKnn]], or the
+  *    pruned [[twoStageKnnIvf]]) re-ranked by [[refineExact]].
   *
   * Numerics: dot products run through the native codegen'd
   * [[graft.functions.FloatVectorDot]] — float→double promotion per
@@ -47,7 +80,7 @@ object Similarity {
     * per-query top-k window. */
   def knnBruteForce(corpus: DataFrame, queries: DataFrame, k: Int = 10,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    topKByCosine(bruteScored(corpus, queries, idCol, vecCol), k, idCol)
+    topKPerQuery(bruteScored(corpus, queries, idCol, vecCol), k, idCol)
 
   /** Every (corpus, query) pair with its exact cosine — the shared
     * scan behind [[knnBruteForce]] and [[hardNegatives]]: broadcast
@@ -67,15 +100,19 @@ object Similarity {
         vecDot(col("__qv"), col(vecCol)) / (col("__qnorm") * col("__cnorm")))
   }
 
-  /** Per-query top-k of a scored pair frame (the one shuffle: the
-    * per-query row_number window, executed as WindowGroupLimit). */
-  private def topKByCosine(scored: DataFrame, k: Int,
-                           idCol: String): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol))
+  /** Per-query top-k of a scored pair frame — the tail of every k-NN
+    * variant here (the one shuffle: the per-query row_number window,
+    * executed as WindowGroupLimit). Ranks by `scoreCol`, highest first
+    * for a similarity, lowest first when `ascending` (a distance), ties
+    * to the lower `idCol`; emits (query_id, neighbor_id, rank, score). */
+  private def topKPerQuery(scored: DataFrame, k: Int, idCol: String,
+                           scoreCol: String = "cosine",
+                           ascending: Boolean = false): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(
+      if (ascending) col(scoreCol) else col(scoreCol).desc, col(idCol))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("rank"), col("cosine"))
+      .select(col("query_id"), col(idCol).as("neighbor_id"), col("rank"), col(scoreCol))
   }
 
   /** Hard-negative mining for contrastive training: per query, the
@@ -94,7 +131,7 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int = 10,
                     maxCos: Double = 0.4, idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame =
-    topKByCosine(
+    topKPerQuery(
       bruteScored(corpus, queries, idCol, vecCol)
         .filter(col("cosine") < lit(maxCos)),
       k, idCol)
@@ -116,17 +153,12 @@ object Similarity {
     * candidate-generation work. */
   val signatureBands: Int = 8
 
-  /** Coefficient `d` of pseudo-random hyperplane `plane`: a
-    * deterministic integer in [-10, 10] from a fixed Knuth-style
-    * multiplicative hash — the [[graft.dedup.Dedup.minhashCoeffs]]
-    * pattern, generated instead of tabulated so the plane supply is
-    * unbounded. Integer-valued coordinates keep the dot product
+  /** Pseudo-random hyperplane `plane` in `dim` dimensions: integer
+    * coordinates in [-10, 10] from [[graft.functions.Hyperplanes]] — the
+    * one coefficient formula shared with the native band-key
+    * expression. Integer coordinates keep the dot product
     * bit-reproducible in any engine (exact in doubles); random
-    * DIRECTIONS are all sign-LSH needs, not random magnitudes.
-    * (Delegates to [[graft.functions.Hyperplanes]] — one coefficient
-    * formula shared with the native band-key expression.) */
-  def hyperplaneCoeff(plane: Int, d: Int): Float = Hyperplanes.coeff(plane, d)
-
+    * DIRECTIONS are all sign-LSH needs, not random magnitudes. */
   def hyperplane(plane: Int, dim: Int): Array[Float] =
     Hyperplanes.plane(plane, dim)
 
@@ -195,11 +227,7 @@ object Similarity {
         col("__band") + 1)
       .withColumn("cosine",
         vecDot(col("__qv"), col(vecCol)) / (col("__qnorm") * col("__cnorm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("rank"), col("cosine"))
+    topKPerQuery(scored, k, idCol)
   }
 
   /** Multi-probe LSH ANN top-k (Lv, Josephson, Wang, Charikar & Li,
@@ -247,12 +275,7 @@ object Similarity {
     val scored = candIds.join(cv, Seq(idCol)).join(qv, Seq("query_id"))
       .withColumn("cosine",
         vecDot(col("__qv"), col(vecCol)) / (col("__qnorm") * col("__cnorm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("rank"), col("cosine"))
+    topKPerQuery(scored, k, idCol)
   }
 
   /** k-NN GRAPH construction — LSH-seeded NN-Descent (Dong, Moses &
@@ -460,12 +483,13 @@ object Similarity {
     * corpus, and no pair outside the probed cells is ever scored.
     * Complementary to [[knnLsh]]: IVF adapts its partitions to the
     * data distribution (trained centroids) where sign-LSH uses fixed
-    * coordinate planes. */
-  /** @param centroids fixed cell centroids, bypassing training — for
-    *                   a pre-trained index, or for an engine-neutral
-    *                   deterministic cell layout (the search path is
-    *                   then fully oracle-checkable; only the k-means
-    *                   loop is not SQL-expressible). */
+    * coordinate planes.
+    *
+    * @param centroids fixed cell centroids, bypassing training — for
+    *                  a pre-trained index, or for an engine-neutral
+    *                  deterministic cell layout (the search path is
+    *                  then fully oracle-checkable; only the k-means
+    *                  loop is not SQL-expressible). */
   def knnIvf(corpus: DataFrame, queries: DataFrame, k: Int = 10,
              nlist: Int = 8, nprobe: Int = 3, iters: Int = 2,
              idCol: String = "vec_id", vecCol: String = "embedding",
@@ -475,196 +499,179 @@ object Similarity {
     val c = corpus
       .select(col(idCol), col(vecCol), vecNorm(col(vecCol)).as("__cnorm"))
       .withColumn("__cell", nearestCell(col(vecCol), col("__cnorm"), cents))
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-        vecNorm(col(vecCol)).as("__qnorm"))
-      .withColumn("__probe",
-        explode(probedCells(col("__qv"), col("__qnorm"), cents, nprobe)))
-      .select(col("query_id"), col("__qv"), col("__qnorm"),
-        col("__probe.cell").as("__cell"))
+    val q = probeRows(queries, cents, nprobe, (v, n) => Seq(v, n), "__cell",
+      idCol, vecCol)
     val scored = c.join(broadcast(q), "__cell")
       .filter(col(idCol) =!= col("query_id"))
       .withColumn("cosine",
         vecDot(col("__qv"), col(vecCol)) / (col("__qnorm") * col("__cnorm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("rank"), col("cosine"))
+    topKPerQuery(scored, k, idCol)
   }
 
-  /** Persist an IVF-Flat index: `path/centroids` (cell → centroid
-    * vector, nlist rows) plus `path/rows` — every corpus vector with
-    * its precomputed norm, PARTITIONED BY CELL on disk. The embedding
-    * corpus is scanned once at build time; afterwards a search touches
-    * only its probed cells' directories ([[searchIvfIndex]]) — the
-    * inverted-file property materialized as filesystem layout. */
-  def writeIvfIndex(corpus: DataFrame, path: String, nlist: Int = 8,
-                    iters: Int = 2, idCol: String = "vec_id",
+  /** The query side of an IVF search: one row per (query, probed cell)
+    * — `query_id`, the columns `payload` derives from the query vector
+    * `__qv` and its norm `__qnorm`, and the probed cell as `cellCol`. */
+  private def probeRows(queries: DataFrame, cents: Array[Array[Float]],
+                        nprobe: Int, payload: (Column, Column) => Seq[Column],
+                        cellCol: String, idCol: String,
+                        vecCol: String): DataFrame = {
+    val p = queries
+      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
+        vecNorm(col(vecCol)).as("__qnorm"))
+      .select(col("query_id") +: payload(col("__qv"), col("__qnorm")) :+
+        explode(probedCells(col("__qv"), col("__qnorm"), cents, nprobe))
+          .as("__probe"): _*)
+    p.select(p.columns.init.toSeq.map(col) :+ col("__probe.cell").as(cellCol): _*)
+  }
+
+  // ------------------------------------------------- persisted IVF index
+
+  /** One code kind's three roles in a persisted IVF index: the stored
+    * row columns of a vector (`encode(vec, norm)`), the broadcast
+    * columns of a query (`probe(__qv, __qnorm)`), and the `score` of a
+    * stored row against a query row, ranked ascending or not. */
+  private final case class IvfCodec(encode: (Column, Column) => Seq[Column],
+                                    probe: (Column, Column) => Seq[Column],
+                                    scoreCol: String, score: Column,
+                                    ascending: Boolean)
+
+  private def ivfCodec(codes: IvfCodes, vecCol: String): IvfCodec = codes match {
+    case IvfCodes.Flat => IvfCodec((v, n) => Seq(v, n.as("cnorm")),
+      (v, n) => Seq(v, n), "cosine",
+      vecDot(col("__qv"), col(vecCol)) / (col("__qnorm") * col("cnorm")),
+      ascending = false)
+    case IvfCodes.Sq8 => IvfCodec((v, n) => Seq(quantize(v, n).as("codes")),
+      (v, n) => Seq(quantize(v, n).as("__qcodes")), "score",
+      vecDot(col("codes"), col("__qcodes")).cast("long"), ascending = false)
+    case IvfCodes.Pq(m, ksub, codebook) =>
+      require(codebook.isDefined, "PQ codes need a codebook")
+      val cb = codebook.get
+      require(cb.length % (m * ksub) == 0, "codebook shape mismatch")
+      val ds = cb.length / (m * ksub)
+      IvfCodec(
+        (v, n) => Seq(pqEncode(quantize(v, n), cb, m, ksub, ds).as("codes")),
+        (v, n) => Seq(pqLut(quantize(v, n), cb, m, ksub, ds).as("__lut")),
+        "score", pqScore(col("__lut"), col("codes"), ksub), ascending = true)
+  }
+
+  /** Persist an IVF index (FAISS `IVFx,Flat` / `IVFx,SQ8` / `IVFx,PQy`;
+    * Jégou et al. 2011, Johnson et al. 2017, arXiv:1702.08734):
+    *  - `path/centroids`: cell → centroid vector (nlist rows), each row
+    *    also naming the code kind, so append and search read it back;
+    *  - `path/codebook` (PQ only): one row (flat cb, m, ksub, ds);
+    *  - `path/rows`: one row per corpus vector, PARTITIONED BY CELL on
+    *    disk — `(id, vec, cnorm)` for [[IvfCodes.Flat]], `(id, codes)`
+    *    for SQ8 (4× smaller than float32) and PQ (m ints per row).
+    * The corpus is scanned once at build time; afterwards a search
+    * touches only its probed cells' directories ([[searchIvfIndex]]) —
+    * the inverted-file property as filesystem layout, multiplied by
+    * the bytes the codes save per row. Cell assignment uses the
+    * full-precision vector (the coarse quantizer is full-precision in
+    * FAISS too); only the stored rows are compressed. A PQ codebook
+    * left unset is [[pqStaticCodebook]] of `corpus`. */
+  def writeIvfIndex(corpus: DataFrame, path: String, codes: IvfCodes,
+                    nlist: Int = 8, iters: Int = 2, idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     centroids: Option[Array[Array[Float]]] = None): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = centroids.getOrElse(
       trainCentroids(corpus, nlist, iters, idCol, vecCol))
-    cents.toSeq.zipWithIndex.map { case (c, j) => (j, c.toSeq) }
-      .toDF("cell", "centroid")
+    val stored = codes match {
+      case IvfCodes.Pq(m, ksub, None) =>
+        IvfCodes.Pq(m, ksub, Some(pqStaticCodebook(corpus, m, ksub, idCol, vecCol)))
+      case c => c
+    }
+    cents.toSeq.zipWithIndex.map { case (c, j) => (j, c.toSeq, stored.name) }
+      .toDF("cell", "centroid", "code")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    corpus.select(col(idCol), col(vecCol), vecNorm(col(vecCol)).as("cnorm"))
-      .withColumn("cell", nearestCell(col(vecCol), col("cnorm"), cents))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/rows")
+    stored match {
+      case IvfCodes.Pq(m, ksub, Some(cb)) =>
+        Seq((cb.toSeq, m, ksub, cb.length / (m * ksub))).toDF("cb", "m", "ksub", "ds")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
+      case _ =>
+    }
+    writeCells(corpus, path, cents, stored, "overwrite", idCol, vecCol)
+  }
+
+  /** IVF index MAINTENANCE: append a batch of new vectors into an
+    * existing index without touching history. Cell assignment and
+    * encoding use the index's own persisted centroids, code kind and
+    * codebook — frozen at build time, so the batch lands exactly where
+    * an index built from the union corpus would put it (SimilaritySpec
+    * proves search-after-append ≡ search-over-union for every code) —
+    * and the write is a dynamic partition APPEND into the `cell=`
+    * layout: history files are never read or rewritten, per-batch
+    * cost scales with the batch. Centroid drift is a rebuild decision
+    * ([[writeIvfIndex]]), never an append decision — the same
+    * daily-cycle contract as [[graft.dedup.Dedup.appendSignatureIndex]]. */
+  def appendIvfIndex(spark: SparkSession, path: String, batch: DataFrame,
+                     idCol: String = "vec_id",
+                     vecCol: String = "embedding"): Unit = {
+    val (cents, codes) = readIvfIndex(spark, path)
+    writeCells(batch, path, cents, codes, "append", idCol, vecCol)
   }
 
   /** Search a persisted IVF index: probe cells are computed from the
     * (collected, ≤ nlist values) centroid table, pushed as a STATIC
     * partition filter on the cell-partitioned row store — the scan
     * reads only `nprobe/nlist` of the index's files (pruning asserted
-    * in SimilaritySpec), then the exact-cosine re-rank runs on the
-    * probed slice. Same result contract as [[knnIvf]] with the same
-    * centroids (q86's oracle IS q48's); the difference is WHERE the
-    * cost lands — index IO instead of a full-corpus assignment
-    * projection, which is what an incremental pipeline querying a
-    * static corpus wants. */
-  /** IVF index MAINTENANCE: append a batch of new vectors into an
-    * existing index without touching history. Cell assignment uses
-    * the index's own persisted centroids — frozen at build time, so
-    * the batch lands exactly where an index built from the union
-    * corpus would put it (SimilaritySpec proves search-after-append ≡
-    * search-over-union) — and the write is a dynamic partition APPEND
-    * into the `cell=` layout: history files are never read or
-    * rewritten, per-batch cost scales with the batch. Centroid drift
-    * is a rebuild decision ([[writeIvfIndex]]), never an append
-    * decision — the same daily-cycle contract as
-    * [[graft.dedup.Dedup.appendSignatureIndex]]. */
-  def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                     batch: DataFrame, idCol: String = "vec_id",
-                     vecCol: String = "embedding"): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-    batch.select(col(idCol), col(vecCol), vecNorm(col(vecCol)).as("cnorm"))
-      .withColumn("cell", nearestCell(col(vecCol), col("cnorm"), cents))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/rows")
-  }
-
-  def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                     queries: DataFrame, k: Int = 10, nprobe: Int = 3,
-                     idCol: String = "vec_id",
+    * in SimilaritySpec), then the probed slice is scored by the
+    * index's code kind:
+    *  - flat: exact cosine, highest first — [[knnIvf]]'s result with
+    *    the same centroids (q86's oracle IS q48's);
+    *  - SQ8: the exact integer code dot against the quantized query,
+    *    highest first, as BIGINT `score` — [[knnQuantized]] row for
+    *    row at `nprobe = nlist`;
+    *  - PQ: m BIGINT LUT lookups per candidate
+    *    ([[graft.functions.PqUtil.score]]), a distance, lowest first —
+    *    [[knnPq]] row for row at `nprobe = nlist`.
+    * Ties go to the lower id. The cost lands in index IO instead of a
+    * full-corpus assignment projection, which is what an incremental
+    * pipeline querying a static corpus wants. */
+  def searchIvfIndex(spark: SparkSession, path: String, queries: DataFrame,
+                     k: Int = 10, nprobe: Int = 3, idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-        vecNorm(col(vecCol)).as("__qnorm"))
-      .withColumn("__probe",
-        explode(probedCells(col("__qv"), col("__qnorm"), cents, nprobe)))
-      .select(col("query_id"), col("__qv"), col("__qnorm"),
-        col("__probe.cell").as("cell"))
+    val (cents, codes) = readIvfIndex(spark, path)
+    val codec = ivfCodec(codes, vecCol)
+    val q = probeRows(queries, cents, nprobe, codec.probe, "cell", idCol, vecCol)
     // distinct probed cells: bounded by nlist, never by |queries|
     val probed = q.select("cell").distinct().collect().map(_.getInt(0)).toSeq
     val rows = spark.read.parquet(s"$path/rows")
       .filter(col("cell").isInCollection(probed))
     val scored = rows.join(broadcast(q), "cell")
       .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cosine",
-        vecDot(col("__qv"), col(vecCol)) / (col("__qnorm") * col("cnorm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("rank"), col("cosine"))
+      .withColumn(codec.scoreCol, codec.score)
+    topKPerQuery(scored, k, idCol, codec.scoreCol, codec.ascending)
   }
 
-  // ------------------------------------------------- IVF + SQ8 (composed)
-
-  /** Persist an IVF index with SQ8-QUANTIZED codes — the composition
-    * every production ANN deployment runs (FAISS `IVFx,SQ8`, Johnson
-    * et al. 2017, arXiv:1702.08734): cell partitioning bounds WHICH
-    * rows a search reads (`nprobe/nlist` of the corpus, directory
-    * pruning as in [[writeIvfIndex]]), int8 codes bound the BYTES per
-    * row read (4× smaller than float32) — the two savings multiply.
-    * Layout: `path/centroids` as in [[writeIvfIndex]];
-    * `path/rows` = (id, codes) partitioned by cell, where codes is
-    * [[quantize]]'s int-valued float array (exact in float, so the
-    * codegen'd float dot computes the integer score exactly — see
-    * [[knnQuantized]]). Cell assignment uses the FULL-PRECISION
-    * vector (the coarse quantizer is full-precision in FAISS too);
-    * only the residual scan is quantized. */
-  def writeIvfIndexQuantized(corpus: DataFrame, path: String, nlist: Int = 8,
-                             iters: Int = 2, idCol: String = "vec_id",
-                             vecCol: String = "embedding",
-                             centroids: Option[Array[Array[Float]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = centroids.getOrElse(
-      trainCentroids(corpus, nlist, iters, idCol, vecCol))
-    cents.toSeq.zipWithIndex.map { case (c, j) => (j, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    corpus
-      .select(col(idCol), col(vecCol), vecNorm(col(vecCol)).as("__n"))
-      .select(col(idCol), quantize(col(vecCol), col("__n")).as("codes"),
-        nearestCell(col(vecCol), col("__n"), cents).as("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/rows")
-  }
-
-  /** Append a batch into a quantized IVF index — same maintenance
-    * contract as [[appendIvfIndex]]: assignment under the index's own
-    * frozen centroids, dynamic-partition APPEND into the `cell=`
-    * layout, history never read or rewritten (search-after-append ≡
-    * search-over-union, asserted in SimilaritySpec). */
-  def appendIvfIndexQuantized(spark: org.apache.spark.sql.SparkSession,
-                              path: String, batch: DataFrame,
-                              idCol: String = "vec_id",
-                              vecCol: String = "embedding"): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids")
+  /** A persisted index's centroids (in cell order) and code kind, both
+    * read from `path/centroids`; a PQ index adds its codebook. */
+  private def readIvfIndex(spark: SparkSession,
+                           path: String): (Array[Array[Float]], IvfCodes) = {
+    val rows = spark.read.parquet(s"$path/centroids")
       .orderBy(col("cell")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-    batch
-      .select(col(idCol), col(vecCol), vecNorm(col(vecCol)).as("__n"))
-      .select(col(idCol), quantize(col(vecCol), col("__n")).as("codes"),
-        nearestCell(col(vecCol), col("__n"), cents).as("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/rows")
+    val codes = rows.head.getAs[String]("code") match {
+      case "flat" => IvfCodes.Flat
+      case "sq8" => IvfCodes.Sq8
+      case "pq" =>
+        val meta = spark.read.parquet(s"$path/codebook").collect().head
+        IvfCodes.Pq(meta.getAs[Int]("m"), meta.getAs[Int]("ksub"),
+          Some(meta.getAs[scala.collection.Seq[Int]]("cb").toArray))
+      case other =>
+        throw new IllegalArgumentException(s"$path: unknown IVF code kind '$other'")
+    }
+    (rows.map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray), codes)
   }
 
-  /** Search a quantized IVF index: full-precision probe selection
-    * (as [[searchIvfIndex]] — static partition filter, only the
-    * probed cells' files are read), then ranking by the exact integer
-    * code dot against the quantized query (the [[knnQuantized]]
-    * score contract: pure-BIGINT output, oracle-exact with no
-    * epsilon). With `nprobe = nlist` this equals [[knnQuantized]] row
-    * for row; with `nprobe < nlist` it reads `nprobe/nlist` of a
-    * store that is already 4× smaller than the float index — in a
-    * two-stage deployment, re-rank the survivors with exact cosine
-    * over the float corpus at k' ≫ k. */
-  def searchIvfIndexQuantized(spark: org.apache.spark.sql.SparkSession,
-                              path: String, queries: DataFrame, k: Int = 10,
-                              nprobe: Int = 3, idCol: String = "vec_id",
-                              vecCol: String = "embedding"): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-        vecNorm(col(vecCol)).as("__qnorm"))
-      .select(col("query_id"), quantize(col("__qv"), col("__qnorm")).as("__qcodes"),
-        explode(probedCells(col("__qv"), col("__qnorm"), cents, nprobe)).as("__probe"))
-      .select(col("query_id"), col("__qcodes"), col("__probe.cell").as("cell"))
-    // distinct probed cells: bounded by nlist, never by |queries|
-    val probed = q.select("cell").distinct().collect().map(_.getInt(0)).toSeq
-    val rows = spark.read.parquet(s"$path/rows")
-      .filter(col("cell").isInCollection(probed))
-    val scored = rows.join(broadcast(q), "cell")
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("score", vecDot(col("codes"), col("__qcodes")).cast("long"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("rank"), col("score"))
-  }
+  /** Encode `vecs` under `codes` and write them into their cells. */
+  private def writeCells(vecs: DataFrame, path: String,
+                         cents: Array[Array[Float]], codes: IvfCodes,
+                         mode: String, idCol: String, vecCol: String): Unit =
+    vecs.select(col(idCol), col(vecCol), vecNorm(col(vecCol)).as("__n"))
+      .select(col(idCol) +: ivfCodec(codes, vecCol).encode(col(vecCol), col("__n")) :+
+        nearestCell(col(vecCol), col("__n"), cents).as("cell"): _*)
+      .write.mode(mode).partitionBy("cell").parquet(s"$path/rows")
 
   /** Embedding-cosine near-dup pairs: candidates share at least one
     * LSH band (equi-join on (band, key), first-matching-band dedup),
@@ -772,21 +779,22 @@ object Similarity {
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
     def codes(df: DataFrame, outId: String) =
-      df.select(col(idCol).as(outId), col(vecCol).as("__v"),
-          vecNorm(col(vecCol)).as("__n"))
-        .select(col(outId), quantize(col("__v"), col("__n")).as(s"__q$outId"))
+      sq8Rows(df, idCol, vecCol, outId, s"__q$outId")
     val q = broadcast(codes(queries, "query_id"))
     val scored = codes(corpus, idCol).crossJoin(q)
       .filter(col(idCol) =!= col("query_id"))
       .withColumn("score",
         vecDot(col(s"__q$idCol"), col("__qquery_id")).cast("long"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("rank"), col("score"))
+    topKPerQuery(scored, k, idCol, "score")
   }
+
+  /** `df`'s ids as `outId` beside their SQ8 codes ([[quantize]]) as
+    * `outCol` — the scan-side encode of [[knnQuantized]] and [[knnPq]]. */
+  private def sq8Rows(df: DataFrame, idCol: String, vecCol: String,
+                      outId: String, outCol: String): DataFrame =
+    df.select(col(idCol).as(outId), col(vecCol).as("__v"),
+        vecNorm(col(vecCol)).as("__n"))
+      .select(col(outId), quantize(col("__v"), col("__n")).as(outCol))
 
   /** Two-stage retrieval — the deployment pattern the
     * [[knnQuantized]] scaladoc promises, as one operator: stage 1
@@ -833,24 +841,22 @@ object Similarity {
       col(vecCol).as("__qv"), vecNorm(col(vecCol)).as("__qnorm")))
     val full = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("__cv"), vecNorm(col(vecCol)).as("__cnorm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    cands.join(full, "neighbor_id")
+    val scored = cands.join(full, "neighbor_id")
       .join(q, "query_id")
       .withColumn("cosine",
         vecDot(col("__qv"), col("__cv")) / (col("__qnorm") * col("__cnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+    topKPerQuery(scored, k, "neighbor_id")
   }
 
   /** The full deployment-shaped retrieval stack as ONE operator —
     * prune → int8 rank → exact re-rank (FAISS `IVFx,SQ8` + refine,
     * Johnson et al. 2017, arXiv:1702.08734): stage 1 is
-    * [[searchIvfIndexQuantized]] (static partition pruning reads only
-    * the `nprobe/nlist` probed cells' files, and each row read is the
-    * 4×-smaller int8 codes), keeping `kCandidates` per query by the
-    * exact integer code dot; stage 2 is [[refineExact]] — full
+    * [[searchIvfIndex]] over an [[IvfCodes.Sq8]] index at `path`
+    * (static partition pruning reads only the `nprobe/nlist` probed
+    * cells' files, and each row read is the 4×-smaller int8 codes),
+    * keeping `kCandidates` per query by the exact integer code dot
+    * (any code kind works: stage 1 ranks by the index's own score);
+    * stage 2 is [[refineExact]] — full
     * precision touches only |queries|·k′ rows via one hash join, never
     * the corpus. vs [[twoStageKnn]] (flat SQ8 stage 1) the candidate
     * scan drops from all bytes of the code store to
@@ -858,8 +864,7 @@ object Similarity {
     * At `nprobe = nlist` and `kCandidates = |corpus|` the output IS
     * [[knnBruteForce]] row for row (spec-asserted: both stages
     * degrade to exhaustive). */
-  def twoStageKnnIvf(spark: org.apache.spark.sql.SparkSession,
-                     path: String, corpus: DataFrame, queries: DataFrame,
+  def twoStageKnnIvf(spark: SparkSession, path: String, corpus: DataFrame, queries: DataFrame,
                      kCandidates: Int = 40, k: Int = 10, nprobe: Int = 3,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
@@ -867,7 +872,7 @@ object Similarity {
     require(kCandidates >= k,
       s"kCandidates ($kCandidates) must be >= k ($k) — the refine " +
         "stage can only shrink the candidate list")
-    val cands = searchIvfIndexQuantized(spark, path, queries,
+    val cands = searchIvfIndex(spark, path, queries,
         k = kCandidates, nprobe = nprobe, idCol = idCol, vecCol = vecCol)
       .select(col("query_id"), col("neighbor_id"))
     refineExact(cands, corpus, queries, k, idCol, vecCol)
@@ -920,138 +925,24 @@ object Similarity {
     * m-int code rows leave), the query LUT frame is broadcast, and
     * the ranking window partitions by query. Being a DISTANCE
     * estimate, rank ascends. Compose with the IVF cell layout for
-    * partition pruning on top (the writeIvfIndexQuantized pattern);
+    * partition pruning on top ([[writeIvfIndex]] with [[IvfCodes.Pq]]);
     * re-rank survivors with exact cosine at k' ≫ k in a two-stage
     * deployment. */
   def knnPq(corpus: DataFrame, queries: DataFrame, k: Int = 10,
             m: Int = 8, ksub: Int = 16,
             codebook: Option[Array[Int]] = None,
             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.PqFunctions._
     val cb = codebook.getOrElse(pqStaticCodebook(corpus, m, ksub, idCol, vecCol))
     require(cb.length % (m * ksub) == 0, "codebook shape mismatch")
     val ds = cb.length / (m * ksub)
-    def quantized(df: DataFrame, outId: String) =
-      df.select(col(idCol).as(outId), col(vecCol).as("__v"),
-          vecNorm(col(vecCol)).as("__n"))
-        .select(col(outId), quantize(col("__v"), col("__n")).as("__q"))
-    val codes = quantized(corpus, idCol)
+    val codes = sq8Rows(corpus, idCol, vecCol, idCol, "__q")
       .select(col(idCol), pqEncode(col("__q"), cb, m, ksub, ds).as("__codes"))
-    val luts = broadcast(quantized(queries, "query_id")
+    val luts = broadcast(sq8Rows(queries, idCol, vecCol, "query_id", "__q")
       .select(col("query_id"), pqLut(col("__q"), cb, m, ksub, ds).as("__lut")))
     val scored = codes.crossJoin(luts)
       .filter(col(idCol) =!= col("query_id"))
       .withColumn("score", pqScore(col("__lut"), col("__codes"), ksub))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score"), col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("rank"), col("score"))
-  }
-
-  /** Persist an IVF index with PQ codes — FAISS's `IVFx,PQy` (Jégou
-    * et al. 2011 §V; Johnson et al. 2017), the composition behind
-    * virtually every billion-scale ANN deployment: IVF cell
-    * partitioning bounds WHICH rows a search reads (nprobe/nlist of
-    * the corpus, directory pruning as in [[writeIvfIndex]]), PQ codes
-    * bound the BYTES per row to m ints (32× under float32, 4× under
-    * SQ8) — the two savings multiply, and the per-candidate cost
-    * drops to m LUT lookups. Layout: `path/centroids` as in
-    * [[writeIvfIndex]]; `path/codebook` = one row (flat cb, m, ksub,
-    * ds) so the index is self-describing; `path/rows` = (id, codes)
-    * partitioned by cell. Coarse assignment is full-precision (as in
-    * FAISS); codes live in the SQ8-quantized domain for exactness
-    * (see [[knnPq]]). */
-  def writeIvfIndexPq(corpus: DataFrame, path: String, nlist: Int = 8,
-                      iters: Int = 2, m: Int = 8, ksub: Int = 16,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      centroids: Option[Array[Array[Float]]] = None,
-                      codebook: Option[Array[Int]] = None): Unit = {
-    import graft.functions.PqFunctions._
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = centroids.getOrElse(
-      trainCentroids(corpus, nlist, iters, idCol, vecCol))
-    val cb = codebook.getOrElse(pqStaticCodebook(corpus, m, ksub, idCol, vecCol))
-    val ds = cb.length / (m * ksub)
-    cents.toSeq.zipWithIndex.map { case (c, j) => (j, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    Seq((cb.toSeq, m, ksub, ds)).toDF("cb", "m", "ksub", "ds")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    corpus
-      .select(col(idCol), col(vecCol), vecNorm(col(vecCol)).as("__n"))
-      .select(col(idCol),
-        pqEncode(quantize(col(vecCol), col("__n")), cb, m, ksub, ds).as("codes"),
-        nearestCell(col(vecCol), col("__n"), cents).as("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/rows")
-  }
-
-  /** Append a batch into a PQ index — the [[appendIvfIndex]]
-    * maintenance contract: assignment and encoding under the index's
-    * own frozen centroids/codebook, dynamic-partition APPEND, history
-    * never read or rewritten. */
-  def appendIvfIndexPq(spark: org.apache.spark.sql.SparkSession,
-                       path: String, batch: DataFrame,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Unit = {
-    import graft.functions.PqFunctions._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-    val meta = spark.read.parquet(s"$path/codebook").collect().head
-    val cb = meta.getAs[scala.collection.Seq[Int]]("cb").toArray
-    val (m, ksub, ds) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"),
-      meta.getAs[Int]("ds"))
-    batch
-      .select(col(idCol), col(vecCol), vecNorm(col(vecCol)).as("__n"))
-      .select(col(idCol),
-        pqEncode(quantize(col(vecCol), col("__n")), cb, m, ksub, ds).as("codes"),
-        nearestCell(col(vecCol), col("__n"), cents).as("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/rows")
-  }
-
-  /** Search a PQ index: full-precision probe selection (static
-    * partition filter — only the probed cells' files are read, and
-    * those files hold m-int codes, not vectors), per-query LUT
-    * broadcast, candidates scored by m BIGINT lookups
-    * ([[graft.functions.PqUtil.score]]). Exact-integer output, rank
-    * ascending (a distance), ties to the lower id — the knnPq
-    * contract behind partition pruning. */
-  def searchIvfIndexPq(spark: org.apache.spark.sql.SparkSession,
-                       path: String, queries: DataFrame, k: Int = 10,
-                       nprobe: Int = 3, idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.PqFunctions._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-    val meta = spark.read.parquet(s"$path/codebook").collect().head
-    val cb = meta.getAs[scala.collection.Seq[Int]]("cb").toArray
-    val (m, ksub, ds) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"),
-      meta.getAs[Int]("ds"))
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
-        vecNorm(col(vecCol)).as("__qnorm"))
-      .select(col("query_id"),
-        pqLut(quantize(col("__qv"), col("__qnorm")), cb, m, ksub, ds)
-          .as("__lut"),
-        explode(probedCells(col("__qv"), col("__qnorm"), cents, nprobe))
-          .as("__probe"))
-      .select(col("query_id"), col("__lut"), col("__probe.cell").as("cell"))
-    val probed = q.select("cell").distinct().collect().map(_.getInt(0)).toSeq
-    val rows = spark.read.parquet(s"$path/rows")
-      .filter(col("cell").isInCollection(probed))
-    val scored = rows.join(broadcast(q), "cell")
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("score", pqScore(col("__lut"), col("codes"), ksub))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score"), col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("rank"), col("score"))
+    topKPerQuery(scored, k, idCol, "score", ascending = true)
   }
 
   /** Index-quality evaluation as a first-class operator: per-query

@@ -22,7 +22,7 @@ import graft.etl.Upsert
   * {{{
   *   table/data/<part>=<v>/__dv=<k>/part-*.parquet  // immutable once written
   *   table/_manifests/v<k>.json                     // {"<part>=<v>": dataVersion}
-  *   table/_manifests/schema_v<k>.json              // data-file schema (StructType JSON)
+  *   table/_manifests/schema_dv<k>.json             // data-file schema of data version k (StructType JSON)
   * }}}
   *
   * The data-version level is itself a key=value directory (`__dv=k`)
@@ -88,11 +88,6 @@ object Versioned {
 
   private def manifestPath(table: String, v: Int) =
     new Path(s"$table/_manifests/v$v.json")
-
-  /** Legacy (pre-concurrency) schema location, keyed by manifest
-    * version — still read as a fallback. */
-  private def schemaPath(table: String, v: Int) =
-    new Path(s"$table/_manifests/schema_v$v.json")
 
   /** Schema of the data files a claimed data version wrote — keyed by
     * the writer-unique token, so racing writers never clobber each
@@ -240,13 +235,17 @@ object Versioned {
     val p = manifestPath(table, v)
     val f = fs(spark, table)
     require(f.exists(p), s"no manifest for version $v at $p")
+    parseManifest(readUtf8(f, p))
+  }
+
+  private def readUtf8(f: org.apache.hadoop.fs.FileSystem, p: Path): String = {
     val in = f.open(p)
     val bytes = try {
       val out = new java.io.ByteArrayOutputStream()
       org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
       out.toByteArray
     } finally in.close()
-    parseManifest(new String(bytes, StandardCharsets.UTF_8))
+    new String(bytes, StandardCharsets.UTF_8)
   }
 
   /** What a staged attempt will publish: the full new content of the
@@ -534,11 +533,7 @@ object Versioned {
           f.delete(partStatus.getPath, false)
       }
     }
-    for (v <- expired) {
-      f.delete(manifestPath(table, v), false)
-      val sp = schemaPath(table, v)
-      if (f.exists(sp)) f.delete(sp, false)
-    }
+    for (v <- expired) f.delete(manifestPath(table, v), false)
     // Token bookkeeping for data versions nothing retained points at:
     // expired history and crashed/aborted commits alike.
     for (s <- f.listStatus(mDir); n = s.getPath.getName) {
@@ -564,34 +559,21 @@ object Versioned {
     // back to string they no longer equal the logical value, so the
     // merge path's touched-partition filter matches nothing and a
     // MERGE commit silently REPLACES the partition. The read therefore
-    // gets an explicit schema — the data-file schema commit() persisted
-    // next to the manifest (falling back to one leaf footer for tables
-    // written before schema persistence) plus the partition columns
-    // pinned to (string, int) — because user-specified partition types
-    // disable inference and keep the (unescaped) dir value verbatim.
-    // Side benefit: construction does zero parquet-footer IO.
+    // gets an explicit schema — the data-file schema the committing
+    // writer persisted under its token (exact under interleaved commits
+    // — see CommitDvKey) — plus the partition columns pinned to
+    // (string, int), because user-specified partition types disable
+    // inference and keep the (unescaped) dir value verbatim. Side
+    // benefit: construction does zero parquet-footer IO.
     val partCol = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(sorted.head._1.takeWhile(_ != '='))
     val f = fs(spark, table)
-    // Schema source, newest convention first: the committing writer's
-    // token-keyed file (exact under interleaved commits — see
-    // CommitDvKey), then the legacy version-keyed file, then one leaf
-    // footer (pre-schema-persistence tables).
-    val sp = (commitDv.map(schemaDvPath(table, _)).toSeq :+
-        schemaPath(table, v)).find(f.exists)
-    val dataSchema = sp match {
-      case Some(p) =>
-        val in = f.open(p)
-        val bytes = try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-          out.toByteArray
-        } finally in.close()
-        org.apache.spark.sql.types.DataType
-          .fromJson(new String(bytes, StandardCharsets.UTF_8))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      case None => spark.read.parquet(dirs.head).schema
-    }
+    val sp = commitDv.map(schemaDvPath(table, _)).filter(f.exists).getOrElse(
+      throw new IllegalStateException(s"$table version $v has no data schema: " +
+        commitDv.fold(s"its manifest lacks $CommitDvKey")(dv =>
+          s"${schemaDvPath(table, dv)} is missing")))
+    val dataSchema = org.apache.spark.sql.types.DataType.fromJson(readUtf8(f, sp))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
     val full = dataSchema
       .add(StructField(partCol, StringType, nullable = false))
       .add(StructField("__dv", IntegerType, nullable = false))

@@ -28,7 +28,8 @@ object Harness {
     }
 
   /** `local[cpus]` with shuffle partitions equal to the cores, UTC
-    * session time zone, ANSI off and the UI off. */
+    * session time zone, ANSI off, the UI off, and TIMESTAMP(NANOS)
+    * parquet read as long (the `graft.core.Tables.events` nanos arm). */
   def session(logLevel: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -36,6 +37,7 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark

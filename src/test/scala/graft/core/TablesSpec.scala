@@ -66,6 +66,14 @@ class TablesSpec extends SparkSpec {
     instantsOf(d) shouldBe micros.sorted
   }
 
+  test("events leaves the session's nanosAsLong setting as the caller set it") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    withSQLConf(key -> "false") {
+      readVariant(path => base.write.mode("overwrite").parquet(path))
+      spark.conf.get(key) shouldBe "false"
+    }
+  }
+
   test("documents: int32-narrowed id/count columns widen back to long") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-tables").toString

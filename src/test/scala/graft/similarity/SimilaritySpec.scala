@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -82,12 +82,12 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("bandKey packs hyperplane sign bits; Spark and Scala agree") {
-    // e_0: dot with plane p is exactly hyperplaneCoeff(p, 0)
+    // e_0: dot with plane p is exactly Hyperplanes.coeff(p, 0)
     val d = vecs(1L -> (Seq(1f) ++ Seq.fill(63)(0f)))
     val out = d.select(Similarity.bandKeySpec(col("embedding"), band = 0).as("k"))
       .as[Int].collect().head
     val expected = (0 until Similarity.signatureBits)
-      .filter(j => Similarity.hyperplaneCoeff(j, 0) > 0)
+      .filter(j => graft.functions.Hyperplanes.coeff(j, 0) > 0)
       .map(1 << _).sum
     out shouldBe expected
     out should (be >= 0 and be < (1 << Similarity.signatureBits))
@@ -186,92 +186,6 @@ class SimilaritySpec extends SparkSpec {
     out.head.getDouble(2) should be >= 0.99
   }
 
-  test("searchIvfIndex equals knnIvf on the same centroids") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
-    val path = java.nio.file.Files.createTempDirectory("ivf").toString + "/idx"
-    Similarity.writeIvfIndex(emb, path, centroids = Some(cents))
-    val queries = emb.filter(col("vec_id") < 5)
-    assertSameRows(
-      Similarity.searchIvfIndex(spark, path, queries, k = 10, nprobe = 3),
-      Similarity.knnIvf(emb, queries, k = 10, nprobe = 3,
-        centroids = Some(cents)))
-  }
-
-  test("appendIvfIndex: search after append equals search over the union corpus") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
-    val base = emb.filter(col("vec_id") % 2 === 0)
-    val batch = emb.filter(col("vec_id") % 2 === 1)
-    // incremental: index the even half, append the odd half
-    val inc = java.nio.file.Files.createTempDirectory("ivf").toString + "/idx"
-    Similarity.writeIvfIndex(base, inc, centroids = Some(cents))
-    Similarity.appendIvfIndex(spark, inc, batch)
-    // oracle: one index built from the full corpus, same centroids
-    val full = java.nio.file.Files.createTempDirectory("ivf").toString + "/idx"
-    Similarity.writeIvfIndex(emb, full, centroids = Some(cents))
-    val queries = emb.filter(col("vec_id") < 5)
-    assertSameRows(
-      Similarity.searchIvfIndex(spark, inc, queries, k = 10, nprobe = 3),
-      Similarity.searchIvfIndex(spark, full, queries, k = 10, nprobe = 3))
-    // history untouched: base files still carry their original mtimes?
-    // cheaper and sufficient — every cell dir holds files from BOTH
-    // writes (append added files, replaced none), so file count grew
-    val cellFiles = new java.io.File(s"$inc/rows").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-      .map(d => d.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    val fullFiles = new java.io.File(s"$full/rows").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-      .map(d => d.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    cellFiles should be > fullFiles
-  }
-
-  test("searchIvfIndex scans only the probed cells' partition files") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
-    val path = java.nio.file.Files.createTempDirectory("ivf").toString + "/idx"
-    Similarity.writeIvfIndex(emb, path, centroids = Some(cents))
-    // one query, nprobe=2: the probe set is a strict subset of the 8
-    // cells, so pruning is observable at the file level. AQE is off
-    // for this test only: adaptive plans wrap executed stages in leaf
-    // nodes that hide the scan from collect(); the pruning property
-    // itself is planning-time and AQE-independent.
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-    val one = emb.filter(col("vec_id") === 0L)
-    val out = Similarity.searchIvfIndex(spark, path, one, k = 10, nprobe = 2)
-    out.collect() // execute so scan metrics are populated
-    // the probe set the search computed, recomputed via the public API
-    val probed = one.select(explode(Similarity.probedCells(col("embedding"),
-        Similarity.norm(col("embedding")), cents, 2)).as("p"))
-      .select(col("p.cell")).distinct().as[Int].collect().toSet
-    probed.size should be <= 2
-    // on-disk file census per cell directory
-    val cellDirs = new java.io.File(s"$path/rows").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell=")).toSeq
-    cellDirs.length shouldBe 8
-    def parquetFiles(d: java.io.File): Int =
-      d.listFiles().count(_.getName.endsWith(".parquet"))
-    val probedFiles = cellDirs
-      .filter(d => probed.contains(d.getName.stripPrefix("cell=").toInt))
-      .map(parquetFiles).sum
-    val allFiles = cellDirs.map(parquetFiles).sum
-    // the rows-store scan (the one with the precomputed cnorm column)
-    // must read exactly the probed cells' files — nothing else
-    val rowScan = out.queryExecution.executedPlan.collect {
-      case s: FileSourceScanExec if s.schema.fieldNames.contains("cnorm") => s
-    }
-    rowScan should have size 1
-    rowScan.head.metrics("numFiles").value shouldBe probedFiles
-    probedFiles should be < allFiles
-    // and the cell predicate lands as a PartitionFilter (directory
-    // pruning), not a post-scan filter
-    rowScan.head.toString should include regex "PartitionFilters: \\[.*cell.*\\]"
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
-  }
-
   test("trained-centroid IVF recall vs brute force beats the probe-fraction floor") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 5)
@@ -366,26 +280,102 @@ class SimilaritySpec extends SparkSpec {
       Similarity.twoStageKnn(emb, queries, kCandidates = 5, k = 10)
   }
 
-  test("searchIvfIndexQuantized with full probe equals knnQuantized row for row") {
-    // nprobe = nlist: every cell probed, so the composed index must
-    // reproduce the flat quantized scan EXACTLY (same integer scores,
-    // same ranks) — which also transfers q91's measured recall ≥ 0.7
-    // vs exact brute force to the composed index at full coverage.
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
-    val path = java.nio.file.Files.createTempDirectory("ivfsq8").toString + "/idx"
-    Similarity.writeIvfIndexQuantized(emb, path, centroids = Some(cents))
-    val queries = emb.filter(col("vec_id") < 5)
-    assertSameRows(
-      Similarity.searchIvfIndexQuantized(spark, path, queries, k = 10, nprobe = 8),
-      Similarity.knnQuantized(emb, queries, k = 10))
+  // One persisted IVF index, three code kinds: each case names the
+  // codes, the nprobe at which a search must reproduce the code's
+  // in-memory variant row for row, and that variant. Hyperplanes 0-7
+  // are the centroids (the q48/q111/q207 fixture layout).
+  private lazy val ivfEmb =
+    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+  private val ivfCents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
+  private lazy val ivfPqCodebook = Similarity.pqStaticCodebook(ivfEmb)
+  private case class IvfCase(name: String, codes: () => IvfCodes, nprobe: Int,
+                             inMemory: (DataFrame, DataFrame) => DataFrame)
+  private val ivfCases = Seq(
+    IvfCase("flat", () => IvfCodes.Flat, 3, (c, q) =>
+      Similarity.knnIvf(c, q, k = 10, nprobe = 3, centroids = Some(ivfCents))),
+    // full probe: the SQ8 and PQ in-memory variants are flat scans
+    IvfCase("sq8", () => IvfCodes.Sq8, 8, (c, q) =>
+      Similarity.knnQuantized(c, q, k = 10)),
+    IvfCase("pq", () => IvfCodes.Pq(codebook = Some(ivfPqCodebook)), 8, (c, q) =>
+      Similarity.knnPq(c, q, k = 10, codebook = Some(ivfPqCodebook))))
+
+  private def ivfIndex(corpus: DataFrame, c: IvfCase): String = {
+    val path = java.nio.file.Files.createTempDirectory(s"ivf-${c.name}")
+      .toString + "/idx"
+    Similarity.writeIvfIndex(corpus, path, c.codes(), centroids = Some(ivfCents))
+    path
+  }
+
+  private def parquetFilesPerCell(path: String): Map[Int, Int] =
+    new java.io.File(s"$path/rows").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+      .map(d => d.getName.stripPrefix("cell=").toInt ->
+        d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+
+  for (c <- ivfCases) {
+    test(s"IVF index (${c.name} codes): search equals the in-memory variant") {
+      val queries = ivfEmb.filter(col("vec_id") < 5)
+      assertSameRows(
+        Similarity.searchIvfIndex(spark, ivfIndex(ivfEmb, c), queries,
+          k = 10, nprobe = c.nprobe),
+        c.inMemory(ivfEmb, queries))
+    }
+
+    test(s"IVF index (${c.name} codes): search after append equals union build") {
+      // incremental: index the even half, append the odd half; the
+      // append reads the code kind (and PQ codebook) from the index
+      val inc = ivfIndex(ivfEmb.filter(col("vec_id") % 2 === 0), c)
+      Similarity.appendIvfIndex(spark, inc, ivfEmb.filter(col("vec_id") % 2 === 1))
+      val full = ivfIndex(ivfEmb, c)
+      val queries = ivfEmb.filter(col("vec_id") < 5)
+      assertSameRows(
+        Similarity.searchIvfIndex(spark, inc, queries, k = 10, nprobe = 3),
+        Similarity.searchIvfIndex(spark, full, queries, k = 10, nprobe = 3))
+      // history untouched: every cell dir holds files from BOTH writes
+      // (append added files, replaced none), so the file count grew
+      parquetFilesPerCell(inc).values.sum should be >
+        parquetFilesPerCell(full).values.sum
+    }
+
+    test(s"IVF index (${c.name} codes): search reads only probed cells' files") {
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      val path = ivfIndex(ivfEmb, c)
+      // one query, nprobe=2: the probe set is a strict subset of the 8
+      // cells, so pruning is observable at the file level. AQE is off:
+      // adaptive plans wrap executed stages in leaf nodes that hide the
+      // scan from collect(); the pruning itself is planning-time.
+      withSQLConf("spark.sql.adaptive.enabled" -> "false") {
+        val one = ivfEmb.filter(col("vec_id") === 0L)
+        val out = Similarity.searchIvfIndex(spark, path, one, k = 10, nprobe = 2)
+        out.collect() // execute so scan metrics are populated
+        // the probe set the search computed, recomputed via the public API
+        val probed = one.select(explode(Similarity.probedCells(col("embedding"),
+            Similarity.norm(col("embedding")), ivfCents, 2)).as("p"))
+          .select(col("p.cell")).distinct().as[Int].collect().toSet
+        probed.size should be <= 2
+        val files = parquetFilesPerCell(path)
+        files.size shouldBe 8
+        val probedFiles = files.filter(f => probed.contains(f._1)).values.sum
+        // the row-store scan (the one partitioned by cell) must read
+        // exactly the probed cells' files, and the cell predicate lands
+        // as a PartitionFilter (directory pruning), not a post-scan filter
+        val rowScan = out.queryExecution.executedPlan.collect {
+          case s: FileSourceScanExec
+            if s.relation.partitionSchema.fieldNames.contains("cell") => s
+        }
+        rowScan should have size 1
+        rowScan.head.metrics("numFiles").value shouldBe probedFiles
+        probedFiles should be < files.values.sum
+        rowScan.head.toString should include regex "PartitionFilters: \\[.*cell.*\\]"
+      }
+    }
   }
 
   test("quantized IVF recall at nprobe=3 beats the probe-fraction floor") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
     val path = java.nio.file.Files.createTempDirectory("ivfsq8").toString + "/idx"
-    Similarity.writeIvfIndexQuantized(emb, path, centroids = Some(cents))
+    Similarity.writeIvfIndex(emb, path, IvfCodes.Sq8, centroids = Some(cents))
     val queries = emb.filter(col("vec_id") < 5)
     // truth = the flat quantized baseline (full coverage, same scores):
     // what pruning alone costs. Hyperplane cells are data-blind, so the
@@ -393,61 +383,9 @@ class SimilaritySpec extends SparkSpec {
     val truth = Similarity.knnQuantized(emb, queries, k = 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val pruned = Similarity
-      .searchIvfIndexQuantized(spark, path, queries, k = 10, nprobe = 3)
+      .searchIvfIndex(spark, path, queries, k = 10, nprobe = 3)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     (truth intersect pruned).size.toDouble / truth.size should be >= 0.375
-  }
-
-  test("appendIvfIndexQuantized: search after append equals search over union") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
-    val inc = java.nio.file.Files.createTempDirectory("ivfsq8").toString + "/idx"
-    Similarity.writeIvfIndexQuantized(emb.filter(col("vec_id") % 2 === 0),
-      inc, centroids = Some(cents))
-    Similarity.appendIvfIndexQuantized(spark, inc,
-      emb.filter(col("vec_id") % 2 === 1))
-    val full = java.nio.file.Files.createTempDirectory("ivfsq8").toString + "/idx"
-    Similarity.writeIvfIndexQuantized(emb, full, centroids = Some(cents))
-    val queries = emb.filter(col("vec_id") < 5)
-    assertSameRows(
-      Similarity.searchIvfIndexQuantized(spark, inc, queries, k = 10, nprobe = 3),
-      Similarity.searchIvfIndexQuantized(spark, full, queries, k = 10, nprobe = 3))
-  }
-
-  test("searchIvfIndexQuantized scans only the probed cells' partition files") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
-    val path = java.nio.file.Files.createTempDirectory("ivfsq8").toString + "/idx"
-    Similarity.writeIvfIndexQuantized(emb, path, centroids = Some(cents))
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val one = emb.filter(col("vec_id") === 0L)
-      val out = Similarity.searchIvfIndexQuantized(spark, path, one, k = 10, nprobe = 2)
-      out.collect()
-      val probed = one.select(explode(Similarity.probedCells(col("embedding"),
-          Similarity.norm(col("embedding")), cents, 2)).as("p"))
-        .select(col("p.cell")).distinct().as[Int].collect().toSet
-      probed.size should be <= 2
-      val cellDirs = new java.io.File(s"$path/rows").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cell=")).toSeq
-      cellDirs.length shouldBe 8
-      def parquetFiles(d: java.io.File): Int =
-        d.listFiles().count(_.getName.endsWith(".parquet"))
-      val probedFiles = cellDirs
-        .filter(d => probed.contains(d.getName.stripPrefix("cell=").toInt))
-        .map(parquetFiles).sum
-      val allFiles = cellDirs.map(parquetFiles).sum
-      // the codes-store scan must read exactly the probed cells' files
-      val rowScan = out.queryExecution.executedPlan.collect {
-        case s: FileSourceScanExec if s.schema.fieldNames.contains("codes") => s
-      }
-      rowScan should have size 1
-      rowScan.head.metrics("numFiles").value shouldBe probedFiles
-      probedFiles should be < allFiles
-      rowScan.head.toString should include regex "PartitionFilters: \\[.*cell.*\\]"
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("twoStageKnnIvf with full probe and full candidates equals knnBruteForce") {
@@ -459,7 +397,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
     val path = java.nio.file.Files.createTempDirectory("ivf2s").toString + "/idx"
-    Similarity.writeIvfIndexQuantized(emb, path, centroids = Some(cents))
+    Similarity.writeIvfIndex(emb, path, IvfCodes.Sq8, centroids = Some(cents))
     val queries = emb.filter(col("vec_id") < 5)
     val nCorpus = emb.count().toInt
     assertSameRows(
@@ -476,7 +414,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
     val path = java.nio.file.Files.createTempDirectory("ivf2s").toString + "/idx"
-    Similarity.writeIvfIndexQuantized(emb, path, centroids = Some(cents))
+    Similarity.writeIvfIndex(emb, path, IvfCodes.Sq8, centroids = Some(cents))
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -669,35 +607,6 @@ class SimilaritySpec extends SparkSpec {
         Seq(32, 8), k = 4),
       Similarity.truncationRecallCurve(emb.repartition(7),
         emb.filter(col("vec_id") < 3), Seq(32, 8), k = 4))
-  }
-
-  test("searchIvfIndexPq at full probe equals knnPq; append maintains the index") {
-    val d = pqFixture
-    val queries = d.filter(col("vec_id") < 2)
-    val cents = Array.tabulate(4)(p => Similarity.hyperplane(p, 16))
-    val cb = Similarity.pqStaticCodebook(d, m = 2, ksub = 4)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq").toString + "/idx"
-    Similarity.writeIvfIndexPq(d, path, nlist = 4, m = 2, ksub = 4,
-      centroids = Some(cents), codebook = Some(cb))
-    // nprobe = nlist: no pruning -> must equal the plain PQ-ADC scan
-    assertSameRows(
-      Similarity.searchIvfIndexPq(spark, path, queries, k = 4, nprobe = 4),
-      Similarity.knnPq(d, queries, k = 4, m = 2, ksub = 4,
-        codebook = Some(cb)))
-    // append under the frozen centroids/codebook: search-after-append
-    // equals a fresh index over the union (history never rewritten)
-    val batch = vecs((100L until 104L).map(i =>
-      i -> (0 until 16).map(p =>
-        (((i * 5 + p * 7 + i * p) % 11).toFloat - 5.0f))): _*)
-    Similarity.appendIvfIndexPq(spark, path, batch)
-    val path2 = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq2").toString + "/idx"
-    Similarity.writeIvfIndexPq(d.unionByName(batch), path2, nlist = 4,
-      m = 2, ksub = 4, centroids = Some(cents), codebook = Some(cb))
-    assertSameRows(
-      Similarity.searchIvfIndexPq(spark, path, queries, k = 4, nprobe = 2),
-      Similarity.searchIvfIndexPq(spark, path2, queries, k = 4, nprobe = 2))
   }
 
   test("dimensionAudit: dead, healthy, and signed dimensions by hand") {

@@ -30,6 +30,25 @@ class VersionedSpec extends SparkSpec {
     Versioned.currentVersion(spark, t) shouldBe 1
   }
 
+  test("readVersion without a commit token or its data schema fails naming table and version") {
+    val t = freshTable()
+    Versioned.commit(spark, t, d1, "part", Nil) shouldBe 1
+    val manifest = java.nio.file.Paths.get(s"$t/_manifests/v1.json")
+    val published = Versioned.parseManifest(
+      new String(Files.readAllBytes(manifest), "UTF-8"))
+    val dv = published(Versioned.CommitDvKey)
+    // the token's schema file is gone
+    Files.delete(java.nio.file.Paths.get(s"$t/_manifests/schema_dv$dv.json"))
+    the[IllegalStateException] thrownBy Versioned.readVersion(spark, t, 1) should
+      have message s"$t version 1 has no data schema: " +
+        s"$t/_manifests/schema_dv$dv.json is missing"
+    // the manifest carries no commit token at all
+    Files.write(manifest, Versioned.renderManifest(published - Versioned.CommitDvKey)
+      .getBytes("UTF-8"))
+    the[IllegalStateException] thrownBy Versioned.readVersion(spark, t, 1) should
+      have message s"$t version 1 has no data schema: its manifest lacks __commit_dv"
+  }
+
   test("a MERGE commit rewrites only touched partitions; old versions stay intact") {
     val t = freshTable()
     Versioned.commit(spark, t, d1, "part", Nil)

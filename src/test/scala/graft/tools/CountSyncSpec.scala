@@ -172,9 +172,7 @@ class CountSyncSpec extends AnyFunSuite with Matchers {
     // of a SELF-referential CTE; every other union writes UNION ALL
     // + an outer SELECT DISTINCT.
     val lines = read("src/main/scala/graft/OracleSql.scala").split("\n")
-    val cteDef = """^,?\s*([A-Za-z_][A-Za-z0-9_]*)(\([^)]*\))? AS \(""".r
-    def defAt(l: String): Option[String] =
-      cteDef.findFirstMatchIn(l).map(_.group(1))
+    import CountSyncSpec.cteDefName
     val bad = for {
       i <- lines.indices
       l = lines(i)
@@ -182,14 +180,14 @@ class CountSyncSpec extends AnyFunSuite with Matchers {
       if !l.contains("UNION ALL")
       pre = l.split("UNION", 2)(0)
       if !pre.trim.startsWith("*") && !pre.contains("--") // comments
-      defIdx = (i to 0 by -1).find(j => defAt(lines(j)).isDefined)
-      name = defIdx.flatMap(j => defAt(lines(j)))
+      defIdx = (i to 0 by -1).find(j => cteDefName(lines(j)).isDefined)
+      name = defIdx.flatMap(j => cteDefName(lines(j)))
       selfRef = (defIdx, name) match {
         case (Some(j), Some(n)) =>
           // self-referential iff the CTE's own name occurs again
           // anywhere between its definition and the next CTE def
           val end = ((j + 1) until lines.length)
-            .find(k => defAt(lines(k)).isDefined).getOrElse(lines.length)
+            .find(k => cteDefName(lines(k)).isDefined).getOrElse(lines.length)
           val span = lines.slice(j, end).mkString("\n")
           ("""\b""" + n + """\b""").r.findAllIn(span).length >= 2
         case _ => false
@@ -201,4 +199,46 @@ class CountSyncSpec extends AnyFunSuite with Matchers {
       bad shouldBe empty
     }
   }
+
+  test("cteDefName finds a CTE definition at line start or on its val/def line") {
+    import CountSyncSpec.cteDefName
+    cteDefName("hp(m) AS (SELECT 1),") shouldBe Some("hp")
+    cteDefName(", ranked AS (") shouldBe Some("ranked")
+    cteDefName("  private val connCte = \"\"\"conn(a, b) AS (") shouldBe Some("conn")
+    cteDefName("  private val dailyCloseCte: String = \"\"\"daily AS (") shouldBe Some("daily")
+    cteDefName("  private def sessionStarts(order: String): String = s\"\"\"m AS (") shouldBe
+      Some("m")
+    cteDefName("    val priorSelect = s\"\"\"SELECT 'prior' AS component,") shouldBe None
+    cteDefName("  private val hpMatrix = \"hp\"") shouldBe None
+    cteDefName("SELECT a, b FROM conn UNION SELECT a, c FROM conn") shouldBe None
+    cteDefName("    * ranked AS ( in a comment") shouldBe None
+  }
+
+  test("no src/main file names the checkout's absolute path") {
+    // fixture and scratch dirs resolve against the working directory;
+    // a literal checkout path sends a second checkout's writes into
+    // the first one
+    val root = java.nio.file.Paths.get("").toAbsolutePath.toString
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          .contains(root))
+        .map(_.toString).toSeq
+    } finally walk.close()
+    withClue(s"src/main files containing '$root': ") { offenders shouldBe empty }
+  }
+}
+
+object CountSyncSpec {
+  private val cteDef = ("""^(?:\s*(?:private\s+)?(?:val|def)\s+\w+[^=]*=\s*s?"{3})?""" +
+    """,?\s*([A-Za-z_][A-Za-z0-9_]*)(\([^)]*\))? AS \(""").r
+
+  /** The CTE an `OracleSql` source line defines, if any: `name AS (` or
+    * `name(cols) AS (` at the start of the line (after an optional
+    * comma), or right after the `"""` that opens a `val`/`def` string
+    * literal on that line. */
+  def cteDefName(line: String): Option[String] =
+    cteDef.findFirstMatchIn(line).map(_.group(1))
 }
