@@ -4,8 +4,10 @@
 Each dir holds one <query>.txt per registry query (the formatted
 physical plan). Before comparing, every plan is normalized so that two
 runs of the same plan compare equal:
-  - expression ids (`#123`, `#123L`) and plan ids (`plan_id=7`,
-    `id=#7`) lose their numbers;
+  - expression ids (`#123`, `#123L`), plan ids (`plan_id=7`,
+    `id=#7`) and RDD ids (`MapPartitionsRDD[4002]`, a session-wide
+    counter that moves whenever an earlier query or round runs a
+    different number of stages) lose their numbers;
   - formatted-plan node ids (`(12)`) and codegen stage ids (`*(3)`,
     `[codegen id : 3]`) lose their numbers;
   - lambda class names, object hashes and `.scala:N` line numbers are
@@ -28,6 +30,7 @@ RULES = [
     (re.compile(r"(?<![\w:])/\S*?/target/"), "<checkout>/target/"),
     (re.compile(r"#\d+L?"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"\*\(\d+\)"), "*()"),
     (re.compile(r"\[codegen id : \d+\]"), "[codegen id]"),
     (re.compile(r"\(\d+\)"), "()"),

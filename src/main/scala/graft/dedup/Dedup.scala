@@ -305,8 +305,7 @@ object Dedup {
     * self-join's, so the exchange is reused. */
   def minhashPairs(docs: DataFrame, threshold: Double = 0.5,
                    idCol: String = "doc_id", textCol: String = "text",
-                   n: Int = 3, materialize: Boolean = true,
-                   maxBucket: Long = 1000): DataFrame = {
+                   n: Int = 3, maxBucket: Long = 1000): DataFrame = {
     require(maxBucket >= 2, "maxBucket < 2 cannot pair anything")
     // Both self-join sides consume the banded signatures; without
     // materialization the corpus is tokenized, shingled, and
@@ -315,10 +314,9 @@ object Dedup {
     // (the same economics that make the PERSISTED index pay,
     // writeSignatureIndex below). On the 500-doc harness corpus the
     // checkpoint write is a ~10% wash (pairwiseCorr's documented
-    // trade); the knob exists for tests, the default serves the
-    // design point.
-    val bandsRaw = bandedSignatures(minhashSignatures(docs, idCol, textCol, n))
-    val bands = if (materialize) bandsRaw.localCheckpoint() else bandsRaw
+    // trade); at corpus scale the saved re-read dominates.
+    val bands = bandedSignatures(minhashSignatures(docs, idCol, textCol, n))
+      .localCheckpoint()
     val wCnt = Window.partitionBy(col("band"), col("key"))
     val wOrd = Window.partitionBy(col("band"), col("key"))
       .orderBy(col("doc_id"))
@@ -465,19 +463,18 @@ object Dedup {
     * and mirrored in the oracle. */
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.8,
                    maxDocFreq: Long = 100, idCol: String = "doc_id",
-                   textCol: String = "text", n: Int = 3,
-                   materialize: Boolean = true): DataFrame = {
+                   textCol: String = "text", n: Int = 3): DataFrame = {
     // Distinct (doc, shingle) postings via one shuffle; per-doc set
     // sizes are a 1-row-per-doc side table, broadcast back onto the
     // pair aggregate instead of riding through the self-join.
     // The posting frame feeds FOUR consumers (sizes, the df cap, both
     // self-join sides) and Spark cannot share a subplan across them —
     // unmaterialized, the corpus is tokenized/shingled/distinct'd four
-    // times. localCheckpoint (default on) pays one posting-sized write
-    // instead; postings are hashes, never text, so the write is the
-    // cheap side of that trade at any corpus size.
-    val postingRaw = explodedShingleHashes(docs, idCol, textCol, n).distinct()
-    val posting = if (materialize) postingRaw.localCheckpoint() else postingRaw
+    // times. localCheckpoint pays one posting-sized write instead;
+    // postings are hashes, never text, so the write is the cheap side
+    // of that trade at any corpus size.
+    val posting = explodedShingleHashes(docs, idCol, textCol, n).distinct()
+      .localCheckpoint()
     val sizes = posting.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val rare = posting.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq)
@@ -575,10 +572,9 @@ object Dedup {
     * containment_permille ≥ minPermille). */
   def containmentPairs(docs: DataFrame, minPermille: Long = 600,
                        maxDocFreq: Long = 100, idCol: String = "doc_id",
-                       textCol: String = "text", n: Int = 3,
-                       materialize: Boolean = true): DataFrame = {
-    val postingRaw = explodedShingleHashes(docs, idCol, textCol, n).distinct()
-    val posting = if (materialize) postingRaw.localCheckpoint() else postingRaw
+                       textCol: String = "text", n: Int = 3): DataFrame = {
+    val posting = explodedShingleHashes(docs, idCol, textCol, n).distinct()
+      .localCheckpoint()
     val sizes = posting.groupBy(col("doc_id")).agg(count(lit(1)).as("n_contained"))
     val rare = posting.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq)
@@ -1045,20 +1041,18 @@ object Dedup {
     * Returns (doc_a < doc_b, n_common, cos2_ppm ≥ minCos2Ppm). */
   def tfidfCosinePairs(docs: DataFrame, minCos2Ppm: Long = 250000L,
                        maxDocFreq: Long = 100, idCol: String = "doc_id",
-                       textCol: String = "text",
-                       materialize: Boolean = true): DataFrame = {
+                       textCol: String = "text"): DataFrame = {
     val tfRaw = TextAnalysis.withTokens(docs, textCol)
       .select(col(idCol).as("doc_id"), explode(col("tokens")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
     val n = docs.agg(countDistinct(col(idCol)).as("__n_docs"))
     val dfreq = tfRaw.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val weightedRaw = tfRaw.join(dfreq, "term")
+    val weighted = tfRaw.join(dfreq, "term")
       .crossJoin(broadcast(n))
       .withColumn("w", col("tf") * expr("(100 * __n_docs) DIV df"))
       .select(col("doc_id"), col("term"), col("w"), col("df"))
-    val weighted =
-      if (materialize) weightedRaw.localCheckpoint() else weightedRaw
+      .localCheckpoint()
     val sq = (c: Column) => (c.cast("decimal(19,0)") * c).as("w2")
     val norms = weighted.groupBy(col("doc_id"))
       .agg(sum(sq(col("w"))).cast("decimal(38,0)").as("norm2"))
@@ -1252,11 +1246,11 @@ object Dedup {
     * q19 but exact at the threshold. */
   def prefixFilterPairs(docs: DataFrame, tauPermille: Long = 800,
                         idCol: String = "doc_id", textCol: String = "text",
-                        n: Int = 3, materialize: Boolean = true): DataFrame = {
+                        n: Int = 3): DataFrame = {
     require(tauPermille > 0 && tauPermille <= 1000,
       s"tauPermille must be in (0, 1000], got $tauPermille")
-    val postingRaw = explodedShingleHashes(docs, idCol, textCol, n).distinct()
-    val posting = if (materialize) postingRaw.localCheckpoint() else postingRaw
+    val posting = explodedShingleHashes(docs, idCol, textCol, n).distinct()
+      .localCheckpoint()
     val dfs = posting.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
     val ranked = posting.join(dfs, "shingle")

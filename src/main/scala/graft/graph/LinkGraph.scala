@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,12 +32,26 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each iteration is (ranks ⋈ outdeg on node) ⋈ edges on
   * src → groupBy dst SUM — two hash joins and one partial-agg shuffle,
-  * all keyed on the node id, linear in |edges|. Nothing is collected;
-  * the iteration count is a small constant. Plans compose lazily and
-  * depth grows linearly with `iterations`; for dozens of iterations
-  * pass `materialize` (e.g. `_.localCheckpoint()`) to cut lineage —
-  * at the default 3–10 the pure plan is better because Catalyst sees
-  * the whole pipeline.
+  * all keyed on the node id, linear in |edges| (the one `propagate`
+  * step shared by [[pagerank]], [[trustRank]], [[pagerankWeighted]]
+  * and [[stationary]]). Nothing is collected.
+  *
+  * Inputs reach every operator in one of three normal forms — directed
+  * simple edges (`simpleEdges`), their symmetric closure
+  * (`symmetricEdges`) or canonical undirected a < b pairs
+  * (`canonicalEdges`) — plus the node universe (`nodesOf`).
+  *
+  * Horizons are fixed per call, never polled: `iterations` for
+  * [[pagerank]], [[trustRank]], [[pagerankWeighted]], [[stationary]]
+  * (default 3), [[hits]] (2) and [[labelPropagation]] (4); `rounds`
+  * for [[kCore]] (3); `maxHops` for [[seedReach]] (3); `maxDepth` for
+  * [[harmonicCentrality]] (4); `depth` for [[katzCentrality]] (8);
+  * `hops` for [[propagateFeatures]] (2). The lazy ones compose one
+  * pure plan whose depth grows linearly with the horizon, which is
+  * right at these horizons because Catalyst sees the whole pipeline.
+  * The operators that run to a fixpoint instead ([[stressCentrality]],
+  * [[eccentricity]], [[seedDistances]], [[kTruss]],
+  * [[stronglyConnected]]) take a cap and throw when it binds.
   */
 object LinkGraph {
 
@@ -48,12 +62,67 @@ object LinkGraph {
     * for larger node universes — the parameter exists for that). */
   val DefaultUnit: Long = 1000000000000L
 
+  // Damping d = 85/100, rational so the damped step stays in integers.
+  private val DampNum = 85L
+  private val DampDen = 100L
+
+  /** Teleport mass floor(unit · (1 − d)), in one integer step. */
+  private def teleportBase(unit: Long): Long = (unit * (DampDen - DampNum)) / DampDen
+
+  /** floor(d · in_mass) over `propagate`'s output (0 when none arrived). */
+  private def dampedInMass: Column =
+    expr(s"($DampNum * coalesce(in_mass, 0L)) div $DampDen")
+
+  /** Directed simple edges (src, dst): self-loops dropped, multi-edges
+    * collapsed. */
+  private def simpleEdges(edges: DataFrame, src: Column, dst: Column): DataFrame =
+    edges.select(src.as("src"), dst.as("dst"))
+      .where(col("src") =!= col("dst"))
+      .distinct()
+
+  /** Symmetric closure: both orientations of every non-loop edge,
+    * once each, as columns `names` (src, dst unless a caller's plan
+    * names them otherwise). */
+  private def symmetricEdges(edges: DataFrame, src: Column, dst: Column,
+                             names: (String, String) = ("src", "dst")): DataFrame = {
+    val (s, d) = names
+    val dir = edges.select(src.as(s), dst.as(d)).where(col(s) =!= col(d))
+    dir.union(dir.select(col(d).as(s), col(s).as(d))).distinct()
+  }
+
+  /** Canonical undirected edges (a < b): direction, self-loops and
+    * multiplicity dropped. */
+  private def canonicalEdges(edges: DataFrame, src: Column, dst: Column): DataFrame =
+    edges.select(src.as("a"), dst.as("b"))
+      .where(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b"))
+      .distinct()
+
+  /** Node universe of a (src, dst) edge frame: every endpoint, once. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node")))
+      .distinct()
+
+  /** One exact mass-propagation step: each node of `mass` joined to
+    * its row of `out` (out-degree or out-weight; nodes without one
+    * send nothing) splits its mass over its out-edges in `e` by
+    * `split` (a floor division, so the remainder leaks), and every
+    * target sums what it receives. Returns (node, in_mass); a node
+    * that receives nothing has no row. */
+  private def propagate(e: DataFrame, mass: DataFrame, out: DataFrame,
+                        split: Column): DataFrame =
+    e.join(mass.join(out, "node").withColumnRenamed("node", "src"), "src")
+      .select(col("dst"), split.as("contrib"))
+      .groupBy(col("dst").as("node"))
+      .agg(sum(col("contrib")).as("in_mass"))
+
   /** Exact fixed-point PageRank. `edges` is any DataFrame with string
     * (or other equatable) `src`/`dst` columns; multi-edges are
     * deduplicated and self-loops dropped (a self-loop is a rank
     * no-op that only distorts the out-degree split). Damping is the
-    * rational `dampNum/dampDen` (default 85/100) so the damped step
-    * stays in integers.
+    * fixed rational 85/100, so the damped step stays in integers.
     *
     * Returns one row per node: (node, out_degree, rank_units) where
     * rank_units is the rank after `iterations` steps from a uniform
@@ -61,27 +130,14 @@ object LinkGraph {
     */
   def pagerank(edges: DataFrame, src: String, dst: String,
                iterations: Int = 3,
-               unit: Long = DefaultUnit,
-               dampNum: Long = 85, dampDen: Long = 100,
-               materialize: DataFrame => DataFrame = identity): DataFrame = {
+               unit: Long = DefaultUnit): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, "damping must be in (0,1)")
-
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-
-    // Node universe: anything that appears on either side. The rank
-    // vector lives on this frame; every join below is keyed on `node`.
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-
+    val e = simpleEdges(edges, col(src), col(dst))
+    // The rank vector lives on the node universe; every join below is
+    // keyed on `node`.
+    val nodes = nodesOf(e)
     val outdeg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("out_degree"))
-
-    // Base (teleport) mass: floor(unit * (1 - d)) in one integer step.
-    val base = (unit * (dampDen - dampNum)) / dampDen
 
     var ranks = nodes.withColumn("rank_units", lit(unit))
     for (_ <- 1 to iterations) {
@@ -91,17 +147,10 @@ object LinkGraph {
       // contribute nothing.
       // Integer `div`, not double division + cast: a double round-trip
       // is only exact below 2^53, which a billion-node mass sum clears.
-      val contribs = e
-        .join(ranks.join(outdeg, "node").withColumnRenamed("node", "src"), "src")
-        .select(col("dst"),
-          expr("rank_units div out_degree").as("contrib"))
-      val inMass = contribs.groupBy(col("dst").as("node"))
-        .agg(sum(col("contrib")).as("in_mass"))
-      ranks = materialize(
-        nodes.join(inMass, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) + expr(s"($dampNum * coalesce(in_mass, 0L)) div $dampDen"))
-              .as("rank_units")))
+      val inMass = propagate(e, ranks, outdeg, expr("rank_units div out_degree"))
+      ranks = nodes.join(inMass, Seq("node"), "left")
+        .select(col("node"),
+          (lit(teleportBase(unit)) + dampedInMass).as("rank_units"))
     }
 
     nodes.join(outdeg, Seq("node"), "left")
@@ -130,18 +179,10 @@ object LinkGraph {
                 src: String = "src", dst: String = "dst",
                 seedCol: String = "node",
                 iterations: Int = 3,
-                unit: Long = DefaultUnit,
-                dampNum: Long = 85, dampDen: Long = 100,
-                materialize: DataFrame => DataFrame = identity): DataFrame = {
+                unit: Long = DefaultUnit): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, "damping must be in (0,1)")
-
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
+    val e = simpleEdges(edges, col(src), col(dst))
+    val nodes = nodesOf(e)
     val outdeg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("out_degree"))
     val flagged = nodes
@@ -149,22 +190,14 @@ object LinkGraph {
         Seq("node"), "left")
       .withColumn("is_seed", coalesce(col("is_seed"), lit(false)))
 
-    val base = (unit * (dampDen - dampNum)) / dampDen
     var ranks = flagged.select(col("node"),
       when(col("is_seed"), lit(unit)).otherwise(lit(0L)).as("rank_units"))
     for (_ <- 1 to iterations) {
-      val contribs = e
-        .join(ranks.join(outdeg, "node").withColumnRenamed("node", "src"), "src")
-        .select(col("dst"),
-          expr("rank_units div out_degree").as("contrib"))
-      val inMass = contribs.groupBy(col("dst").as("node"))
-        .agg(sum(col("contrib")).as("in_mass"))
-      ranks = materialize(
-        flagged.join(inMass, Seq("node"), "left")
-          .select(col("node"),
-            (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-              expr(s"($dampNum * coalesce(in_mass, 0L)) div $dampDen"))
-              .as("rank_units")))
+      val inMass = propagate(e, ranks, outdeg, expr("rank_units div out_degree"))
+      ranks = flagged.join(inMass, Seq("node"), "left")
+        .select(col("node"),
+          (when(col("is_seed"), lit(teleportBase(unit))).otherwise(lit(0L)) +
+            dampedInMass).as("rank_units"))
     }
 
     flagged.join(outdeg, Seq("node"), "left")
@@ -178,7 +211,7 @@ object LinkGraph {
     * published host-level rank alongside PageRank): H(v) = Σ 1/d(u,v)
     * over nodes u with a directed path to v, here EXACT within a
     * bounded radius — contributions are integer micro-units
-    * floor(`scale`/d) summed in BIGINT, so like [[pagerank]] the
+    * floor(10⁶/d) summed in BIGINT, so like [[pagerank]] the
     * result is bit-identical under any partitioning and any engine
     * (1/d as a double would sum in partition order). Unreachable and
     * beyond-radius pairs contribute zero, which is the standard
@@ -190,7 +223,7 @@ object LinkGraph {
     * against every shallower pair so each pair contributes at its
     * SHORTEST distance only (BFS level = min distance, the invariant
     * the spec pins); per depth the new pairs collapse immediately
-    * into a per-node count · floor(scale/d) partial sum — the pair
+    * into a per-node count · floor(10⁶/d) partial sum — the pair
     * set is never materialized beyond the frontier itself.
     *
     * Scale shape: each depth is one hash join + one anti-join + one
@@ -211,29 +244,21 @@ object LinkGraph {
     * depth — `visited` feeds both the anti-join and the next union —
     * so an unmaterialized plan doubles in size every level (measured:
     * ~9 s at radius 4 on a 29-node graph, pure plan-compile cost).
-    * `materialize` therefore defaults to `localCheckpoint()`: each
-    * frontier/visited is computed once and the lineage cut, the same
-    * frontier-checkpoint discipline every iterative graph engine uses
-    * (pass `identity` only for plan-inspection tests). Round 14: the
-    * default is [[graft.core.Iterate.barrier]] — lineage cutting
-    * alone leaves the stats-estimate feedback compounding (see
-    * Iterate's scaladoc).
+    * So every frontier/visited frame goes through
+    * [[graft.core.Iterate.barrier]]: computed once, lineage cut, and
+    * the stats-estimate feedback reset (lineage cutting alone leaves
+    * it compounding; see Iterate's scaladoc) — the
+    * frontier-checkpoint discipline every iterative graph engine uses.
+    * Eager: runs Spark jobs when called, two per depth past 1.
     *
     * Returns (node, reached, harmonic_units): in-ball size and the
     * micro-unit harmonic sum after radius `maxDepth`. */
   def harmonicCentrality(edges: DataFrame, src: String, dst: String,
-                         maxDepth: Int = 4,
-                         scale: Long = 1000000L,
-                         materialize: DataFrame => DataFrame =
-                           graft.core.Iterate.barrier)
-      : DataFrame = {
+                         maxDepth: Int = 4): DataFrame = {
     require(maxDepth >= 1, "maxDepth must be >= 1")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
+    val scale = 1000000L
+    val e = simpleEdges(edges, col(src), col(dst))
+    val nodes = nodesOf(e)
 
     // (node, from) = "a shortest path from `from` reaches `node`";
     // depth 1 is the reversed edge list itself.
@@ -251,9 +276,9 @@ object LinkGraph {
         .select(col("node"), col("src").as("from"))
         .where(col("from") =!= col("node"))
         .distinct()
-      frontier = materialize(
+      frontier = graft.core.Iterate.barrier(
         extended.join(visited, Seq("node", "from"), "left_anti"))
-      visited = materialize(visited.union(frontier))
+      visited = graft.core.Iterate.barrier(visited.union(frontier))
       scores = scores.union(
         frontier.groupBy("node")
           .agg((count(lit(1)) * lit(scale / d)).as("partial")))
@@ -301,17 +326,14 @@ object LinkGraph {
     * (src, node). Directed semantics (paths follow edge direction);
     * `maxDepth` caps both phases and THROWS if the diameter exceeds
     * it (a silent cap would undercount brokerage silently).
-    * Every round materializes via [[graft.core.Iterate.barrier]]. */
+    * Every round materializes via [[graft.core.Iterate.barrier]].
+    * Eager: runs Spark jobs when called, both phases included. */
   def stressCentrality(edges: DataFrame, src: String, dst: String,
                        sources: DataFrame = null,
                        maxDepth: Int = 12): DataFrame = {
     require(maxDepth >= 1, "maxDepth must be >= 1")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+    val e = simpleEdges(edges, col(src), col(dst)).localCheckpoint()
+    val nodes = nodesOf(e).localCheckpoint()
     val srcSet =
       (if (sources == null) nodes.select(col("node").as("s"))
        else sources.select(col(sources.columns.head).as("s")).distinct())
@@ -449,17 +471,16 @@ object LinkGraph {
     * action — refuse loudly, never wrap (the mannKendall contract).
     * Directed; walks may revisit nodes (that IS Katz — use
     * [[stressCentrality]]/[[harmonicCentrality]] for path
-    * semantics). */
+    * semantics). Eager: runs Spark jobs when called, one per barrier
+    * plus the guard. */
   def katzCentrality(edges: DataFrame, src: String, dst: String,
                      betaBits: Int = 1, depth: Int = 8): DataFrame = {
     require(betaBits >= 1, "betaBits must be >= 1 (beta < 1 or the sum diverges)")
     require(depth >= 1 && depth * betaBits <= 60,
       "depth*betaBits must stay <= 60 (the 2^(betaBits*depth) unit " +
         "must fit a BIGINT)")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    val e = simpleEdges(edges, col(src), col(dst)).localCheckpoint()
+    val nodes = nodesOf(e).localCheckpoint()
     val two = math.pow(2, betaBits).toLong
     var w = graft.core.Iterate.barrier(
       nodes.select(col("node"), lit(1L).cast("decimal(38,0)").as("w")))
@@ -508,14 +529,13 @@ object LinkGraph {
     * aggregate per round behind `Iterate.barrierCounted`; `maxDepth`
     * THROWS only when pairs exist past the cap — diameter == maxDepth
     * succeeds via an emptiness-probe round (a silently capped
-    * eccentricity is a wrong answer, not an approximation). */
+    * eccentricity is a wrong answer, not an approximation). Eager:
+    * runs Spark jobs when called, the whole BFS included. */
   def eccentricity(edges: DataFrame, src: String, dst: String,
                    maxDepth: Int = 12): DataFrame = {
     require(maxDepth >= 1, "maxDepth must be >= 1")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    val e = simpleEdges(edges, col(src), col(dst)).localCheckpoint()
+    val nodes = nodesOf(e).localCheckpoint()
     val seed = graft.core.Iterate.barrier(
       nodes.select(col("node").as("s"), col("node"), lit(0L).as("dist")))
     // maxDepth + 1 cap = one emptiness-probe round past the cap, so a
@@ -577,8 +597,9 @@ object LinkGraph {
     * maxRaw·n·unit < 2^63 where maxRaw ≤ maxDegree·n·unit — at the
     * default unit 1e6 that holds to ~10^5 nodes · degree 100; pass a
     * smaller `unit` for bigger universes (the pagerank parameter
-    * precedent). Iterations compose lazily; pass `materialize` to cut
-    * lineage on deep runs (the [[pagerank]] hook).
+    * precedent). Eager: runs Spark jobs when called (it checkpoints
+    * the edge list and the node universe); the iterations themselves
+    * compose lazily.
     *
     * Returns one row per node:
     * (node, out_degree, in_degree, hub_units, auth_units) after
@@ -587,8 +608,7 @@ object LinkGraph {
     * keep hub 0.
     */
   def hits(edges: DataFrame, src: String, dst: String,
-           iterations: Int = 2, unit: Long = 1000000L,
-           materialize: DataFrame => DataFrame = identity): DataFrame = {
+           iterations: Int = 2, unit: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     // r19 opt: checkpoint the deduplicated edge list and the node
     // universe ONCE — every half-iteration references both (matvec
@@ -598,12 +618,8 @@ object LinkGraph {
     // 15k formatted lines with the driver spending 3.5 of its 4.4 s
     // in Catalyst, not in jobs (guide §1.3/§5: plan growth is driver
     // memory/time). Two tiny eager jobs bound the whole tree.
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+    val e = simpleEdges(edges, col(src), col(dst)).localCheckpoint()
+    val nodes = nodesOf(e).localCheckpoint()
 
     // L1 renormalization to total mass n·unit, exact: one 1-row
     // aggregate broadcast back to every row. Σv > 0 whenever the
@@ -633,12 +649,12 @@ object LinkGraph {
     var hubs = nodes.withColumn("hub_units", lit(unit))
     var auths = nodes.withColumn("auth_units", lit(0L))
     for (_ <- 1 to iterations) {
-      auths = materialize(rescale(
+      auths = rescale(
         matvec(hubs.withColumnRenamed("hub_units", "auth_units"),
-          "src", "dst", "auth_units"), "auth_units"))
-      hubs = materialize(rescale(
+          "src", "dst", "auth_units"), "auth_units")
+      hubs = rescale(
         matvec(auths.withColumnRenamed("auth_units", "hub_units"),
-          "dst", "src", "hub_units"), "hub_units"))
+          "dst", "src", "hub_units"), "hub_units")
     }
 
     val outd = e.groupBy(col("src").as("node"))
@@ -670,12 +686,8 @@ object LinkGraph {
     * unique after dedup). All keys are node ids / id pairs; nothing
     * is collected. */
   def graphAudit(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
+    val e = simpleEdges(edges, col(src), col(dst))
+    val nodes = nodesOf(e)
     val outd = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("out_degree"))
     val ind = e.groupBy(col("dst").as("node"))
@@ -719,30 +731,23 @@ object LinkGraph {
     * (node, label) partial-agg shuffle + one per-node window whose
     * frame is the node's DISTINCT neighbor labels (bounded by
     * degree); community sizes are one more keyed agg. Nothing is
-    * collected; `materialize` is the lineage-cut hook for deep runs,
-    * exactly as in [[pagerank]]. */
+    * collected. */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
-                       iterations: Int = 4,
-                       materialize: DataFrame => DataFrame = identity): DataFrame = {
+                       iterations: Int = 4): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val dir = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-    val und = dir
-      .union(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val und = symmetricEdges(edges, col(src), col(dst))
     // undirected: every node appears on the src side
     val nodes = und.select(col("src").as("node")).distinct()
     var labels = nodes.withColumn("label", col("node"))
     for (_ <- 1 to iterations) {
       val byVotes = Window.partitionBy(col("node"))
         .orderBy(col("__c").desc, col("label"))
-      labels = materialize(
-        und.join(labels.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node"), col("label"))
-          .agg(count(lit(1)).as("__c"))
-          .withColumn("__rn", row_number().over(byVotes))
-          .filter(col("__rn") === 1)
-          .select(col("node"), col("label")))
+      labels = und.join(labels.withColumnRenamed("node", "src"), "src")
+        .groupBy(col("dst").as("node"), col("label"))
+        .agg(count(lit(1)).as("__c"))
+        .withColumn("__rn", row_number().over(byVotes))
+        .filter(col("__rn") === 1)
+        .select(col("node"), col("label"))
     }
     val sizes = labels.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("community_size"))
@@ -763,18 +768,13 @@ object LinkGraph {
     * Shape: per hop ONE frontier⋈edges hash join + a distinct union
     * (node-keyed); the reachable set is carried as a frame, nothing
     * collected; hop count is the bounded driver loop (the pagerank
-    * iteration pattern). `materialize` is the lineage-cut hook. */
+    * iteration pattern). */
   def seedReach(edges: DataFrame, seeds: DataFrame,
                 src: String = "src", dst: String = "dst",
-                seedCol: String = "node", maxHops: Int = 3,
-                materialize: DataFrame => DataFrame = identity): DataFrame = {
+                seedCol: String = "node", maxHops: Int = 3): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
+    val e = simpleEdges(edges, col(src), col(dst))
+    val nodes = nodesOf(e)
     val total = nodes.agg(count(lit(1)).as("__n"))
     // seeds restricted to the node universe: an off-graph seed
     // reaches nothing and shouldn't inflate hop 0
@@ -782,11 +782,10 @@ object LinkGraph {
       .join(nodes, "node")
     val rows = (0 to maxHops).map { h =>
       if (h > 0) {
-        reach = materialize(
-          reach.unionByName(
+        reach = reach.unionByName(
             e.join(reach.withColumnRenamed("node", "src"), "src")
               .select(col("dst").as("node")))
-            .distinct())
+          .distinct()
       }
       reach.agg(count(lit(1)).as("n_reachable"))
         .select(lit(h).as("hop"), col("n_reachable"))
@@ -820,7 +819,8 @@ object LinkGraph {
     *
     * Shape per round: one frontier⋈edges hash join + one node-keyed
     * min-merge partial agg, both on the node key; localCheckpoint
-    * cuts the iterated lineage. Returns (node, dist), seeds at 0;
+    * cuts the iterated lineage. Eager: runs Spark jobs when called,
+    * every round included. Returns (node, dist), seeds at 0;
     * unreachable-within-bound nodes are absent, not ∞. */
   def seedDistances(edges: DataFrame, seeds: DataFrame,
                     src: String = "src", dst: String = "dst",
@@ -875,38 +875,27 @@ object LinkGraph {
     * pagerank's).
     *
     * Iteration shape identical to [[pagerank]]: two hash joins + one
-    * partial-agg shuffle per step, nothing collected, `materialize`
-    * lineage-cut hook. Returns (node, out_weight, rank_units). */
+    * partial-agg shuffle per step, nothing collected. Returns
+    * (node, out_weight, rank_units). */
   def pagerankWeighted(edges: DataFrame, src: String, dst: String,
                        weight: String, iterations: Int = 3,
-                       unit: Long = DefaultUnit,
-                       dampNum: Long = 85, dampDen: Long = 100,
-                       materialize: DataFrame => DataFrame = identity): DataFrame = {
+                       unit: Long = DefaultUnit): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, "damping must be in (0,1)")
     val e = edges
       .select(col(src).as("src"), col(dst).as("dst"),
         col(weight).cast("long").as("w"))
       .where(col("src") =!= col("dst") && col("w") > 0)
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
+    val nodes = nodesOf(e)
     val outw = e.groupBy(col("src").as("node"))
       .agg(sum(col("w")).as("out_weight"))
-    val base = (unit * (dampDen - dampNum)) / dampDen
     var ranks = nodes.withColumn("rank_units", lit(unit))
     for (_ <- 1 to iterations) {
-      val contribs = e
-        .join(ranks.join(outw, "node").withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("(rank_units * w) div out_weight").as("contrib"))
-      val inMass = contribs.groupBy(col("dst").as("node"))
-        .agg(sum(col("contrib")).as("in_mass"))
-      ranks = materialize(
-        nodes.join(inMass, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) + expr(s"($dampNum * coalesce(in_mass, 0L)) div $dampDen"))
-              .as("rank_units")))
+      val inMass = propagate(e, ranks, outw,
+        expr("(rank_units * w) div out_weight"))
+      ranks = nodes.join(inMass, Seq("node"), "left")
+        .select(col("node"),
+          (lit(teleportBase(unit)) + dampedInMass).as("rank_units"))
     }
     nodes.join(outw, Seq("node"), "left")
       .join(ranks, "node")
@@ -935,55 +924,24 @@ object LinkGraph {
     * (node, core_degree).
     *
     * Shape per round: one degree partial-agg + TWO semi-join prunes
-    * (src side, dst side) — all keyed on node; `materialize` is the
-    * lineage-cut hook, as in [[pagerank]], and matters more here
-    * because the edge frame itself iterates. */
+    * (src side, dst side) — all keyed on node. */
   def kCore(edges: DataFrame, src: String, dst: String,
-            k: Int = 3, rounds: Int = 3,
-            materialize: DataFrame => DataFrame = identity): DataFrame = {
+            k: Int = 3, rounds: Int = 3): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
-    val dir = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-    var e = dir
-      .union(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    var e = symmetricEdges(edges, col(src), col(dst))
     for (_ <- 1 to rounds) {
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k)
         .select(col("src"))
-      e = materialize(
-        e.join(keep, "src")
-          .join(keep.withColumnRenamed("src", "dst"), "dst")
-          .select(col("src"), col("dst")))
+      e = e.join(keep, "src")
+        .join(keep.withColumnRenamed("src", "dst"), "dst")
+        .select(col("src"), col("dst"))
     }
     e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("core_degree"))
   }
 
-  /** Exact triangle count + local clustering coefficient via
-    * degree-ordered edge orientation (Schank & Wagner, WEA 2005; the
-    * algorithm behind every big-graph triangle benchmark) — the
-    * cohesion microstructure next to k-core's macrostructure: a link
-    * farm shows HIGH clustering (everyone links everyone), a star
-    * spammer ZERO. Each undirected edge is oriented toward its
-    * higher-(degree, id) endpoint, so every wedge enumeration fans
-    * out only over a node's HIGHER-ordered out-neighbors —
-    * out-degrees are bounded by O(√m) and a celebrity hub's
-    * quadratic wedge explosion never happens (the published bound,
-    * and the reason this beats the naive 3-way join at scale). Each
-    * triangle is found exactly once, at its order-minimal corner.
-    * No global rank is materialized — the (deg, node) order is
-    * compared inline in the join conditions, so nothing needs a
-    * single-partition window.
-    *
-    * Returns (node, degree, triangles, clustering_permille) with
-    * clustering = 2000·T div (d·(d−1)) — exact floor permille of
-    * Watts–Strogatz local clustering; degree-1 nodes report 0.
-    *
-    * Shape: one degree aggregate, two degree-attach joins, ONE
-    * wedge self-join (the √m-bounded one), one closing equi-join,
-    * one explode + count. All keyed; nothing collected. */
   /** k-truss decomposition (Cohen 2008) — the edge-level cohesion
     * filter: keep exactly the edges supported by ≥ k−2 triangles
     * WITHIN the surviving subgraph, peeling until fixpoint. The
@@ -1011,16 +969,15 @@ object LinkGraph {
     * stops, so |E| rounds always suffice.
     *
     * Input edges are undirected (canonicalized to a < b, self-loops
-    * dropped, duplicates collapsed). Returns the surviving edges
+    * dropped, duplicates collapsed). Eager: runs Spark jobs when
+    * called, every peel round included. Returns the surviving edges
     * with their final within-truss support. */
   def kTruss(edges: DataFrame, src: String, dst: String, k: Int = 4,
              maxIterations: Int = 30): DataFrame = {
     require(k >= 3, "k must be >= 3 (every edge is a 2-truss)")
     val minSup = (k - 2).toLong
     val (e0, nEdges0) = graft.core.Iterate.barrierCounted(
-      edges.select(least(col(src), col(dst)).as("a"),
-          greatest(col(src), col(dst)).as("b"))
-        .where(col("a") =!= col("b")).distinct(), lit(true))
+      canonicalEdges(edges, col(src), col(dst)), lit(true))
     // State: (edges, edge count, converged).
     val (e, _, _) = graft.core.Iterate.fixpoint((e0, nEdges0, false),
         maxIterations,
@@ -1071,12 +1028,31 @@ object LinkGraph {
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
   }
 
+  /** Exact triangle count + local clustering coefficient via
+    * degree-ordered edge orientation (Schank & Wagner, WEA 2005; the
+    * algorithm behind every big-graph triangle benchmark) — the
+    * cohesion microstructure next to k-core's macrostructure: a link
+    * farm shows HIGH clustering (everyone links everyone), a star
+    * spammer ZERO. Each undirected edge is oriented toward its
+    * higher-(degree, id) endpoint, so every wedge enumeration fans
+    * out only over a node's HIGHER-ordered out-neighbors —
+    * out-degrees are bounded by O(√m) and a celebrity hub's
+    * quadratic wedge explosion never happens (the published bound,
+    * and the reason this beats the naive 3-way join at scale). Each
+    * triangle is found exactly once, at its order-minimal corner.
+    * No global rank is materialized — the (deg, node) order is
+    * compared inline in the join conditions, so nothing needs a
+    * single-partition window.
+    *
+    * Returns (node, degree, triangles, clustering_permille) with
+    * clustering = 2000·T div (d·(d−1)) — exact floor permille of
+    * Watts–Strogatz local clustering; degree-1 nodes report 0.
+    *
+    * Shape: one degree aggregate, two degree-attach joins, ONE
+    * wedge self-join (the √m-bounded one), one closing equi-join,
+    * one explode + count. All keyed; nothing collected. */
   def triangleStats(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val dir = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-    val und = dir
-      .union(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val und = symmetricEdges(edges, col(src), col(dst))
     val deg = und.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
     val pairs = und.filter(col("src") < col("dst"))
@@ -1136,9 +1112,7 @@ object LinkGraph {
                  maxOutDegree: Long = 100L,
                  minCommon: Long = 2L): DataFrame = {
     require(maxOutDegree >= 2, "cap below 2 kills every pair")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
+    val e = simpleEdges(edges, col(src), col(dst))
     val keep = e.groupBy(col("src")).agg(count(lit(1)).as("__od"))
       .filter(col("__od") <= maxOutDegree)
       .select(col("src"))
@@ -1184,8 +1158,7 @@ object LinkGraph {
                         src: String, dst: String, node: String,
                         featCol: String, hops: Int = 2): DataFrame = {
     require(hops >= 1 && hops <= 5, "hops must be in [1, 5]")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
+    val e = simpleEdges(edges, col(src), col(dst))
     val base = feats.select(col(node).as("node"),
       col(featCol).cast("long").as("f0"))
     var out = base
@@ -1231,10 +1204,8 @@ object LinkGraph {
                      maxDegree: Long = 100L,
                      minCommon: Long = 2L): DataFrame = {
     require(maxDegree >= 2, "cap below 2 kills every wedge")
-    val dir0 = edges.select(col(src).as("u"), col(dst).as("v"))
-      .where(col("u") =!= col("v"))
-    val und = dir0.unionAll(dir0.select(col("v").as("u"), col("u").as("v")))
-      .distinct() // both directions present once: deg(u) = count over u
+    // both directions present once: deg(u) = count over u
+    val und = symmetricEdges(edges, col(src), col(dst), ("u", "v"))
     val deg = und.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     val mid = und.join(deg.filter(col("deg") <= maxDegree), "u")
       .select(col("u").as("z"), col("v"), col("deg"))
@@ -1306,17 +1277,14 @@ object LinkGraph {
     * canonical label the DuckDB oracle re-derives from a WITH
     * RECURSIVE transitive closure + mutual-reachability predicate —
     * a structurally independent algorithm, so agreement is a real
-    * cross-check (the q131 precedent). */
+    * cross-check (the q131 precedent). Eager: runs Spark jobs when
+    * called, every peel round included. */
   def stronglyConnected(edges: DataFrame, src: String, dst: String,
                         maxPropIters: Int = 25,
                         maxRounds: Int = 12): DataFrame = {
-    val e0 = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    val edges0 = e0.localCheckpoint()
-    val nodes = edges0.select(col("src").as("node"))
-      .union(edges0.select(col("dst").as("node")))
-      .distinct() // materialized (with its count) by the first barrier below
+    val edges0 = simpleEdges(edges, col(src), col(dst)).localCheckpoint()
+    // materialized (with its count) by the first barrier below
+    val nodes = nodesOf(edges0)
 
     /** Min-label fixpoint with pointer doubling: label(v) starts at v
       * and relaxes per round over (a) `rel` edges — label(s) flows
@@ -1425,37 +1393,29 @@ object LinkGraph {
     * poll for; the output is a pure function of (edges, iterations).
     *
     * Iteration shape identical to [[pagerank]]: two hash joins + one
-    * partial-agg shuffle per step, nothing collected, `materialize`
-    * lineage-cut hook. Returns (node, out_weight, mass_units). */
+    * partial-agg shuffle per step, nothing collected. Returns
+    * (node, out_weight, mass_units). */
   def stationary(edges: DataFrame, src: String, dst: String, weight: String,
-                 iterations: Int = 3, unit: Long = DefaultUnit,
-                 materialize: DataFrame => DataFrame = identity): DataFrame = {
+                 iterations: Int = 3, unit: Long = DefaultUnit): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges
       .select(col(src).as("src"), col(dst).as("dst"),
         col(weight).cast("long").as("w"))
       .where(col("w") > 0)
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
+    val nodes = nodesOf(e)
     val outw = e.groupBy(col("src").as("node")).agg(sum(col("w")).as("out_w"))
     var pi = nodes.withColumn("mass_units", lit(unit))
     for (_ <- 1 to iterations) {
-      val contribs = e
-        .join(pi.join(outw, "node").withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("(mass_units * w) div out_w").as("contrib"))
-      val inMass = contribs.groupBy(col("dst").as("node"))
-        .agg(sum(col("contrib")).as("in_mass"))
-      pi = materialize(
-        nodes
-          .join(pi.withColumnRenamed("mass_units", "__prev"), "node")
-          .join(outw, Seq("node"), "left")
-          .join(inMass, Seq("node"), "left")
-          .select(col("node"),
-            (coalesce(col("in_mass"), lit(0L)) +
-              when(col("out_w").isNull, col("__prev")).otherwise(lit(0L)))
-              .as("mass_units")))
+      val inMass = propagate(e, pi, outw, expr("(mass_units * w) div out_w"))
+      pi = nodes
+        .join(pi.withColumnRenamed("mass_units", "__prev"), "node")
+        .join(outw, Seq("node"), "left")
+        .join(inMass, Seq("node"), "left")
+        .select(col("node"),
+          (coalesce(col("in_mass"), lit(0L)) +
+            when(col("out_w").isNull, col("__prev")).otherwise(lit(0L)))
+            .as("mass_units"))
     }
     nodes.join(outw, Seq("node"), "left")
       .join(pi, "node")
@@ -1479,16 +1439,15 @@ object LinkGraph {
     *
     * Shape: the SCC labeling (see [[stronglyConnected]]'s bounds) +
     * two node-keyed label joins onto the edge list + one pair
-    * aggregate. Nothing collected. */
+    * aggregate. Nothing collected; eager like [[stronglyConnected]]
+    * (runs Spark jobs when called). */
   def condensation(edges: DataFrame, src: String, dst: String,
                    maxPropIters: Int = 25,
                    maxRounds: Int = 12): DataFrame = {
     val labels = stronglyConnected(edges, src, dst, maxPropIters, maxRounds)
       .select(col("node"), col("scc"))
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    e.join(labels.select(col("node").as("src"), col("scc").as("scc_src")), "src")
+    simpleEdges(edges, col(src), col(dst))
+      .join(labels.select(col("node").as("src"), col("scc").as("scc_src")), "src")
       .join(labels.select(col("node").as("dst"), col("scc").as("scc_dst")), "dst")
       .filter(col("scc_src") =!= col("scc_dst"))
       .groupBy(col("scc_src"), col("scc_dst"))
@@ -1538,12 +1497,8 @@ object LinkGraph {
     * 5-sum aggregate — the triangle counter's degree-pass skeleton;
     * nothing collected. */
   def assortativity(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val und = edges.select(col(src).cast("string").as("a"),
-        col(dst).cast("string").as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
+    val und = canonicalEdges(edges, col(src).cast("string"),
+      col(dst).cast("string"))
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("__d"))
@@ -1570,25 +1525,6 @@ object LinkGraph {
           (sqrt(varx) * sqrt(vary))).as("assortativity"))
   }
 
-  /** Two-hop reach — per node the exact count of DISTINCT nodes
-    * reachable in ≤ 2 directed hops, self excluded: the
-    * friends-of-friends audience metric (how far does one crawl
-    * frontier step + one more see?), the local complement to
-    * [[seedReach]]'s global BFS and the precursor every
-    * influence/propagation estimate starts from.
-    *
-    * Scale governor — the Σ df² argument yet again: the two-hop join
-    * fans out in the INTERMEDIATE node's out-degree, so hop-2
-    * traversal drops edges whose source out-degree exceeds
-    * `maxOutDegree` (a hub that links to everything makes everything
-    * "2 hops away" and carries no signal — the link-analysis df-cap;
-    * paths THROUGH over-cap hubs are undercounted, stated, while
-    * hop-1 stays exact and uncapped). Distinctness is one UNION +
-    * dedup keyed on (node, reached) — never a per-node set in memory.
-    *
-    * Shape: one out-degree aggregate, one semi-join cap filter, ONE
-    * edge self-join, one distinct + count. Output bounded by the
-    * source universe. */
   /** Newman–Girvan modularity of a node partition (Newman & Girvan
     * 2004), exact — the quality score that makes community output
     * COMPARABLE: Q = Σ_c [e_c/m − (d_c/2m)²] says how much denser
@@ -1610,15 +1546,12 @@ object LinkGraph {
     * simple graph (direction and multiplicity dropped here, stated).
     * Shape: one degree aggregate, one two-sided label join over the
     * canonical a<b edge set, two bounded label-keyed aggregates +
-    * one 1-row totals broadcast. */
+    * one 1-row totals broadcast. Eager: runs one Spark job when called
+    * (the edge-set checkpoint). */
   def modularity(edges: DataFrame, src: String, dst: String,
                  labels: DataFrame): DataFrame = {
-    val und = edges.select(col(src).cast("string").as("a"),
-        col(dst).cast("string").as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct().localCheckpoint()
+    val und = canonicalEdges(edges, col(src).cast("string"),
+      col(dst).cast("string")).localCheckpoint()
     val lab = labels.select(col("node").cast("string").as("node"),
       col("label").cast("string").as("label"))
     val deg = und.select(col("a").as("node"))
@@ -1642,12 +1575,30 @@ object LinkGraph {
                  * 1000000) div (4 * __m * __m)""").as("contrib_e6"))
   }
 
+  /** Two-hop reach — per node the exact count of DISTINCT nodes
+    * reachable in ≤ 2 directed hops, self excluded: the
+    * friends-of-friends audience metric (how far does one crawl
+    * frontier step + one more see?), the local complement to
+    * [[seedReach]]'s global BFS and the precursor every
+    * influence/propagation estimate starts from.
+    *
+    * Scale governor — the Σ df² argument yet again: the two-hop join
+    * fans out in the INTERMEDIATE node's out-degree, so hop-2
+    * traversal drops edges whose source out-degree exceeds
+    * `maxOutDegree` (a hub that links to everything makes everything
+    * "2 hops away" and carries no signal — the link-analysis df-cap;
+    * paths THROUGH over-cap hubs are undercounted, stated, while
+    * hop-1 stays exact and uncapped). Distinctness is one UNION +
+    * dedup keyed on (node, reached) — never a per-node set in memory.
+    *
+    * Shape: one out-degree aggregate, one semi-join cap filter, ONE
+    * edge self-join, one distinct + count. Output bounded by the
+    * source universe. Eager: runs one Spark job when called (the
+    * edge-set checkpoint). */
   def twoHopReach(edges: DataFrame, src: String, dst: String,
                   maxOutDegree: Long = 64L): DataFrame = {
-    val e = edges.select(col(src).cast("string").as("src"),
-        col(dst).cast("string").as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
+    val e = simpleEdges(edges, col(src).cast("string"),
+      col(dst).cast("string")).localCheckpoint()
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("out_degree"))
     val capped = e.join(
       outDeg.filter(col("out_degree") <= maxOutDegree).select(col("src")),

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -59,14 +59,6 @@ class LinkGraphSpec extends SparkSpec {
       Seq(("a", 1L, 150L), ("b", 1L, 1000L), ("c", 0L, 1000L))
   }
 
-  test("result is invariant under input partitioning") {
-    val pairs = (0 until 200).map(i => (s"d${i % 23}", s"d${(3 * i + 1) % 29}"))
-    val base = edges(pairs: _*)
-    val r1 = LinkGraph.pagerank(base.repartition(1), "src", "dst", 3)
-    val r7 = LinkGraph.pagerank(base.repartition(7, col("dst")), "src", "dst", 3)
-    assertSameRows(r1, r7)
-  }
-
   test("mass never exceeds n*unit (leak-only spec) and stays positive") {
     val pairs = (0 until 200).map(i => (s"d${i % 23}", s"d${(3 * i + 1) % 29}"))
     val r = LinkGraph.pagerank(edges(pairs: _*), "src", "dst", 4, unit = U)
@@ -75,13 +67,6 @@ class LinkGraphSpec extends SparkSpec {
     agg.getLong(0) should be <= n * U
     // Every node keeps at least the teleport base.
     agg.getLong(1) should be >= (U * 15) / 100
-  }
-
-  test("materialize hook is applied per iteration") {
-    var calls = 0
-    LinkGraph.pagerank(edges("a" -> "b"), "src", "dst", iterations = 3,
-      unit = U, materialize = { d => calls += 1; d }).collect()
-    calls shouldBe 3
   }
 
   test("hits: one round matches hand-computed matvec + L1 rescale") {
@@ -124,21 +109,6 @@ class LinkGraphSpec extends SparkSpec {
     agg.getLong(1) should be > n * U - n
   }
 
-  test("hits is invariant under input partitioning") {
-    val pairs = (0 until 200).map(i => (s"d${i % 23}", s"d${(3 * i + 1) % 29}"))
-    val base = edges(pairs: _*)
-    val r1 = LinkGraph.hits(base.repartition(1), "src", "dst", 2)
-    val r7 = LinkGraph.hits(base.repartition(7, col("dst")), "src", "dst", 2)
-    assertSameRows(r1, r7)
-  }
-
-  test("hits: materialize hook is applied per half-iteration") {
-    var calls = 0
-    LinkGraph.hits(edges("a" -> "b"), "src", "dst", iterations = 2,
-      unit = U, materialize = { d => calls += 1; d }).collect()
-    calls shouldBe 4
-  }
-
   test("trustRank: teleport only to seeds, trust decays along links, unreachable stays 0") {
     import spark.implicits._
     // a -> b -> c, seed = {a}. Start: a=1000, b=0, c=0.
@@ -154,16 +124,6 @@ class LinkGraphSpec extends SparkSpec {
       iterations = 3, unit = U).orderBy("node").collect()
     iso.filter(x => Set("x", "y")(x.getString(0)))
       .map(_.getLong(3)).toSeq shouldBe Seq(0L, 0L)
-  }
-
-  test("trustRank is invariant under input partitioning") {
-    import spark.implicits._
-    val pairs = (0 until 200).map(i => (s"d${i % 23}", s"d${(3 * i + 1) % 29}"))
-    val base = edges(pairs: _*)
-    val seeds = (0 until 29 by 3).map(i => s"d$i").toDF("node")
-    val r1 = LinkGraph.trustRank(base.repartition(1), seeds, iterations = 3)
-    val r7 = LinkGraph.trustRank(base.repartition(7, col("dst")), seeds, iterations = 3)
-    assertSameRows(r1, r7)
   }
 
   test("normalizedRank: exact rational share + permilles vs ideal and retained mass") {
@@ -194,26 +154,13 @@ class LinkGraphSpec extends SparkSpec {
     plan should include ("BroadcastNestedLoopJoin")
   }
 
-  test("deep iteration via localCheckpoint: exact fixed point, bounded lineage, pure-plan parity") {
-    // The scaladoc's advice for dozens of iterations, as tested
-    // behavior: 25 checkpointed iterations must (a) agree with the
-    // pure-plan result (the hook is semantically invisible), (b) reach
-    // the integer fixed point (iteration 26 changes nothing — floor
-    // arithmetic converges exactly, no epsilon), and (c) keep the
-    // final plan shallower than even a 2-iteration pure plan, proving
-    // lineage is actually cut rather than accumulated.
+  test("deep iteration: exact integer fixed point on the pure plan") {
+    // 25 iterations reach the integer fixed point: iteration 26
+    // changes nothing — floor arithmetic converges exactly, no epsilon.
     val pairs = (0 until 120).map(i => (s"d${i % 17}", s"d${(5 * i + 3) % 19}"))
     val base = edges(pairs: _*)
-    def cut(iters: Int) = LinkGraph.pagerank(base, "src", "dst",
-      iterations = iters, unit = U, materialize = _.localCheckpoint())
-
-    assertSameRows(cut(6), LinkGraph.pagerank(base, "src", "dst", 6, unit = U))
-    val r25 = cut(25)
-    assertSameRows(r25, cut(26))
-    def planLines(d: org.apache.spark.sql.DataFrame): Int =
-      d.queryExecution.optimizedPlan.numberedTreeString.linesIterator.size
-    planLines(r25) should be < planLines(
-      LinkGraph.pagerank(base, "src", "dst", 2, unit = U))
+    assertSameRows(LinkGraph.pagerank(base, "src", "dst", 25, unit = U),
+      LinkGraph.pagerank(base, "src", "dst", 26, unit = U))
   }
 
   test("harmonicCentrality: hand-computed micro-unit sums on a chain + fork") {
@@ -283,7 +230,7 @@ class LinkGraphSpec extends SparkSpec {
       es.isEmpty || {
         val got = LinkGraph.harmonicCentrality(
           edges(es.toSeq.map(e => (s"n${e._1}", s"n${e._2}")): _*),
-          "src", "dst", maxDepth = DEPTH, materialize = identity)
+          "src", "dst", maxDepth = DEPTH)
           .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
           .toMap
         got == reference(n, es)
@@ -309,15 +256,6 @@ class LinkGraphSpec extends SparkSpec {
       ("b", 1L, 2L, 1L),  // out: a; in: a,c; reciprocal: b->a
       ("c", 1L, 1L, 0L),
       ("d", 1L, 0L, 0L))
-  }
-
-  test("harmonicCentrality is invariant under input partitioning") {
-    val pairs = (0 until 120).map(i => (s"d${i % 17}", s"d${(5 * i + 3) % 19}"))
-    val base = edges(pairs: _*)
-    val a = LinkGraph.harmonicCentrality(base, "src", "dst", maxDepth = 3)
-    val b = LinkGraph.harmonicCentrality(base.repartition(7), "src", "dst",
-      maxDepth = 3)
-    assertSameRows(a, b)
   }
 
   test("labelPropagation: two cliques over a bridge split where components merge") {
@@ -426,7 +364,7 @@ class LinkGraphSpec extends SparkSpec {
     star.foreach(_.getAs[Long]("triangles") shouldBe 0L)
   }
 
-  test("triangleStats matches a brute-force triple scan; invariance") {
+  test("triangleStats matches a brute-force triple scan") {
     val pairs = (0 until 160).map(i => (s"n${i % 13}", s"n${(7 * i + 3) % 17}"))
     val base = edges(pairs: _*)
     val got = LinkGraph.triangleStats(base, "src", "dst").collect()
@@ -443,8 +381,6 @@ class LinkGraphSpec extends SparkSpec {
       if und.contains((nodes(j), nodes(k))) && und.contains((nodes(i), nodes(k)))
     } Seq(nodes(i), nodes(j), nodes(k)).foreach(n => brute(n) += 1)
     nodes.foreach(n => got(n) shouldBe brute(n))
-    assertSameRows(LinkGraph.triangleStats(base, "src", "dst"),
-      LinkGraph.triangleStats(base.repartition(7), "src", "dst"))
   }
 
   test("kCore: peeling cascades — one degree filter is NOT enough") {
@@ -466,7 +402,7 @@ class LinkGraphSpec extends SparkSpec {
     out shouldBe Map("x" -> 2L, "y" -> 2L, "z" -> 2L)
   }
 
-  test("kCore: core survives, pendant fringe peels; invariance") {
+  test("kCore: core survives, pendant fringe peels") {
     // K4 core with a pendant chain hanging off a1
     def clique(ns: Seq[String]) =
       for (i <- ns.indices; j <- i + 1 until ns.size) yield (ns(i), ns(j))
@@ -475,11 +411,6 @@ class LinkGraphSpec extends SparkSpec {
     val out = LinkGraph.kCore(g, "src", "dst", k = 3, rounds = 3)
       .collect().map(_.getAs[String]("node")).toSet
     out shouldBe Set("a1", "a2", "a3", "a4")
-    val pairs = (0 until 150).map(i => (s"n${i % 19}", s"n${(5 * i + 2) % 23}"))
-    val base = edges(pairs: _*)
-    assertSameRows(
-      LinkGraph.kCore(base, "src", "dst", k = 4, rounds = 3),
-      LinkGraph.kCore(base.repartition(7), "src", "dst", k = 4, rounds = 3))
   }
 
   test("coCitation: hand-computed common citers and Jaccard permille") {
@@ -505,23 +436,6 @@ class LinkGraphSpec extends SparkSpec {
       .collect().map(r => (r.getAs[String]("node_a"), r.getAs[String]("node_b")) ->
         (r.getAs[Long]("common"), r.getAs[Long]("jaccard_permille"))).toMap
     out shouldBe Map(("a", "b") -> ((2L, 1000L))) // never inflated past 1000
-  }
-
-  test("coCitation is invariant under input partitioning") {
-    val pairs = (0 until 200).map(i => (s"c${i % 31}", s"p${(3 * i + 1) % 23}"))
-    val base = edges(pairs: _*)
-    assertSameRows(
-      LinkGraph.coCitation(base, "src", "dst", minCommon = 2),
-      LinkGraph.coCitation(base.repartition(7), "src", "dst", minCommon = 2))
-  }
-
-  test("labelPropagation is invariant under input partitioning") {
-    val pairs = (0 until 150).map(i => (s"n${i % 13}", s"n${(7 * i + 2) % 17}"))
-    val base = edges(pairs: _*)
-    assertSameRows(
-      LinkGraph.labelPropagation(base, "src", "dst", iterations = 4),
-      LinkGraph.labelPropagation(base.repartition(7), "src", "dst",
-        iterations = 4))
   }
 
   // --- strongly connected components -------------------------------
@@ -611,13 +525,6 @@ class LinkGraphSpec extends SparkSpec {
     }
   }
 
-  test("stronglyConnected is invariant under input partitioning") {
-    val base = sccFixture
-    assertSameRows(
-      LinkGraph.stronglyConnected(base, "src", "dst"),
-      LinkGraph.stronglyConnected(base.repartition(7), "src", "dst"))
-  }
-
   private val wSchema = StructType(Seq(
     StructField("src", StringType), StructField("dst", StringType),
     StructField("w", LongType)))
@@ -650,12 +557,10 @@ class LinkGraphSpec extends SparkSpec {
     out shouldBe Map("a" -> 1250L, "b" -> 750L)
   }
 
-  test("stationary is invariant under input partitioning and conserves mass up to floor") {
+  test("stationary conserves mass up to floor") {
     val e = wEdges((0 until 40).map(i =>
       (s"n${i % 7}", s"n${(3 * i + 1) % 7}", (i % 5 + 1).toLong)): _*)
     val a = LinkGraph.stationary(e, "src", "dst", "w", iterations = 4)
-    assertSameRows(a,
-      LinkGraph.stationary(e.repartition(5), "src", "dst", "w", iterations = 4))
     val total = a.agg(org.apache.spark.sql.functions.sum("mass_units"))
       .collect().head.getLong(0)
     val n = a.count()
@@ -706,14 +611,6 @@ class LinkGraphSpec extends SparkSpec {
     capped.exists(p => p._1 == "p" || p._2 == "q") shouldBe false
   }
 
-  test("linkPrediction is invariant under input partitioning") {
-    val e = edges((1 to 80).map(i =>
-      s"n${i % 13}" -> s"n${(i * 5 + 2) % 13}"): _*)
-    assertSameRows(
-      LinkGraph.linkPrediction(e, "src", "dst", minCommon = 1),
-      LinkGraph.linkPrediction(e.repartition(7), "src", "dst", minCommon = 1))
-  }
-
   test("propagateFeatures: chain floor-means hop by hop; sources stay NULL") {
     import spark.implicits._
     val e = edges("a" -> "b", "b" -> "c", "x" -> "c")
@@ -728,16 +625,6 @@ class LinkGraphSpec extends SparkSpec {
     // h1(c) = floor((20 + 15) / 2) = 17; h2(c) = mean of h1 over
     // in-neighbors WITH h1 = h1(b) alone = 10 (x's NULL doesn't poison)
     out("c") shouldBe ((30L, Some(17L), Some(10L)))
-  }
-
-  test("propagateFeatures is invariant under input partitioning") {
-    import spark.implicits._
-    val e = edges((1 to 80).map(i => s"n${i % 17}" -> s"n${(i * 3 + 1) % 17}"): _*)
-    val f = (0 until 17).map(i => (s"n$i", i * 7L + 3)).toDF("node", "f")
-    assertSameRows(
-      LinkGraph.propagateFeatures(e, f, "src", "dst", "node", "f"),
-      LinkGraph.propagateFeatures(e.repartition(7), f.repartition(5),
-        "src", "dst", "node", "f"))
   }
 
   test("condensation is acyclic: its own SCCs are all singletons") {
@@ -784,15 +671,6 @@ class LinkGraphSpec extends SparkSpec {
     val e = wedges(("A", "B", 1L), ("B", "C", 1L), ("C", "D", 1L))
     an[IllegalStateException] should be thrownBy
       LinkGraph.seedDistances(e, seedSet("A"), maxRounds = 1)
-  }
-
-  test("seedDistances is invariant under input partitioning") {
-    val e = wedges((1 to 120).map(i =>
-      (s"n${i % 23}", s"n${(i * 5 + 2) % 23}", (i % 4 + 1).toLong)): _*)
-    val s = seedSet("n0", "n7")
-    assertSameRows(
-      LinkGraph.seedDistances(e, s, maxDist = 6L),
-      LinkGraph.seedDistances(e.repartition(7), s, maxDist = 6L))
   }
 
   private def reachMap(e: org.apache.spark.sql.DataFrame, cap: Long = 64L) =
@@ -863,7 +741,7 @@ class LinkGraphSpec extends SparkSpec {
       .foreach(_.getAs[Long]("contrib_e6") shouldBe -250000L)
   }
 
-  test("modularity is invariant under input partitioning and edge direction") {
+  test("modularity is invariant under edge direction") {
     val e = edges("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "x",
       "x" -> "y", "y" -> "x")   // duplicate/reversed edges collapse
     val rev = edges("b" -> "a", "c" -> "b", "a" -> "c", "x" -> "c",
@@ -871,8 +749,7 @@ class LinkGraphSpec extends SparkSpec {
     val lab = labelDf("a" -> "L", "b" -> "L", "c" -> "L",
       "x" -> "R", "y" -> "R")
     assertSameRows(LinkGraph.modularity(e, "src", "dst", lab),
-      LinkGraph.modularity(rev.repartition(5), "src", "dst",
-        lab.repartition(3)))
+      LinkGraph.modularity(rev, "src", "dst", lab))
   }
 
   test("assortativity: star is maximally disassortative, regular graph NULL") {
@@ -903,13 +780,6 @@ class LinkGraphSpec extends SparkSpec {
       edges("h" -> "a", "h" -> "b", "h" -> "c", "h" -> "d"),
       "src", "dst").collect().head.getAs[Double]("assortativity")
     fwd should be > starR
-  }
-
-  test("twoHopReach is invariant under input partitioning") {
-    val e = edges((1 to 60).map(i =>
-      s"n${i % 12}" -> s"n${(i * 5 + 2) % 13}"): _*)
-    assertSameRows(LinkGraph.twoHopReach(e, "src", "dst"),
-      LinkGraph.twoHopReach(e.repartition(7), "src", "dst"))
   }
 
   private def stressMap(e: org.apache.spark.sql.DataFrame) =
@@ -979,12 +849,6 @@ class LinkGraphSpec extends SparkSpec {
       yield s"v$i" -> s"v$j"): _*)
     an[IllegalArgumentException] should be thrownBy
       LinkGraph.katzCentrality(k8, "src", "dst", betaBits = 1, depth = 23)
-    // invariance under partitioning at a depth that fits
-    val e = edges((1 to 40).map(i =>
-      s"w${i % 7}" -> s"w${(i * 3 + 1) % 9}"): _*)
-    assertSameRows(
-      LinkGraph.katzCentrality(e, "src", "dst", depth = 6),
-      LinkGraph.katzCentrality(e.repartition(7), "src", "dst", depth = 6))
   }
 
   test("eccentricity: chain, cycle, disconnected halves, depth cap") {
@@ -1003,10 +867,6 @@ class LinkGraphSpec extends SparkSpec {
     val chain = edges((0 until 14).map(i => s"c$i" -> s"c${i + 1}"): _*)
     an[IllegalStateException] should be thrownBy
       LinkGraph.eccentricity(chain, "src", "dst", maxDepth = 5)
-    val e = edges((1 to 40).map(i =>
-      s"n${i % 8}" -> s"n${(i * 5 + 2) % 11}"): _*)
-    assertSameRows(LinkGraph.eccentricity(e, "src", "dst"),
-      LinkGraph.eccentricity(e.repartition(7), "src", "dst"))
   }
 
   test("kTruss: cascading peel on the shared fixture leaves exactly the K4") {
@@ -1038,27 +898,19 @@ class LinkGraphSpec extends SparkSpec {
     out should not contain ("a3" -> "b0")
   }
 
-  test("kTruss: k beyond max cohesion empties; guards; partitioning invariance") {
+  test("kTruss: k beyond max cohesion empties; guards") {
     val tri = edges("x" -> "y", "y" -> "z", "z" -> "x")
     // one triangle: 3-truss keeps it whole, 4-truss (support >= 2) empties
     LinkGraph.kTruss(tri, "src", "dst", k = 3).count() shouldBe 3L
     LinkGraph.kTruss(tri, "src", "dst", k = 4).collect() shouldBe empty
     an[IllegalArgumentException] should be thrownBy
       LinkGraph.kTruss(tri, "src", "dst", k = 2)
-    val e = edges((1 to 60).map(i =>
-      s"m${i % 8}" -> s"m${(i * 5 + 2) % 11}"): _*)
-    assertSameRows(LinkGraph.kTruss(e, "src", "dst", k = 3),
-      LinkGraph.kTruss(e.repartition(7), "src", "dst", k = 3))
   }
 
-  test("stressCentrality: depth cap throws; invariant under partitioning") {
+  test("stressCentrality: depth cap throws") {
     val chain = edges((0 until 6).map(i => s"c$i" -> s"c${i + 1}"): _*)
     an[IllegalStateException] should be thrownBy
       LinkGraph.stressCentrality(chain, "src", "dst", maxDepth = 3)
-    val e = edges((1 to 60).map(i =>
-      s"n${i % 9}" -> s"n${(i * 5 + 2) % 11}"): _*)
-    assertSameRows(LinkGraph.stressCentrality(e, "src", "dst"),
-      LinkGraph.stressCentrality(e.repartition(7), "src", "dst"))
   }
 
   test("sampled-pivot governor: forward state is |sources|x|reachable|, not |V|^2") {
@@ -1101,4 +953,86 @@ class LinkGraphSpec extends SparkSpec {
     an[IllegalStateException] should be thrownBy
       LinkGraph.stressCentrality(chain, "src", "dst", maxDepth = 3)
   }
+
+  // --- one row per public operator ----------------------------------
+
+  /** A public LinkGraph operator built over a (src, dst) edge frame,
+    * and whether building it runs Spark jobs (an eager operator
+    * checkpoints or polls a fixpoint while it is constructed). Side
+    * inputs that must cover the graph's nodes (labels, features) are
+    * derived from the edge frame itself, so they follow its
+    * partitioning. */
+  private case class Op(name: String, eager: Boolean, build: DataFrame => DataFrame)
+
+  private def nodeUniverse(g: DataFrame): DataFrame =
+    g.select(col("src").as("node")).union(g.select(col("dst").as("node")))
+      .distinct()
+  private def weighted(g: DataFrame): DataFrame =
+    g.withColumn("w", (ascii(substring(col("src"), -1, 1)) +
+      ascii(substring(col("dst"), -1, 1))) % 4 + 1)
+
+  private val ops: Seq[Op] = Seq(
+    Op("pagerank", eager = false, LinkGraph.pagerank(_, "src", "dst")),
+    Op("trustRank", eager = false, LinkGraph.trustRank(_, seedSet("n0", "n7"))),
+    Op("harmonicCentrality", eager = true,
+      LinkGraph.harmonicCentrality(_, "src", "dst", maxDepth = 3)),
+    Op("stressCentrality", eager = true, LinkGraph.stressCentrality(_, "src", "dst")),
+    Op("katzCentrality", eager = true,
+      LinkGraph.katzCentrality(_, "src", "dst", depth = 6)),
+    Op("eccentricity", eager = true, LinkGraph.eccentricity(_, "src", "dst")),
+    Op("hits", eager = true, LinkGraph.hits(_, "src", "dst")),
+    Op("graphAudit", eager = false, LinkGraph.graphAudit(_, "src", "dst")),
+    Op("labelPropagation", eager = false, LinkGraph.labelPropagation(_, "src", "dst")),
+    Op("seedReach", eager = false, LinkGraph.seedReach(_, seedSet("n0", "n7"))),
+    Op("seedDistances", eager = true, g =>
+      LinkGraph.seedDistances(weighted(g), seedSet("n0", "n7"), maxDist = 6L)),
+    Op("pagerankWeighted", eager = false, g =>
+      LinkGraph.pagerankWeighted(weighted(g), "src", "dst", "w")),
+    Op("kCore", eager = false, LinkGraph.kCore(_, "src", "dst", k = 4)),
+    Op("kTruss", eager = true, LinkGraph.kTruss(_, "src", "dst", k = 3)),
+    Op("triangleStats", eager = false, LinkGraph.triangleStats(_, "src", "dst")),
+    Op("coCitation", eager = false, LinkGraph.coCitation(_, "src", "dst")),
+    Op("propagateFeatures", eager = false, g => LinkGraph.propagateFeatures(g,
+      nodeUniverse(g).withColumn("f", ascii(substring(col("node"), -1, 1)) * 7L + 3L),
+      "src", "dst", "node", "f")),
+    Op("linkPrediction", eager = false,
+      LinkGraph.linkPrediction(_, "src", "dst", minCommon = 1)),
+    Op("stronglyConnected", eager = true, LinkGraph.stronglyConnected(_, "src", "dst")),
+    Op("stationary", eager = false, g =>
+      LinkGraph.stationary(weighted(g), "src", "dst", "w", iterations = 4)),
+    Op("condensation", eager = true, LinkGraph.condensation(_, "src", "dst")),
+    Op("normalizedRank", eager = false, g =>
+      LinkGraph.normalizedRank(LinkGraph.pagerank(g, "src", "dst"))),
+    Op("assortativity", eager = false, LinkGraph.assortativity(_, "src", "dst")),
+    Op("modularity", eager = true, g => LinkGraph.modularity(g, "src", "dst",
+      nodeUniverse(g).withColumn("label", substring(col("node"), -1, 1)))),
+    Op("twoHopReach", eager = true, LinkGraph.twoHopReach(_, "src", "dst")))
+
+  private def opGraph: DataFrame =
+    edges((1 to 60).map(i => s"n${i % 12}" -> s"n${(i * 5 + 2) % 13}"): _*)
+
+  test("the operator table covers every public LinkGraph operator") {
+    val public = LinkGraph.getClass.getDeclaredMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers) &&
+        m.getReturnType == classOf[DataFrame] && !m.getName.contains("$"))
+      .map(_.getName)
+    ops.map(_.name).sorted shouldBe public.distinct.sorted
+  }
+
+  test("building an operator runs Spark jobs exactly when it is eager") {
+    val g = opGraph
+    val wrong = ops.flatMap { op =>
+      val (_, jobs) = countJobs(op.build(g))
+      if ((jobs > 0) == op.eager) None else Some(s"${op.name}: $jobs jobs")
+    }
+    wrong shouldBe empty
+  }
+
+  for (op <- ops)
+    test(s"${op.name} is invariant under input partitioning") {
+      val g = opGraph
+      val one = op.build(g.repartition(1))
+      one.isEmpty shouldBe false // an empty output would compare vacuously
+      assertSameRows(one, op.build(g.repartition(7, col("dst"))))
+    }
 }
