@@ -13,7 +13,12 @@ runs of the same plan compare equal:
   - lambda class names, object hashes and `.scala:N` line numbers are
     dropped;
   - a path up to and including `/target/` (a checkout's build tree,
-    where the registry's scratch fixtures live) becomes `<checkout>/target/`.
+    where the registry's scratch fixtures live) or `/spark-warehouse/`
+    (the session's warehouse, relative to the working directory)
+    becomes `<checkout>/target/` or `<checkout>/spark-warehouse/`;
+  - the random suffix of a temporary directory (`/tmp/graft-zonemap123`)
+    and the write id in a part file name (`part-00000-<uuid>`) are
+    dropped.
 
 Usage: python3 scripts/plan_diff.py BEFORE_DIR AFTER_DIR [-v]
 Prints the queries whose plans differ (and those present on one side
@@ -26,8 +31,10 @@ import re
 import sys
 
 RULES = [
-    (re.compile(r"file:/\S*?/target/"), "<checkout>/target/"),
-    (re.compile(r"(?<![\w:])/\S*?/target/"), "<checkout>/target/"),
+    (re.compile(r"file:/\S*?/(target|spark-warehouse)/"), r"<checkout>/\1/"),
+    (re.compile(r"(?<![\w:])/\S*?/(target|spark-warehouse)/"), r"<checkout>/\1/"),
+    (re.compile(r"(/tmp/[A-Za-z_-]+?)\d+/"), r"\1/"),
+    (re.compile(r"part-(\d+)-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"), r"part-\1"),
     (re.compile(r"#\d+L?"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),

@@ -45,6 +45,16 @@ package graft
   */
 object Bench {
 
+  /** The median of a query's samples: the middle sample when the count
+    * is odd, the mean of the two middle samples when it is even. A
+    * heavy query keeps two samples, the first of them usually its cold
+    * first touch; taking the larger of two would report that touch. */
+  def median(ts: Seq[Double]): Double = {
+    val s = ts.sorted
+    val m = s.size / 2
+    if (s.size % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
+  }
+
   /** Host-calibration micro-probe (round-16 protocol): a FIXED
     * synthetic workload — pure codegen'd CPU (chained xxhash64 over a
     * 16M-row range) plus one small shuffle (64Ki-key hash aggregate) —
@@ -182,7 +192,6 @@ object Bench {
     // adjudicated line and drop a measurement — fail loudly instead.
     require(names.map(_.takeWhile(_ != '_')).distinct.size == names.size,
       "bench short keys (prefix before first '_') must be unique")
-    def median(ts: Seq[Double]): Double = ts.sorted.apply(ts.size / 2)
     // The driver snapshots only the LAST 2000 chars of stdout and
     // json-parses the final line. At 198 queries even the short-key
     // per-query map is ~3.5 kB — it can never fit, and through round

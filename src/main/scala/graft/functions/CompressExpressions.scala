@@ -2,12 +2,10 @@ package graft.functions
 
 import java.util.zip.Deflater
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -91,21 +89,5 @@ case class DeflateLen(child: Expression) extends UnaryExpression {
 
 object CompressFunctions {
 
-  val fnName = "graft_deflate_len"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$fnName takes 1 argument")
-          DeflateLen(children.head)
-        },
-        "built-in")
-  }
-
-  def deflateLen(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, c)
-  }
+  def deflateLen(c: Column): Column = NativeFunctions.deflateLen(c)
 }

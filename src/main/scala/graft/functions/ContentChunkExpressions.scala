@@ -1,14 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.BinaryExpression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -134,21 +132,6 @@ object ContentChunks {
 
 object ContentChunkFunctions {
 
-  val fnName = "graft_content_chunks"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 2, s"$fnName takes 2 arguments")
-          ContentChunks(children.head, children(1))
-        },
-        "built-in")
-  }
-
-  def contentChunks(c: Column, divisor: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, c, org.apache.spark.sql.functions.lit(divisor))
-  }
+  def contentChunks(c: Column, divisor: Int): Column =
+    NativeFunctions.contentChunks(c, org.apache.spark.sql.functions.lit(divisor))
 }

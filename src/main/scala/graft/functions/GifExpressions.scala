@@ -1,14 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
+
+import graft.functions.WalkBytes._
 
 /** GIF header metadata via the GIF87a/89a block walk (CompuServe GSD
   * / W3C GIF89a specification — public knowledge, zero codec
@@ -36,23 +33,12 @@ import org.apache.spark.sql.types._
   * projection, media bytes never shuffle. */
 object GifHeaderUtil {
 
-  /** Same adversarial-header ceiling as [[PngPixelUtil.MaxPixels]]:
-    * declared dimensions above this are declined, not trusted. */
-  val MaxPixels: Long = 1L << 24
-
-  private val NotDecoded: InternalRow = {
-    val r = new GenericInternalRow(9)
-    r.update(0, false)
-    r // fields 1-8 stay null
-  }
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
+  private val NotDecoded: InternalRow = notDecoded(9)
 
   /** Skip a length-prefixed sub-block chain starting at `pos`;
     * returns the position after the zero terminator, or -1 on
     * truncation. */
-  private def skipSubBlocks(b: Array[Byte], start: Int): Int = {
+  private[functions] def skipSubBlocks(b: Array[Byte], start: Int): Int = {
     var pos = start
     while (pos < b.length) {
       val len = b(pos) & 0xff
@@ -130,24 +116,11 @@ object GifHeaderUtil {
 
 /** GIF header metadata as a native codegen'd expression — see
   * [[GifHeaderUtil.meta]] for the walk and the degrade contract. */
-case class GifMeta(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class GifMeta(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = false) {
   override def dataType: DataType = GifMeta.schema
-
   override def prettyName: String = "gif_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    GifHeaderUtil.meta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GifHeaderUtil.meta($c)")
-
+  override def walk(bytes: Array[Byte]): Any = GifHeaderUtil.meta(bytes)
   override protected def withNewChildInternal(newChild: Expression): GifMeta =
     copy(child = newChild)
 }
@@ -183,20 +156,6 @@ object GifMeta {
   * malformed (lost sync), not guessed at. */
 object GifFrameUtil {
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-
-  private def skipSubBlocks(b: Array[Byte], start: Int): Int = {
-    var pos = start
-    while (pos < b.length) {
-      val len = b(pos) & 0xff
-      if (len == 0) return pos + 1
-      if (pos + 1 + len > b.length) return -1
-      pos += 1 + len
-    }
-    -1
-  }
-
   /** Null on malformed; else one 8-field row per frame:
     * (frame_index, left, top, width, height, lct_entries, delay_cs,
     * disposal). */
@@ -208,7 +167,7 @@ object GifFrameUtil {
     if (!v89ok) return null
     val width = le16(bytes, 6).toLong
     val height = le16(bytes, 8).toLong
-    if (width <= 0 || height <= 0 || width * height > GifHeaderUtil.MaxPixels)
+    if (width <= 0 || height <= 0 || width * height > MaxPixels)
       return null
     val packed = bytes(10) & 0xff
     val gctEntries =
@@ -236,13 +195,13 @@ object GifFrameUtil {
             disposal = ((bytes(pos + 3) & 0xff) >> 2 & 0x7).toLong
             delayCs = le16(bytes, pos + 4).toLong
           }
-          pos = skipSubBlocks(bytes, pos + 2)
+          pos = GifHeaderUtil.skipSubBlocks(bytes, pos + 2)
           if (pos < 0) return null
         case 0x2c =>
           if (pos + 10 > bytes.length) return null
           val iw = le16(bytes, pos + 5).toLong
           val ih = le16(bytes, pos + 7).toLong
-          if (iw <= 0 || ih <= 0 || iw * ih > GifHeaderUtil.MaxPixels)
+          if (iw <= 0 || ih <= 0 || iw * ih > MaxPixels)
             return null
           val ipacked = bytes(pos + 9) & 0xff
           val lctEntries =
@@ -258,7 +217,7 @@ object GifFrameUtil {
           delayCs = 0L; disposal = 0L // GCE is consumed by its frame
           pos += 10 + (if (lctEntries > 0) 3 * lctEntries.toInt else 0)
           if (pos + 1 > bytes.length) return null
-          pos = skipSubBlocks(bytes, pos + 1)
+          pos = GifHeaderUtil.skipSubBlocks(bytes, pos + 1)
           if (pos < 0) return null
         case _ => return null
       }
@@ -269,29 +228,11 @@ object GifFrameUtil {
 
 /** Per-frame GIF inventory as a native codegen'd expression — see
   * [[GifFrameUtil.frames]] for the walk and the degrade contract. */
-case class GifFrames(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class GifFrames(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = true) {
   override def dataType: DataType = GifFrames.schema
-
-  override def nullable: Boolean = true
-
   override def prettyName: String = "gif_frames"
-
-  override protected def nullSafeEval(v: Any): Any =
-    GifFrameUtil.frames(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.GifFrameUtil.frames($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
+  override def walk(bytes: Array[Byte]): Any = GifFrameUtil.frames(bytes)
   override protected def withNewChildInternal(newChild: Expression): GifFrames =
     copy(child = newChild)
 }
@@ -307,38 +248,4 @@ object GifFrames {
     StructField("delay_cs", LongType, nullable = false),
     StructField("disposal", LongType, nullable = false)))
   val schema: DataType = ArrayType(frameSchema, containsNull = false)
-}
-
-object GifFunctions {
-
-  val fnName = "graft_gif_meta"
-  val framesFnName = "graft_gif_frames"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$fnName takes 1 argument")
-          GifMeta(children.head)
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(framesFnName)))
-      registry.createOrReplaceTempFunction(framesFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$framesFnName takes 1 argument")
-          GifFrames(children.head)
-        },
-        "built-in")
-  }
-
-  def gifMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, c)
-  }
-
-  def gifFrames(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(framesFnName, c)
-  }
 }

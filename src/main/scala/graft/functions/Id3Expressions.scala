@@ -1,16 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.WalkBytes._
 
 /** ID3v2 tag-frame inventory (id3.org ID3v2.3/2.4, public spec) —
   * the audio-METADATA rung next to the WAV sample decode (E99) and
@@ -44,10 +41,6 @@ object Id3FrameUtil {
     }
     v
   }
-
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
 
   /** Null on malformed; else one 4-field row per frame in tag order:
     * (frame_index, frame_id, frame_size, text). */
@@ -103,28 +96,11 @@ object Id3FrameUtil {
 
 /** ID3v2 frame inventory as a native codegen'd expression — see
   * [[Id3FrameUtil.frames]]. */
-case class Id3Frames(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class Id3Frames(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = true) {
   override def dataType: DataType = Id3Frames.schema
-
   override def prettyName: String = "id3_frames"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Id3FrameUtil.frames(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // nullSafeCodeGen + explicit isNull (the GifFrames device)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Id3FrameUtil.frames($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
+  override def walk(bytes: Array[Byte]): Any = Id3FrameUtil.frames(bytes)
   override protected def withNewChildInternal(newChild: Expression): Id3Frames =
     copy(child = newChild)
 }
@@ -136,25 +112,4 @@ object Id3Frames {
     StructField("frame_size", LongType, nullable = false),
     StructField("text", StringType)))
   val schema: DataType = ArrayType(frameSchema, containsNull = false)
-}
-
-object Id3Functions {
-
-  val fnName = "graft_id3_frames"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$fnName takes 1 argument")
-          Id3Frames(children.head)
-        },
-        "built-in")
-  }
-
-  def id3Frames(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, c)
-  }
 }

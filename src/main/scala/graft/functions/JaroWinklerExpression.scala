@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Execution: a native `BinaryExpression` with `doGenCode` — one
   * static call per row inside whole-stage codegen (the E105
-  * NfcNormalize pattern), no boxing, no UDF serialization. The
+  * UnicodeNormalize pattern), no boxing, no UDF serialization. The
   * scaled numerator 10⁷·Jn fits a Long for strings up to ~4000
   * codepoints (6·10⁷·L³ bound); longer inputs take a BigInteger
   * slow path rather than silently overflowing. Matching scan is the
@@ -123,21 +121,5 @@ case class JaroWinklerE6(left: Expression, right: Expression)
 
 object JaroWinklerFunctions {
 
-  val fnName = "graft_jaro_winkler_e6"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 2, s"$fnName takes 2 arguments")
-          JaroWinklerE6(children.head, children(1))
-        },
-        "built-in")
-  }
-
-  def jaroWinklerE6(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, a, b)
-  }
+  def jaroWinklerE6(a: Column, b: Column): Column = NativeFunctions.jaroWinklerE6(a, b)
 }

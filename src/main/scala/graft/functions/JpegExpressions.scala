@@ -1,14 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
+
+import graft.functions.WalkBytes._
 
 /** JPEG header metadata via the ITU-T T.81 §B marker-segment walk —
   * the static-eval companion to [[PngPixelUtil]] for the format real
@@ -34,18 +31,7 @@ import org.apache.spark.sql.types._
   * the projection, media bytes never shuffle. */
 object JpegHeaderUtil {
 
-  /** Same adversarial-header ceiling as [[PngPixelUtil.MaxPixels]]:
-    * declared dimensions above this are declined, not trusted. */
-  val MaxPixels: Long = 1L << 24
-
-  private val NotDecoded: InternalRow = {
-    val r = new GenericInternalRow(9)
-    r.update(0, false)
-    r // fields 1-8 stay null
-  }
-
-  private def be16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
+  private val NotDecoded: InternalRow = notDecoded(9)
 
   def meta(bytes: Array[Byte]): InternalRow = {
     if (bytes == null || bytes.length < 4) return NotDecoded
@@ -122,24 +108,11 @@ object JpegHeaderUtil {
   * [[JpegHeaderUtil.meta]] for the walk and the degrade contract.
   * Same scan-side shape as [[PngPixelStats]]: bytes never shuffle,
   * only the 9-field struct leaves the projection. */
-case class JpegMeta(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class JpegMeta(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = false) {
   override def dataType: DataType = JpegMeta.schema
-
   override def prettyName: String = "jpeg_meta"
-
-  override protected def nullSafeEval(v: Any): Any =
-    JpegHeaderUtil.meta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.JpegHeaderUtil.meta($c)")
-
+  override def walk(bytes: Array[Byte]): Any = JpegHeaderUtil.meta(bytes)
   override protected def withNewChildInternal(newChild: Expression): JpegMeta =
     copy(child = newChild)
 }
@@ -154,25 +127,4 @@ object JpegMeta {
     StructField("n_components", LongType),
     StructField("n_segments", LongType),
     StructField("has_jfif", BooleanType)))
-}
-
-object JpegFunctions {
-
-  val fnName = "graft_jpeg_meta"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$fnName takes 1 argument")
-          JpegMeta(children.head)
-        },
-        "built-in")
-  }
-
-  def jpegMeta(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, c)
-  }
 }

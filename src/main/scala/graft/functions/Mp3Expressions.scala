@@ -1,14 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Per-frame MP3 inventory via the MPEG frame-header walk (ISO/IEC
@@ -109,30 +104,11 @@ object Mp3FrameUtil {
 
 /** Per-frame MP3 inventory as a native codegen'd expression — see
   * [[Mp3FrameUtil.frames]]. */
-case class Mp3Frames(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class Mp3Frames(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = true) {
   override def dataType: DataType = Mp3Frames.schema
-
   override def prettyName: String = "mp3_frames"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Mp3FrameUtil.frames(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // nullSafeCodeGen, not defineCodeGen: frames() returns null for
-    // malformed input, and the value-only form would hand consumers a
-    // null with isNull = false (the GifFrames device)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Mp3FrameUtil.frames($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
+  override def walk(bytes: Array[Byte]): Any = Mp3FrameUtil.frames(bytes)
   override protected def withNewChildInternal(newChild: Expression): Mp3Frames =
     copy(child = newChild)
 }
@@ -147,25 +123,4 @@ object Mp3Frames {
     StructField("has_crc", BooleanType, nullable = false),
     StructField("frame_bytes", LongType, nullable = false)))
   val schema: DataType = ArrayType(frameSchema, containsNull = false)
-}
-
-object Mp3Functions {
-
-  val framesFnName = "graft_mp3_frames"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(framesFnName)))
-      registry.createOrReplaceTempFunction(framesFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$framesFnName takes 1 argument")
-          Mp3Frames(children.head)
-        },
-        "built-in")
-  }
-
-  def mp3Frames(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(framesFnName, c)
-  }
 }

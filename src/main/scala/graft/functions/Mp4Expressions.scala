@@ -1,16 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.WalkBytes._
 
 /** MP4 / ISO-BMFF container metadata via the box walk (ISO/IEC
   * 14496-12, public spec; no codec libs): a file is a sequence of
@@ -36,29 +33,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * typed struct leaves the projection — media bytes never shuffle. */
 object Mp4HeaderUtil {
 
-  private val NotDecoded: InternalRow = {
-    val r = new GenericInternalRow(9)
-    r.update(0, false)
-    r // fields 1-8 stay null
-  }
+  private val NotDecoded: InternalRow = notDecoded(9)
 
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-
-  private def be64(b: Array[Byte], o: Int): Long =
-    (be32(b, o) << 32) | be32(b, o + 4)
-
-  private def typ(b: Array[Byte], o: Int): Int =
-    // 4cc packed into an int — cheap compares, no string churn
-    ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
-
-  private val FTYP = typ("ftyp".getBytes, 0)
-  private val MOOV = typ("moov".getBytes, 0)
-  private val MVHD = typ("mvhd".getBytes, 0)
-  private val TRAK = typ("trak".getBytes, 0)
-  private val MDAT = typ("mdat".getBytes, 0)
+  private val FTYP = fourcc("ftyp".getBytes, 0)
+  private val MOOV = fourcc("moov".getBytes, 0)
+  private val MVHD = fourcc("mvhd".getBytes, 0)
+  private val TRAK = fourcc("trak".getBytes, 0)
+  private val MDAT = fourcc("mdat".getBytes, 0)
 
   def meta(bytes: Array[Byte]): InternalRow = {
     if (bytes == null || bytes.length < 16) return NotDecoded
@@ -75,7 +56,7 @@ object Mp4HeaderUtil {
     while (pos < n) {
       if (pos + 8 > n) return NotDecoded
       var size = be32(bytes, pos.toInt)
-      val t = typ(bytes, pos.toInt + 4)
+      val t = fourcc(bytes, pos.toInt + 4)
       var hdr = 8L
       if (size == 1) {
         if (pos + 16 > n) return NotDecoded
@@ -99,7 +80,7 @@ object Mp4HeaderUtil {
         while (cp < end) {
           if (cp + 8 > end) return NotDecoded
           var cs = be32(bytes, cp.toInt)
-          val ct = typ(bytes, cp.toInt + 4)
+          val ct = fourcc(bytes, cp.toInt + 4)
           var ch = 8L
           if (cs == 1) {
             if (cp + 16 > end) return NotDecoded
@@ -162,21 +143,10 @@ object Mp4HeaderUtil {
   * whole array), never an exception. */
 object Mp4TrackUtil {
 
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-
-  private def be64(b: Array[Byte], o: Int): Long =
-    (be32(b, o) << 32) | be32(b, o + 4)
-
-  private def typ(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
-
-  private val FTYP = typ("ftyp".getBytes, 0)
-  private val MOOV = typ("moov".getBytes, 0)
-  private val TRAK = typ("trak".getBytes, 0)
-  private val TKHD = typ("tkhd".getBytes, 0)
+  private val FTYP = fourcc("ftyp".getBytes, 0)
+  private val MOOV = fourcc("moov".getBytes, 0)
+  private val TRAK = fourcc("trak".getBytes, 0)
+  private val TKHD = fourcc("tkhd".getBytes, 0)
 
   /** Null on malformed; else one 6-field row per trak in stream
     * order: (track_index, track_id, tkhd_version, duration, width_px,
@@ -190,7 +160,7 @@ object Mp4TrackUtil {
     while (pos < n) {
       if (pos + 8 > n) return null
       var size = be32(bytes, pos.toInt)
-      val t = typ(bytes, pos.toInt + 4)
+      val t = fourcc(bytes, pos.toInt + 4)
       var hdr = 8L
       if (size == 1) {
         if (pos + 16 > n) return null
@@ -206,7 +176,7 @@ object Mp4TrackUtil {
         while (cp < end) {
           if (cp + 8 > end) return null
           var cs = be32(bytes, cp.toInt)
-          val ct = typ(bytes, cp.toInt + 4)
+          val ct = fourcc(bytes, cp.toInt + 4)
           var ch = 8L
           if (cs == 1) {
             if (cp + 16 > end) return null
@@ -222,7 +192,7 @@ object Mp4TrackUtil {
             while (!found && tp < tend) {
               if (tp + 8 > tend) return null
               var ts = be32(bytes, tp.toInt)
-              val tt = typ(bytes, tp.toInt + 4)
+              val tt = fourcc(bytes, tp.toInt + 4)
               var th = 8L
               if (ts == 1) {
                 if (tp + 16 > tend) return null
@@ -269,30 +239,11 @@ object Mp4TrackUtil {
 
 /** Per-track MP4 inventory as a native codegen'd expression — see
   * [[Mp4TrackUtil.tracks]]. */
-case class Mp4Tracks(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class Mp4Tracks(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = true) {
   override def dataType: DataType = Mp4Tracks.schema
-
   override def prettyName: String = "mp4_tracks"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Mp4TrackUtil.tracks(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // nullSafeCodeGen, not defineCodeGen: tracks() returns null for
-    // malformed input, and the value-only form would hand consumers a
-    // null with isNull = false (the GifFrames device)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Mp4TrackUtil.tracks($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
+  override def walk(bytes: Array[Byte]): Any = Mp4TrackUtil.tracks(bytes)
   override protected def withNewChildInternal(newChild: Expression): Mp4Tracks =
     copy(child = newChild)
 }
@@ -342,28 +293,17 @@ object Mp4SampleUtil {
   /** Hard ceiling on expanded samples per file (all tracks). */
   val MaxSamples: Int = 16384
 
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-
-  private def be64(b: Array[Byte], o: Int): Long =
-    (be32(b, o) << 32) | be32(b, o + 4)
-
-  private def typ(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
-
-  private val FTYP = typ("ftyp".getBytes, 0)
-  private val MOOV = typ("moov".getBytes, 0)
-  private val TRAK = typ("trak".getBytes, 0)
-  private val TKHD = typ("tkhd".getBytes, 0)
-  private val MDIA = typ("mdia".getBytes, 0)
-  private val MDHD = typ("mdhd".getBytes, 0)
-  private val MINF = typ("minf".getBytes, 0)
-  private val STBL = typ("stbl".getBytes, 0)
-  private val STTS = typ("stts".getBytes, 0)
-  private val STSS = typ("stss".getBytes, 0)
-  private val STSZ = typ("stsz".getBytes, 0)
+  private val FTYP = fourcc("ftyp".getBytes, 0)
+  private val MOOV = fourcc("moov".getBytes, 0)
+  private val TRAK = fourcc("trak".getBytes, 0)
+  private val TKHD = fourcc("tkhd".getBytes, 0)
+  private val MDIA = fourcc("mdia".getBytes, 0)
+  private val MDHD = fourcc("mdhd".getBytes, 0)
+  private val MINF = fourcc("minf".getBytes, 0)
+  private val STBL = fourcc("stbl".getBytes, 0)
+  private val STTS = fourcc("stts".getBytes, 0)
+  private val STSS = fourcc("stss".getBytes, 0)
+  private val STSZ = fourcc("stsz".getBytes, 0)
 
   /** Null on malformed; else one 7-field row per sample in (track
     * stream order, sample number) order: (track_id, media_timescale,
@@ -392,7 +332,7 @@ object Mp4SampleUtil {
       while (tp < tend) {
         if (tp + 8 > tend) return false
         var ts = be32(bytes, tp.toInt)
-        val tt = typ(bytes, tp.toInt + 4)
+        val tt = fourcc(bytes, tp.toInt + 4)
         var th = 8L
         if (ts == 1) {
           if (tp + 16 > tend) return false
@@ -417,7 +357,7 @@ object Mp4SampleUtil {
           while (mp < mend) {
             if (mp + 8 > mend) return false
             var ms = be32(bytes, mp.toInt)
-            val mt = typ(bytes, mp.toInt + 4)
+            val mt = fourcc(bytes, mp.toInt + 4)
             var mh = 8L
             if (ms == 1) {
               if (mp + 16 > mend) return false
@@ -442,7 +382,7 @@ object Mp4SampleUtil {
               while (fp < fend) {
                 if (fp + 8 > fend) return false
                 var fs = be32(bytes, fp.toInt)
-                val ft = typ(bytes, fp.toInt + 4)
+                val ft = fourcc(bytes, fp.toInt + 4)
                 var fh = 8L
                 if (fs == 1) {
                   if (fp + 16 > fend) return false
@@ -456,7 +396,7 @@ object Mp4SampleUtil {
                   while (sp < send) {
                     if (sp + 8 > send) return false
                     var ss = be32(bytes, sp.toInt)
-                    val st = typ(bytes, sp.toInt + 4)
+                    val st = fourcc(bytes, sp.toInt + 4)
                     var sh = 8L
                     if (ss == 1) {
                       if (sp + 16 > send) return false
@@ -568,7 +508,7 @@ object Mp4SampleUtil {
     while (pos < n) {
       if (pos + 8 > n) return null
       var size = be32(bytes, pos.toInt)
-      val t = typ(bytes, pos.toInt + 4)
+      val t = fourcc(bytes, pos.toInt + 4)
       var hdr = 8L
       if (size == 1) {
         if (pos + 16 > n) return null
@@ -584,7 +524,7 @@ object Mp4SampleUtil {
         while (cp < end) {
           if (cp + 8 > end) return null
           var cs = be32(bytes, cp.toInt)
-          val ct = typ(bytes, cp.toInt + 4)
+          val ct = fourcc(bytes, cp.toInt + 4)
           var ch = 8L
           if (cs == 1) {
             if (cp + 16 > end) return null
@@ -606,30 +546,11 @@ object Mp4SampleUtil {
 
 /** Per-sample MP4 inventory as a native codegen'd expression — see
   * [[Mp4SampleUtil.samples]]. */
-case class Mp4Samples(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class Mp4Samples(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = true) {
   override def dataType: DataType = Mp4Samples.schema
-
   override def prettyName: String = "mp4_samples"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Mp4SampleUtil.samples(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // nullSafeCodeGen, not defineCodeGen: samples() returns null for
-    // malformed input, and the value-only form would hand consumers a
-    // null with isNull = false (the GifFrames device)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Mp4SampleUtil.samples($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
+  override def walk(bytes: Array[Byte]): Any = Mp4SampleUtil.samples(bytes)
   override protected def withNewChildInternal(newChild: Expression): Mp4Samples =
     copy(child = newChild)
 }
@@ -648,24 +569,11 @@ object Mp4Samples {
 
 /** MP4 container metadata as a native codegen'd expression — see
   * [[Mp4HeaderUtil.meta]] for the walk and the degrade contract. */
-case class Mp4Header(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class Mp4Header(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = false) {
   override def dataType: DataType = Mp4Header.schema
-
   override def prettyName: String = "mp4_header"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Mp4HeaderUtil.meta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Mp4HeaderUtil.meta($c)")
-
+  override def walk(bytes: Array[Byte]): Any = Mp4HeaderUtil.meta(bytes)
   override protected def withNewChildInternal(newChild: Expression): Mp4Header =
     copy(child = newChild)
 }
@@ -681,51 +589,4 @@ object Mp4Header {
     StructField("n_tracks", LongType),
     StructField("n_top_boxes", LongType),
     StructField("has_mdat", BooleanType)))
-}
-
-object Mp4Functions {
-
-  val fnName = "graft_mp4_header"
-  val tracksFnName = "graft_mp4_tracks"
-  val samplesFnName = "graft_mp4_samples"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$fnName takes 1 argument")
-          Mp4Header(children.head)
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(tracksFnName)))
-      registry.createOrReplaceTempFunction(tracksFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$tracksFnName takes 1 argument")
-          Mp4Tracks(children.head)
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(samplesFnName)))
-      registry.createOrReplaceTempFunction(samplesFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$samplesFnName takes 1 argument")
-          Mp4Samples(children.head)
-        },
-        "built-in")
-  }
-
-  def mp4Header(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, c)
-  }
-
-  def mp4Tracks(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(tracksFnName, c)
-  }
-
-  def mp4Samples(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(samplesFnName, c)
-  }
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -176,33 +175,6 @@ case class MultiMatchCounts(child: Expression, terms: Seq[String])
 
 object MultiMatchFunctions {
 
-  val fnName = "graft_multi_match_counts"
-
-  private def litStringSeq(e: Expression, what: String): Seq[String] = {
-    require(e.foldable, s"$what must be a literal")
-    e.eval() match {
-      case a: ArrayData =>
-        (0 until a.numElements()).map(i =>
-          a.getUTF8String(i).toString)
-      case other => throw new IllegalArgumentException(
-        s"$what must be a string array literal, got $other")
-    }
-  }
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 2, s"$fnName takes (text, terms)")
-          MultiMatchCounts(children.head,
-            litStringSeq(children(1), "terms"))
-        },
-        "built-in")
-  }
-
-  def multiMatchCounts(c: Column, terms: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, c, lit(terms.toArray))
-  }
+  def multiMatchCounts(c: Column, terms: Seq[String]): Column =
+    NativeFunctions.multiMatchCounts(c, lit(terms.toArray))
 }

@@ -2,21 +2,18 @@ package graft.functions
 
 import java.util.zip.Inflater
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared eval path for [[PngPixelStats]] — a plain object so the
-  * generated Java calls it through a static forwarder (the
-  * [[NfcStringUtil]] pattern): one call per row inside whole-stage
-  * codegen, no boxing beyond the result row.
+import graft.functions.WalkBytes._
+
+/** Shared eval path for [[PngPixelStats]] and [[PngDhash]]: their
+  * [[BinaryWalker.walk]] calls it, interpreted and in the generated
+  * code alike — one call per row inside whole-stage codegen, no boxing
+  * beyond the result row.
   *
   * REAL pixel decode (RFC 2083 / PNG spec, `java.util.zip.Inflater`
   * as the zlib): chunk walk → IDAT concatenation → inflate →
@@ -36,21 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * inflate/unfilter path, not just the plumbing. */
 object PngPixelUtil {
 
-  /** Pixel-count ceiling: 2^24 px = 48 MB of raw RGB per image —
-    * above this an adversarial IHDR would balloon executor memory, so
-    * the decode declines (decoded = false) rather than trusting the
-    * header. */
-  val MaxPixels: Long = 1L << 24
-
-  private val NotDecoded: InternalRow = {
-    val r = new GenericInternalRow(9)
-    r.update(0, false)
-    r // fields 1-8 stay null
-  }
-
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+  private val NotDecoded: InternalRow = notDecoded(9)
 
   private def paeth(a: Int, b: Int, c: Int): Int = {
     val p = a + b - c
@@ -179,11 +162,7 @@ object PngPixelUtil {
   private val GridRows = 8
   private val GridCols = 9
 
-  private val NoDhash: InternalRow = {
-    val r = new GenericInternalRow(2)
-    r.update(0, false)
-    r
-  }
+  private val NoDhash: InternalRow = notDecoded(2)
 
   /** Difference hash (dHash) — THE standard perceptual image
     * fingerprint for near-duplicate detection: downscale to a 9×8
@@ -239,10 +218,7 @@ object PngPixelUtil {
       }
       r += 1
     }
-    val row = new GenericInternalRow(2)
-    row.update(0, true)
-    row.update(1, hash)
-    row
+    decodedHash(hash)
   }
 }
 
@@ -252,24 +228,11 @@ object PngPixelUtil {
   * projections; this is the one step that genuinely needs imperative
   * decode). Bytes never shuffle: the expression runs in the scan-side
   * projection and only the 9-field integer stats row leaves it. */
-case class PngPixelStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class PngPixelStats(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = false) {
   override def dataType: DataType = PngPixelStats.schema
-
   override def prettyName: String = "png_pixel_stats"
-
-  override protected def nullSafeEval(v: Any): Any =
-    PngPixelUtil.stats(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PngPixelUtil.stats($c)")
-
+  override def walk(bytes: Array[Byte]): Any = PngPixelUtil.stats(bytes)
   override protected def withNewChildInternal(newChild: Expression): PngPixelStats =
     copy(child = newChild)
 }
@@ -288,24 +251,11 @@ object PngPixelStats {
   * [[PngPixelUtil.dhash]] for the exact-integer spec. Same scan-side
   * contract as [[PngPixelStats]]: media bytes never shuffle, only the
   * (decoded, 64-bit hash) struct leaves the projection. */
-case class PngDhash(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class PngDhash(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = false) {
   override def dataType: DataType = PngDhash.schema
-
   override def prettyName: String = "png_dhash"
-
-  override protected def nullSafeEval(v: Any): Any =
-    PngPixelUtil.dhash(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PngPixelUtil.dhash($c)")
-
+  override def walk(bytes: Array[Byte]): Any = PngPixelUtil.dhash(bytes)
   override protected def withNewChildInternal(newChild: Expression): PngDhash =
     copy(child = newChild)
 }
@@ -355,86 +305,14 @@ object PngThumbUtil {
 /** Nearest-neighbor PNG thumbnail as a native expression — see
   * [[PngThumbUtil.thumbnail]] for semantics and the degrade
   * contract. */
-case class PngThumbnail(child: Expression, dim: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
+case class PngThumbnail(child: Expression, dim: Expression) extends BinaryIntWalker {
   override def left: Expression = child
   override def right: Expression = dim
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (child.dataType, dim.dataType) match {
-      case (BinaryType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, int), got " +
-          s"(${a.simpleString}, ${b.simpleString})")
-    }
-
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
   override def prettyName: String = "png_thumbnail"
-
-  override protected def nullSafeEval(v: Any, m: Any): Any =
-    PngThumbUtil.thumbnail(v.asInstanceOf[Array[Byte]], m.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, m) => {
-      val tmp = ctx.freshName("thumb")
-      s"""
-         |byte[] $tmp = graft.functions.PngThumbUtil.thumbnail($c, $m);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
-
+  override def walk(bytes: Array[Byte], param: Int): Any =
+    PngThumbUtil.thumbnail(bytes, param)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PngThumbnail =
     copy(child = newLeft, dim = newRight)
-}
-
-object PngFunctions {
-
-  val fnName = "graft_png_pixel_stats"
-  val dhashFnName = "graft_png_dhash"
-  val thumbFnName = "graft_png_thumbnail"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$fnName takes 1 argument")
-          PngPixelStats(children.head)
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(dhashFnName)))
-      registry.createOrReplaceTempFunction(dhashFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$dhashFnName takes 1 argument")
-          PngDhash(children.head)
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(thumbFnName)))
-      registry.createOrReplaceTempFunction(thumbFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 2, s"$thumbFnName takes 2 arguments")
-          PngThumbnail(children.head, children(1))
-        },
-        "built-in")
-  }
-
-  def pngPixelStats(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, c)
-  }
-
-  def pngDhash(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(dhashFnName, c)
-  }
-
-  def pngThumbnail(c: Column, maxDim: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(thumbFnName, c, org.apache.spark.sql.functions.lit(maxDim))
-  }
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Product-quantization kernels (Jégou, Douze & Schmid, *Product
@@ -164,79 +163,17 @@ case class PqScore(left: Expression, right: Expression, ksub: Int)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registry bridge (the [[VectorFunctions]] pattern): the codebook and
+/** Column-level wrappers over [[NativeFunctions]]: the codebook and
   * shape parameters travel as foldable literals and are extracted at
   * construction. */
 object PqFunctions {
 
-  val encodeFnName = "graft_pq_encode"
-  val lutFnName = "graft_pq_lut"
-  val scoreFnName = "graft_pq_score"
+  def pqEncode(vec: Column, cb: Array[Int], m: Int, ksub: Int, ds: Int): Column =
+    NativeFunctions.pqEncode(vec, lit(cb), lit(m), lit(ksub), lit(ds))
 
-  private def litInt(e: Expression, what: String): Int = {
-    require(e.foldable, s"$what must be a literal")
-    e.eval() match {
-      case i: Int => i
-      case other => throw new IllegalArgumentException(
-        s"$what must be an int literal, got $other")
-    }
-  }
+  def pqLut(vec: Column, cb: Array[Int], m: Int, ksub: Int, ds: Int): Column =
+    NativeFunctions.pqLut(vec, lit(cb), lit(m), lit(ksub), lit(ds))
 
-  private def litIntArray(e: Expression, what: String): Array[Int] = {
-    require(e.foldable, s"$what must be a literal")
-    e.eval() match {
-      case a: ArrayData => a.toIntArray()
-      case other => throw new IllegalArgumentException(
-        s"$what must be an int array literal, got $other")
-    }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(encodeFnName)))
-      registry.createOrReplaceTempFunction(encodeFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 5,
-            s"$encodeFnName takes (vec, cb, m, ksub, ds)")
-          PqEncode(children.head, litIntArray(children(1), "cb"),
-            litInt(children(2), "m"), litInt(children(3), "ksub"),
-            litInt(children(4), "ds"))
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(lutFnName)))
-      registry.createOrReplaceTempFunction(lutFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 5,
-            s"$lutFnName takes (vec, cb, m, ksub, ds)")
-          PqLut(children.head, litIntArray(children(1), "cb"),
-            litInt(children(2), "m"), litInt(children(3), "ksub"),
-            litInt(children(4), "ds"))
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(scoreFnName)))
-      registry.createOrReplaceTempFunction(scoreFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 3, s"$scoreFnName takes (lut, codes, ksub)")
-          PqScore(children.head, children(1), litInt(children(2), "ksub"))
-        },
-        "built-in")
-  }
-
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
-
-  def pqEncode(vec: Column, cb: Array[Int], m: Int, ksub: Int, ds: Int): Column = {
-    ensureRegistered()
-    call_function(encodeFnName, vec, lit(cb), lit(m), lit(ksub), lit(ds))
-  }
-
-  def pqLut(vec: Column, cb: Array[Int], m: Int, ksub: Int, ds: Int): Column = {
-    ensureRegistered()
-    call_function(lutFnName, vec, lit(cb), lit(m), lit(ksub), lit(ds))
-  }
-
-  def pqScore(lut: Column, codes: Column, ksub: Int): Column = {
-    ensureRegistered()
-    call_function(scoreFnName, lut, codes, lit(ksub))
-  }
+  def pqScore(lut: Column, codes: Column, ksub: Int): Column =
+    NativeFunctions.pqScore(lut, codes, lit(ksub))
 }

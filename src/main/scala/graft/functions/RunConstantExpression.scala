@@ -5,12 +5,12 @@ import java.time.Instant
 import scala.util.Try
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral, JavaCode, TrueLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.DataType
 
 /** A value fixed when the plan is built and read when it runs: a run's
@@ -52,28 +52,8 @@ case class RunConstant(value: Any, dataType: DataType) extends LeafExpression {
 
 object RunConstants {
 
-  val fnName = "graft_run_constant"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1 && children.head.foldable,
-            s"$fnName takes 1 constant argument")
-          RunConstant(children.head.eval(), children.head.dataType)
-        },
-        "built-in")
-  }
-
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
-
   /** The value of the constant column `c` as a run constant. */
-  def of(c: Column): Column = {
-    ensureRegistered()
-    call_function(fnName, c)
-  }
+  def of(c: Column): Column = NativeFunctions.runConstant(c)
 
   /** The current instant, taken now, as a timestamp run constant. */
   def now(): Column = of(lit(Instant.now()))

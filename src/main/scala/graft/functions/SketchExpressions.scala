@@ -2,13 +2,12 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -79,26 +78,9 @@ case class BloomMightContain(left: Expression, right: Expression)
 
 object SketchFunctions {
 
-  val fnName = "graft_bloom_might_contain"
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 2, s"$fnName takes (key, filterBytes)")
-          BloomMightContain(children.head, children(1))
-        },
-        "built-in")
-  }
-
   def bloomMightContain(key: Column, filter: BloomFilter): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    val bytes = {
-      val out = new java.io.ByteArrayOutputStream()
-      filter.writeTo(out)
-      out.toByteArray
-    }
-    call_function(fnName, key, lit(bytes))
+    val out = new java.io.ByteArrayOutputStream()
+    filter.writeTo(out)
+    NativeFunctions.bloomMightContain(key, lit(out.toByteArray))
   }
 }

@@ -2,16 +2,14 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared eval path for [[NfcNormalize]] — a plain object so the
+/** Shared eval path for [[UnicodeNormalize]] — a plain object so the
   * generated Java can call it through the static forwarder
   * (`graft.functions.NfcStringUtil.normalize(...)`), keeping the
   * expression inside whole-stage codegen exactly like Spark's own
@@ -82,41 +80,11 @@ object UnicodeNormalize {
 
 object StringFunctions {
 
-  val nfcFnName = "graft_nfc_normalize"
-  val nfkcFnName = "graft_nfkc_normalize"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(nfcFnName)))
-      registry.createOrReplaceTempFunction(nfcFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$nfcFnName takes 1 argument")
-          UnicodeNormalize(children.head)
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(nfkcFnName)))
-      registry.createOrReplaceTempFunction(nfkcFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$nfkcFnName takes 1 argument")
-          UnicodeNormalize(children.head, "NFKC")
-        },
-        "built-in")
-  }
-
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
-
-  def nfcNormalize(c: Column): Column = {
-    ensureRegistered()
-    call_function(nfcFnName, c)
-  }
+  def nfcNormalize(c: Column): Column = NativeFunctions.nfcNormalize(c)
 
   /** Compatibility fold (NFKC) — tokenizer-prep normalization: folds
     * ligatures, full-width forms, and other compatibility variants on
     * top of canonical composition. No DuckDB twin exists, so this path
     * is spec-verified (StringExpressionsSpec) rather than oracled. */
-  def nfkcNormalize(c: Column): Column = {
-    ensureRegistered()
-    call_function(nfkcFnName, c)
-  }
+  def nfkcNormalize(c: Column): Column = NativeFunctions.nfkcNormalize(c)
 }

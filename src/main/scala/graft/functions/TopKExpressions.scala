@@ -4,14 +4,13 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** `graft_top_k_by(value, id, k)` — exact bounded top-k as a NATIVE
@@ -246,45 +245,14 @@ case class FrequentByLong(keyExpr: Expression, kExpr: Expression,
 
 object TopKFunctions {
 
-  val fnName = "graft_top_k_by"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 3, s"$fnName takes 3 arguments")
-          TopKByLong(children.head, children(1), children(2))
-        },
-        "built-in")
-  }
-
   /** Per-group exact top-`k` (value DESC, id ASC) as
     * array<struct<v,id>> — use inside `.agg(...)`, then
     * posexplode downstream for (rank, v, id) rows. */
-  def topKBy(value: Column, id: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, value, id, lit(k))
-  }
-
-  val frequentFnName = "graft_frequent_by"
-
-  private[functions] def registerFrequent(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(frequentFnName)))
-      registry.createOrReplaceTempFunction(frequentFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 2, s"$frequentFnName takes 2 arguments")
-          FrequentByLong(children.head, children(1))
-        },
-        "built-in")
-  }
+  def topKBy(value: Column, id: Column, k: Int): Column =
+    NativeFunctions.topKBy(value, id, lit(k))
 
   /** Per-group Misra–Gries frequent-item candidates with O(k) state —
     * array<struct<id,c>>; every key with frequency > n/(k+1) is
     * guaranteed present, estimates within n/(k+1) below truth. */
-  def frequentBy(key: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(registerFrequent)
-    call_function(frequentFnName, key, lit(k))
-  }
+  def frequentBy(key: Column, k: Int): Column = NativeFunctions.frequentBy(key, lit(k))
 }

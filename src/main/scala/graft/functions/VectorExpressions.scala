@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Native dot product over two `array<float>` columns.
@@ -224,121 +223,16 @@ case class FloatVectorBandKeys(child: Expression, bands: Int, bits: Int, dim: In
     copy(child = newChild)
 }
 
-/** Column-level wrappers. The Column↔Expression bridge is private in
-  * Spark 4, so the expression goes through the session's
-  * FunctionRegistry + `call_function` — registered idempotently on
-  * the active session. Production deployments can instead install
-  * [[GraftExtensions]] via `spark.sql.extensions`. */
+/** Column-level wrappers over [[NativeFunctions]]. */
 object VectorFunctions {
 
-  val fnName = "graft_vec_dot"
-  val bandKeysFnName = "graft_band_keys"
-
-  private def litInt(e: Expression, what: String): Int = {
-    require(e.foldable, s"$what must be a literal")
-    e.eval() match {
-      case i: Int => i
-      case other => throw new IllegalArgumentException(
-        s"$what must be an int literal, got $other")
-    }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 2, s"$fnName takes 2 arguments")
-          FloatVectorDot(children.head, children(1))
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(bandKeysFnName)))
-      registry.createOrReplaceTempFunction(bandKeysFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 4,
-            s"$bandKeysFnName takes (vec, bands, bits, dim)")
-          FloatVectorBandKeys(children.head, litInt(children(1), "bands"),
-            litInt(children(2), "bits"), litInt(children(3), "dim"))
-        },
-        "built-in")
-  }
-
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach(register)
-
-  def vecDot(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function(fnName, a, b)
-  }
+  def vecDot(a: Column, b: Column): Column = NativeFunctions.vecDot(a, b)
 
   def vecNorm(a: Column): Column =
     org.apache.spark.sql.functions.sqrt(vecDot(a, a))
 
   /** All sign-LSH band keys in one native expression — see
     * [[FloatVectorBandKeys]] for why this beats composing vecDot. */
-  def vecBandKeys(vec: Column, bands: Int, bits: Int, dim: Int): Column = {
-    ensureRegistered()
-    call_function(bandKeysFnName, vec, lit(bands), lit(bits), lit(dim))
-  }
-}
-
-/** `spark.sql.extensions=graft.functions.GraftExtensions` installs the
-  * native functions in every session, SQL included. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVectorDot].getName, "vec_dot"),
-      { children: Seq[Expression] =>
-        require(children.size == 2, "vec_dot takes 2 arguments")
-        FloatVectorDot(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("vec_band_keys"),
-      new ExpressionInfo(classOf[FloatVectorBandKeys].getName, "vec_band_keys"),
-      { children: Seq[Expression] =>
-        require(children.size == 4, "vec_band_keys takes (vec, bands, bits, dim)")
-        def i(e: Expression, what: String): Int = {
-          require(e.foldable, s"$what must be a literal")
-          e.eval().asInstanceOf[Int]
-        }
-        FloatVectorBandKeys(children.head, i(children(1), "bands"),
-          i(children(2), "bits"), i(children(3), "dim"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "nfc_normalize"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "nfc_normalize takes 1 argument")
-        UnicodeNormalize(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("nfkc_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "nfkc_normalize"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "nfkc_normalize takes 1 argument")
-        UnicodeNormalize(children.head, "NFKC")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("png_pixel_stats"),
-      new ExpressionInfo(classOf[PngPixelStats].getName, "png_pixel_stats"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "png_pixel_stats takes 1 argument")
-        PngPixelStats(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("png_dhash"),
-      new ExpressionInfo(classOf[PngDhash].getName, "png_dhash"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "png_dhash takes 1 argument")
-        PngDhash(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("jpeg_meta"),
-      new ExpressionInfo(classOf[JpegMeta].getName, "jpeg_meta"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "jpeg_meta takes 1 argument")
-        JpegMeta(children.head)
-      }))
-  }
+  def vecBandKeys(vec: Column, bands: Int, bits: Int, dim: Int): Column =
+    NativeFunctions.bandKeys(vec, lit(bands), lit(bits), lit(dim))
 }

@@ -1,14 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -124,30 +119,11 @@ object WarcRecordUtil {
   * [[WarcRecordUtil.records]]. `withBlock` selects the payload-
   * carrying extraction variant. */
 case class WarcRecords(child: Expression, withBlock: Boolean)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+    extends BinaryWalker(walkMayReturnNull = true) {
   override def dataType: DataType =
     if (withBlock) WarcRecords.schemaWithBlock else WarcRecords.schema
-
   override def prettyName: String = "warc_records"
-
-  override protected def nullSafeEval(v: Any): Any =
-    WarcRecordUtil.records(v.asInstanceOf[Array[Byte]], withBlock)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // nullSafeCodeGen with an explicit isNull: records() returns null
-    // for malformed input (the GifFrames/Mp4Tracks device)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WarcRecordUtil.records($c, $withBlock);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
+  override def walk(bytes: Array[Byte]): Any = WarcRecordUtil.records(bytes, withBlock)
   override protected def withNewChildInternal(newChild: Expression): WarcRecords =
     copy(child = newChild)
 }
@@ -165,38 +141,4 @@ object WarcRecords {
   val schemaWithBlock: DataType = ArrayType(
     StructType(fields :+ StructField("block", BinaryType, nullable = false)),
     containsNull = false)
-}
-
-object WarcFunctions {
-
-  val fnName = "graft_warc_records"
-  val payloadsFnName = "graft_warc_payloads"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$fnName takes 1 argument")
-          WarcRecords(children.head, withBlock = false)
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(payloadsFnName)))
-      registry.createOrReplaceTempFunction(payloadsFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$payloadsFnName takes 1 argument")
-          WarcRecords(children.head, withBlock = true)
-        },
-        "built-in")
-  }
-
-  def warcRecords(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, c)
-  }
-
-  def warcPayloads(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(payloadsFnName, c)
-  }
 }

@@ -1,18 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
-/** Shared eval path for [[WavPcmStats]] — static-forwarder object so
-  * whole-stage codegen emits one call per row (the [[PngPixelUtil]]
-  * pattern). REAL audio sample decode for canonical PCM16 WAV
+import graft.functions.WalkBytes._
+
+/** Shared eval path for [[WavPcmStats]] and the other WAV walkers
+  * (the [[PngPixelUtil]] pattern: one call per row inside whole-stage
+  * codegen). REAL audio sample decode for canonical PCM16 WAV
   * (RIFF/WAVE): chunk walk (word-aligned, ancillary chunks skipped) →
   * `fmt ` validation → little-endian int16 reads over the `data`
   * payload → exact integer sample stats. The per-channel-0
@@ -35,18 +32,7 @@ object WavPcmUtil {
     * so the decode declines rather than trusting the size field. */
   val MaxSamples: Long = 1L << 24
 
-  private val NotDecoded: InternalRow = {
-    val r = new GenericInternalRow(9)
-    r.update(0, false)
-    r // fields 1-8 stay null
-  }
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
+  private val NotDecoded: InternalRow = notDecoded(9)
 
   /** Located canonical PCM16 payload: where the interleaved samples
     * live and how to read them. Null result = undecodable. */
@@ -188,11 +174,7 @@ object WavPcmUtil {
 
   private val Segments = 65 // 64 adjacent-energy comparison bits
 
-  private val NoFingerprint: InternalRow = {
-    val r = new GenericInternalRow(2)
-    r.update(0, false)
-    r
-  }
+  private val NoFingerprint: InternalRow = notDecoded(2)
 
   /** Perceptual audio fingerprint — the energy-envelope analogue of
     * [[PngPixelUtil.dhash]]: channel 0's samples are split into 65
@@ -229,10 +211,7 @@ object WavPcmUtil {
         hash |= 1L << s
       s += 1
     }
-    val row = new GenericInternalRow(2)
-    row.update(0, true)
-    row.update(1, hash)
-    row
+    decodedHash(hash)
   }
 }
 
@@ -240,24 +219,11 @@ object WavPcmUtil {
   * audio rung of the multimodal pipeline, same contract as
   * [[PngPixelStats]]: runs in the scan-side projection, the media
   * bytes never shuffle, only the 9-field integer stats row leaves. */
-case class WavPcmStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class WavPcmStats(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = false) {
   override def dataType: DataType = WavPcmStats.schema
-
   override def prettyName: String = "wav_pcm_stats"
-
-  override protected def nullSafeEval(v: Any): Any =
-    WavPcmUtil.stats(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WavPcmUtil.stats($c)")
-
+  override def walk(bytes: Array[Byte]): Any = WavPcmUtil.stats(bytes)
   override protected def withNewChildInternal(newChild: Expression): WavPcmStats =
     copy(child = newChild)
 }
@@ -275,24 +241,11 @@ object WavPcmStats {
 /** Perceptual audio fingerprint of a PCM16 WAV blob — see
   * [[WavPcmUtil.fingerprint]] for the exact-integer spec. Scan-side
   * like [[WavPcmStats]]: only (decoded, 64-bit hash) leaves. */
-case class WavFingerprint(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${other.simpleString}")
-  }
-
+case class WavFingerprint(child: Expression)
+    extends BinaryWalker(walkMayReturnNull = false) {
   override def dataType: DataType = WavFingerprint.schema
-
   override def prettyName: String = "wav_fingerprint"
-
-  override protected def nullSafeEval(v: Any): Any =
-    WavPcmUtil.fingerprint(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WavPcmUtil.fingerprint($c)")
-
+  override def walk(bytes: Array[Byte]): Any = WavPcmUtil.fingerprint(bytes)
   override protected def withNewChildInternal(newChild: Expression): WavFingerprint =
     copy(child = newChild)
 }
@@ -308,40 +261,12 @@ object WavFingerprint {
   * media bytes never shuffle, only ≤ ⌈samples/frameSize⌉ five-integer
   * structs leave the projection (explode them INTO the shuffle only
   * when the query needs per-frame rows). */
-case class WavFrameFeatures(child: Expression, frame: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
+case class WavFrameFeatures(child: Expression, frame: Expression) extends BinaryIntWalker {
   override def left: Expression = child
   override def right: Expression = frame
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (child.dataType, frame.dataType) match {
-      case (BinaryType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, int), got " +
-          s"(${a.simpleString}, ${b.simpleString})")
-    }
-
   override def dataType: DataType = WavFrameFeatures.schema
-  override def nullable: Boolean = true
-
   override def prettyName: String = "wav_frame_features"
-
-  override protected def nullSafeEval(v: Any, f: Any): Any =
-    WavPcmUtil.frameFeatures(v.asInstanceOf[Array[Byte]],
-      f.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, f) => {
-      val tmp = ctx.freshName("frames")
-      s"""
-         |Object $tmp = graft.functions.WavPcmUtil.frameFeatures($c, $f);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} =
-         |  (org.apache.spark.sql.catalyst.util.ArrayData) $tmp; }
-       """.stripMargin
-    })
-
+  override def walk(bytes: Array[Byte], param: Int): Any = WavPcmUtil.frameFeatures(bytes, param)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): WavFrameFeatures =
     copy(child = newLeft, frame = newRight)
@@ -397,101 +322,13 @@ object WavDecimUtil {
 /** PCM16 decimation as a native expression — see
   * [[WavDecimUtil.decimate]] for semantics and the degrade
   * contract. */
-case class WavDecimate(child: Expression, factor: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
+case class WavDecimate(child: Expression, factor: Expression) extends BinaryIntWalker {
   override def left: Expression = child
   override def right: Expression = factor
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (child.dataType, factor.dataType) match {
-      case (BinaryType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, int), got " +
-          s"(${a.simpleString}, ${b.simpleString})")
-    }
-
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
   override def prettyName: String = "wav_decimate"
-
-  override protected def nullSafeEval(v: Any, f: Any): Any =
-    WavDecimUtil.decimate(v.asInstanceOf[Array[Byte]], f.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, f) => {
-      val tmp = ctx.freshName("decimated")
-      s"""
-         |byte[] $tmp = graft.functions.WavDecimUtil.decimate($c, $f);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
-
+  override def walk(bytes: Array[Byte], param: Int): Any = WavDecimUtil.decimate(bytes, param)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): WavDecimate =
     copy(child = newLeft, factor = newRight)
-}
-
-object WavFunctions {
-
-  val fnName = "graft_wav_pcm_stats"
-  val fingerprintFnName = "graft_wav_fingerprint"
-  val frameFeaturesFnName = "graft_wav_frame_features"
-  val decimateFnName = "graft_wav_decimate"
-
-  private[functions] def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.createOrReplaceTempFunction(fnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$fnName takes 1 argument")
-          WavPcmStats(children.head)
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(fingerprintFnName)))
-      registry.createOrReplaceTempFunction(fingerprintFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$fingerprintFnName takes 1 argument")
-          WavFingerprint(children.head)
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(frameFeaturesFnName)))
-      registry.createOrReplaceTempFunction(frameFeaturesFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 2, s"$frameFeaturesFnName takes 2 arguments")
-          WavFrameFeatures(children.head, children(1))
-        },
-        "built-in")
-    if (!registry.functionExists(FunctionIdentifier(decimateFnName)))
-      registry.createOrReplaceTempFunction(decimateFnName,
-        { children: Seq[Expression] =>
-          require(children.size == 2, s"$decimateFnName takes 2 arguments")
-          WavDecimate(children.head, children(1))
-        },
-        "built-in")
-  }
-
-  def wavPcmStats(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fnName, c)
-  }
-
-  def wavFingerprint(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(fingerprintFnName, c)
-  }
-
-  def wavFrameFeatures(c: Column, frameSize: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(frameFeaturesFnName, c,
-      org.apache.spark.sql.functions.lit(frameSize))
-  }
-
-  def wavDecimate(c: Column, factor: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(decimateFnName, c,
-      org.apache.spark.sql.functions.lit(factor))
-  }
 }

@@ -51,5 +51,5 @@ object Id3 {
     * language routing, PRIV-blob policy) before any sample decode.
     * Malformed tags yield NULL (whole array), never an error. */
   def id3Frames(bin: Column): Column =
-    graft.functions.Id3Functions.id3Frames(bin)
+    graft.functions.NativeFunctions.id3Frames(bin)
 }

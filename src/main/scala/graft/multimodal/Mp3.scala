@@ -60,5 +60,5 @@ object Mp3 {
 
   /** Per-frame MP3 inventory — see [[graft.functions.Mp3FrameUtil]]. */
   def mp3Frames(bin: Column): Column =
-    graft.functions.Mp3Functions.mp3Frames(bin)
+    graft.functions.NativeFunctions.mp3Frames(bin)
 }

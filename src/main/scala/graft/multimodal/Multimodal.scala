@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.NativeFunctions
+
 /** Multimodal-column plumbing for LLM training-data pipelines: media
   * (image/audio/video) as opaque `binary` columns with typed metadata,
   * real container-header parses, REAL PNG pixel decode for RGB8
@@ -30,7 +32,7 @@ object Multimodal {
     * error. Runs scan-side — the bytes never shuffle, only the stats
     * row leaves the projection. */
   def pngPixelStats(bin: Column): Column =
-    graft.functions.PngFunctions.pngPixelStats(bin)
+    NativeFunctions.pngPixelStats(bin)
 
   /** REAL audio sample decode for canonical PCM16 WAV: RIFF chunk walk
     * + little-endian int16 sample reads → exact integer stats incl.
@@ -39,7 +41,7 @@ object Multimodal {
     * decoded = false, never an error. Scan-side like [[pngPixelStats]]:
     * the audio bytes never shuffle. */
   def wavPcmStats(bin: Column): Column =
-    graft.functions.WavFunctions.wavPcmStats(bin)
+    NativeFunctions.wavPcmStats(bin)
 
   /** JPEG header metadata via the real ITU-T T.81 marker-segment
     * walk: JFIF presence, SOF0/SOF2 frame header (precision,
@@ -51,7 +53,7 @@ object Multimodal {
     * error. Scan-side like [[pngPixelStats]]: the bytes never
     * shuffle. */
   def jpegMeta(bin: Column): Column =
-    graft.functions.JpegFunctions.jpegMeta(bin)
+    NativeFunctions.jpegMeta(bin)
 
   /** GIF header metadata (dimensions, palette size, frame and
     * extension counts, structural validity) via the native
@@ -59,7 +61,7 @@ object Multimodal {
     * for the third image format real crawls carry: malformed blobs
     * yield decoded = false, never an error; bytes never shuffle. */
   def gifMeta(bin: Column): Column =
-    graft.functions.GifFunctions.gifMeta(bin)
+    NativeFunctions.gifMeta(bin)
 
   /** Per-frame GIF inventory (position, dimensions, local palette,
     * GCE delay/disposal — one struct per image descriptor in stream
@@ -70,7 +72,7 @@ object Multimodal {
     * BEFORE any pixel decode is paid. Malformed blobs yield NULL
     * (whole array), never an error; bytes never shuffle. */
   def gifFrames(bin: Column): Column =
-    graft.functions.GifFunctions.gifFrames(bin)
+    NativeFunctions.gifFrames(bin)
 
   /** MP4 / ISO-BMFF container metadata (major brand, mvhd
     * timescale/duration/duration_ms, track count, top-level box
@@ -82,7 +84,7 @@ object Multimodal {
     * blobs yield decoded = false, never an error; bytes never
     * shuffle. */
   def mp4Header(bin: Column): Column =
-    graft.functions.Mp4Functions.mp4Header(bin)
+    NativeFunctions.mp4Header(bin)
 
   /** Per-track MP4 inventory (one struct per `trak` in stream order:
     * id, tkhd version, duration, pixel dimensions from the 16.16
@@ -92,7 +94,7 @@ object Multimodal {
     * Malformed blobs yield NULL (whole array), never an error; bytes
     * never shuffle. */
   def mp4Tracks(bin: Column): Column =
-    graft.functions.Mp4Functions.mp4Tracks(bin)
+    NativeFunctions.mp4Tracks(bin)
 
   /** Per-SAMPLE MP4 inventory (one struct per sample per track:
     * track id, media timescale, 1-based index, decoding timestamp,
@@ -107,7 +109,7 @@ object Multimodal {
     * malformation, or table disagreement yields NULL (whole array),
     * never an error. Bytes never shuffle. */
   def mp4Samples(bin: Column): Column =
-    graft.functions.Mp4Functions.mp4Samples(bin)
+    NativeFunctions.mp4Samples(bin)
 
   /** REAL image resize: nearest-neighbor PNG thumbnail (decode →
     * integer-stride downsample → re-encode, all java.util.zip — see
@@ -115,7 +117,7 @@ object Multimodal {
     * degrade contract). Runs scan-side; the ~s²-smaller thumbnail
     * column is what leaves the projection, never the originals. */
   def pngThumbnail(bin: Column, maxDim: Int): Column =
-    graft.functions.PngFunctions.pngThumbnail(bin, maxDim)
+    NativeFunctions.pngThumbnail(bin, lit(maxDim))
 
   /** REAL audio resample: PCM16 decimation — keep every `factor`-th
     * frame, re-encode at the divided rate (see
@@ -123,14 +125,14 @@ object Multimodal {
     * stated). The audio frame-sample primitive; scan-side, the
     * ~factor-smaller audio column is what leaves the projection. */
   def wavDecimate(bin: Column, factor: Int): Column =
-    graft.functions.WavFunctions.wavDecimate(bin, factor)
+    NativeFunctions.wavDecimate(bin, lit(factor))
 
   /** Perceptual audio fingerprint of a PCM16 WAV: 65-segment energy
     * envelope → 64 adjacent-mean comparison bits, gain-invariant
     * (see [[graft.functions.WavPcmUtil.fingerprint]]); scan-side,
     * audio bytes never shuffle. */
   def wavFingerprint(bin: Column): Column =
-    graft.functions.WavFunctions.wavFingerprint(bin)
+    NativeFunctions.wavFingerprint(bin)
 
   /** Per-frame channel-0 audio features (energy Σv², zero crossings,
     * peak |v|) over fixed-size sample windows — the exact-integer
@@ -138,7 +140,7 @@ object Multimodal {
     * [[graft.functions.WavPcmUtil.frameFeatures]]). Scan-side: only
     * the five-integer frame structs leave; explode downstream. */
   def wavFrameFeatures(bin: Column, frameSize: Int): Column =
-    graft.functions.WavFunctions.wavFrameFeatures(bin, frameSize)
+    NativeFunctions.wavFrameFeatures(bin, lit(frameSize))
 
   /** Silence-trim boundaries — the voice-activity gate composed on
     * [[wavFrameFeatures]]' exact-integer energies (the canonical use
@@ -179,7 +181,7 @@ object Multimodal {
     * which change every raw byte (where content-hash dedup goes
     * blind); scan-side, bytes never shuffle. */
   def pngDhash(bin: Column): Column =
-    graft.functions.PngFunctions.pngDhash(bin)
+    NativeFunctions.pngDhash(bin)
 
   /** IMAGE near-duplicate pairs — visual dedup for a multimodal
     * corpus: dHash each image at the scan, then find all pairs within

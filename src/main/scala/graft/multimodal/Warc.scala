@@ -36,7 +36,7 @@ object Warc {
     * the archive bytes ever shuffling. Malformed archives yield NULL
     * (whole array), never an error. */
   def warcRecords(bin: Column): Column =
-    graft.functions.WarcFunctions.warcRecords(bin)
+    graft.functions.NativeFunctions.warcRecords(bin)
 
   /** The payload-carrying variant (adds a `block` binary field): the
     * extraction path a WARC→text pipeline explodes — filter to
@@ -46,5 +46,5 @@ object Warc {
     * expression result, so the metadata-only inventory must never
     * carry the blocks. */
   def warcPayloads(bin: Column): Column =
-    graft.functions.WarcFunctions.warcPayloads(bin)
+    graft.functions.NativeFunctions.warcPayloads(bin)
 }

@@ -56,7 +56,7 @@ object TextAnalysis {
     * "e"+U+0301 decomposed are byte-different, so without it visually
     * identical documents land in different dedup buckets and inflate
     * the vocabulary. Runs through the native codegen'd
-    * [[graft.functions.NfcNormalize]] expression (pure projection, one
+    * [[graft.functions.UnicodeNormalize]] expression (pure projection, one
     * static call per row, already-NFC text returned without copying);
     * Unicode normalization stability across implementations is what
     * makes the DuckDB `nfc_normalize` oracle legitimate. */

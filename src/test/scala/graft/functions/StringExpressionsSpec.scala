@@ -76,7 +76,7 @@ class StringExpressionsSpec extends SparkSpec {
   }
 
   test("nfc_normalize is callable from SQL once registered") {
-    StringFunctions.nfcNormalize(lit("x")) // forces temp-function registration
+    NativeFunctions.register(spark)
     spark.sql(s"SELECT graft_nfc_normalize('$decomposed') AS n")
       .as[String].collect() shouldBe Array(composed)
   }
