@@ -15,7 +15,8 @@ blanked before parsing, so braces and parentheses inside them do not
 count.
 
 Usage: python3 scripts/public_params.py FILE.scala [...]
-Prints per file: public defs, defaulted params.
+Prints per file: public defs, defaulted params; then a final line with
+the totals over all files.
 """
 import re
 import sys
@@ -142,6 +143,8 @@ def count(path):
 
 
 if __name__ == "__main__":
-    for path in sys.argv[1:]:
-        d, p = count(path)
+    rows = [(path, *count(path)) for path in sys.argv[1:]]
+    for path, d, p in rows:
         print(f"{path}: public_defs={d} defaulted_params={p}")
+    print(f"total: public_defs={sum(r[1] for r in rows)} "
+          f"defaulted_params={sum(r[2] for r in rows)}")

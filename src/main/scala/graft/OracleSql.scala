@@ -666,7 +666,7 @@ sh AS (
   FROM toks WHERE len(tokens) >= 3)"""
 
   /** [[shingleCtes]] plus `xs`, each shingle's mod-P hash — the SQL
-    * twin of [[graft.dedup.Dedup.shingleHashes]]. */
+    * twin of [[graft.dedup.Dedup.explodedShingleHashes]]. */
   private def shingleHashCtes(from: String): String = s"""${shingleCtes(from)},
 xs AS (
   SELECT doc_id, list_transform(shingles,
@@ -678,6 +678,37 @@ xs AS (
   val shinglesCte: String = s"""
 WITH ${shingleHashCtes("documents")}
 """
+
+  /** `ds`: each doc's distinct shingle hashes, over `xs`. */
+  private val distinctShinglesCte: String =
+    "ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs)"
+
+  /** `posting` (one row per distinct doc shingle) over `ds`, and `dfs`,
+    * each shingle's document frequency. */
+  private val postingDfCtes: String =
+    """posting AS (SELECT doc_id, unnest(ss) AS shingle FROM ds),
+dfs AS (SELECT shingle, count(*) AS df FROM posting GROUP BY 1)"""
+
+  /** [[shinglesCte]] plus q19's df-capped distinct postings: `ds`,
+    * `posting` (with each doc's full set size `n_sh`), the cap-100
+    * `rare` shingles and the capped postings `f` — the twin of
+    * Dedup's postings and df-cap steps. Shared by q19, q157 and q226;
+    * ends with the comma before the next CTE. */
+  private val cappedPostingCtes: String = shinglesCte + s"""
+, $distinctShinglesCte,
+posting AS (SELECT doc_id, len(ss) AS n_sh, unnest(ss) AS shingle FROM ds),
+rare AS (SELECT shingle FROM posting GROUP BY shingle HAVING count(*) <= 100),
+f AS (SELECT p.* FROM posting p JOIN rare USING (shingle)),"""
+
+  /** [[cappedPostingCtes]] plus `common`, the shared-shingle count per
+    * (doc_a < doc_b) pair with both set sizes — q19's Jaccard
+    * skeleton, which q226 replays at threshold 0.5. */
+  private val jaccardCommonCtes: String = cappedPostingCtes + """
+common AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_sh AS n_a, b.n_sh AS n_b,
+         count(*) AS common
+  FROM f a JOIN f b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2, 3, 4)"""
 
   /** Governed-bucket clone corpus for q346/q348/q369, the twin of
     * SparkEntry's `cloneCorpus`: docs 0-59 plus 24 " zz<r>" clones
@@ -777,16 +808,7 @@ SELECT doc_a, doc_b, est_jaccard FROM (
 WHERE est_jaccard >= 0.5 ORDER BY doc_a, doc_b"""
   }
 
-  val q19_jaccard_pairs: String = shinglesCte + """
-, ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs),
-posting AS (SELECT doc_id, len(ss) AS n_sh, unnest(ss) AS shingle FROM ds),
-rare AS (SELECT shingle FROM posting GROUP BY shingle HAVING count(*) <= 100),
-f AS (SELECT p.* FROM posting p JOIN rare USING (shingle)),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_sh AS n_a, b.n_sh AS n_b,
-         count(*) AS common
-  FROM f a JOIN f b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2, 3, 4)
+  val q19_jaccard_pairs: String = jaccardCommonCtes + """
 SELECT doc_a, doc_b, jaccard FROM (
   SELECT doc_a, doc_b,
     CAST(common AS DOUBLE) / CAST(n_a + n_b - common AS DOUBLE) AS jaccard
@@ -1662,11 +1684,7 @@ FROM m GROUP BY doc_id ORDER BY doc_id"""
   /** q157 twin: the q19 postings/df-cap construction with the
     * directional self-join (`<>`, both orders) and the exact floor
     * permille against the CONTAINED side's full shingle count. */
-  val q157_containment_pairs: String = shinglesCte + """
-, ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs),
-posting AS (SELECT doc_id, len(ss) AS n_sh, unnest(ss) AS shingle FROM ds),
-rare AS (SELECT shingle FROM posting GROUP BY shingle HAVING count(*) <= 100),
-f AS (SELECT p.* FROM posting p JOIN rare USING (shingle)),
+  val q157_containment_pairs: String = cappedPostingCtes + """
 common AS (
   SELECT a.doc_id AS contained, b.doc_id AS container,
          a.n_sh AS n_contained, count(*) AS common
@@ -1841,10 +1859,18 @@ FROM r GROUP BY 1 ORDER BY 1"""
     * replay). Shared by q236 (tau 700), q269 (tau 500 variant) and
     * q305 (tau 900) so a re-parameterization is a function argument,
     * never string surgery on another query's SQL. */
-  private def prefixFilterCmChain(tau: Int): String = shinglesCte + s"""
-, ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs),
-posting AS (SELECT doc_id, unnest(ss) AS shingle FROM ds),
-dfs AS (SELECT shingle, count(*) AS df FROM posting GROUP BY 1),
+  private def prefixFilterCmChain(tau: Int): String =
+    shinglesCte + prefixCmCtes(tau) + "\n"
+
+  /** The `ds`-led prefix-filter CTEs after an `xs` CTE, through `cm`:
+    * [[prefixFilterCmChain]] without the shingle CTEs in front, as
+    * q269 splices it after its own corpus. */
+  private def prefixCmCtes(tau: Int): String =
+    s"\n, $distinctShinglesCte,\n${prefixPostingCtes(tau)}"
+
+  /** The prefix-filter chain from `posting` through `cm` at permille
+    * threshold `tau`; reads `ds`. */
+  private def prefixPostingCtes(tau: Int): String = s"""$postingDfCtes,
 rk AS (
   SELECT p.doc_id, p.shingle,
     count(*) OVER (PARTITION BY p.doc_id) AS n_sh,
@@ -1863,8 +1889,7 @@ cm AS (
   FROM cand c
     JOIN posting pa ON pa.doc_id = c.doc_a
     JOIN posting pb ON pb.doc_id = c.doc_b AND pb.shingle = pa.shingle
-  GROUP BY 1, 2, 3, 4)
-"""
+  GROUP BY 1, 2, 3, 4)"""
 
   /** q236 twin of [[graft.dedup.Dedup.prefixFilterPairs]]: the
     * tau-700 [[prefixFilterCmChain]] plus the verify threshold. */
@@ -2893,9 +2918,8 @@ ORDER BY q.q_permille"""
   val q296_weighted_jaccard: String = s"""
 WITH $prefixCorpusCte,
 ${shingleHashCtes("corpus")},
-ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs),
-posting AS (SELECT doc_id, unnest(ss) AS shingle FROM ds),
-dfs AS (SELECT shingle, count(*) AS df FROM posting GROUP BY 1),
+$distinctShinglesCte,
+$postingDfCtes,
 nd AS (SELECT count(DISTINCT doc_id) AS nd FROM posting),
 wt AS (
   SELECT shingle, df,
@@ -3109,28 +3133,8 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""
   val q288_contrastive_pairs: String = s"""
 WITH $prefixCorpusCte,
 ${shingleHashCtes("corpus")},
-ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs),
-posting AS (SELECT doc_id, unnest(ss) AS shingle FROM ds),
-dfs AS (SELECT shingle, count(*) AS df FROM posting GROUP BY 1),
-rk AS (
-  SELECT p.doc_id, p.shingle,
-    count(*) OVER (PARTITION BY p.doc_id) AS n_sh,
-    row_number() OVER (PARTITION BY p.doc_id ORDER BY d.df, p.shingle) AS rnk
-  FROM posting p JOIN dfs d USING (shingle)),
-pre AS (
-  SELECT doc_id, n_sh, shingle FROM rk
-  WHERE rnk <= n_sh - (700*n_sh + 999)//1000 + 1),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-    a.n_sh AS n_a, b.n_sh AS n_b
-  FROM pre a JOIN pre b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    AND b.n_sh*1000 >= a.n_sh*700 AND a.n_sh*1000 >= b.n_sh*700),
-cm AS (
-  SELECT c.doc_a, c.doc_b, c.n_a, c.n_b, count(*) AS common
-  FROM cand c
-    JOIN posting pa ON pa.doc_id = c.doc_a
-    JOIN posting pb ON pb.doc_id = c.doc_b AND pb.shingle = pa.shingle
-  GROUP BY 1, 2, 3, 4),
+$distinctShinglesCte,
+${prefixPostingCtes(700)},
 pos AS (
   SELECT doc_a AS anchor_id, doc_b AS pos_id,
     (common*1000)//(n_a + n_b - common) AS jac
@@ -3703,29 +3707,7 @@ SELECT node, root, depth, path FROM p ORDER BY node"""
     * for the per-cut components (the q131 discipline). */
   lazy val q269_threshold_audit: String = s"""
 WITH RECURSIVE $prefixCorpusCte,
-${shingleHashCtes("corpus")}
-, ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs),
-posting AS (SELECT doc_id, unnest(ss) AS shingle FROM ds),
-dfs AS (SELECT shingle, count(*) AS df FROM posting GROUP BY 1),
-rk AS (
-  SELECT p.doc_id, p.shingle,
-    count(*) OVER (PARTITION BY p.doc_id) AS n_sh,
-    row_number() OVER (PARTITION BY p.doc_id ORDER BY d.df, p.shingle) AS rnk
-  FROM posting p JOIN dfs d USING (shingle)),
-pre AS (
-  SELECT doc_id, n_sh, shingle FROM rk
-  WHERE rnk <= n_sh - (500*n_sh + 999)//1000 + 1),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-    a.n_sh AS n_a, b.n_sh AS n_b
-  FROM pre a JOIN pre b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    AND b.n_sh*1000 >= a.n_sh*500 AND a.n_sh*1000 >= b.n_sh*500),
-cm AS (
-  SELECT c.doc_a, c.doc_b, c.n_a, c.n_b, count(*) AS common
-  FROM cand c
-    JOIN posting pa ON pa.doc_id = c.doc_a
-    JOIN posting pb ON pb.doc_id = c.doc_b AND pb.shingle = pa.shingle
-  GROUP BY 1, 2, 3, 4),
+${shingleHashCtes("corpus")}${prefixCmCtes(500)},
 p5 AS (
   SELECT doc_a, doc_b, (common*1000)//(n_a + n_b - common) AS jac
   FROM cm WHERE common*1000 >= 500*(n_a + n_b - common)),
@@ -4982,16 +4964,7 @@ ORDER BY p.doc_id"""
     * full-outer-joined on the pair key, folded to the one-row P/R
     * report with permille floor divisions. */
   val q226_neardup_eval: String = {
-    val exact05 = shinglesCte + """
-, ds AS (SELECT doc_id, list_distinct(hs) AS ss FROM xs),
-posting AS (SELECT doc_id, len(ss) AS n_sh, unnest(ss) AS shingle FROM ds),
-rare AS (SELECT shingle FROM posting GROUP BY shingle HAVING count(*) <= 100),
-f AS (SELECT p.* FROM posting p JOIN rare USING (shingle)),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_sh AS n_a, b.n_sh AS n_b,
-         count(*) AS common
-  FROM f a JOIN f b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2, 3, 4)
+    val exact05 = jaccardCommonCtes + """
 SELECT doc_a, doc_b FROM (
   SELECT doc_a, doc_b,
     CAST(common AS DOUBLE) / CAST(n_a + n_b - common AS DOUBLE) AS jaccard

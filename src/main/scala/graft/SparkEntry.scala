@@ -3935,14 +3935,16 @@ object SparkEntry {
     // IS the plain filtered scan (q49 discipline); the file-subset
     // claim is ZoneMapSpec's metric assert.
     "q223_zone_map_scan" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-zonemap").toString + "/t"
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
-        .repartitionByRange(8, col("l_orderkey"))
-        .write.mode("overwrite").parquet(tmp)
-      graft.store.ZoneMap.writeZoneMap(s, tmp, Seq("l_orderkey"))
-      graft.store.ZoneMap.prunedScan(s, tmp, "l_orderkey",
+      val table = fixture("zonemap", dir) {
+        val p = scratch("zonemap", dir)
+        Tables.lineitem(s, dir)
+          .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
+          .repartitionByRange(8, col("l_orderkey"))
+          .write.mode("overwrite").parquet(p)
+        graft.store.ZoneMap.writeZoneMap(s, p, Seq("l_orderkey"))
+        p
+      }
+      graft.store.ZoneMap.prunedScan(s, table, "l_orderkey",
           lit(1000L), lit(5000L))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),

@@ -33,14 +33,13 @@ object ChunkDedup {
   /** One row per (doc, chunk): 0-based chunk index `ci`, the chunk's
     * space-joined text, its token count, and its md5. The last chunk
     * per doc may be shorter than k (`slice` clamps at the end). */
-  def chunks(docs: DataFrame, idCol: String = "doc_id",
-             textCol: String = "text", k: Int = 20): DataFrame = {
+  def chunks(docs: DataFrame, k: Int = 20): DataFrame = {
     require(k > 0, "chunk size must be positive")
     // Materialize the token array behind its own projection: the slice
     // below reads it per chunk row, and an inlined alias would re-run
     // the whole tokenization regexp per chunk (interpreted-HOF pitfall).
-    docs.select(col(idCol).as("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("__toks"))
+    docs.select(col("doc_id").as("doc_id"),
+        TextAnalysis.tokens(col("text")).as("__toks"))
       .filter(size(col("__toks")) > 0)
       .select(col("doc_id"), col("__toks"),
         explode(sequence(lit(0),
@@ -61,11 +60,10 @@ object ChunkDedup {
     * at least one OTHER document (within-document repetition is
     * repetition scoring's job, not dedup's); it is KEPT when it is the
     * globally first occurrence of its text, ordered by (doc_id, ci). */
-  def sharedChunkProfile(docs: DataFrame, idCol: String = "doc_id",
-                         textCol: String = "text", k: Int = 20): DataFrame = {
+  def sharedChunkProfile(docs: DataFrame, k: Int = 20): DataFrame = {
     val byHash = Window.partitionBy(col("chunk_md5"))
     val firstInstance = byHash.orderBy(col("doc_id"), col("ci"))
-    val flagged = chunks(docs, idCol, textCol, k)
+    val flagged = chunks(docs, k)
       // one window pass over the hash shuffle: canonical instance +
       // cross-doc sharing (min != max doc id over the hash's instances)
       .withColumn("__rn", row_number().over(firstInstance))

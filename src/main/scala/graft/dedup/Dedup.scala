@@ -23,11 +23,37 @@ import graft.text.TextAnalysis
   *  - all hashing is md5-derived modular arithmetic (no JVM-private
   *    hash seeds), so signatures are bit-reproducible across engines
   *    and across Spark versions, and every operator is oracle-checkable.
+  *
+  * Every operator reads `docs` as (`doc_id`, `text`) and shingles word
+  * 3-grams — the columns and the width the DuckDB twins in
+  * [[graft.OracleSql]] hard-code.
+  *
+  * The capped set-similarity joins — [[jaccardPairs]],
+  * [[weightedJaccardPairs]], [[containmentPairs]], and
+  * [[tfidfCosinePairs]] over terms — are one skeleton of three private
+  * parts, each operator being its measure's expressions over them:
+  *  - `postings`: distinct (doc_id, shingle) rows, localCheckpoint'd.
+  *    They feed FOUR consumers (the per-doc side table, the df cap and
+  *    both self-join sides) and Spark cannot share a subplan across
+  *    them — unmaterialized, the corpus is tokenized, shingled and
+  *    distinct'd four times. The checkpoint pays one posting-sized
+  *    write instead; postings are hashes, never text, so the write is
+  *    the cheap side of that trade at any corpus size;
+  *  - `pairAggregate`: the shingle-keyed self-join (`<` for the
+  *    symmetric measures, `=!=` for containment) and the measure's
+  *    own count/sum per pair;
+  *  - `withDocSide`: one broadcast join of a per-doc side table (set
+  *    size, weight sum, norm) onto one or both pair columns.
+  * [[prefixFilterPairs]] reuses the postings and df steps but keeps its
+  * own candidate join.
   */
 object Dedup {
 
   /** Modulus shared with [[TextAnalysis.tokenHash]] / the DuckDB oracle. */
   val P: Long = 1000000007L
+
+  /** Shingle width in tokens: the word 3-grams the oracle SQL hard-codes. */
+  private val ShingleWidth: Int = 3
 
   /** Fixed MinHash permutation coefficients (a·x + b mod P). Sixteen
     * arbitrary odd constants < 1e9, hardcoded so Spark and the oracle
@@ -54,29 +80,37 @@ object Dedup {
   /** Exact content dedup: one row survives per distinct text, chosen
     * deterministically (lowest id). Single shuffle on the 128-bit
     * content hash; no global sort. */
-  def dedupExact(docs: DataFrame, idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy(contentKey(col(textCol))).orderBy(col(idCol))
+  def dedupExact(docs: DataFrame): DataFrame = {
+    val w = Window.partitionBy(contentKey(col("text"))).orderBy(col("doc_id"))
     docs.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Word n-gram shingles over a token array (1-based element_at,
-    * mirroring the oracle's 1-based list indexing). Callers must
-    * filter size(tokens) >= n first: Spark's `sequence` runs
-    * backwards when start > stop. */
-  def shingles(tokens: Column, n: Int = 3): Column =
+  /** Word 3-gram shingles over a token array. Callers must filter
+    * size(tokens) >= 3 first, as for any word n-grams below. */
+  def shingles(tokens: Column): Column = wordGrams(tokens, ShingleWidth)
+
+  /** Word n-grams over a token array (1-based element_at, mirroring
+    * the oracle's 1-based list indexing). Callers must filter
+    * size(tokens) >= n first: Spark's `sequence` runs backwards when
+    * start > stop. */
+  private def wordGrams(tokens: Column, n: Int): Column =
     transform(sequence(lit(1), size(tokens) - (n - 1)),
       i => concat_ws(" ", (0 until n).map(j => element_at(tokens, i + lit(j))): _*))
 
-  /** doc_id + hashed-shingle array for docs long enough to shingle. */
-  def shingleHashes(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text", n: Int = 3): DataFrame = {
-    val toks = TextAnalysis.tokens(col(textCol))
-    docs.filter(size(toks) >= n)
-      .select(col(idCol).as("doc_id"),
-        transform(shingles(toks, n), TextAnalysis.tokenHash(_)).as("hs"))
-  }
+  /** (doc_id, `__toks`) per doc. The token array MUST be materialized
+    * behind its own projection: the gram lambda reads it n times per
+    * element, and interpreted HOF lambdas re-evaluate child subtrees
+    * per access — inlined, every shingle re-runs the whole regexp
+    * tokenization (measured 7× slower at sf0.1). scaleOut runs BEFORE
+    * the tokenize/shingle/md5 cascade: a one-row-group corpus file
+    * otherwise evaluates the whole cascade in a single scan task
+    * (graft.core.Par scaladoc; r19 opt, guide §2.5). */
+  private def tokenRows(docs: DataFrame): DataFrame =
+    // the doc_id self-alias is a Project of its own in some plans (q369)
+    graft.core.Par.scaleOut(
+        docs.select(col("doc_id").as("doc_id"), col("text").as("__txt")))
+      .select(col("doc_id"), TextAnalysis.tokens(col("__txt")).as("__toks"))
 
   /** One row per (doc_id, shingle hash) — the codegen'd path all
     * near-dup operators build on. Higher-order lambdas are interpreted
@@ -86,26 +120,55 @@ object Dedup {
     * exploded rows (measured 5-10× faster at sf0.1). The downstream
     * groupBy(doc_id) aggregates collapse map-side before any shuffle —
     * the exploded rows never cross the wire. */
-  def explodedShingleHashes(docs: DataFrame, idCol: String = "doc_id",
-                            textCol: String = "text", n: Int = 3,
-                            modP: Boolean = true): DataFrame = {
-    val h56 = conv(substring(md5(col("__sh").cast("binary")), 1, 14), 16, 10)
-      .cast("long")
-    // The token array MUST be materialized behind its own projection:
-    // the shingle lambda reads it 3× per element, and interpreted HOF
-    // lambdas re-evaluate child subtrees per access — inlined, every
-    // shingle re-runs the whole regexp tokenization (measured 7×
-    // slower at sf0.1).
-    // scaleOut BEFORE the tokenize/shingle/md5 cascade: a one-row-group
-    // corpus file otherwise evaluates the whole cascade in a single
-    // scan task (graft.core.Par scaladoc; r19 opt, guide §2.5)
-    graft.core.Par.scaleOut(docs.select(col(idCol).as("doc_id"),
-        col(textCol).as("__txt")))
-      .select(col("doc_id"), TextAnalysis.tokens(col("__txt")).as("__toks"))
-      .filter(size(col("__toks")) >= n)
-      .select(col("doc_id"), explode(shingles(col("__toks"), n)).as("__sh"))
+  def explodedShingleHashes(docs: DataFrame): DataFrame = shingleRows(docs, modP = true)
+
+  /** [[explodedShingleHashes]], or with the raw 56-bit hash when `modP`
+    * is off (SimHash needs 32 independent bits). */
+  private def shingleRows(docs: DataFrame, modP: Boolean): DataFrame = {
+    val h56 = tokenHash56(col("__sh"))
+    tokenRows(docs)
+      .filter(size(col("__toks")) >= ShingleWidth)
+      .select(col("doc_id"), explode(shingles(col("__toks"))).as("__sh"))
       .select(col("doc_id"), (if (modP) h56 % P else h56).as("shingle"))
   }
+
+  /** Distinct (doc_id, shingle) postings, localCheckpoint'd — the
+    * four-consumer materialization of the set-similarity skeleton
+    * (header). */
+  private def postings(docs: DataFrame): DataFrame =
+    explodedShingleHashes(docs).distinct().localCheckpoint()
+
+  /** (shingle, df): the document frequency of each posting shingle. */
+  private def docFreq(posting: DataFrame): DataFrame =
+    posting.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+
+  /** The postings of shingles with df ≤ `maxDocFreq` — the Σ df²
+    * governor applied before any self-join. */
+  private def capped(posting: DataFrame, maxDocFreq: Long): DataFrame =
+    posting.join(docFreq(posting).filter(col("df") <= maxDocFreq)
+      .select("shingle"), "shingle")
+
+  /** The key-joined pair aggregate of the set-similarity skeleton:
+    * `side`'s self-join on `key` — `<` (each unordered pair once) for
+    * symmetric measures, `=!=` (both orders) when `directed` — grouped
+    * to one row per pair with its doc ids named `names` and the
+    * measure's `aggs` over the `a` and `b` sides. */
+  private def pairAggregate(side: DataFrame, key: String, directed: Boolean,
+                            names: (String, String))(aggs: Column*): DataFrame = {
+    val (a, b) = (col("a.doc_id"), col("b.doc_id"))
+    side.as("a").join(side.as("b"),
+        col(s"a.$key") === col(s"b.$key") && (if (directed) a =!= b else a < b))
+      .groupBy(a.as(names._1), b.as(names._2))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Broadcast-joins the per-doc side table `side` (doc_id + values)
+    * onto `pairs` once per end: each rename map sends doc_id to the
+    * pair column it joins on, and the values to that end's names. */
+  private def withDocSide(pairs: DataFrame, side: DataFrame,
+                          ends: Map[String, String]*): DataFrame =
+    ends.foldLeft(pairs)((p, end) =>
+      p.join(broadcast(side.withColumnsRenamed(end)), end("doc_id")))
 
   /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     * SIGMOD 2003 — the MOSS algorithm): over each doc's k-gram hash
@@ -134,21 +197,15 @@ object Dedup {
     * frame — O(w) per row, never the shrinking-frame O(n²) trap the
     * round-14 note pins), one distinct. Output ≈ 2n/(w+1) rows of
     * (id, hash, pos) — integers only, text never leaves the scan. */
-  def winnowingFingerprints(docs: DataFrame, idCol: String = "doc_id",
-                            textCol: String = "text", k: Int = 3,
-                            w: Int = 4): DataFrame = {
+  def winnowingFingerprints(docs: DataFrame, k: Int = 3, w: Int = 4): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(w >= 1, "w must be >= 1")
-    val h56 = conv(substring(md5(col("__sh").cast("binary")), 1, 14), 16, 10)
-      .cast("long")
-    val grams = graft.core.Par.scaleOut( // r19 opt: see explodedShingleHashes
-        docs.select(col(idCol).as("doc_id"), col(textCol).as("__txt")))
-      .select(col("doc_id"),
-        graft.text.TextAnalysis.tokens(col("__txt")).as("__toks"))
+    val grams = tokenRows(docs)
       .filter(size(col("__toks")) >= k + w - 1)
       .select(col("doc_id"), (size(col("__toks")) - (k - 1)).as("__ng"),
-        posexplode(shingles(col("__toks"), k)).as(Seq("__pos", "__sh")))
-      .select(col("doc_id"), col("__ng"), col("__pos"), (h56 % P).as("__h"))
+        posexplode(wordGrams(col("__toks"), k)).as(Seq("__pos", "__sh")))
+      .select(col("doc_id"), col("__ng"), col("__pos"),
+        (tokenHash56(col("__sh")) % P).as("__h"))
     val frame = Window.partitionBy(col("doc_id")).orderBy(col("__pos"))
       .rowsBetween(Window.currentRow, w - 1)
     grams
@@ -168,28 +225,29 @@ object Dedup {
     * cap, stated). Join fanout per kept hash ≤ maxDocFreq², and
     * fingerprints are ~2/(w+1) of k-grams, so the pair join costs a
     * small fraction of E6's full posting join. */
-  def winnowingPairs(docs: DataFrame, idCol: String = "doc_id",
-                     textCol: String = "text", k: Int = 3, w: Int = 4,
+  def winnowingPairs(docs: DataFrame, k: Int = 3, w: Int = 4,
                      maxDocFreq: Long = 50): DataFrame = {
+    val fp = winnowingFingerprints(docs, k, w)
+    val kept = fp.select(col("fp_hash"), col("doc_id")).distinct()
+      .join(governedHashes(fp, maxDocFreq), Seq("fp_hash"))
+    pairAggregate(kept, "fp_hash", directed = false, ("doc_a", "doc_b"))(
+      count(lit(1)).as("n_shared"))
+  }
+
+  /** The fingerprint hashes carried by 2 to `maxDocFreq` docs — the
+    * winnowing joins' df governor. */
+  private def governedHashes(fp: DataFrame, maxDocFreq: Long): DataFrame = {
     require(maxDocFreq >= 2, "maxDocFreq < 2 cannot pair anything")
-    val fp = winnowingFingerprints(docs, idCol, textCol, k, w)
-    val keptHashes = fp.groupBy(col("fp_hash"))
+    fp.groupBy(col("fp_hash"))
       .agg(countDistinct(col("doc_id")).as("__df"))
       .filter(col("__df") <= maxDocFreq && col("__df") >= 2)
       .select(col("fp_hash"))
-    val kept = fp.select(col("fp_hash"), col("doc_id")).distinct()
-      .join(keptHashes, Seq("fp_hash"))
-    kept.as("a").join(kept.as("b"),
-        col("a.fp_hash") === col("b.fp_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
   }
 
   /** Winnowing span EXTENTS per matching pair — the report shape the
     * MOSS service actually serves (Schleimer et al. SIGMOD 2003 §5:
     * matches are presented as positioned regions, not bare counts):
-    * for each doc pair sharing ≥ `minShared` governed fingerprints,
+    * for each doc pair sharing ≥ 2 governed fingerprints,
     * the shared-fingerprint count plus the matched POSITION extents
     * on both sides (min/max selected-k-gram position per doc,
     * 0-based token offsets). The winnowing guarantee positions at
@@ -206,38 +264,27 @@ object Dedup {
     * DedupSpec). Join fanout per kept hash ≤ maxDocFreq occurrences
     * per side — the positions ride the same governed join, so cost is
     * a small constant over the pairs form. */
-  def winnowingSpans(docs: DataFrame, idCol: String = "doc_id",
-                     textCol: String = "text", k: Int = 3, w: Int = 4,
-                     maxDocFreq: Long = 50, minShared: Long = 2): DataFrame = {
-    require(maxDocFreq >= 2, "maxDocFreq < 2 cannot pair anything")
-    require(minShared >= 1, "minShared must be >= 1")
-    val fp = winnowingFingerprints(docs, idCol, textCol, k, w)
-    val keptHashes = fp.groupBy(col("fp_hash"))
-      .agg(countDistinct(col("doc_id")).as("__df"))
-      .filter(col("__df") <= maxDocFreq && col("__df") >= 2)
-      .select(col("fp_hash"))
-    val kept = fp.join(keptHashes, Seq("fp_hash"))
-    kept.as("a").join(kept.as("b"),
-        col("a.fp_hash") === col("b.fp_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(countDistinct(col("a.fp_hash")).as("n_shared"),
+  def winnowingSpans(docs: DataFrame, k: Int = 3, w: Int = 4,
+                     maxDocFreq: Long = 50): DataFrame = {
+    val fp = winnowingFingerprints(docs, k, w)
+    pairAggregate(fp.join(governedHashes(fp, maxDocFreq), Seq("fp_hash")),
+        "fp_hash", directed = false, ("doc_a", "doc_b"))(
+        countDistinct(col("a.fp_hash")).as("n_shared"),
         min(col("a.fp_pos")).as("a_min_pos"),
         max(col("a.fp_pos")).as("a_max_pos"),
         min(col("b.fp_pos")).as("b_min_pos"),
         max(col("b.fp_pos")).as("b_max_pos"))
-      .filter(col("n_shared") >= minShared)
+      .filter(col("n_shared") >= 2L)
   }
 
   /** Per-doc MinHash signature via the exploded path: 16 codegen'd
     * `min` aggregates with map-side partial combine — the shuffle
     * carries one 16-long row per doc, not the shingles. */
-  def minhashSignatures(docs: DataFrame, idCol: String = "doc_id",
-                        textCol: String = "text", n: Int = 3): DataFrame = {
+  def minhashSignatures(docs: DataFrame): DataFrame = {
     val mins = minhashCoeffs.zipWithIndex.map { case ((a, b), i) =>
       min((col("shingle") * lit(a) + lit(b)) % lit(P)).as(s"__m$i")
     }
-    explodedShingleHashes(docs, idCol, textCol, n)
+    explodedShingleHashes(docs)
       .groupBy(col("doc_id"))
       .agg(mins.head, mins.tail: _*)
       .select(col("doc_id"),
@@ -304,8 +351,7 @@ object Dedup {
     * the window's (band, key) hash partitioning is exactly the
     * self-join's, so the exchange is reused. */
   def minhashPairs(docs: DataFrame, threshold: Double = 0.5,
-                   idCol: String = "doc_id", textCol: String = "text",
-                   n: Int = 3, maxBucket: Long = 1000): DataFrame = {
+                   maxBucket: Long = 1000): DataFrame = {
     require(maxBucket >= 2, "maxBucket < 2 cannot pair anything")
     // Both self-join sides consume the banded signatures; without
     // materialization the corpus is tokenized, shingled, and
@@ -315,8 +361,7 @@ object Dedup {
     // writeSignatureIndex below). On the 500-doc harness corpus the
     // checkpoint write is a ~10% wash (pairwiseCorr's documented
     // trade); at corpus scale the saved re-read dominates.
-    val bands = bandedSignatures(minhashSignatures(docs, idCol, textCol, n))
-      .localCheckpoint()
+    val bands = bandedSignatures(minhashSignatures(docs)).localCheckpoint()
     val wCnt = Window.partitionBy(col("band"), col("key"))
     val wOrd = Window.partitionBy(col("band"), col("key"))
       .orderBy(col("doc_id"))
@@ -348,10 +393,8 @@ object Dedup {
     * between runs — the corpus text is read once, ever; every later
     * batch joins against 128 bytes/doc of signatures instead of
     * re-shingling petabytes ([[incrementalNearDups]]). */
-  def writeSignatureIndex(docs: DataFrame, path: String,
-                          idCol: String = "doc_id", textCol: String = "text",
-                          n: Int = 3): Unit =
-    bandedSignatures(minhashSignatures(docs, idCol, textCol, n))
+  def writeSignatureIndex(docs: DataFrame, path: String): Unit =
+    bandedSignatures(minhashSignatures(docs))
       .write.mode("overwrite").partitionBy("band").parquet(path)
 
   /** Absorb a new batch into an existing signature index: the batch is
@@ -364,10 +407,8 @@ object Dedup {
     * index, keep the survivors, append exactly those — per-day cost
     * scales with the batch forever. The caller sequence is
     * single-writer, like every sink in this store. */
-  def appendSignatureIndex(docs: DataFrame, path: String,
-                           idCol: String = "doc_id", textCol: String = "text",
-                           n: Int = 3): Unit =
-    bandedSignatures(minhashSignatures(docs, idCol, textCol, n))
+  def appendSignatureIndex(docs: DataFrame, path: String): Unit =
+    bandedSignatures(minhashSignatures(docs))
       .write.mode("append").partitionBy("band").parquet(path)
 
   /** Compact a persisted signature index to the [[minhashPairs]]
@@ -439,10 +480,9 @@ object Dedup {
     * incremental use. */
   def incrementalNearDups(spark: org.apache.spark.sql.SparkSession,
                           indexPath: String, newDocs: DataFrame,
-                          threshold: Double = 0.5, idCol: String = "doc_id",
-                          textCol: String = "text", n: Int = 3): DataFrame = {
+                          threshold: Double = 0.5): DataFrame = {
     val idx = spark.read.parquet(indexPath)
-    val nb = bandedSignatures(minhashSignatures(newDocs, idCol, textCol, n))
+    val nb = bandedSignatures(minhashSignatures(newDocs))
     idx.as("a").join(nb.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.doc_id") =!= col("b.doc_id"))
@@ -462,34 +502,15 @@ object Dedup {
     * blowup, no signal) — the df cap is part of the operator contract
     * and mirrored in the oracle. */
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.8,
-                   maxDocFreq: Long = 100, idCol: String = "doc_id",
-                   textCol: String = "text", n: Int = 3): DataFrame = {
-    // Distinct (doc, shingle) postings via one shuffle; per-doc set
-    // sizes are a 1-row-per-doc side table, broadcast back onto the
-    // pair aggregate instead of riding through the self-join.
-    // The posting frame feeds FOUR consumers (sizes, the df cap, both
-    // self-join sides) and Spark cannot share a subplan across them —
-    // unmaterialized, the corpus is tokenized/shingled/distinct'd four
-    // times. localCheckpoint pays one posting-sized write instead;
-    // postings are hashes, never text, so the write is the cheap side
-    // of that trade at any corpus size.
-    val posting = explodedShingleHashes(docs, idCol, textCol, n).distinct()
-      .localCheckpoint()
+                   maxDocFreq: Long = 100): DataFrame = {
+    // per-doc set sizes are a 1-row-per-doc side table, broadcast back
+    // onto the pair aggregate instead of riding through the self-join
+    val posting = postings(docs)
     val sizes = posting.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val rare = posting.groupBy(col("shingle"))
-      .agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq)
-      .select("shingle")
-    val filtered = posting.join(rare, "shingle")
-    val common = filtered.as("a").join(filtered.as("b"),
-        col("a.shingle") === col("b.shingle") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("common"))
-    common
-      .join(broadcast(sizes.withColumnsRenamed(
-        Map("doc_id" -> "doc_a", "n_sh" -> "n_a"))), "doc_a")
-      .join(broadcast(sizes.withColumnsRenamed(
-        Map("doc_id" -> "doc_b", "n_sh" -> "n_b"))), "doc_b")
+    val common = pairAggregate(capped(posting, maxDocFreq), "shingle",
+      directed = false, ("doc_a", "doc_b"))(count(lit(1)).as("common"))
+    withDocSide(common, sizes, Map("doc_id" -> "doc_a", "n_sh" -> "n_a"),
+        Map("doc_id" -> "doc_b", "n_sh" -> "n_b"))
       .withColumn("jaccard", col("common").cast("double") /
         (col("n_a") + col("n_b") - col("common")).cast("double"))
       .filter(col("jaccard") >= threshold)
@@ -508,23 +529,20 @@ object Dedup {
     * (df = N ⇒ w = 0) vanish from numerator AND denominator: the
     * template literally does not exist for this measure.
     *
-    * Plan: the q19 skeleton verbatim (one distinct postings frame →
-    * sizes/df/self-join, localCheckpoint'd for the four-consumer
-    * reason) with the weight table (vocabulary-bounded, one 1-row N
-    * broadcast) joined on. Zero-weight shingles are pruned BEFORE
-    * the self-join — a value-neutral filter (they contribute 0) that
-    * also removes exactly the hottest keys. The df cap makes the
-    * weighted common a LOWER bound while the per-doc weight sums
-    * stay full: capped similarity under-reports, never inflates
+    * Plan: the q19 skeleton (header) with the weight table
+    * (vocabulary-bounded, one 1-row N broadcast) joined on and the
+    * per-doc weight sums as the side table. Zero-weight shingles are
+    * pruned BEFORE the self-join — a value-neutral filter (they
+    * contribute 0) that also removes exactly the hottest keys. The
+    * df cap makes the weighted common a LOWER bound while the
+    * per-doc weight sums stay full: capped similarity under-reports,
+    * never inflates
     * (the q19 governor contract). */
   def weightedJaccardPairs(docs: DataFrame, tauPermille: Long = 500,
-                           maxDocFreq: Long = 100, idCol: String = "doc_id",
-                           textCol: String = "text", n: Int = 3): DataFrame = {
-    val posting = explodedShingleHashes(docs, idCol, textCol, n)
-      .distinct().localCheckpoint()
-    val dfs = posting.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+                           maxDocFreq: Long = 100): DataFrame = {
+    val posting = postings(docs)
     val nd = posting.agg(countDistinct(col("doc_id")).as("__nd"))
-    val weights = dfs.crossJoin(broadcast(nd))
+    val weights = docFreq(posting).crossJoin(broadcast(nd))
       .withColumn("w", (length(bin(expr("__nd div df"))) - 1).cast("long"))
       .select(col("shingle"), col("df"), col("w"))
     val wsizes = posting.join(weights.select("shingle", "w"), "shingle")
@@ -532,15 +550,10 @@ object Dedup {
     val filtered = posting.join(
       weights.filter(col("df") <= maxDocFreq && col("w") > 0)
         .select(col("shingle"), col("w")), "shingle")
-    filtered.as("a").join(filtered.as("b"),
-        col("a.shingle") === col("b.shingle") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(sum(col("a.w")).as("weighted_common"))
-      .join(broadcast(wsizes.withColumnsRenamed(
-        Map("doc_id" -> "doc_a", "wsum" -> "__wa"))), "doc_a")
-      .join(broadcast(wsizes.withColumnsRenamed(
-        Map("doc_id" -> "doc_b", "wsum" -> "__wb"))), "doc_b")
+    val common = pairAggregate(filtered, "shingle", directed = false,
+      ("doc_a", "doc_b"))(sum(col("a.w")).as("weighted_common"))
+    withDocSide(common, wsizes, Map("doc_id" -> "doc_a", "wsum" -> "__wa"),
+        Map("doc_id" -> "doc_b", "wsum" -> "__wb"))
       .withColumn("sim_permille", expr(
         "(weighted_common * 1000) div (__wa + __wb - weighted_common)"))
       .filter(col("sim_permille") >= tauPermille)
@@ -558,10 +571,8 @@ object Dedup {
     * EXACT integer permille (floor div — engines can't disagree),
     * both directions of a pair surfacing independently.
     *
-    * Shape: identical plan skeleton to [[jaccardPairs]] (one distinct
-    * postings frame feeding sizes, the df cap, and both self-join
-    * sides — localCheckpoint'd for the same four-consumer reason),
-    * except the self-join keeps BOTH orders (`=!=`, not `<`) since
+    * Shape: the [[jaccardPairs]] skeleton (header), except the
+    * self-join keeps BOTH orders (`=!=`, not `<`) since
     * the measure is directional — candidate volume is 2× q19's, same
     * Σ df² governor. The df cap makes `common` a LOWER bound when a
     * hot shingle is dropped while `n_contained` counts the full set:
@@ -571,21 +582,12 @@ object Dedup {
     * Returns (contained, container, common, n_contained,
     * containment_permille ≥ minPermille). */
   def containmentPairs(docs: DataFrame, minPermille: Long = 600,
-                       maxDocFreq: Long = 100, idCol: String = "doc_id",
-                       textCol: String = "text", n: Int = 3): DataFrame = {
-    val posting = explodedShingleHashes(docs, idCol, textCol, n).distinct()
-      .localCheckpoint()
+                       maxDocFreq: Long = 100): DataFrame = {
+    val posting = postings(docs)
     val sizes = posting.groupBy(col("doc_id")).agg(count(lit(1)).as("n_contained"))
-    val rare = posting.groupBy(col("shingle"))
-      .agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq)
-      .select("shingle")
-    val filtered = posting.join(rare, "shingle")
-    filtered.as("a").join(filtered.as("b"),
-        col("a.shingle") === col("b.shingle") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("contained"), col("b.doc_id").as("container"))
-      .agg(count(lit(1)).as("common"))
-      .join(broadcast(sizes.withColumnRenamed("doc_id", "contained")), "contained")
+    val common = pairAggregate(capped(posting, maxDocFreq), "shingle",
+      directed = true, ("contained", "container"))(count(lit(1)).as("common"))
+    withDocSide(common, sizes, Map("doc_id" -> "contained"))
       .withColumn("containment_permille",
         expr("(common * 1000) div n_contained"))
       .filter(col("containment_permille") >= minPermille)
@@ -628,8 +630,12 @@ object Dedup {
     * stats estimation (caught live on q255 at sf0.1; measured in
     * Iterate's scaladoc). Returns (node, label = min id of the
     * component). */
-  def componentLabels(pairs: DataFrame, aCol: String = "doc_a",
-                      bCol: String = "doc_b", maxIterations: Int = 20): DataFrame = {
+  def componentLabels(pairs: DataFrame, maxIterations: Int = 20): DataFrame =
+    labelComponents(pairs, "doc_a", "doc_b", maxIterations)
+
+  /** [[componentLabels]] over the pair columns `aCol` and `bCol`. */
+  private def labelComponents(pairs: DataFrame, aCol: String, bCol: String,
+                              maxIterations: Int): DataFrame = {
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct().localCheckpoint()
@@ -697,14 +703,12 @@ object Dedup {
     * fixpoint (its cost dominates and is already measured), one
     * edge→label equi-join (edges carry only ids + one e6 integer —
     * never text), two label-keyed aggregates, one label join. */
-  def chainingAudit(pairs: DataFrame, simCol: String = "est_jaccard",
-                    aCol: String = "doc_a", bCol: String = "doc_b",
-                    maxIterations: Int = 20): DataFrame = {
-    val labels = componentLabels(pairs, aCol, bCol, maxIterations)
+  def chainingAudit(pairs: DataFrame, maxIterations: Int = 20): DataFrame = {
+    val labels = componentLabels(pairs, maxIterations)
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_docs"))
     val edges = pairs
-      .select(col(aCol).as("node"),
-        expr(s"CAST(floor($simCol * 1000000) AS BIGINT)").as("__sim_e6"))
+      .select(col("doc_a").as("node"),
+        expr("CAST(floor(est_jaccard * 1000000) AS BIGINT)").as("__sim_e6"))
       .join(labels, Seq("node"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_edges"),
@@ -740,9 +744,8 @@ object Dedup {
     * bound the reduced graph's diameter, which star-compression keeps
     * ≈ batch diameter + 2. */
   def incrementalComponents(prevLabels: DataFrame, newEdges: DataFrame,
-                            aCol: String = "doc_a", bCol: String = "doc_b",
                             maxIterations: Int = 20): DataFrame = {
-    val ne = newEdges.select(col(aCol).as("a"), col(bCol).as("b"))
+    val ne = newEdges.select(col("doc_a").as("a"), col("doc_b").as("b"))
     val touched = ne.select(col("a").as("node"))
       .union(ne.select(col("b").as("node"))).distinct()
     val prev = prevLabels.select(col("node"), col("label"))
@@ -751,7 +754,7 @@ object Dedup {
     val affected = prev.join(touchedLabels, "label")
     val starEdges = affected.filter(col("node") =!= col("label"))
       .select(col("node").as("a"), col("label").as("b"))
-    val relabeled = componentLabels(
+    val relabeled = labelComponents(
       ne.unionByName(starEdges), "a", "b", maxIterations)
     val untouched = prev.join(affected.select(col("node")),
       Seq("node"), "left_anti")
@@ -762,12 +765,11 @@ object Dedup {
     * runs): given candidate pairs, drop every doc whose component
     * contains a smaller doc_id — one canonical survivor per near-dup
     * cluster, all unpaired docs untouched. */
-  def dropNearDups(docs: DataFrame, pairs: DataFrame,
-                   idCol: String = "doc_id"): DataFrame = {
+  def dropNearDups(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val removed = componentLabels(pairs)
       .filter(col("label") < col("node"))
-      .select(col("node").as(idCol))
-    docs.join(removed, Seq(idCol), "left_anti")
+      .select(col("node").as("doc_id"))
+    docs.join(removed, Seq("doc_id"), "left_anti")
   }
 
   /** Dedup IMPACT report — what near-dup removal did to the corpus
@@ -783,16 +785,14 @@ object Dedup {
     * zeros (left join — the audit stance).
     *
     * Cost = the E27 fixpoint it composes with + two group-keyed
-    * aggregates and a bounded group join; `weightCol` rides the scan
-    * (n_chars/token counts — never text). */
-  def dedupImpact(docs: DataFrame, pairs: DataFrame, groupCol: String,
-                  idCol: String = "doc_id",
-                  weightCol: String = "n_chars"): DataFrame = {
+    * aggregates and a bounded group join; the weight is `n_chars`,
+    * which rides the scan (never text). */
+  def dedupImpact(docs: DataFrame, pairs: DataFrame, groupCol: String): DataFrame = {
     def roll(df: DataFrame, n: String, w: String) =
       df.groupBy(col(groupCol)).agg(count(lit(1)).as(n),
-        sum(col(weightCol)).as(w))
+        sum(col("n_chars")).as(w))
     val before = roll(docs, "docs_before", "weight_before")
-    val after = roll(dropNearDups(docs, pairs, idCol),
+    val after = roll(dropNearDups(docs, pairs),
       "docs_after", "weight_after")
     val joined = before.join(after, Seq(groupCol), "left")
       .select(col(groupCol), col("docs_before"),
@@ -823,7 +823,7 @@ object Dedup {
     * arXiv:2306.01116 keeps by quality signals; `score` is typically
     * [[graft.text.TextAnalysis.qualityScore]] or plain text length).
     *
-    * Returns a full per-row audit (idCol, cluster, score, kept) —
+    * Returns a full per-row audit (doc_id, cluster, score, kept) —
     * every doc surfaces with its verdict, unpaired docs as their own
     * kept singleton cluster (the E73 audit contract).
     *
@@ -836,32 +836,31 @@ object Dedup {
     * filter (`<=>` — an all-NULL-score cluster degrades to keep-first
     * rather than keeping nobody) and a min-id tiebreak — never
     * `max_by`, whose tie choice is partitioning-dependent. */
-  def keepBestAudit(docs: DataFrame, pairs: DataFrame, score: Column,
-                    idCol: String = "doc_id"): DataFrame = {
-    val labels = componentLabels(pairs).withColumnRenamed("node", idCol)
-    val scored = docs.select(col(idCol), score.as("score"))
-    val paired = scored.join(labels, Seq(idCol), "inner")
+  def keepBestAudit(docs: DataFrame, pairs: DataFrame, score: Column): DataFrame = {
+    val labels = componentLabels(pairs).withColumnRenamed("node", "doc_id")
+    val scored = docs.select(col("doc_id"), score.as("score"))
+    val paired = scored.join(labels, Seq("doc_id"), "inner")
     val best = paired
       .groupBy(col("label")).agg(max(col("score")).as("__mx"))
       .join(paired, Seq("label"))
       .filter(col("score") <=> col("__mx"))
-      .groupBy(col("label")).agg(min(col(idCol)).as("__keep"))
+      .groupBy(col("label")).agg(min(col("doc_id")).as("__keep"))
       .withColumnRenamed("label", "cluster")
-    scored.join(labels, Seq(idCol), "left")
-      .withColumn("cluster", coalesce(col("label"), col(idCol)))
+    scored.join(labels, Seq("doc_id"), "left")
+      .withColumn("cluster", coalesce(col("label"), col("doc_id")))
       .drop("label")
       .join(best, Seq("cluster"), "left")
-      .select(col(idCol), col("cluster"), col("score"),
-        coalesce(col(idCol) === col("__keep"), lit(true)).as("kept"))
+      .select(col("doc_id"), col("cluster"), col("score"),
+        coalesce(col("doc_id") === col("__keep"), lit(true)).as("kept"))
   }
 
   /** Filtering form of [[keepBestAudit]]: the full `docs` rows, minus
     * every near-duplicate that lost its cluster's quality vote. */
   def dropNearDupsKeepBest(docs: DataFrame, pairs: DataFrame,
-                           score: Column, idCol: String = "doc_id"): DataFrame = {
-    val losers = keepBestAudit(docs, pairs, score, idCol)
-      .filter(!col("kept")).select(col(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+                           score: Column): DataFrame = {
+    val losers = keepBestAudit(docs, pairs, score)
+      .filter(!col("kept")).select(col("doc_id"))
+    docs.join(losers, Seq("doc_id"), "left_anti")
   }
 
   /** Leakage-safe train/eval split: every near-dup CLUSTER lands
@@ -878,12 +877,12 @@ object Dedup {
     * near-dup pair (tiny vs the corpus); everything else is one keyed
     * join + a projection. Returns docs + (cluster, split). */
   def leakageSafeSplit(docs: DataFrame, pairs: DataFrame,
-                       evalPermyriad: Int, idCol: String = "doc_id"): DataFrame = {
+                       evalPermyriad: Int): DataFrame = {
     require(evalPermyriad >= 0 && evalPermyriad <= 10000,
       "evalPermyriad must be in [0, 10000]")
-    val labels = componentLabels(pairs).withColumnRenamed("node", idCol)
-    docs.join(labels, Seq(idCol), "left")
-      .withColumn("cluster", coalesce(col("label"), col(idCol)))
+    val labels = componentLabels(pairs).withColumnRenamed("node", "doc_id")
+    docs.join(labels, Seq("doc_id"), "left")
+      .withColumn("cluster", coalesce(col("label"), col("doc_id")))
       .drop("label")
       .withColumn("split",
         when(graft.etl.Sampling.keyHash(col("cluster")) % 10000 < evalPermyriad,
@@ -904,11 +903,9 @@ object Dedup {
     *
     * Returns (doc_id, n_shingles, n_contaminated, contamination) for
     * every training doc long enough to shingle. */
-  def contaminationScores(train: DataFrame, benchmark: DataFrame,
-                          idCol: String = "doc_id", textCol: String = "text",
-                          n: Int = 3): DataFrame = {
-    val trainPosting = explodedShingleHashes(train, idCol, textCol, n).distinct()
-    val benchShingles = explodedShingleHashes(benchmark, idCol, textCol, n)
+  def contaminationScores(train: DataFrame, benchmark: DataFrame): DataFrame = {
+    val trainPosting = explodedShingleHashes(train).distinct()
+    val benchShingles = explodedShingleHashes(benchmark)
       .select("shingle").distinct()
     val hits = trainPosting.join(broadcast(benchShingles), Seq("shingle"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
@@ -935,9 +932,8 @@ object Dedup {
     * exists for pair enumeration; a per-shingle min is a plain agg).
     * Docs too short to shingle are absent (the postings contract).
     * Returns (doc_id, n_shingles, n_novel, novelty_permille). */
-  def noveltyScores(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text", n: Int = 3): DataFrame = {
-    val posting = explodedShingleHashes(docs, idCol, textCol, n).distinct()
+  def noveltyScores(docs: DataFrame): DataFrame = {
+    val posting = explodedShingleHashes(docs).distinct()
     val first = posting.groupBy(col("shingle"))
       .agg(min(col("doc_id")).as("__first"))
     posting.join(first, "shingle")
@@ -993,17 +989,15 @@ object Dedup {
     * chunk-wise (the backup-dedup pattern). Scan-side expression +
     * one explode; ASCII contract stated (byte == char keeps SQL
     * substr and byte windows aligned). */
-  def contentChunks(docs: DataFrame, divisor: Int = 64,
-                    idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame =
-    docs.select(col(idCol),
+  def contentChunks(docs: DataFrame, divisor: Int = 64): DataFrame =
+    docs.select(col("doc_id"),
         explode(graft.functions.ContentChunkFunctions.contentChunks(
-          col(textCol), divisor)).as("c"),
-        col(textCol))
-      .select(col(idCol),
+          col("text"), divisor)).as("c"),
+        col("text"))
+      .select(col("doc_id"),
         col("c.chunk_idx").as("chunk_idx"),
         col("c.start").as("start"), col("c.len").as("len"),
-        md5(col(textCol).substr(col("c.start") + 1, col("c.len"))
+        md5(col("text").substr(col("c.start") + 1, col("c.len"))
           .cast("binary")).as("chunk_md5"))
 
   /** TF-IDF cosine document-pair similarity — the TERM-WEIGHTED member
@@ -1028,10 +1022,10 @@ object Dedup {
     * 10¹⁵, so dot²·10⁶ ≤ 10³⁶ and ‖a‖²·‖b‖² ≤ 10³⁰ — inside both
     * Spark DECIMAL(38,0) and DuckDB HUGEINT, no silent wrap.
     *
-    * Shape at 100 TB: the [[jaccardPairs]] skeleton — the weighted
-    * postings frame is localCheckpoint-materialized (it feeds norms
-    * + both self-join sides; unmaterialized the corpus tokenizes
-    * three times), pair enumeration runs ONLY over terms with
+    * Shape at 100 TB: the [[jaccardPairs]] skeleton (header) over
+    * terms — the weighted postings frame is localCheckpoint-
+    * materialized (it feeds the norms and both self-join sides),
+    * pair enumeration runs ONLY over terms with
     * `df ≤ maxDocFreq` (the Σ df² governor — stopwords never join),
     * norms are computed over ALL terms and broadcast back, so a
     * capped dot UNDER-reports cosine, never inflates — the safe
@@ -1040,13 +1034,12 @@ object Dedup {
     *
     * Returns (doc_a < doc_b, n_common, cos2_ppm ≥ minCos2Ppm). */
   def tfidfCosinePairs(docs: DataFrame, minCos2Ppm: Long = 250000L,
-                       maxDocFreq: Long = 100, idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
-    val tfRaw = TextAnalysis.withTokens(docs, textCol)
-      .select(col(idCol).as("doc_id"), explode(col("tokens")).as("term"))
+                       maxDocFreq: Long = 100): DataFrame = {
+    val tfRaw = TextAnalysis.withTokens(docs)
+      .select(col("doc_id").as("doc_id"), explode(col("tokens")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-    val n = docs.agg(countDistinct(col(idCol)).as("__n_docs"))
+    val n = docs.agg(countDistinct(col("doc_id")).as("__n_docs"))
     val dfreq = tfRaw.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val weighted = tfRaw.join(dfreq, "term")
       .crossJoin(broadcast(n))
@@ -1056,19 +1049,13 @@ object Dedup {
     val sq = (c: Column) => (c.cast("decimal(19,0)") * c).as("w2")
     val norms = weighted.groupBy(col("doc_id"))
       .agg(sum(sq(col("w"))).cast("decimal(38,0)").as("norm2"))
-    val rare = weighted.filter(col("df") <= maxDocFreq)
-    val dots = rare.as("a").join(rare.as("b"),
-        col("a.term") === col("b.term") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_common"),
-        sum(col("a.w").cast("decimal(19,0)") * col("b.w"))
-          .cast("decimal(38,0)").as("dot"))
-    dots
-      .join(broadcast(norms.withColumnsRenamed(
-        Map("doc_id" -> "doc_a", "norm2" -> "na2"))), "doc_a")
-      .join(broadcast(norms.withColumnsRenamed(
-        Map("doc_id" -> "doc_b", "norm2" -> "nb2"))), "doc_b")
+    val dots = pairAggregate(weighted.filter(col("df") <= maxDocFreq), "term",
+        directed = false, ("doc_a", "doc_b"))(
+      count(lit(1)).as("n_common"),
+      sum(col("a.w").cast("decimal(19,0)") * col("b.w"))
+        .cast("decimal(38,0)").as("dot"))
+    withDocSide(dots, norms, Map("doc_id" -> "doc_a", "norm2" -> "na2"),
+        Map("doc_id" -> "doc_b", "norm2" -> "nb2"))
       .withColumn("cos2_ppm",
         expr("CAST((dot * dot * 1000000) div (na2 * nb2) AS BIGINT)"))
       .filter(col("cos2_ppm") >= minCos2Ppm)
@@ -1080,9 +1067,8 @@ object Dedup {
     * machine-generated): per doc, total vs distinct word n-gram
     * shingles and the duplicate fraction. One explode + one map-side-
     * combining aggregate; the text never shuffles. */
-  def repetitionScores(docs: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text", n: Int = 3): DataFrame =
-    explodedShingleHashes(docs, idCol, textCol, n)
+  def repetitionScores(docs: DataFrame): DataFrame =
+    explodedShingleHashes(docs)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"),
         countDistinct(col("shingle")).as("n_distinct"))
@@ -1120,12 +1106,11 @@ object Dedup {
     * hash aggregate, then the majority test per bit. Bit-identical to
     * the fold form ([[simhash]]) and ~10× faster (the folds are
     * interpreted). */
-  def simhashes(docs: DataFrame, idCol: String = "doc_id",
-                textCol: String = "text", n: Int = 3): DataFrame = {
+  def simhashes(docs: DataFrame): DataFrame = {
     val bitSums = (0 until simhashBits).map(j =>
       sum(shiftright(col("shingle"), j) % 2).as(s"__b$j")) :+
       count(lit(1)).as("__n")
-    explodedShingleHashes(docs, idCol, textCol, n, modP = false)
+    shingleRows(docs, modP = false)
       .groupBy(col("doc_id"))
       .agg(bitSums.head, bitSums.tail: _*)
       .select(col("doc_id"),
@@ -1167,10 +1152,9 @@ object Dedup {
     * are 10⁹-distinct, curves flat to 512k) or shard the corpus
     * before SimHash banding. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   idCol: String = "doc_id", textCol: String = "text",
                    maxBucket: Long = 1000): DataFrame = {
     require(maxBucket >= 2, "maxBucket < 2 cannot pair anything")
-    val sims = simhashes(docs, idCol, textCol)
+    val sims = simhashes(docs)
     val byteStructs = array((0 until 4).map(b =>
       struct(lit(b).as("band"),
         (shiftright(col("simhash"), 8 * b) % 256).as("key"))): _*)
@@ -1235,25 +1219,20 @@ object Dedup {
     * rank last and rarely enter any prefix), where the unfiltered
     * postings join is Σ df². Verification is candidate-bounded: two
     * hash joins keyed on doc id then (doc, shingle), never all-pairs.
-    * The postings frame feeds four consumers (df table, ranked
-    * prefixes, both verify sides) — localCheckpoint'd for the same
-    * subplan-sharing reason as [[jaccardPairs]]. Threshold and output
+    * The postings and df steps are the skeleton's (header); the
+    * candidate join is its own. Threshold and output
     * are exact integer permille: `common·1000 ≥ τ‰·(nₐ+n_b−common)`
     * floor-div — engines cannot disagree on a double near the cut.
     *
     * Reference anchor: exact near-dup joins next to the reference's
     * keep-first dedup (merge_sources.py:31); same query surface as
     * q19 but exact at the threshold. */
-  def prefixFilterPairs(docs: DataFrame, tauPermille: Long = 800,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        n: Int = 3): DataFrame = {
+  def prefixFilterPairs(docs: DataFrame, tauPermille: Long = 800): DataFrame = {
     require(tauPermille > 0 && tauPermille <= 1000,
       s"tauPermille must be in (0, 1000], got $tauPermille")
-    val posting = explodedShingleHashes(docs, idCol, textCol, n).distinct()
-      .localCheckpoint()
-    val dfs = posting.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    val ranked = posting.join(dfs, "shingle")
+    val posting = postings(docs)
+    val w = Window.partitionBy(col("doc_id"))
+    val ranked = posting.join(docFreq(posting), "shingle")
       .withColumn("n_sh", count(lit(1)).over(w))
       .withColumn("rnk", row_number().over(
         w.orderBy(col("df"), col("shingle"))))

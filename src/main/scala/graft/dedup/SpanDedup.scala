@@ -39,13 +39,17 @@ import org.apache.spark.sql.functions._
   */
 object SpanDedup {
 
-  /** Tokenized docs: (doc_id, toks) for docs with at least k tokens. */
-  private def tokenized(df: DataFrame, idCol: String, textCol: String,
-                        k: Int): DataFrame =
-    graft.core.Par.scaleOut( // r19 opt: spread the gram-md5 cascade
-        df.select(col(idCol).as("doc_id"), col(textCol).as("__txt")))
+  /** Whitespace-tokenized docs: (doc_id, toks), spread over the
+    * default parallelism first (r19 opt: the gram-md5 cascade and the
+    * reassembly run per token). */
+  private def tokenized(df: DataFrame): DataFrame =
+    graft.core.Par.scaleOut(
+        df.select(col("doc_id").as("doc_id"), col("text").as("__txt")))
       .select(col("doc_id"), split(col("__txt"), "\\s+").as("toks"))
-      .where(size(col("toks")) >= k)
+
+  /** [[tokenized]] docs with at least k tokens. */
+  private def tokenized(df: DataFrame, k: Int): DataFrame =
+    tokenized(df).where(size(col("toks")) >= k)
 
   /** Shared core: diagonal runs per ordered doc pair —
     * (doc_a, doc_b, diag, run, start_a) where `run` grams starting at
@@ -83,14 +87,12 @@ object SpanDedup {
 
   /** Pairs of documents sharing a verbatim token span of at least
     * `minSpanTokens`, with the longest such span and the matched-gram
-    * count. `df` needs (`idCol`, `textCol`). */
-  def sharedSpans(df: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text",
-                  k: Int = 5, minSpanTokens: Int = 8,
+    * count. `df` needs (`doc_id`, `text`). */
+  def sharedSpans(df: DataFrame, k: Int = 5, minSpanTokens: Int = 8,
                   maxDf: Int = 64): DataFrame = {
     require(k >= 2, "k-gram width must be >= 2")
     require(minSpanTokens >= k, "a detectable span is at least one gram")
-    diagonalRuns(tokenized(df, idCol, textCol, k), k, maxDf)
+    diagonalRuns(tokenized(df, k), k, maxDf)
       .groupBy(col("doc_a"), col("doc_b"))
       .agg((max(col("run")) + lit(k - 1)).as("max_span_tokens"),
         sum(col("run")).as("n_shared_grams"))
@@ -116,21 +118,17 @@ object SpanDedup {
     * doc exactly once — untouched docs pass through with n_removed =
     * 0, a fully-pasted doc survives as an empty string (dropping rows
     * is [[sharedSpans]]' caller's decision, not a side effect). */
-  def removeSharedSpans(df: DataFrame, idCol: String = "doc_id",
-                        textCol: String = "text",
-                        k: Int = 5, minSpanTokens: Int = 8,
+  def removeSharedSpans(df: DataFrame, k: Int = 5, minSpanTokens: Int = 8,
                         maxDf: Int = 64): DataFrame = {
     require(k >= 2, "k-gram width must be >= 2")
     require(minSpanTokens >= k, "a detectable span is at least one gram")
-    val toks = tokenized(df, idCol, textCol, k)
+    val toks = tokenized(df, k)
     val spans = diagonalRuns(toks, k, maxDf)
       .where(col("run") + lit(k - 1) >= minSpanTokens)
       .select(col("doc_b").as("doc_id"),
         (col("start_a") - col("diag")).as("start"),
         (col("start_a") - col("diag") + col("run") + lit(k - 2)).as("end"))
-    val base = graft.core.Par.scaleOut( // r19 opt: spread the reassembly
-        df.select(col(idCol).as("doc_id"), col(textCol).as("__txt")))
-      .select(col("doc_id"), split(col("__txt"), "\\s+").as("toks"))
+    val base = tokenized(df)
     val positioned = base
       .select(col("doc_id"),
         explode(expr("transform(toks, (t, i) -> struct(i AS pos, t AS tok))"))

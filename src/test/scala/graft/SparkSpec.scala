@@ -1,11 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -32,8 +34,29 @@ object SparkSpec {
   }
 }
 
-trait SparkSpec extends AnyFunSuite with Matchers {
+trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A fresh temp dir named after `prefix`, deleted with its contents
+    * once the suite's last test has run. */
+  protected def tempDir(prefix: String): Path = tempDirs.synchronized {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.synchronized {
+      tempDirs.foreach { dir =>
+        val walk = Files.walk(dir)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => { Files.deleteIfExists(p); () })
+        finally walk.close()
+      }
+      tempDirs.clear()
+    } finally super.afterAll()
 
   def df(schema: StructType, rows: Row*): DataFrame =
     spark.createDataFrame(

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,7 +21,7 @@ class TablesSpec extends SparkSpec {
   private val micros = Seq(1700000000123456L, 1700003600654321L, 1700007200000000L)
 
   private def readVariant(write: String => Unit): DataFrame = {
-    val dir = Files.createTempDirectory("graft-tables").toString
+    val dir = tempDir("graft-tables").toString
     write(s"$dir/events.parquet")
     Tables.events(spark, dir)
   }
@@ -76,7 +74,7 @@ class TablesSpec extends SparkSpec {
 
   test("documents: int32-narrowed id/count columns widen back to long") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-tables").toString
+    val dir = tempDir("graft-tables").toString
     Seq((1, "alpha beta", "en", "web", 10), (2, "gamma", "en", "web", 5))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -88,7 +86,7 @@ class TablesSpec extends SparkSpec {
 
   test("embeddings: array<double> drift is cast back to array<float> (vec_dot's required type)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-tables").toString
+    val dir = tempDir("graft-tables").toString
     Seq((1L, Array(0.25, 0.5), 0), (2L, Array(1.0, -0.5), 1))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

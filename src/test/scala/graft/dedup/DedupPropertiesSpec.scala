@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -63,20 +63,83 @@ class DedupPropertiesSpec extends SparkSpec {
     })
   }
 
-  test("property: exact jaccard equals set arithmetic on shingles") {
-    check("jaccard", Prop.forAll(docGen, docGen) { (t1, t2) =>
-      def shingleSet(t: String): Set[String] = {
+  /** A seeded corpus of near-duplicate docs over a small vocabulary
+    * (so shingles repeat past the df cap), its shingle sets, their
+    * document frequencies and the IDF weights of weightedJaccardPairs,
+    * computed on the driver. */
+  private final class Corpus(seed: Int, cap: Long) {
+    private val rnd = new scala.util.Random(seed)
+    private val base = Vector.fill(8)(Vector.fill(5 + rnd.nextInt(10))(vocab(rnd.nextInt(5))))
+    private val edited = base.zipWithIndex.map { case (ws, i) =>
+      ws.updated(rnd.nextInt(ws.size), s"w$i") ++ Vector.fill(rnd.nextInt(3))(vocab(rnd.nextInt(10)))
+    }
+    val texts: Seq[(Long, String)] = ((base ++ edited).map(_.mkString(" ")) :+ "alpha beta")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val sets: Map[Long, Set[String]] = texts.collect {
+      case (id, t) if t.split(" ").length >= 3 =>
         val w = t.split(" ").toSeq
-        (0 to w.length - 3).map(i => s"${w(i)} ${w(i + 1)} ${w(i + 2)}").toSet
+        id -> (0 to w.length - 3).map(i => s"${w(i)} ${w(i + 1)} ${w(i + 2)}").toSet
+    }.toMap
+    val df: Map[String, Int] = sets.values.toSeq.flatten.groupBy(identity).map {
+      case (s, docs) => s -> docs.size
+    }
+    /** floor(log2(N div df)) over the N docs that have shingles. */
+    def weight(s: String): Long = 31 - Integer.numberOfLeadingZeros(sets.size / df(s))
+    def shared(a: Long, b: Long): Set[String] = sets(a).intersect(sets(b)).filter(df(_) <= cap)
+    val pairs: Seq[(Long, Long)] =
+      for (a <- sets.keys.toSeq.sorted; b <- sets.keys.toSeq.sorted if a != b) yield (a, b)
+  }
+
+  test("property: capped set measures equal set arithmetic") {
+    // per measure: the operator at a threshold and df cap, and every
+    // candidate pair's expected row with its measure value (pairs
+    // sharing no shingle inside the cap never reach the join, so they
+    // have none). Shingles are compared as strings here and as 30-bit
+    // md5-derived hashes by the operators: collisions are the only
+    // slack, and over these few hundred shingles none occur.
+    val measures: Seq[(String, (DataFrame, Double, Long) => DataFrame,
+        Corpus => Seq[(Seq[Any], Double)])] = Seq(
+      ("jaccardPairs",
+        (d, t, cap) => Dedup.jaccardPairs(d, threshold = t, maxDocFreq = cap),
+        c => for ((a, b) <- c.pairs if a < b && c.shared(a, b).nonEmpty) yield {
+          val common = c.shared(a, b).size
+          val j = common.toDouble / (c.sets(a).size + c.sets(b).size - common).toDouble
+          (Seq(a, b, j), j)
+        }),
+      ("weightedJaccardPairs",
+        (d, t, cap) => Dedup.weightedJaccardPairs(d, tauPermille = t.toLong, maxDocFreq = cap),
+        c => for {
+          (a, b) <- c.pairs if a < b
+          ws = c.shared(a, b).toSeq.map(c.weight).filter(_ > 0)
+          if ws.nonEmpty
+        } yield {
+          val (wc, wa, wb) = (ws.sum, c.sets(a).toSeq.map(c.weight).sum,
+            c.sets(b).toSeq.map(c.weight).sum)
+          val sim = (wc * 1000) / (wa + wb - wc)
+          (Seq(a, b, wc, sim), sim.toDouble)
+        }),
+      ("containmentPairs",
+        (d, t, cap) => Dedup.containmentPairs(d, minPermille = t.toLong, maxDocFreq = cap),
+        c => for ((a, b) <- c.pairs if c.shared(a, b).nonEmpty) yield {
+          val (common, n) = (c.shared(a, b).size.toLong, c.sets(a).size.toLong)
+          (Seq(a, b, common, n, common * 1000 / n), (common * 1000 / n).toDouble)
+        }))
+    for (seed <- 1 to 2; cap <- Seq(3L, 100L); (name, run, rows) <- measures) {
+      val c = new Corpus(seed, cap)
+      withClue(s"$name, seed $seed, maxDocFreq $cap: ") {
+        // cap 3 drops shingles; cap 100, above the corpus size, none
+        c.df.values.exists(_ > cap) shouldBe (cap == 3L)
+        val cands = rows(c)
+        val values = cands.map(_._2).distinct.sorted
+        values.size should be >= 2
+        // a threshold some pair hits exactly, with pairs on both sides
+        val t = values(values.size / 2)
+        val expected = cands.filter(_._2 >= t).map(_._1).toSet
+        import spark.implicits._
+        run(c.texts.toDF("doc_id", "text"), t, cap).collect().map(_.toSeq).toSet shouldBe
+          expected
       }
-      val (s1, s2) = (shingleSet(t1), shingleSet(t2))
-      val expected = s1.intersect(s2).size.toDouble / s1.union(s2).size
-      val got = Dedup.jaccardPairs(docsFrame(List(t1, t2)), threshold = 0.0)
-        .collect().headOption.map(_.getDouble(2)).getOrElse(0.0)
-      // hash collisions inside the shingle space are the only slack;
-      // with md5-derived 30-bit hashes over tiny sets they don't occur
-      math.abs(got - expected) < 1e-12
-    })
+    }
   }
 
   test("property: saltedJoin is bucket-count-invariant") {

@@ -219,7 +219,7 @@ class DedupSpec extends SparkSpec {
     val batch = docs(
       11L -> "the quick brown fox jumps over the lazy dog", // clone of 1
       12L -> "a genuinely new document sharing nothing with history")
-    val idx = java.nio.file.Files.createTempDirectory("graft-mh-idx")
+    val idx = tempDir("graft-mh-idx")
       .toString + "/idx"
     Dedup.writeSignatureIndex(corpus, idx)
     val inc = Dedup.incrementalNearDups(spark, idx, batch, threshold = 0.5)
@@ -236,7 +236,7 @@ class DedupSpec extends SparkSpec {
     val batch = docs(
       11L -> "the quick brown fox jumps over the lazy dog",
       12L -> "a genuinely new document sharing nothing with history")
-    val base = java.nio.file.Files.createTempDirectory("graft-mh-app").toString
+    val base = tempDir("graft-mh-app").toString
     Dedup.writeSignatureIndex(hist, s"$base/inc")
     Dedup.appendSignatureIndex(batch, s"$base/inc")
     Dedup.writeSignatureIndex(hist.unionByName(batch), s"$base/union")
@@ -253,7 +253,7 @@ class DedupSpec extends SparkSpec {
     val corpus = docs(
       1L -> "the quick brown fox jumps over the lazy dog",
       2L -> "completely different text about other topics entirely")
-    val idx = java.nio.file.Files.createTempDirectory("graft-mh-self")
+    val idx = tempDir("graft-mh-self")
       .toString + "/idx"
     Dedup.writeSignatureIndex(corpus, idx)
     // doc 1 re-ingested verbatim under its existing id: a self-pair
@@ -815,7 +815,7 @@ class DedupSpec extends SparkSpec {
         i -> (0 until 40).map(j => s"u${i}x$j").mkString(" "))
     val d = docs(rows: _*)
     val path =
-      java.nio.file.Files.createTempDirectory("sigidx").toString + "/idx"
+      tempDir("sigidx").toString + "/idx"
     Dedup.writeSignatureIndex(d, path)
     spark.read.parquet(path).groupBy("band", "key").count()
       .agg(max("count")).head.getLong(0) should be > 8L // hot buckets exist

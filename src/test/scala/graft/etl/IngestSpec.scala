@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -26,7 +24,7 @@ class IngestSpec extends SparkSpec {
 
   test("uploadParquet writes to a file URI and reports load metrics (K4)") {
     val d = df(schema, Row("A", 1.5), Row("B", 2.5), Row("C", 3.5))
-    val uri = "file://" + Files.createTempDirectory("graft-up").resolve("t").toString
+    val uri = "file://" + tempDir("graft-up").resolve("t").toString
     // the row count must ride the write job, not a second scan
     spark.sparkContext.setJobGroup("upload-one-job", "uploadParquet", false)
     val res = try Ingest.uploadParquet(d, uri)

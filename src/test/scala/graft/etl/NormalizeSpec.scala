@@ -45,7 +45,7 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("DSv2 connector: format(\"alphavantage\") reads a landed payload and normalizes (S1)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-av-landing")
+    val dir = tempDir("graft-av-landing")
     java.nio.file.Files.writeString(dir.resolve("AAPL.csv"),
       "date,1. open,2. high,3. low,4. close,5. volume\n" +
         "2024-03-01,10.0,12.0,9.0,11.0,1000\n" +
@@ -67,7 +67,7 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("DSv2 connector: format(\"yahoofinance\") parses timestamps and noise columns (S2)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-yh-landing")
+    val dir = tempDir("graft-yh-landing")
     java.nio.file.Files.writeString(dir.resolve("MSFT.csv"),
       "Date,Open,High,Low,Close,Volume,Dividends,Stock Splits\n" +
         "2024-03-01 00:00:00,10.0,12.0,9.0,11.0,1000,0.5,0.0\n")
@@ -81,7 +81,7 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("DSv2 connector threads the SESSION Hadoop conf to executor readers (fs.* key)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-av-fs")
+    val dir = tempDir("graft-av-fs")
     java.nio.file.Files.writeString(dir.resolve("AAPL.csv"),
       "date,1. open,2. high,3. low,4. close,5. volume\n" +
         "2024-03-01,10.0,12.0,9.0,11.0,1000\n")
@@ -109,7 +109,7 @@ class NormalizeSpec extends SparkSpec {
   test("DSv2 connector ships the session Hadoop conf once per scan: its reader factory stays small however large the conf") {
     import org.apache.spark.SparkEnv
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val dir = java.nio.file.Files.createTempDirectory("graft-av-conf")
+    val dir = tempDir("graft-av-conf")
     java.nio.file.Files.writeString(dir.resolve("AAPL.csv"),
       "date,1. open,2. high,3. low,4. close,5. volume\n" +
         "2024-03-01,10.0,12.0,9.0,11.0,1000\n")

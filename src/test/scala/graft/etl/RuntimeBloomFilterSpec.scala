@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,7 +26,7 @@ class RuntimeBloomFilterSpec extends SparkSpec {
   import spark.implicits._
 
   private def factDim(): (DataFrame, DataFrame) = {
-    val base = Files.createTempDirectory("graft-rbf").toString
+    val base = tempDir("graft-rbf").toString
     (1 to 5000).map(i => (i.toLong, (i % 500).toLong, i * 3L))
       .toDF("id", "k", "v")
       .write.parquet(base + "/fact")

@@ -2,7 +2,6 @@ package graft.etl
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class UpsertSpec extends SparkSpec {
 
@@ -42,7 +41,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("upsertPartitioned rewrites only touched partitions and is idempotent (K5 scale path)") {
-    val dir = Files.createTempDirectory("graft_upsert").toString
+    val dir = tempDir("graft_upsert").toString
     val tbl = s"$dir/tbl"
     frame((1L, "2024-01-01", 10.0), (2L, "2024-01-02", 20.0), (3L, "2024-01-03", 30.0))
       .write.partitionBy("date").parquet(tbl)
@@ -63,7 +62,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("upsertPartitioned reads its slice back with the slice's own schema: no footer-inference job") {
-    val dir = Files.createTempDirectory("graft_upsert_jobs").toString
+    val dir = tempDir("graft_upsert_jobs").toString
     val tbl = s"$dir/tbl"
     frame((1L, "2024-01-01", 10.0), (2L, "2024-01-02", 20.0))
       .write.partitionBy("date").parquet(tbl)
@@ -77,7 +76,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("recoverPartitioned replays a complete pending slice and discards a torn one") {
-    val dir = Files.createTempDirectory("graft_upsert_recover").toString
+    val dir = tempDir("graft_upsert_recover").toString
     val tbl = s"$dir/tbl"
     frame((1L, "2024-01-01", 10.0), (2L, "2024-01-02", 20.0))
       .write.partitionBy("date").parquet(tbl)
@@ -101,7 +100,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("upsertPartitioned rejects a target not partitioned by the declared column") {
-    val dir = Files.createTempDirectory("graft_upsert_flat").toString
+    val dir = tempDir("graft_upsert_flat").toString
     frame((1L, "2024-01-01", 1.0)).write.parquet(s"$dir/flat")
     an[IllegalArgumentException] should be thrownBy
       Upsert.upsertPartitioned(spark, s"$dir/flat",

@@ -1,6 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.Row
@@ -27,7 +26,7 @@ class SourcesSpec extends SparkSpec {
       Timestamp.valueOf("2024-01-07 23:59:59.999999")))
 
   private def tmp(ext: String): String =
-    Files.createTempDirectory("graft-io").resolve(s"t.$ext").toString
+    tempDir("graft-io").resolve(s"t.$ext").toString
 
   test("CSV round-trip is lossless including nulls, doubles, timestamps") {
     val d = df(schema, fixture: _*)
@@ -59,7 +58,7 @@ class SourcesSpec extends SparkSpec {
 
   test("readJsonQuarantine: bad lines survive with raw text, good lines parse") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-io").resolve("feed").toString
+    val dir = tempDir("graft-io").resolve("feed").toString
     import spark.implicits._
     Seq(
       """{"date": "2024-01-05", "symbol": "A"}""",
@@ -87,7 +86,7 @@ class SourcesSpec extends SparkSpec {
 
   test("extension dispatch uses the leaf name only, not dotted dir segments") {
     val d = df(schema, fixture: _*)
-    val dir = Files.createTempDirectory("graft-io.v1.2")
+    val dir = tempDir("graft-io.v1.2")
     val path = dir.resolve("t.csv").toString
     Sources.writeCsv(d, path)
     assertSameRows(Sources.read(spark, path, Some(schema)), d)
@@ -98,7 +97,7 @@ class SourcesSpec extends SparkSpec {
   }
 test("readCsvQuarantine: arity mismatches and cast failures quarantine with raw lines") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-io").resolve("csvfeed").toString
+    val dir = tempDir("graft-io").resolve("csvfeed").toString
     import spark.implicits._
     Seq(
       "1,alpha",           // good
@@ -120,7 +119,7 @@ test("readCsvQuarantine: arity mismatches and cast failures quarantine with raw 
   }
 
   test("readCsvQuarantine pruning caveat: corruption only among PARSED columns") {
-    val dir = Files.createTempDirectory("graft-io").resolve("csvprune").toString
+    val dir = tempDir("graft-io").resolve("csvprune").toString
     import spark.implicits._
     Seq("1,alpha", "notanumber,gamma").toDF("value").coalesce(1)
       .write.mode("overwrite").text(dir)

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -47,7 +46,7 @@ class PipelineSpec extends SparkSpec {
 
   private def source(src: String, rows: Row*) = df(rawSchema, rows: _*)
 
-  private def table() = Files.createTempDirectory("graft-pipe").resolve("bars").toString
+  private def table() = tempDir("graft-pipe").resolve("bars").toString
 
   private def twoSources = (
     source("alpha_vantage",

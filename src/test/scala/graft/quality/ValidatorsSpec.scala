@@ -212,14 +212,13 @@ class ValidatorsSpec extends SparkSpec {
   }
 
   test("observed: quality metrics ride the caller's action, no second scan") {
-    import java.nio.file.Files
     import spark.implicits._
     val d = Seq((1L, Some(10.0)), (2L, None), (3L, Some(30.0)), (3L, Some(5.0)))
       .toDF("id", "v")
     val (instrumented, obs) = Validators.observed(
       d, "write_quality", nullCols = Seq("v"), minMaxCol = Some("id"))
     // the caller's ONLY job: the write. Metrics accumulate inside it.
-    val out = Files.createTempDirectory("graft-observe").resolve("t").toString
+    val out = tempDir("graft-observe").resolve("t").toString
     instrumented.write.mode("overwrite").parquet(out)
     val m = obs.get
     m("row_count") shouldBe 4L

@@ -300,7 +300,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.knnPq(c, q, k = 10, codebook = Some(ivfPqCodebook))))
 
   private def ivfIndex(corpus: DataFrame, c: IvfCase): String = {
-    val path = java.nio.file.Files.createTempDirectory(s"ivf-${c.name}")
+    val path = tempDir(s"ivf-${c.name}")
       .toString + "/idx"
     Similarity.writeIvfIndex(corpus, path, c.codes(), centroids = Some(ivfCents))
     path
@@ -374,7 +374,7 @@ class SimilaritySpec extends SparkSpec {
   test("quantized IVF recall at nprobe=3 beats the probe-fraction floor") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
-    val path = java.nio.file.Files.createTempDirectory("ivfsq8").toString + "/idx"
+    val path = tempDir("ivfsq8").toString + "/idx"
     Similarity.writeIvfIndex(emb, path, IvfCodes.Sq8, centroids = Some(cents))
     val queries = emb.filter(col("vec_id") < 5)
     // truth = the flat quantized baseline (full coverage, same scores):
@@ -396,7 +396,7 @@ class SimilaritySpec extends SparkSpec {
     // staged index read path.
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
-    val path = java.nio.file.Files.createTempDirectory("ivf2s").toString + "/idx"
+    val path = tempDir("ivf2s").toString + "/idx"
     Similarity.writeIvfIndex(emb, path, IvfCodes.Sq8, centroids = Some(cents))
     val queries = emb.filter(col("vec_id") < 5)
     val nCorpus = emb.count().toInt
@@ -413,7 +413,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Array.tabulate(8)(p => Similarity.hyperplane(p, 64))
-    val path = java.nio.file.Files.createTempDirectory("ivf2s").toString + "/idx"
+    val path = tempDir("ivf2s").toString + "/idx"
     Similarity.writeIvfIndex(emb, path, IvfCodes.Sq8, centroids = Some(cents))
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

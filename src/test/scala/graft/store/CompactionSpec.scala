@@ -18,7 +18,7 @@ class CompactionSpec extends SparkSpec {
       f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
 
   test("compaction collapses fragmented partitions and preserves content") {
-    val path = Files.createTempDirectory("graft-compact").toString + "/t"
+    val path = tempDir("graft-compact").toString + "/t"
     docs.repartition(6).write.mode("overwrite").partitionBy("lang").parquet(path)
     val before = spark.read.parquet(path)
     val beforeRows = before.collect().toSet
@@ -35,7 +35,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("healthy partitions are not rewritten (idempotent re-run)") {
-    val path = Files.createTempDirectory("graft-compact2").toString + "/t"
+    val path = tempDir("graft-compact2").toString + "/t"
     docs.repartition(4).write.mode("overwrite").partitionBy("lang").parquet(path)
     Compaction.compactPartitioned(spark, path, "lang", targetBytes = 1L << 40)
     def snapshot = Seq("lang0", "lang1", "lang2").flatMap { l =>
@@ -51,7 +51,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("a torn staged slice is discarded, a marked one is replayed") {
-    val path = Files.createTempDirectory("graft-compact3").toString + "/t"
+    val path = tempDir("graft-compact3").toString + "/t"
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
     val torn = new java.io.File(s"$path.__compact_tmp")
     torn.mkdirs()

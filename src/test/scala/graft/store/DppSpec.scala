@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -27,7 +25,7 @@ class DppSpec extends SparkSpec {
   import spark.implicits._
 
   private def factDim(): (String, DataFrame) = {
-    val base = Files.createTempDirectory("graft-dpp").toString
+    val base = tempDir("graft-dpp").toString
     val dir = base + "/fact"
     (1 to 200).map(i => (i.toLong, i % 20, i * 3L))
       .toDF("id", "k", "v")

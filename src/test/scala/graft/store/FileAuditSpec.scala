@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -10,7 +8,7 @@ class FileAuditSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeFragmented(rows: Int, perFile: Int): String = {
-    val path = Files.createTempDirectory("graft-fileaudit").toString + "/t"
+    val path = tempDir("graft-fileaudit").toString + "/t"
     (1 to rows).map(i => (i.toLong, s"v$i")).toDF("id", "v")
       .coalesce(1)
       .write.option("maxRecordsPerFile", perFile).parquet(path)

@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -17,7 +15,7 @@ class SketchStoreSpec extends SparkSpec {
       (s"t${i % 3}", (i * 31 % users + offset).toLong)
     }.toDF("etype", "user_id")
 
-  private def tmp() = Files.createTempDirectory("graft-sketch").toString + "/s"
+  private def tmp() = tempDir("graft-sketch").toString + "/s"
 
   test("rolled-up estimates track exact distincts within HLL error") {
     val d = events(5000, 800)

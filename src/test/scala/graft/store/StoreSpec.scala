@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,7 +20,7 @@ class StoreSpec extends SparkSpec {
       .withColumn("month", date_format(col("date"), "yyyy-MM"))
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").resolve("t").toString
+    tempDir(s"graft-$name").resolve("t").toString
 
   test("writePartitioned lays out hive-style partition dirs") {
     val path = tmp("layout")

@@ -19,7 +19,7 @@ class VersionedSpec extends SparkSpec {
   private def rows(rs: (Long, Double, String)*) =
     df(schema, rs.map { case (i, v, p) => Row(i, v, p) }: _*)
 
-  private def freshTable() = Files.createTempDirectory("versioned").toString + "/t"
+  private def freshTable() = tempDir("versioned").toString + "/t"
 
   private def d1 = rows((1L, 1.0, "a"), (2L, 2.0, "a"), (3L, 3.0, "b"))
 

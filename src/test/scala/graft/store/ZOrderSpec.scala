@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -44,8 +42,8 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("z-order layout prunes 2-D box queries that a 1-D sort cannot") {
-    val zDir = Files.createTempDirectory("zorder").toString
-    val xDir = Files.createTempDirectory("xsort").toString
+    val zDir = tempDir("zorder").toString
+    val xDir = tempDir("xsort").toString
     val z = ZOrder.morton($"x".cast("long"), $"y".cast("long"))
     ZOrder.layoutZOrdered(grid, z, numFiles = 16)
       .write.mode("overwrite").parquet(zDir)

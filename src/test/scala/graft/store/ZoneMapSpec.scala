@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -11,7 +9,7 @@ class ZoneMapSpec extends SparkSpec {
   import spark.implicits._
 
   private def clustered(): String = {
-    val path = Files.createTempDirectory("graft-zm").toString + "/t"
+    val path = tempDir("graft-zm").toString + "/t"
     (1 to 1000).map(i => (i.toLong, i % 7, s"p$i"))
       .toDF("k", "g", "payload")
       .repartitionByRange(10, col("k"))

@@ -35,7 +35,7 @@ class StateStoreProviderSpec extends SparkSpec {
     Ev(id, new Timestamp(base + minute * 60000L), user, typ, value, "{}")
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-ssp-$name").toString
+    tempDir(s"graft-ssp-$name").toString
 
   private val providers = Seq(
     "HDFSBacked" -> ("org.apache.spark.sql.execution.streaming.state." +

@@ -27,7 +27,7 @@ class StreamingSpec extends SparkSpec {
     Ev(id, new Timestamp(base + minute * 60000L), 1L, typ, value, """{"k": 1}""")
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-stream-$name").toString
+    tempDir(s"graft-stream-$name").toString
 
   test("applyCdcBatch: sequential batches equal one batch apply; replay is a no-op") {
     val path = tmp("cdc") + "/t"

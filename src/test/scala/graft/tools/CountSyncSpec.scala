@@ -219,15 +219,29 @@ class CountSyncSpec extends AnyFunSuite with Matchers {
     // a literal checkout path sends a second checkout's writes into
     // the first one
     val root = java.nio.file.Paths.get("").toAbsolutePath.toString
+    withClue(s"src/main files containing '$root': ") {
+      srcMainFilesContaining(root) shouldBe empty
+    }
+  }
+
+  test("no src/main file calls Files.createTempDirectory") {
+    // a temp dir made while building a query is never deleted, so
+    // every Verify, ExplainDump or Bench run leaves one behind; build
+    // persisted tables once per sf dir as `fixture`s under `scratch`
+    withClue("src/main files calling Files.createTempDirectory: ") {
+      srcMainFilesContaining("createTempDirectory") shouldBe empty
+    }
+  }
+
+  private def srcMainFilesContaining(text: String): Seq[String] = {
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val offenders = try {
+    try {
       import scala.jdk.CollectionConverters._
       walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
         .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          .contains(root))
+          .contains(text))
         .map(_.toString).toSeq
     } finally walk.close()
-    withClue(s"src/main files containing '$root': ") { offenders shouldBe empty }
   }
 }
 
