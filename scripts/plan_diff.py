@@ -18,7 +18,17 @@ runs of the same plan compare equal:
     becomes `<checkout>/target/` or `<checkout>/spark-warehouse/`;
   - the random suffix of a temporary directory (`/tmp/graft-zonemap123`)
     and the write id in a part file name (`part-00000-<uuid>`) are
-    dropped.
+    dropped;
+  - an `Expand` node (a distinct aggregate's rewrite) is put in one
+    canonical form. Spark orders its output columns and projection
+    lists by expression hash, which carries the expression ids, so the
+    same query can print them in another order, with other `gid`
+    numbers, whenever earlier queries in the JVM allocated a different
+    number of ids. The output columns are sorted by name (`gid` last),
+    every projection list follows them, the projection lists are
+    sorted, and the `gid` numbers are reassigned in that order; lines
+    below the `Expand` get the same column order and `gid = N`
+    numbers. A real change to a projection list still shows.
 
 Usage: python3 scripts/plan_diff.py BEFORE_DIR AFTER_DIR [-v]
 Prints the queries whose plans differ (and those present on one side
@@ -47,10 +57,84 @@ RULES = [
 ]
 
 
+def split_top(text):
+    """Split a comma-separated list at bracket depth 0."""
+    parts, depth, cur = [], 0, []
+    for ch in text:
+        depth += ch in "(["
+        depth -= ch in ")]"
+        if ch == "," and depth == 0:
+            parts.append("".join(cur).strip())
+            cur = []
+        else:
+            cur.append(ch)
+    parts.append("".join(cur).strip())
+    return parts
+
+
+def unbracket(text):
+    return split_top(text[1:-1]) if text.startswith("[") and text.endswith("]") else None
+
+
+GID = re.compile(r"\(gid# = (\d+)\)")
+
+
+def canonical_expand(args):
+    """The canonical `Arguments:` text of one Expand node, the old and
+    new output column lists, and the old -> new gid map; None when the
+    node does not have the distinct-aggregate shape."""
+    top = split_top(args)
+    if len(top) != 2:
+        return None
+    projections, output = unbracket(top[0]), unbracket(top[1])
+    if not projections or not output or "gid#" not in output:
+        return None
+    rows = [unbracket(p) for p in projections]
+    if any(r is None or len(r) != len(output) for r in rows):
+        return None
+    # the distinct-group columns precede gid; the columns after it
+    # (the plain aggregates' inputs) keep their order
+    g = output.index("gid#")
+    order = sorted(range(g), key=lambda i: output[i]) + list(range(g + 1, len(output)))
+    keyed = sorted(([r[i] for i in order], r[g]) for r in rows)
+    gids = sorted((r[g] for r in rows), key=int)
+    gid_map = {old: new for (_, old), new in zip(keyed, gids)}
+
+    def place(cells, gid):
+        return cells[:g] + [gid] + cells[g:]
+
+    new_output = place([output[i] for i in order], "gid#")
+    text = "[" + ", ".join("[" + ", ".join(place(cells, gid)) + "]"
+                           for (cells, _), gid in zip(keyed, gids))
+    text += "], [" + ", ".join(new_output) + "]"
+    return text, output[:g + 1], new_output[:g + 1], gid_map
+
+
+def canonical_expands(lines):
+    out, current = [], None
+    for i, line in enumerate(lines):
+        if i > 1 and lines[i - 2].endswith(") Expand") and line.startswith("Arguments: "):
+            found = canonical_expand(line[len("Arguments: "):])
+            if found:
+                text, old, new, gid_map = found
+                current = (old, new, gid_map)
+                out.append("Arguments: " + text)
+                continue
+        if current:
+            old, new, gid_map = current
+            # the group columns through gid, as a list and as sort keys
+            for suffix in ("", " ASC NULLS FIRST"):
+                line = line.replace(", ".join(c + suffix for c in old),
+                                    ", ".join(c + suffix for c in new))
+            line = GID.sub(lambda m: f"(gid# = {gid_map.get(m.group(1), m.group(1))})", line)
+        out.append(line)
+    return out
+
+
 def normalize(text):
     for pattern, repl in RULES:
         text = pattern.sub(repl, text)
-    return text.splitlines()
+    return canonical_expands(text.splitlines())
 
 
 def plans(d):

@@ -72,6 +72,24 @@ merged AS (
   SELECT symbol, date, min(close) AS close_price FROM merged
   WHERE symbol IN ('S0','S1','S2','S3','S4') GROUP BY symbol, date)"""
 
+  /** Per-(symbol, date) min close and min volume over `merged`, the
+    * twin of SparkEntry's `dailyCloseVolume`. */
+  private val dailyCloseVolumeCte: String = """daily AS (
+  SELECT symbol, date, min(close) AS close_price, min(volume) AS volume
+  FROM merged GROUP BY symbol, date)"""
+
+  /** Per-symbol close-to-close percent return over [[dailyCloseCte]],
+    * quantized once to DECIMAL(18,6) — the twin of
+    * [[graft.analytics.Correlation.dailyReturns]]. */
+  private val retsCte: String = """rets AS (
+  SELECT symbol, date,
+    CAST(ROUND(CAST((close_price - prev) / prev * 100 AS DECIMAL(28,10)), 6)
+         AS DECIMAL(18,6)) AS ret
+  FROM (SELECT symbol, date, close_price,
+          lag(close_price) OVER (PARTITION BY symbol ORDER BY date) AS prev
+        FROM daily)
+  WHERE prev IS NOT NULL AND prev <> 0)"""
+
   /** One bar per (symbol, date) from `merged`: the first non-null-open
     * bar by (data_source, row_id), as a subquery plus its filter — the
     * twin of SparkEntry's `firstBars`. */
@@ -394,10 +412,8 @@ WHERE rank <= 5 ORDER BY doc_id, rank"""
     * products would overflow int64-backed DECIMAL(18)), exact decimal
     * frame sums, decimal→double via VARCHAR (DuckDB's direct cast can
     * double-round), identical final double tree. */
-  val q100_rolling_corr: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price, min(volume) AS volume
-  FROM merged GROUP BY symbol, date),
+  val q100_rolling_corr: String = barsCte + s"""
+, $dailyCloseVolumeCte,
 q AS (
   SELECT symbol, date,
     CAST(CAST(ROUND(CAST(close_price AS DECIMAL(28,10)), 4) AS DECIMAL(18,4))
@@ -1629,20 +1645,13 @@ SELECT source, lang, CAST(n_docs AS BIGINT) AS n_docs, n_tokens, n_chars,
   CAST((n_docs * 1000) // total AS BIGINT) AS docs_permille
 FROM g CROSS JOIN t ORDER BY source, lang"""
 
-  /** q154 twin: the q62 rets CTE, the equal-weight market mean with
+  /** q154 twin: [[retsCte]], the equal-weight market mean with
     * the same quantization chain (VARCHAR-detour decimal→double, one
     * IEEE division, cast+round — the q62-documented DuckDB traps
     * apply here too), and the identical final double β tree. */
   val q154_market_beta: String = barsCte + s"""
 , $dailyCloseCte,
-rets AS (
-  SELECT symbol, date,
-    CAST(ROUND(CAST((close_price - prev) / prev * 100 AS DECIMAL(28,10)), 6)
-         AS DECIMAL(18,6)) AS ret
-  FROM (SELECT symbol, date, close_price,
-          lag(close_price) OVER (PARTITION BY symbol ORDER BY date) AS prev
-        FROM daily)
-  WHERE prev IS NOT NULL AND prev <> 0),
+$retsCte,
 mkt AS (
   SELECT date,
     CAST(ROUND(CAST(CAST(CAST(sum(ret) AS VARCHAR) AS DOUBLE) / count(*)
@@ -2701,18 +2710,11 @@ SELECT doc_id, lang, n_chars FROM rn WHERE rn <= 12
 ORDER BY lang, doc_id"""
 
   /** q304 twin of [[graft.analytics.Correlation.historicalVaR]]: the
-    * q158 rets CTE, the same ceil-rank tail, the VARCHAR-detour
+    * [[retsCte]], the same ceil-rank tail, the VARCHAR-detour
     * decimal→double for the ES division. */
   val q304_historical_var: String = barsCte + s"""
 , $dailyCloseCte,
-rets AS (
-  SELECT symbol, date,
-    CAST(ROUND(CAST((close_price - prev) / prev * 100 AS DECIMAL(28,10)), 6)
-         AS DECIMAL(18,6)) AS ret
-  FROM (SELECT symbol, date, close_price,
-          lag(close_price) OVER (PARTITION BY symbol ORDER BY date) AS prev
-        FROM daily)
-  WHERE prev IS NOT NULL AND prev <> 0),
+$retsCte,
 r AS (
   SELECT symbol, ret,
     row_number() OVER (PARTITION BY symbol ORDER BY ret, date) AS rnk,
@@ -2873,10 +2875,8 @@ FROM c ORDER BY threshold"""
 
   /** q297 twin of [[graft.analytics.Indicators.onBalanceVolume]]:
     * the same sign rule and per-symbol running sum. */
-  val q297_obv: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price, min(volume) AS volume
-  FROM merged GROUP BY symbol, date),
+  val q297_obv: String = barsCte + s"""
+, $dailyCloseVolumeCte,
 s AS (
   SELECT symbol, date, close_price, volume,
     lag(close_price) OVER (PARTITION BY symbol ORDER BY date) AS prev
@@ -3266,10 +3266,8 @@ FROM res GROUP BY symbol ORDER BY symbol"""
   /** q282 twin of [[graft.analytics.Correlation.kendallTau]]: the
     * q274 recency window with both variables, the same five pair
     * classes, identical τ-b tree. */
-  val q282_kendall_tau: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price, min(volume) AS volume
-  FROM merged GROUP BY symbol, date),
+  val q282_kendall_tau: String = barsCte + s"""
+, $dailyCloseVolumeCte,
 c AS (
   SELECT symbol, date, CAST(round(close_price * 100) AS BIGINT) AS x,
     volume AS y,
@@ -3500,10 +3498,8 @@ ORDER BY step1, step2, step3"""
   /** q275 twin of [[graft.analytics.Ranking.skyline]]: brute-force
     * NOT EXISTS dominance over all pairs — structurally independent
     * of the sorted-axis factorization, feasible at oracle scale. */
-  val q275_skyline: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price, min(volume) AS volume
-  FROM merged GROUP BY symbol, date),
+  val q275_skyline: String = barsCte + s"""
+, $dailyCloseVolumeCte,
 pts AS (
   SELECT symbol, date, volume,
     CAST(round(close_price * 100) AS BIGINT) AS close_cents
@@ -3580,10 +3576,8 @@ FROM rk GROUP BY symbol ORDER BY symbol"""
   /** q273 twin of [[graft.analytics.Correlation.spearmanCorr]]: the
     * same doubled average ranks (2·rank + ties − 1, integer), exact
     * integer sums cast to double, identical final ρ tree. */
-  val q273_spearman: String = barsCte + """
-, daily AS (
-  SELECT symbol, date, min(close) AS close_price, min(volume) AS volume
-  FROM merged GROUP BY symbol, date),
+  val q273_spearman: String = barsCte + s"""
+, $dailyCloseVolumeCte,
 v AS (
   SELECT symbol, CAST(round(close_price * 100) AS BIGINT) AS x, volume AS y
   FROM daily WHERE close_price IS NOT NULL AND volume IS NOT NULL),
@@ -6637,19 +6631,12 @@ JOIN fb f ON b.frequency = f.v
 JOIN mb m ON b.mband = m.v
 ORDER BY b.customer"""
 
-  /** q158 twin: the q62 rets CTE, the same lag pairing, and the q62
+  /** q158 twin: [[retsCte]], the same lag pairing, and the q62
     * conversion traps (widen-before-multiply, VARCHAR-detour
     * decimal→double) with the identical final double ρ tree. */
   val q158_autocorr: String = barsCte + s"""
 , $dailyCloseCte,
-rets AS (
-  SELECT symbol, date,
-    CAST(ROUND(CAST((close_price - prev) / prev * 100 AS DECIMAL(28,10)), 6)
-         AS DECIMAL(18,6)) AS ret
-  FROM (SELECT symbol, date, close_price,
-          lag(close_price) OVER (PARTITION BY symbol ORDER BY date) AS prev
-        FROM daily)
-  WHERE prev IS NOT NULL AND prev <> 0),
+$retsCte,
 p AS (
   SELECT symbol, ret,
     lag(ret, 1) OVER (PARTITION BY symbol ORDER BY date) AS prev
@@ -9504,14 +9491,7 @@ FROM r ORDER BY symbol, date"""
     * — accumulation order can no longer matter. */
   val q62_corr_matrix: String = barsCte + s"""
 , $dailyCloseCte,
-rets AS (
-  SELECT symbol, date,
-    CAST(ROUND(CAST((close_price - prev) / prev * 100 AS DECIMAL(28,10)), 6)
-         AS DECIMAL(18,6)) AS ret
-  FROM (SELECT symbol, date, close_price,
-          lag(close_price) OVER (PARTITION BY symbol ORDER BY date) AS prev
-        FROM daily)
-  WHERE prev IS NOT NULL AND prev <> 0),
+$retsCte,
 agg AS (
   SELECT a.symbol AS sym_a, b.symbol AS sym_b, count(*) AS n_days,
     -- two DuckDB-vs-Spark conversion traps here:

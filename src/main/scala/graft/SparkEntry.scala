@@ -291,17 +291,20 @@ object SparkEntry {
     ringA.unionAll(ringB).unionAll(bridge)
   }
 
-  /** Per-(symbol, date) close: the min close of the day's bars (oracle
-    * twin: OracleSql's dailyCloseCte). */
-  private def dailyClose(bars: DataFrame): DataFrame =
-    bars.groupBy(col("symbol"), col("date"))
-      .agg(min(col("close")).as("close_price"))
-
-  /** [[dailyClose]] of the S0-S4 panel the forecasting queries read
-    * (oracle twin: OracleSql's panelDailyCloseCte). */
+  /** [[StockAnalytics.dailyClose]] of the S0-S4 panel the forecasting
+    * queries read (oracle twin: OracleSql's panelDailyCloseCte). */
   private def panelDailyClose(s: SparkSession, dir: String): DataFrame =
-    dailyClose(mergedBars(s, dir)
+    StockAnalytics.dailyClose(mergedBars(s, dir)
       .filter(col("symbol").isin("S0", "S1", "S2", "S3", "S4")))
+
+  /** One bar per (symbol, date) with the day's min close as
+    * `close_price` and min volume as `volume`, the input of the
+    * price-volume queries (oracle twin: OracleSql's
+    * dailyCloseVolumeCte). */
+  private def dailyCloseVolume(s: SparkSession, dir: String): DataFrame =
+    mergedBars(s, dir).groupBy(col("symbol"), col("date"))
+      .agg(min(col("close")).as("close_price"),
+        min(col("volume")).as("volume"))
 
   /** `close_price` as integer cents in `close_cents`, the trend
     * tests' exact input. */
@@ -326,11 +329,8 @@ object SparkEntry {
     * moving-average analytic (driver smoke-checks rows > 0). */
   def entry(spark: SparkSession): DataFrame = {
     val merged = mergedBars(spark, "/root/testdata/sf0.001")
-    StockAnalytics.movingAverages(merged, pick = min(_))
+    StockAnalytics.movingAverages(merged)
   }
-
-  private val minPick: Column => Column = min(_)
-  private val exactAvg4: Column => Column = Exact.exactAvg(_, 4)
 
   /** Canonical text form of an array<struct<k,v>> column:
     * "k1:v1;k2:v2" over the (already sorted) array. Keeps the nested
@@ -441,12 +441,12 @@ object SparkEntry {
 
     // A3/K9: daily metrics view.
     "q03_daily_metrics" -> ((s, dir) =>
-      StockAnalytics.dailyMetrics(mergedBars(s, dir), pick = minPick, avgF = exactAvg4)
+      StockAnalytics.dailyMetrics(mergedBars(s, dir))
         .orderBy(col("date"), col("symbol"))),
 
     // W2: pre-agg + trailing moving averages 5/10/20/50.
     "q04_moving_averages" -> ((s, dir) =>
-      StockAnalytics.movingAverages(mergedBars(s, dir), pick = minPick)
+      StockAnalytics.movingAverages(mergedBars(s, dir))
         .orderBy(col("symbol"), col("date"))),
 
     // A4/J2: cross-source inconsistency (group + HAVING), including the
@@ -456,7 +456,7 @@ object SparkEntry {
     // array cells, and double→string casts are shortest-repr identical
     // on both engines (the same contract the CSV round-trip rides on).
     "q05_inconsistency" -> ((s, dir) =>
-      StockAnalytics.inconsistencies(mergedBars(s, dir), minPctDiff = 2.0)
+      StockAnalytics.inconsistencies(mergedBars(s, dir))
         .withColumn("source_details", pairText(col("source_details"),
           "data_source", "close", fixedText))
         .orderBy(col("date"), col("symbol"))),
@@ -968,10 +968,8 @@ object SparkEntry {
       val cut = lit("1998-06-01").cast("date")
       val before = merged.filter(col("date") < cut)
       val staging = merged.filter(col("date") >= cut)
-      val rollup0 = StockAnalytics.dailyMetrics(before,
-        pick = minPick, avgF = exactAvg4)
-      StockAnalytics.incrementalDailyMetrics(rollup0, merged, staging,
-        pick = minPick, avgF = exactAvg4)
+      val rollup0 = StockAnalytics.dailyMetrics(before)
+      StockAnalytics.incrementalDailyMetrics(rollup0, merged, staging)
         .orderBy(col("date"), col("symbol"))
     }),
 
@@ -988,7 +986,7 @@ object SparkEntry {
     // Pairwise return-correlation matrix: exact decimal sums feed an
     // identical double corr formula on both engines.
     "q62_corr_matrix" -> ((s, dir) => {
-      val daily = dailyClose(mergedBars(s, dir))
+      val daily = StockAnalytics.dailyClose(mergedBars(s, dir))
       graft.analytics.Correlation.pairwiseCorr(
         graft.analytics.Correlation.dailyReturns(daily))
         .orderBy(col("sym_a"), col("sym_b"))
@@ -997,7 +995,7 @@ object SparkEntry {
     // Per-symbol OLS trend line over daily closes (exact integer
     // sums, identical final double trees — the q62 recipe).
     "q96_ols_trend" -> ((s, dir) => {
-      val daily = dailyClose(mergedBars(s, dir))
+      val daily = StockAnalytics.dailyClose(mergedBars(s, dir))
       graft.analytics.Correlation.olsTrend(daily).orderBy(col("symbol"))
     }),
 
@@ -1016,7 +1014,7 @@ object SparkEntry {
 
     // W1: pandas rolling(n) semantics — NULL until a full window.
     "q29_ma_pandas" -> ((s, dir) =>
-      StockAnalytics.movingAveragesPandasStyle(mergedBars(s, dir), pick = minPick)
+      StockAnalytics.movingAveragesPandasStyle(mergedBars(s, dir))
         .orderBy(col("symbol"), col("date"))),
 
     // P13/P14: freshness + age probes against a literal anchor.
@@ -1345,7 +1343,7 @@ object SparkEntry {
     // BIGINTs, earliest-date argmax; completes CUSUM (when) /
     // Mann-Kendall (whether) with WHERE the level shifted.
     "q313_pettitt" -> ((s, dir) => {
-      val daily = withCloseCents(dailyClose(mergedBars(s, dir)))
+      val daily = withCloseCents(StockAnalytics.dailyClose(mergedBars(s, dir)))
       graft.analytics.Correlation.pettittTest(daily, "close_cents")
         .orderBy(col("symbol"))
     }),
@@ -1404,7 +1402,7 @@ object SparkEntry {
     // the "find the break, then trust no single trend across it"
     // report. Regimes ride olsTrend's group key as symbol|regime.
     "q318_segmented_trend" -> ((s, dir) => {
-      val daily = dailyClose(mergedBars(s, dir))
+      val daily = StockAnalytics.dailyClose(mergedBars(s, dir))
       val cp = graft.analytics.Correlation.pettittTest(
           withCloseCents(daily),
           "close_cents")
@@ -1884,7 +1882,7 @@ object SparkEntry {
     // -- everything exact BIGINT micro-units, no float anywhere.
     "q359_seasonal_decompose" -> ((s, dir) => {
       val daily = firstBars(s, dir).select("symbol", "date", "close")
-      graft.analytics.StockAnalytics.seasonalDecompose(daily, period = 7)
+      graft.analytics.StockAnalytics.seasonalDecompose(daily)
         .orderBy(col("symbol"), col("date"))
     }),
 
@@ -2492,7 +2490,7 @@ object SparkEntry {
     // from WITHIN-WEEKDAY pairs only, so weekly seasonality cannot
     // masquerade as trend; exact integers, K^2/2-per-slot governor.
     "q366_seasonal_mk" -> ((s, dir) => {
-      val daily = withCloseCents(dailyClose(mergedBars(s, dir)))
+      val daily = withCloseCents(StockAnalytics.dailyClose(mergedBars(s, dir)))
       graft.analytics.Correlation.seasonalMannKendall(daily, "close_cents")
         .orderBy(col("symbol"))
     }),
@@ -2739,7 +2737,7 @@ object SparkEntry {
     // ceil-rank tail pick and exact decimal tail sum, one final
     // double division.
     "q304_historical_var" -> ((s, dir) => {
-      val daily = dailyClose(mergedBars(s, dir))
+      val daily = StockAnalytics.dailyClose(mergedBars(s, dir))
       graft.analytics.Correlation.historicalVaR(
           graft.analytics.Correlation.dailyReturns(daily))
         .orderBy(col("symbol"))
@@ -2800,9 +2798,7 @@ object SparkEntry {
 
     // On-balance volume per symbol: exact signed-volume prefix sum.
     "q297_obv" -> ((s, dir) => {
-      val daily = mergedBars(s, dir).groupBy(col("symbol"), col("date"))
-        .agg(min(col("close")).as("close_price"),
-          min(col("volume")).as("volume"))
+      val daily = dailyCloseVolume(s, dir)
       graft.analytics.Indicators.onBalanceVolume(daily)
         .orderBy(col("symbol"), col("date"))
     }),
@@ -3013,11 +3009,7 @@ object SparkEntry {
     // sessions: all five pair classes exact, tie-corrected tau in
     // the identical double tree.
     "q282_kendall_tau" -> ((s, dir) => {
-      val daily = mergedBars(s, dir).groupBy(col("symbol"), col("date"))
-        .agg(min(col("close")).as("close_price"),
-          min(col("volume")).as("volume"))
-        .withColumn("close_cents",
-          expr("CAST(round(close_price * 100) AS BIGINT)"))
+      val daily = withCloseCents(dailyCloseVolume(s, dir))
       graft.analytics.Correlation.kendallTau(daily, "close_cents", "volume")
         .orderBy(col("symbol"))
     }),
@@ -3092,9 +3084,7 @@ object SparkEntry {
     // one aggregate + one distributed exclusive prefix max + one join
     // back, vs the oracle's brute-force NOT EXISTS over all pairs.
     "q275_skyline" -> ((s, dir) => {
-      val pts = mergedBars(s, dir).groupBy(col("symbol"), col("date"))
-        .agg(min(col("close")).as("close_price"),
-          min(col("volume")).as("volume"))
+      val pts = dailyCloseVolume(s, dir)
         .select(col("symbol"), col("date"), col("volume"),
           expr("CAST(round(close_price * 100) AS BIGINT)").as("close_cents"))
       graft.analytics.Ranking.skyline(pts, "volume", "close_cents")
@@ -3107,7 +3097,7 @@ object SparkEntry {
     // slopes inside the stated K^2/2 window governor; lower-median
     // Sen slope in micro-cents/day.
     "q274_mann_kendall" -> ((s, dir) => {
-      val daily = withCloseCents(dailyClose(mergedBars(s, dir)))
+      val daily = withCloseCents(StockAnalytics.dailyClose(mergedBars(s, dir)))
       graft.analytics.Correlation.mannKendall(daily, "close_cents")
         .orderBy(col("symbol"))
     }),
@@ -3116,11 +3106,7 @@ object SparkEntry {
     // tie-correct average ranks held as doubled integers, exact
     // integer sums, the q62 double-tree finish.
     "q273_spearman" -> ((s, dir) => {
-      val daily = mergedBars(s, dir).groupBy(col("symbol"), col("date"))
-        .agg(min(col("close")).as("close_price"),
-          min(col("volume")).as("volume"))
-        .withColumn("close_cents",
-          expr("CAST(round(close_price * 100) AS BIGINT)"))
+      val daily = withCloseCents(dailyCloseVolume(s, dir))
       graft.analytics.Correlation.spearmanCorr(daily,
           "symbol", "close_cents", "volume")
         .orderBy(col("symbol"))
@@ -3130,7 +3116,7 @@ object SparkEntry {
     // Page 1954 one-sided pair via the prefix-sum/running-extrema
     // identity — two windows, no sequential fold.
     "q272_cusum_alarms" -> ((s, dir) => {
-      val daily = dailyClose(mergedBars(s, dir))
+      val daily = StockAnalytics.dailyClose(mergedBars(s, dir))
       graft.analytics.Indicators.cusumAlarms(daily)
         .orderBy(col("symbol"), col("date"))
     }),
@@ -4718,7 +4704,7 @@ object SparkEntry {
     // CAPM beta per symbol vs the equal-weight market return — the
     // index regression; market frame replaces q62's pair join.
     "q154_market_beta" -> ((s, dir) => {
-      val daily = dailyClose(mergedBars(s, dir))
+      val daily = StockAnalytics.dailyClose(mergedBars(s, dir))
       graft.analytics.Correlation.marketBeta(
           graft.analytics.Correlation.dailyReturns(daily))
         .orderBy(col("symbol"))
@@ -4728,7 +4714,7 @@ object SparkEntry {
     // probe (bid-ask bounce vs stale pricing), exact decimal sums
     // with the q62 double-tree finish.
     "q158_autocorr" -> ((s, dir) => {
-      val daily = dailyClose(mergedBars(s, dir))
+      val daily = StockAnalytics.dailyClose(mergedBars(s, dir))
       graft.analytics.Correlation.returnAutocorr(
           graft.analytics.Correlation.dailyReturns(daily))
         .orderBy(col("symbol"))
@@ -5353,7 +5339,7 @@ object SparkEntry {
     // distinct ordering).
     "q68_window_ranks" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val daily = dailyClose(mergedBars(s, dir))
+      val daily = StockAnalytics.dailyClose(mergedBars(s, dir))
       // rank/dense/percent_rank/cume_dist keep TIES (integer closes
       // repeat) — their values are deterministic over tied peers;
       // ntile splits ties arbitrarily, so it alone gets the date
@@ -5706,10 +5692,8 @@ object SparkEntry {
     // Rolling 20-day price-volume Pearson correlation per symbol —
     // five exact decimal frame sums in ONE window pass.
     "q100_rolling_corr" -> ((s, dir) => {
-      val daily = mergedBars(s, dir).groupBy(col("symbol"), col("date"))
-        .agg(min(col("close")).as("close_price"),
-          min(col("volume")).as("volume"))
-      graft.analytics.Correlation.rollingPriceVolumeCorr(daily, 20)
+      val daily = dailyCloseVolume(s, dir)
+      graft.analytics.Correlation.rollingPriceVolumeCorr(daily)
         .orderBy(col("symbol"), col("date"))
     }),
 
@@ -5725,7 +5709,7 @@ object SparkEntry {
     // Robust outlier audit: per-symbol median/MAD fence on daily
     // close, counting rows beyond 3 MADs.
     "q102_mad_outliers" -> ((s, dir) => {
-      val daily = dailyClose(mergedBars(s, dir))
+      val daily = StockAnalytics.dailyClose(mergedBars(s, dir))
       graft.analytics.Profiling.madOutliers(daily, "symbol", "close_price")
         .orderBy(col("symbol"))
     }),

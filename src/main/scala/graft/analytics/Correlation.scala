@@ -26,9 +26,49 @@ import org.apache.spark.sql.functions._
   */
 object Correlation {
 
+  /** Fewest rows (days, lag pairs) a per-group statistic needs. */
+  private val MinDays = 2
+  /** Rows of the rolling price–volume window. */
+  private val RollWindow = 20
+  /** Tail of [[historicalVaR]], in permille (5% VaR). */
+  private val VarAlphaPermille = 50L
+  /** FDR level of [[mannWhitneyScreen]], in permille. */
+  private val ScreenAlphaPermille = 50L
+  /** Recency governors of the pair tests: the last K rows per series. */
+  private val PairWindowRows = 60
+  private val SeasonalWindowRows = 84
+  /** Fewest rows [[pettittTest]] locates a changepoint in. */
+  private val PettittMinRows = 4
+
+  /** The five exact moment sums of (x, y), each cast to double once:
+    * `__sx`, `__sy`, `__sxx`, `__syy`, `__sxy`. */
+  private def momentSums(x: Column, y: Column): Seq[Column] = Seq(
+    sum(x).cast("double").as("__sx"), sum(y).cast("double").as("__sy"),
+    sum(x * x).cast("double").as("__sxx"), sum(y * y).cast("double").as("__syy"),
+    sum(x * y).cast("double").as("__sxy"))
+
+  /** Pearson r over `n` rows from the [[momentSums]] columns, in the
+    * one double expression tree both engines evaluate (the q62
+    * finish); NULL when either side has zero variance. */
+  private def pearson(n: Column): Column = {
+    val varx = n * col("__sxx") - col("__sx") * col("__sx")
+    val vary = n * col("__syy") - col("__sy") * col("__sy")
+    when(varx > 0 && vary > 0,
+      (n * col("__sxy") - col("__sx") * col("__sy")) /
+        (sqrt(varx) * sqrt(vary)))
+  }
+
+  /** Twice the average (mid)rank of column `c` within group `g`:
+    * 2·rank + ties − 1, always an integer. */
+  private def doubledRank(g: Column, c: String): Column =
+    (rank().over(Window.partitionBy(g).orderBy(col(c))) * 2 +
+      count(lit(1)).over(Window.partitionBy(g, col(c))) - 1)
+      .cast("long")
+
   /** Per-symbol daily close-to-close percent return, quantized to
-    * DECIMAL(18,6). Input: ONE row per (symbol, date) with
-    * `close_price`. First day per symbol (no prior close) is dropped. */
+    * DECIMAL(18,6) (oracle twin: OracleSql's retsCte). Input: ONE row
+    * per (symbol, date) with `close_price`. First day per symbol (no
+    * prior close) is dropped. */
   def dailyReturns(daily: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("symbol")).orderBy(col("date"))
     daily
@@ -44,8 +84,8 @@ object Correlation {
     * ordered pair (sym_a < sym_b) with the day count and the Pearson
     * correlation of same-day returns.
     *
-    * `materialize` (default on) localCheckpoints the returns frame
-    * before the self-join: Spark cannot reuse a subplan across the
+    * The returns frame is localCheckpointed before the self-join:
+    * Spark cannot reuse a subplan across the
     * probe and build sides of one join, so without it BOTH sides
     * recompute the entire upstream pipeline (scan → transform → merge
     * → window). The returns frame is the aggregated, tiny end of that
@@ -53,31 +93,18 @@ object Correlation {
     * small local write for the second full pipeline pass. At sf0.1
     * (where the base pipeline is cheap) that is ~15%; at 100 TB the
     * saved pass IS the query cost. */
-  def pairwiseCorr(returns: DataFrame, minDays: Int = 2,
-                   materialize: Boolean = true): DataFrame = {
-    val r = if (materialize) returns.localCheckpoint() else returns
+  def pairwiseCorr(returns: DataFrame): DataFrame = {
+    val r = returns.localCheckpoint()
     val a = r.select(col("symbol").as("sym_a"), col("date"),
       col("ret").as("ra"))
     val b = r.select(col("symbol").as("sym_b"), col("date"),
       col("ret").as("rb"))
     val paired = a.join(b, Seq("date")).filter(col("sym_a") < col("sym_b"))
-    val agg = paired.groupBy(col("sym_a"), col("sym_b")).agg(
-      count(lit(1)).as("n_days"),
-      sum(col("ra")).cast("double").as("__sx"),
-      sum(col("rb")).cast("double").as("__sy"),
-      sum(col("ra") * col("ra")).cast("double").as("__sxx"),
-      sum(col("rb") * col("rb")).cast("double").as("__syy"),
-      sum(col("ra") * col("rb")).cast("double").as("__sxy"))
-    val n = col("n_days").cast("double")
-    val varx = n * col("__sxx") - col("__sx") * col("__sx")
-    val vary = n * col("__syy") - col("__sy") * col("__sy")
-    agg
-      .filter(col("n_days") >= minDays)
+    paired.groupBy(col("sym_a"), col("sym_b"))
+      .agg(count(lit(1)).as("n_days"), momentSums(col("ra"), col("rb")): _*)
+      .filter(col("n_days") >= MinDays)
       .select(col("sym_a"), col("sym_b"), col("n_days"),
-        when(varx > 0 && vary > 0,
-          (n * col("__sxy") - col("__sx") * col("__sy")) /
-            (sqrt(varx) * sqrt(vary)))
-          .as("corr"))
+        pearson(col("n_days").cast("double")).as("corr"))
   }
 
   /** CAPM market beta per symbol against the EQUAL-WEIGHT market
@@ -94,7 +121,7 @@ object Correlation {
     * onto the returns, one per-symbol aggregate — output bounded by
     * the symbol universe; no self-join (the market frame replaces
     * q62's quadratic pair join). */
-  def marketBeta(returns: DataFrame, minDays: Int = 2): DataFrame = {
+  def marketBeta(returns: DataFrame): DataFrame = {
     val market = returns.groupBy(col("date"))
       .agg(sum(col("ret")).cast("double").as("__s"), count(lit(1)).as("__n"))
       .select(col("date"),
@@ -109,7 +136,7 @@ object Correlation {
         sum(col("ret") * col("rm")).cast("double").as("__sxy"))
     val n = col("n_days").cast("double")
     val varm = n * col("__syy") - col("__sy") * col("__sy")
-    agg.filter(col("n_days") >= minDays)
+    agg.filter(col("n_days") >= MinDays)
       .select(col("symbol"), col("n_days"),
         when(varm > 0,
           (n * col("__sxy") - col("__sx") * col("__sy")) / varm).as("beta"))
@@ -133,29 +160,16 @@ object Correlation {
     * an identical expression tree on both engines. One per-symbol
     * hash aggregate; output bounded by the symbol universe; no
     * self-join (the lag replaces q62's pair join). */
-  def returnAutocorr(returns: DataFrame, lagDays: Int = 1,
-                     minDays: Int = 2): DataFrame = {
-    require(lagDays >= 1, "lagDays must be >= 1")
+  def returnAutocorr(returns: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("symbol")).orderBy(col("date"))
-    val paired = returns
-      .withColumn("__prev", lag(col("ret"), lagDays).over(w))
+    returns
+      .withColumn("__prev", lag(col("ret"), 1).over(w))
       .filter(col("__prev").isNotNull)
-    val agg = paired.groupBy(col("symbol")).agg(
-      count(lit(1)).as("n_pairs"),
-      sum(col("ret")).cast("double").as("__sx"),
-      sum(col("__prev")).cast("double").as("__sy"),
-      sum(col("ret") * col("ret")).cast("double").as("__sxx"),
-      sum(col("__prev") * col("__prev")).cast("double").as("__syy"),
-      sum(col("ret") * col("__prev")).cast("double").as("__sxy"))
-    val n = col("n_pairs").cast("double")
-    val varx = n * col("__sxx") - col("__sx") * col("__sx")
-    val vary = n * col("__syy") - col("__sy") * col("__sy")
-    agg.filter(col("n_pairs") >= minDays)
+      .groupBy(col("symbol"))
+      .agg(count(lit(1)).as("n_pairs"), momentSums(col("ret"), col("__prev")): _*)
+      .filter(col("n_pairs") >= MinDays)
       .select(col("symbol"), col("n_pairs"),
-        when(varx > 0 && vary > 0,
-          (n * col("__sxy") - col("__sx") * col("__sy")) /
-            (sqrt(varx) * sqrt(vary)))
-          .as("autocorr"))
+        pearson(col("n_pairs").cast("double")).as("autocorr"))
   }
 
   /** Per-group OLS trend line (least-squares close-vs-time slope and
@@ -170,7 +184,7 @@ object Correlation {
     * products fit int64; their sums are decimal/hugeint-widened). The
     * slope/intercept of the scaled series evaluate in doubles in an
     * identical expression tree, and two final ÷10⁶ un-scale them. */
-  def olsTrend(daily: DataFrame, minDays: Int = 2): DataFrame = {
+  def olsTrend(daily: DataFrame): DataFrame = {
     val q = daily.select(col("symbol"),
       datediff(col("date"), lit("1970-01-01")).cast("long").as("__x"),
       (round(col("close_price").cast("decimal(28,10)"), 6)
@@ -185,7 +199,7 @@ object Correlation {
     val n = col("n_days").cast("double")
     val denom = n * col("__sxx") - col("__sx") * col("__sx")
     val slope6 = (n * col("__sxy6") - col("__sx") * col("__sy6")) / denom
-    agg.filter(col("n_days") >= minDays && denom =!= 0.0)
+    agg.filter(col("n_days") >= MinDays && denom =!= 0.0)
       .select(col("symbol"), col("n_days"),
         (slope6 / 1e6).as("slope"),
         (((col("__sy6") - slope6 * col("__sx")) / n) / 1e6).as("intercept"))
@@ -193,14 +207,14 @@ object Correlation {
 
   /** Trailing-window price–volume correlation per symbol — the rolling
     * Pearson correlation of close vs traded volume over the last
-    * `windowDays` rows, the "is volume confirming the move" indicator
+    * 20 rows, the "is volume confirming the move" indicator
     * (and the general rolling-correlation primitive: any two measures
     * on one keyed series).
     *
     * The five frame sums the correlation needs all share a single
     * (symbol, date) sort — no self-join, no second shuffle, output one
     * row per input row with a full frame — and each is computed O(1)
-    * per row as a difference of running sums rather than O(windowDays)
+    * per row as a difference of running sums rather than O(window)
     * per row by frame re-aggregation (see the inline note; exactness
     * makes the two forms bit-identical). At 100 TB the cost is the one
     * sort-within-symbol the series already needs.
@@ -213,15 +227,14 @@ object Correlation {
     * any engine), every frame sum is exact decimal arithmetic, and the
     * correlation evaluates in doubles in an identical expression tree
     * on both engines. */
-  def rollingPriceVolumeCorr(daily: DataFrame,
-                             windowDays: Int = 20): DataFrame = {
+  def rollingPriceVolumeCorr(daily: DataFrame): DataFrame = {
     val x = (round(col("close_price").cast("decimal(28,10)"), 4)
       .cast("decimal(18,4)") * lit(10000)).cast("decimal(19,0)")
     val v = col("volume").cast("decimal(19,0)")
-    // Sliding-frame sums are O(rows × windowDays): Spark re-aggregates
+    // Sliding-frame sums are O(rows × window): Spark re-aggregates
     // every bounded ROWS frame from scratch. Because the sums are
     // EXACT decimals, each frame sum is instead the difference of two
-    // RUNNING sums (run − lag(run, windowDays)) — bit-identical values
+    // RUNNING sums (run − lag(run, RollWindow)) — bit-identical values
     // (no rounding anywhere at scale 0), O(rows), and the running
     // frame is Spark's optimized unbounded-preceding path. All six
     // aggregates share one select each so the CollapseWindow rule
@@ -232,7 +245,7 @@ object Correlation {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wOrd = Window.partitionBy(col("symbol")).orderBy(col("date"))
     def frame(run: String) =
-      (col(run) - coalesce(lag(col(run), windowDays).over(wOrd),
+      (col(run) - coalesce(lag(col(run), RollWindow).over(wOrd),
         lit(0).cast("decimal(19,0)"))).cast("double")
     val agged = daily
       .select(col("symbol"), col("date"), x.as("__x"), v.as("__v"))
@@ -247,15 +260,9 @@ object Correlation {
         frame("__rx").as("__sx"), frame("__rv").as("__sy"),
         frame("__rxx").as("__sxx"), frame("__ryy").as("__syy"),
         frame("__rxy").as("__sxy"))
-    val n = lit(windowDays).cast("double")
-    val varx = n * col("__sxx") - col("__sx") * col("__sx")
-    val vary = n * col("__syy") - col("__sy") * col("__sy")
-    agged.filter(col("__rn") >= windowDays)
+    agged.filter(col("__rn") >= RollWindow)
       .select(col("symbol"), col("date"),
-        when(varx > 0 && vary > 0,
-          (n * col("__sxy") - col("__sx") * col("__sy")) /
-            (sqrt(varx) * sqrt(vary)))
-          .as("pv_corr"))
+        pearson(lit(RollWindow).cast("double")).as("pv_corr"))
   }
 
   /** Historical value-at-risk + expected shortfall per series — the
@@ -272,16 +279,13 @@ object Correlation {
     *
     * Shape: one rank window riding the per-symbol sort + one
     * conditional aggregate; output bounded by the symbol universe. */
-  def historicalVaR(returns: DataFrame,
-                    alphaPermille: Long = 50L): DataFrame = {
-    require(alphaPermille >= 1 && alphaPermille <= 500,
-      "alphaPermille must be in [1, 500]")
+  def historicalVaR(returns: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("symbol"))
       .orderBy(col("ret"), col("date"))
     val ranked = returns
       .withColumn("__rnk", row_number().over(w))
       .withColumn("__n", count(lit(1)).over(Window.partitionBy(col("symbol"))))
-      .withColumn("__k", expr(s"(__n * $alphaPermille + 999) div 1000"))
+      .withColumn("__k", expr(s"(__n * $VarAlphaPermille + 999) div 1000"))
     ranked.groupBy(col("symbol")).agg(
       max(col("__n")).as("n_days"),
       max(col("__k")).as("tail_k"),
@@ -300,8 +304,9 @@ object Correlation {
     * − P(discordant)), the most robust of the three to gross ranking
     * noise and the one with a direct probabilistic reading. Same
     * bounded-recency pair governor as [[mannKendall]] (τ-b vs TIME is
-    * exactly Mann–Kendall; this is the two-VARIABLE form): last
-    * `windowRows` rows per series, K(K−1)/2 pairs.
+    * exactly Mann–Kendall; this is the two-VARIABLE form): the
+    * [[recentRows]]/[[laterPairs]] skeleton over the last K = 60 rows
+    * per series, K(K−1)/2 pairs.
     *
     * All five pair classes exact BIGINT (concordant, discordant,
     * x-only ties, y-only ties, both-tied); τ-b evaluates in doubles
@@ -318,26 +323,11 @@ object Correlation {
     * stated fixed-point unit (e.g. `round(x * 1e6)` micro-units)
     * before calling; the monotone scaling leaves τ-b invariant while
     * preserving the tie structure of the quantized values. */
-  def kendallTau(daily: DataFrame, xCol: String, yCol: String,
-                 windowRows: Int = 60): DataFrame = {
-    require(windowRows >= 2, "windowRows must be >= 2")
-    val wDesc = Window.partitionBy(col("symbol")).orderBy(col("date").desc)
-    val recent = daily
-      .withColumn("__rd", row_number().over(wDesc))
-      .filter(col("__rd") <= windowRows)
-      .select(col("symbol"), col("date"),
-        col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
-      .localCheckpoint()
-    val a = recent.select(col("symbol"), col("date").as("__da"),
-      col("__x").as("__xa"), col("__y").as("__ya"))
-    val b = recent.select(col("symbol"), col("date").as("__db"),
-      col("__x").as("__xb"), col("__y").as("__yb"))
-    val sgnX = when(col("__xb") > col("__xa"), 1L)
-      .when(col("__xb") < col("__xa"), -1L).otherwise(0L)
-    val sgnY = when(col("__yb") > col("__ya"), 1L)
-      .when(col("__yb") < col("__ya"), -1L).otherwise(0L)
-    val agg = a.join(b, Seq("symbol")).filter(col("__da") < col("__db"))
-      .select(col("symbol"), sgnX.as("__sx"), sgnY.as("__sy"))
+  def kendallTau(daily: DataFrame, xCol: String, yCol: String): DataFrame = {
+    val recent = recentRows(daily, PairWindowRows, dayNumber,
+      col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
+    val agg = laterPairs(recent, Seq("symbol"))
+      .select(col("symbol"), pairSign("__x").as("__sx"), pairSign("__y").as("__sy"))
       .groupBy(col("symbol")).agg(
         count(lit(1)).as("n_pairs"),
         sum(when(col("__sx") * col("__sy") === 1L, 1L).otherwise(0L))
@@ -360,29 +350,38 @@ object Correlation {
           (sqrt(dx) * sqrt(dy))).as("tau_b"))
   }
 
-  /** Spearman rank correlation per group (Spearman 1904) — the
-    * monotone-association complement to the Pearson family above:
-    * rank-based, so one fat-tailed outlier day (exactly what price ×
-    * volume data serves) cannot swamp the statistic the way it swamps
-    * every product-moment sum, and any monotone nonlinear relation
-    * scores |ρ| → 1 where Pearson under-reads it.
-    *
-    * ρ_s = Pearson over the AVERAGE ranks (the tie-correct
-    * definition, not the 6Σd² shortcut, which is valid only tie-free).
-    * Exactness device: the average rank of a tie group,
-    * rank + (ties−1)/2, is a half-integer — so the operator ranks on
-    * the DOUBLED rank 2·rank(x) + ties(x) − 1, an INTEGER, keeping
-    * every sum exact (the constant 2× scaling on both variables
-    * cancels in the correlation). Sums of doubled-rank products are
-    * ≤ 4n³ per group — inside int64 to n ~ 10⁶ rows/group and exactly
-    * representable in the final doubles far beyond that; the ρ itself
-    * evaluates in the identical q62 double tree on both engines.
-    *
-    * Shape: two rank windows (one per variable) + one tie-count
-    * window each, all partitioned by the group key, then one hash
-    * aggregate — no self-join; output bounded by the group universe.
-    * At 100 TB parallelism = group count, each group sorted twice
-    * (once per variable's rank order). */
+  /** The pair skeleton's input: the last `k` rows of each series
+    * (by date), projected to `symbol` and `cols` (which hold the day
+    * number `__t`). LocalCheckpointed — both sides of the self-join
+    * read it — so building it runs a job. */
+  private def recentRows(daily: DataFrame, k: Int, cols: Column*): DataFrame = {
+    val wDesc = Window.partitionBy(col("symbol")).orderBy(col("date").desc)
+    daily
+      .withColumn("__rd", row_number().over(wDesc))
+      .filter(col("__rd") <= k)
+      .select(col("symbol") +: cols: _*)
+      .localCheckpoint()
+  }
+
+  /** Days since 1970-01-01, the pairs' order and slope run. */
+  private def dayNumber: Column =
+    datediff(col("date"), lit("1970-01-01")).cast("long").as("__t")
+
+  /** Every ordered pair of [[recentRows]] rows that share `keys` and
+    * whose day `__t` rises from side a to side b; each other column
+    * `c` appears as `c` + "a" and `c` + "b". */
+  private def laterPairs(recent: DataFrame, keys: Seq[String]): DataFrame = {
+    val values = recent.columns.filterNot(keys.contains).toSeq
+    def side(s: String) =
+      recent.select(keys.map(col) ++ values.map(c => col(c).as(c + s)): _*)
+    side("a").join(side("b"), keys).filter(col("__ta") < col("__tb"))
+  }
+
+  /** sign(`c`b − `c`a) of a [[laterPairs]] row, as BIGINT. */
+  private def pairSign(c: String): Column =
+    when(col(c + "b") > col(c + "a"), 1L)
+      .when(col(c + "b") < col(c + "a"), -1L).otherwise(0L)
+
   /** Mann–Kendall trend test + Theil–Sen slope per series (Mann 1945,
     * Kendall 1975; Theil 1950, Sen 1968) — the nonparametric "is this
     * series drifting" screen next to [[olsTrend]]'s least squares: no
@@ -391,7 +390,7 @@ object Correlation {
     * all where it drags the OLS line.
     *
     * Both statistics are definitionally PAIRWISE, so the operator's
-    * stated governor is `windowRows`: only the most recent K
+    * stated governor is a recency window: only the most recent K = 60
     * observations per series enter (the trend screen's natural
     * framing — "is it drifting NOW"), giving an exact K(K−1)/2 pair
     * bound per series regardless of history length. At 100 TB the
@@ -405,17 +404,34 @@ object Correlation {
     * FLOOR-quantized slope (Δx·10⁶ floor-div Δdays via the nonneg-mod
     * identity — `div` truncates toward zero and would round negative
     * slopes the wrong way). */
-  def mannKendall(daily: DataFrame, valueCol: String,
-                  windowRows: Int = 60): DataFrame = {
-    require(windowRows >= 2, "windowRows must be >= 2")
-    val wDesc = Window.partitionBy(col("symbol")).orderBy(col("date").desc)
-    val recent = daily
-      .withColumn("__rd", row_number().over(wDesc))
-      .filter(col("__rd") <= windowRows)
-      .select(col("symbol"),
-        datediff(col("date"), lit("1970-01-01")).cast("long").as("__t"),
-        col(valueCol).cast("long").as("__x"))
-      .localCheckpoint()
+  def mannKendall(daily: DataFrame, valueCol: String): DataFrame =
+    mannKendallBy(daily, valueCol, PairWindowRows, slot = None)
+
+  /** SEASONAL Mann–Kendall (Hirsch & Slack, WRR 1984) — the trend
+    * screen a weekly-patterned series needs where plain
+    * [[mannKendall]] misreads seasonality as trend (or dilutes a real
+    * trend with cross-season noise): pairs compare ONLY within the
+    * same season slot ([[StockAnalytics.weekdaySlot]] — date-based,
+    * gaps keep their weekday), per-slot S statistics SUM into the
+    * seasonal S, and the seasonal Sen slope is the lower median of
+    * the within-slot pairwise slopes. Hirsch & Slack's serial-
+    * correlation variance correction is a driver-side scalar over
+    * the emitted per-slot sums — out of scope, stated; the exact
+    * S/n_pairs/n_ties/slope outputs are the test's sufficient
+    * statistics. Same exact-integer devices, a last-84-rows pair
+    * governor (K²/2 per SLOT per series), same overflow guard. */
+  def seasonalMannKendall(daily: DataFrame, valueCol: String): DataFrame =
+    mannKendallBy(daily, valueCol, SeasonalWindowRows,
+      slot = Some(StockAnalytics.weekdaySlot.cast("int")))
+
+  /** Mann–Kendall over the last `k` rows, pairing within `slot` when
+    * given; plain Mann–Kendall is the seasonal form with one slot.
+    * Construction runs two jobs: the window's checkpoint and the
+    * overflow guard's max. */
+  private def mannKendallBy(daily: DataFrame, valueCol: String, k: Int,
+                            slot: Option[Column]): DataFrame = {
+    val recent = recentRows(daily, k, slot.map(_.as("slot")).toSeq ++
+      Seq(dayNumber, col(valueCol).cast("long").as("__x")): _*)
     // Overflow guard: the Sen slope computes (__xb − __xa) · 10⁶ in
     // BIGINT, so |Δx| must stay under Long.MaxValue/2e6 ≈ 4.6e12;
     // bounding |x| ≤ Long.MaxValue / 4e6 keeps the worst-case delta
@@ -424,74 +440,11 @@ object Correlation {
     val maxRow = recent.agg(max(abs(col("__x")))).head
     val maxAbsX = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     require(maxAbsX <= Long.MaxValue / 4000000L,
-      s"mannKendall: |$valueCol| up to $maxAbsX overflows the " +
+      s"Mann-Kendall: |$valueCol| up to $maxAbsX overflows the " +
         "micro-unit slope product (limit ~2.3e12); pre-scale to a " +
         "coarser fixed-point unit")
-    val a = recent.select(col("symbol"), col("__t").as("__ta"),
-      col("__x").as("__xa"))
-    val b = recent.select(col("symbol"), col("__t").as("__tb"),
-      col("__x").as("__xb"))
-    val pairs = a.join(b, Seq("symbol")).filter(col("__ta") < col("__tb"))
-      .select(col("symbol"),
-        when(col("__xb") > col("__xa"), 1L)
-          .when(col("__xb") < col("__xa"), -1L).otherwise(0L).as("__sgn"),
-        expr("""CAST(((__xb - __xa) * 1000000L
-                 - pmod((__xb - __xa) * 1000000L, __tb - __ta))
-                div (__tb - __ta) AS BIGINT)""").as("__slope6"))
-    val wSlope = Window.partitionBy(col("symbol")).orderBy(col("__slope6"))
-    val wAll = Window.partitionBy(col("symbol"))
-    val ranked = pairs
-      .withColumn("__rnk", row_number().over(wSlope))
-      .withColumn("__np", count(lit(1)).over(wAll))
-    ranked.groupBy(col("symbol")).agg(
-      count(lit(1)).as("n_pairs"),
-      sum(col("__sgn")).as("s_stat"),
-      sum(when(col("__sgn") === 0L, 1L).otherwise(0L)).as("n_ties"),
-      max(when(col("__rnk") === expr("(__np + 1) div 2"), col("__slope6")))
-        .as("sen_slope_e6"))
-  }
-
-  /** SEASONAL Mann–Kendall (Hirsch & Slack, WRR 1984) — the trend
-    * screen a weekly-patterned series needs where plain
-    * [[mannKendall]] misreads seasonality as trend (or dilutes a real
-    * trend with cross-season noise): pairs compare ONLY within the
-    * same season slot (same weekday here — the E363 date-based slot,
-    * gaps keep their weekday), per-slot S statistics SUM into the
-    * seasonal S, and the seasonal Sen slope is the lower median of
-    * the within-slot pairwise slopes. Hirsch & Slack's serial-
-    * correlation variance correction is a driver-side scalar over
-    * the emitted per-slot sums — out of scope, stated; the exact
-    * S/n_pairs/n_ties/slope outputs are the test's sufficient
-    * statistics. Same exact-integer devices, same `windowRows` pair
-    * governor (now K²/2 per SLOT per series), same overflow guard. */
-  def seasonalMannKendall(daily: DataFrame, valueCol: String,
-                          windowRows: Int = 84, period: Int = 7): DataFrame = {
-    require(windowRows >= 2, "windowRows must be >= 2")
-    require(period >= 2 && period <= 366, s"period in [2, 366], got $period")
-    val wDesc = Window.partitionBy(col("symbol")).orderBy(col("date").desc)
-    val recent = daily
-      .withColumn("__rd", row_number().over(wDesc))
-      .filter(col("__rd") <= windowRows)
-      .select(col("symbol"),
-        pmod(datediff(col("date"), lit("1970-01-05")), lit(period))
-          .cast("int").as("slot"),
-        datediff(col("date"), lit("1970-01-01")).cast("long").as("__t"),
-        col(valueCol).cast("long").as("__x"))
-      .localCheckpoint()
-    val maxRow = recent.agg(max(abs(col("__x")))).head
-    val maxAbsX = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-    require(maxAbsX <= Long.MaxValue / 4000000L,
-      s"seasonalMannKendall: |$valueCol| up to $maxAbsX overflows the " +
-        "micro-unit slope product (limit ~2.3e12); pre-scale first")
-    val a = recent.select(col("symbol"), col("slot"),
-      col("__t").as("__ta"), col("__x").as("__xa"))
-    val b = recent.select(col("symbol"), col("slot"),
-      col("__t").as("__tb"), col("__x").as("__xb"))
-    val pairs = a.join(b, Seq("symbol", "slot"))
-      .filter(col("__ta") < col("__tb"))
-      .select(col("symbol"),
-        when(col("__xb") > col("__xa"), 1L)
-          .when(col("__xb") < col("__xa"), -1L).otherwise(0L).as("__sgn"),
+    val pairs = laterPairs(recent, "symbol" +: slot.map(_ => "slot").toSeq)
+      .select(col("symbol"), pairSign("__x").as("__sgn"),
         expr("""CAST(((__xb - __xa) * 1000000L
                  - pmod((__xb - __xa) * 1000000L, __tb - __ta))
                 div (__tb - __ta) AS BIGINT)""").as("__slope6"))
@@ -535,65 +488,66 @@ object Correlation {
     * p ≈ 2·exp(−6K²/(n³+n²)) is left to the caller: exp has no
     * cross-engine exact form (the stated nDCG discipline — locating
     * and ranking by K is exact, the p-value is presentation). */
-  def pettittTest(rows: DataFrame, valueCol: String,
-                  groupCol: String = "symbol", orderCol: String = "date",
-                  minRows: Int = 4): DataFrame = {
-    require(minRows >= 2, "minRows must be >= 2")
-    val g = col(groupCol)
-    val doubledRank =
-      (rank().over(Window.partitionBy(g).orderBy(col(valueCol))) * 2 +
-        count(lit(1)).over(Window.partitionBy(g, col(valueCol))) - 1)
-        .cast("long")
-    val wOrd = Window.partitionBy(g).orderBy(col(orderCol))
+  def pettittTest(rows: DataFrame, valueCol: String): DataFrame = {
+    val g = col("symbol")
+    val wOrd = Window.partitionBy(g).orderBy(col("date"))
     val wAll = Window.partitionBy(g)
     val u = rows
       .filter(col(valueCol).isNotNull)
-      .withColumn("__r2", doubledRank)
+      .withColumn("__r2", doubledRank(g, valueCol))
       .withColumn("__t", row_number().over(wOrd).cast("long"))
       .withColumn("__s2", sum(col("__r2")).over(wOrd))
       .withColumn("__n", count(lit(1)).over(wAll))
-      .filter(col("__n") >= minRows && col("__t") < col("__n"))
+      .filter(col("__n") >= PettittMinRows && col("__t") < col("__n"))
       // U_t = t(n+1) − Σ 2r_i  (Σ over the ordered prefix i ≤ t;
       // the doubled midranks supply the identity's factor 2)
       .withColumn("__u",
         col("__t") * (col("__n") + 1L) - col("__s2"))
     val wBest = Window.partitionBy(g)
-      .orderBy(abs(col("__u")).desc, col(orderCol))
+      .orderBy(abs(col("__u")).desc, col("date"))
     u.withColumn("__pick", row_number().over(wBest))
       .filter(col("__pick") === 1)
       .select(g, col("__n").as("n_rows"),
         abs(col("__u")).as("k_stat"),
         col("__u").as("u_at_change"),
-        col(orderCol).as("change_point"))
+        col("date").as("change_point"))
   }
 
+  /** Spearman rank correlation per group (Spearman 1904) — the
+    * monotone-association complement to the Pearson family above:
+    * rank-based, so one fat-tailed outlier day (exactly what price ×
+    * volume data serves) cannot swamp the statistic the way it swamps
+    * every product-moment sum, and any monotone nonlinear relation
+    * scores |ρ| → 1 where Pearson under-reads it.
+    *
+    * ρ_s = Pearson over the AVERAGE ranks (the tie-correct
+    * definition, not the 6Σd² shortcut, which is valid only tie-free).
+    * Exactness device: the average rank of a tie group,
+    * rank + (ties−1)/2, is a half-integer — so the operator ranks on
+    * the DOUBLED rank 2·rank(x) + ties(x) − 1, an INTEGER, keeping
+    * every sum exact (the constant 2× scaling on both variables
+    * cancels in the correlation). Sums of doubled-rank products are
+    * ≤ 4n³ per group — inside int64 to n ~ 10⁶ rows/group and exactly
+    * representable in the final doubles far beyond that; the ρ itself
+    * evaluates in the identical q62 double tree on both engines.
+    *
+    * Shape: two rank windows (one per variable) + one tie-count
+    * window each, all partitioned by the group key, then one hash
+    * aggregate — no self-join; output bounded by the group universe.
+    * At 100 TB parallelism = group count, each group sorted twice
+    * (once per variable's rank order). */
   def spearmanCorr(rows: DataFrame, groupCol: String, xCol: String,
-                   yCol: String, minRows: Int = 2): DataFrame = {
+                   yCol: String): DataFrame = {
     val g = col(groupCol)
-    def doubledRank(c: String) =
-      (rank().over(Window.partitionBy(g).orderBy(col(c))) * 2 +
-        count(lit(1)).over(Window.partitionBy(g, col(c))) - 1)
-        .cast("long")
-    val ranked = rows
+    rows
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
-      .withColumn("__rx2", doubledRank(xCol))
-      .withColumn("__ry2", doubledRank(yCol))
-    val agg = ranked.groupBy(g).agg(
-      count(lit(1)).as("n_rows"),
-      sum(col("__rx2")).cast("double").as("__sx"),
-      sum(col("__ry2")).cast("double").as("__sy"),
-      sum(col("__rx2") * col("__rx2")).cast("double").as("__sxx"),
-      sum(col("__ry2") * col("__ry2")).cast("double").as("__syy"),
-      sum(col("__rx2") * col("__ry2")).cast("double").as("__sxy"))
-    val n = col("n_rows").cast("double")
-    val varx = n * col("__sxx") - col("__sx") * col("__sx")
-    val vary = n * col("__syy") - col("__sy") * col("__sy")
-    agg.filter(col("n_rows") >= minRows)
+      .withColumn("__rx2", doubledRank(g, xCol))
+      .withColumn("__ry2", doubledRank(g, yCol))
+      .groupBy(g)
+      .agg(count(lit(1)).as("n_rows"), momentSums(col("__rx2"), col("__ry2")): _*)
+      .filter(col("n_rows") >= MinDays)
       .select(g, col("n_rows"),
-        when(varx > 0 && vary > 0,
-          (n * col("__sxy") - col("__sx") * col("__sy")) /
-            (sqrt(varx) * sqrt(vary)))
-          .as("spearman"))
+        pearson(col("n_rows").cast("double")).as("spearman"))
   }
 
   /** Pairwise Mann–Whitney U (Mann & Whitney 1947; tie-corrected
@@ -747,22 +701,22 @@ object Correlation {
     * operators' docs promise: every group pair's tie-corrected z
     * becomes a two-sided permille p ([[zToTwoSidedPermille]] — the
     * cut-table device, no query-time transcendentals), and the
-    * G(G−1)/2 hypotheses ride one BH step-up at `alphaPermille` FDR.
+    * G(G−1)/2 hypotheses ride one BH step-up at 5% FDR.
     * All-tied pairs (NULL z) carry no evidence and are EXCLUDED from
     * the hypothesis family (they don't inflate m), stated. Output:
     * one row per tested pair with the statistic, p, BH rank, family
     * size, and the rejection verdict — the report a segment-drift
     * screen files. Scale: everything after mannWhitneyPairs is
     * hypothesis-bounded (the E282 contract). */
-  def mannWhitneyScreen(df: DataFrame, groupCol: String, valueCol: String,
-                        alphaPermille: Long = 50L): DataFrame = {
+  def mannWhitneyScreen(df: DataFrame, groupCol: String,
+                        valueCol: String): DataFrame = {
     val mw = mannWhitneyPairs(df, groupCol, valueCol)
       .filter(col("z").isNotNull)
       .withColumn("p_permille", zToTwoSidedPermille(col("z")))
       .withColumn("__id", concat_ws("|", col("group_a"), col("group_b")))
     val bh = graft.etl.Sampling.bhCorrection(
       mw.select(col("__id"), col("p_permille")), "__id", "p_permille",
-      alphaPermille)
+      ScreenAlphaPermille)
     mw.select(col("__id"), col("group_a"), col("group_b"), col("n_a"),
         col("n_b"), col("z"))
       .join(bh, Seq("__id"))

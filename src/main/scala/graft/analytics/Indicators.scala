@@ -1,6 +1,8 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,22 +33,34 @@ import org.apache.spark.sql.functions._
   */
 object Indicators {
 
+  /** Trailing window widths of [[indicators]], in rows. */
+  private val VwapWindow = 20
+  private val BollWindow = 20
+  private val RsiWindow = 14
+  /** EMA spans of [[emaMacd]] (the standard MACD 12/26). */
+  private val EmaFast = 12
+  private val EmaSlow = 26
+  /** Smoothing weights of [[holtSmooth]] and [[holtWinters]]: dyadic,
+    * so even the literals are exact. */
+  private val Alpha = 0.5
+  private val Beta = 0.25
+  private val Gamma = 0.25
+  /** Miscoverage of [[conformalBand]], in permille (a 90% band). */
+  private val BandAlphaPermille = 100L
+  /** Alarm threshold of [[cusumAlarms]], in allowances k. */
+  private val HFactor = 5
+
   /** Pandas-rolling NULL-padding semantics: every windowed indicator
     * is NULL until a full window of rows exists (min_periods = n). */
-  def indicators(daily: DataFrame,
-                 vwapWindow: Int = 20,
-                 bollWindow: Int = 20,
-                 rsiWindow: Int = 14): DataFrame = {
+  def indicators(daily: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("symbol")).orderBy(col("date"))
     def trailing(n: Int) = w.rowsBetween(-(n - 1), Window.currentRow)
     val rn = row_number().over(w)
 
-    val vn = vwapWindow
-    val bn = bollWindow
-    val pv = sum(col("close_price") * col("volume")).over(trailing(vn))
-    val vv = sum(col("volume")).over(trailing(vn))
-    val s1 = sum(col("close_price")).over(trailing(bn))
-    val s2 = sum(col("close_price") * col("close_price")).over(trailing(bn))
+    val pv = sum(col("close_price") * col("volume")).over(trailing(VwapWindow))
+    val vv = sum(col("volume")).over(trailing(VwapWindow))
+    val s1 = sum(col("close_price")).over(trailing(BollWindow))
+    val s2 = sum(col("close_price") * col("close_price")).over(trailing(BollWindow))
     val peak = max(col("close_price"))
       .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     val diff = col("close_price") - lag(col("close_price"), 1).over(w)
@@ -65,34 +79,68 @@ object Indicators {
     // the gain/loss running sums need a second Window pass (they are
     // windows OVER a window-derived column) — same partitioning, so
     // still zero extra exchanges
-    val sg = sum(col("__gain")).over(trailing(rsiWindow))
-    val sl = sum(col("__loss")).over(trailing(rsiWindow))
+    val sg = sum(col("__gain")).over(trailing(RsiWindow))
+    val sl = sum(col("__loss")).over(trailing(RsiWindow))
+    val full = col("__rn") >= BollWindow
+    val mid = col("__s1") / lit(BollWindow)
+    val band = lit(2.0) * sqrt(
+      (lit(BollWindow) * col("__s2") - col("__s1") * col("__s1")) /
+        lit(BollWindow * (BollWindow - 1)))
 
     staged
       .withColumn("__sg", sg).withColumn("__sl", sl)
       .select(
         col("symbol"), col("date"), col("close_price"),
-        when(col("__rn") >= vn && col("__vv") > 0, col("__pv") / col("__vv"))
-          .as(s"vwap_${vn}d"),
-        when(col("__rn") >= bn, col("__s1") / lit(bn)).as("boll_mid"),
-        when(col("__rn") >= bn,
-          col("__s1") / lit(bn) + lit(2.0) * sqrt(
-            (lit(bn) * col("__s2") - col("__s1") * col("__s1")) / lit(bn * (bn - 1))))
-          .as("boll_up"),
-        when(col("__rn") >= bn,
-          col("__s1") / lit(bn) - lit(2.0) * sqrt(
-            (lit(bn) * col("__s2") - col("__s1") * col("__s1")) / lit(bn * (bn - 1))))
-          .as("boll_dn"),
+        when(col("__rn") >= VwapWindow && col("__vv") > 0, col("__pv") / col("__vv"))
+          .as(s"vwap_${VwapWindow}d"),
+        when(full, mid).as("boll_mid"),
+        when(full, mid + band).as("boll_up"),
+        when(full, mid - band).as("boll_dn"),
         ((col("close_price") - col("__peak")) / col("__peak") * 100)
           .as("drawdown_pct"),
-        // rsiWindow REAL diffs need rsiWindow+1 rows; flat windows
+        // RsiWindow REAL diffs need RsiWindow+1 rows; flat windows
         // (Σloss = 0) pin to 100, the standard convention
-        when(col("__rn") >= rsiWindow + 1,
+        when(col("__rn") >= RsiWindow + 1,
           when(col("__sl") > 0,
             lit(100.0) - lit(100.0) / (lit(1.0) + col("__sg") / col("__sl")))
             .otherwise(lit(100.0)))
-          .as(s"rsi_${rsiWindow}"))
+          .as(s"rsi_${RsiWindow}"))
   }
+
+  /** The per-symbol sequential scan under [[emaMacd]], [[holtSmooth]]
+    * and [[holtWinters]] — the engine's node for a recurrence no
+    * finite window frame computes: hash-partition `rows` by symbol,
+    * sort (symbol, date) within partitions, and run one linear
+    * `mapPartitions` pass. `fold()` makes a partition's step function
+    * with its own O(1) state; the step is told `first = true` at the
+    * first row of each symbol, where it reseeds that state.
+    * Parallelism = symbol count, each series is scanned exactly once,
+    * and the step's double operations run in one fixed order, so the
+    * results are bit-identical to the oracle's recursive-CTE folds. */
+  private def sequentialScan[I <: Product: TypeTag, O <: Product: TypeTag](
+      rows: DataFrame, symbol: I => String)(fold: () => (I, Boolean) => O): DataFrame = {
+    implicit val inEnc: Encoder[I] = Encoders.product[I]
+    implicit val outEnc: Encoder[O] = Encoders.product[O]
+    rows.as[I]
+      .repartition(col("symbol"))
+      .sortWithinPartitions(col("symbol"), col("date"))
+      .mapPartitions { it =>
+        val step = fold()
+        var sym: String = null
+        it.map { r =>
+          val first = sym == null || symbol(r) != sym
+          sym = symbol(r)
+          step(r, first)
+        }
+      }
+      .toDF()
+  }
+
+  /** `daily`'s series as the scan's typed input columns. */
+  private def closeSeries(daily: DataFrame, extra: Column*): DataFrame =
+    daily.select(Seq(col("symbol").cast("string").as("symbol"),
+      col("date").cast("date").as("date")) ++ extra ++
+      Seq(col("close_price").cast("double").as("close_price")): _*)
 
   case class EmaIn(symbol: String, date: java.sql.Date, close_price: Double)
   case class EmaOut(symbol: String, date: java.sql.Date, close_price: Double,
@@ -102,43 +150,26 @@ object Indicators {
     * window-frame family can't express: `ema_t = α·x_t + (1−α)·ema_{t−1}`
     * depends on EVERY prior row through the recurrence, so no finite
     * frame computes it. Like sequence packing (SURVEY §2.11's
-    * escalation ladder), it runs on the engine's sequential-scan node:
-    * hash-partition by symbol, sort (symbol, date) within partitions,
-    * one linear `mapPartitions` pass with O(1) state per series —
-    * parallelism = symbol count, each series scanned exactly once, no
-    * state larger than two doubles. Seeded with the series' first
+    * escalation ladder), it runs on [[sequentialScan]] with two
+    * doubles of state per series, seeded with the series' first
     * close (the standard convention). The fold's arithmetic
     * (`α·x + β·ema`, β = 1−α precomputed) is a fixed IEEE-754
-    * evaluation order, so results are bit-identical to the oracle's
-    * recursive-CTE fold. */
-  def emaMacd(daily: DataFrame, fastPeriods: Int = 12,
-              slowPeriods: Int = 26): DataFrame = {
-    require(fastPeriods > 0 && slowPeriods > fastPeriods,
-      "need 0 < fastPeriods < slowPeriods")
-    val af = 2.0 / (fastPeriods + 1); val bf = 1.0 - af
-    val as = 2.0 / (slowPeriods + 1); val bs = 1.0 - as
-    implicit val inEnc = org.apache.spark.sql.Encoders.product[EmaIn]
-    implicit val outEnc = org.apache.spark.sql.Encoders.product[EmaOut]
-    daily.select(col("symbol").cast("string").as("symbol"),
-        col("date").cast("date").as("date"),
-        col("close_price").cast("double").as("close_price"))
-      .as[EmaIn]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("date"))
-      .mapPartitions { it =>
-        var sym: String = null
-        var ef = 0.0; var es = 0.0
-        it.map { r =>
-          if (sym == null || r.symbol != sym) {
-            sym = r.symbol; ef = r.close_price; es = r.close_price
-          } else {
-            ef = af * r.close_price + bf * ef
-            es = as * r.close_price + bs * es
-          }
-          EmaOut(r.symbol, r.date, r.close_price, ef, es, ef - es)
+    * evaluation order. */
+  def emaMacd(daily: DataFrame): DataFrame = {
+    val af = 2.0 / (EmaFast + 1); val bf = 1.0 - af
+    val as = 2.0 / (EmaSlow + 1); val bs = 1.0 - as
+    sequentialScan[EmaIn, EmaOut](closeSeries(daily), _.symbol) { () =>
+      var ef = 0.0; var es = 0.0
+      (r, first) => {
+        if (first) {
+          ef = r.close_price; es = r.close_price
+        } else {
+          ef = af * r.close_price + bf * ef
+          es = as * r.close_price + bs * es
         }
+        EmaOut(r.symbol, r.date, r.close_price, ef, es, ef - es)
       }
-      .toDF()
+    }
   }
 
   case class HoltIn(symbol: String, date: java.sql.Date, close_price: Double)
@@ -161,57 +192,39 @@ object Indicators {
     *   s_slot ← γ(y_t − ℓ − b) + (1−γ)s_slot   (old ℓ, b — the order
     *     is part of the cross-engine contract)
     * with residual = y_t − (ℓ + b + s_slot) against the PRE-update
-    * state. The season index is the E363 weekday slot (days since
-    * 1970-01-05 mod 7 — date-based, so calendar GAPS keep their
-    * weekday, where the textbook t−m lag would drift), seasonal state
-    * ZERO-seeDED and learned (production warm-starts from a
-    * decomposition — E363 provides exactly that, stated); first row
-    * per symbol seeds ℓ = y, b = 0, residual NULL.
+    * state. The season index is [[StockAnalytics.weekdaySlot]] (date-
+    * based, so calendar GAPS keep their weekday, where the textbook
+    * t−m lag would drift), seasonal state ZERO-seeded and learned
+    * (production warm-starts from a decomposition — E363 provides
+    * exactly that, stated); first row per symbol seeds ℓ = y, b = 0,
+    * residual NULL.
     *
-    * Determinism: the same [[holtSmooth]] contract — a per-symbol
-    * sequential scan (shard-parallel mapPartitions; packGreedy's
-    * escalation-ladder slot) whose double operations run in one
-    * stated order, replayed step-for-step by the oracle's recursive
-    * CTE; α/β/γ default to binary-exact constants so not even a
+    * Determinism: the same [[holtSmooth]] contract — one
+    * [[sequentialScan]] whose double operations run in one stated
+    * order, replayed step-for-step by the oracle's recursive CTE;
+    * α/β/γ = 0.5/0.25/0.25 are binary-exact constants, so not even a
     * literal parse separates the engines. */
-  def holtWinters(daily: DataFrame, alpha: Double = 0.5,
-                  beta: Double = 0.25, gamma: Double = 0.25,
-                  period: Int = 7): DataFrame = {
-    require(alpha > 0 && alpha < 1 && beta > 0 && beta < 1 &&
-      gamma > 0 && gamma < 1, "alpha, beta, gamma must be in (0, 1)")
-    require(period >= 2 && period <= 366, s"period in [2, 366], got $period")
-    val ca = 1.0 - alpha; val cb = 1.0 - beta; val cg = 1.0 - gamma
-    implicit val inEnc = org.apache.spark.sql.Encoders.product[HwIn]
-    implicit val outEnc = org.apache.spark.sql.Encoders.product[HwOut]
-    daily.select(col("symbol").cast("string").as("symbol"),
-        col("date").cast("date").as("date"),
-        pmod(datediff(col("date"), lit("1970-01-05")), lit(period))
-          .cast("int").as("slot"),
-        col("close_price").cast("double").as("close_price"))
-      .as[HwIn]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("date"))
-      .mapPartitions { it =>
-        var sym: String = null
-        var l = 0.0; var b = 0.0
-        var s: Array[Double] = null
-        it.map { r =>
-          if (sym == null || r.symbol != sym) {
-            sym = r.symbol; l = r.close_price; b = 0.0
-            s = new Array[Double](period)
-            HwOut(r.symbol, r.date, r.close_price, l, b, s(r.slot), None)
-          } else {
-            val sOld = s(r.slot)
-            val res = r.close_price - (l + b + sOld)
-            val lNew = alpha * (r.close_price - sOld) + ca * (l + b)
-            val bNew = beta * (lNew - l) + cb * b
-            val sNew = gamma * (r.close_price - l - b) + cg * sOld
-            l = lNew; b = bNew; s(r.slot) = sNew
-            HwOut(r.symbol, r.date, r.close_price, l, b, sNew, Some(res))
-          }
+  def holtWinters(daily: DataFrame): DataFrame = {
+    val ca = 1.0 - Alpha; val cb = 1.0 - Beta; val cg = 1.0 - Gamma
+    val rows = closeSeries(daily, StockAnalytics.weekdaySlot.cast("int").as("slot"))
+    sequentialScan[HwIn, HwOut](rows, _.symbol) { () =>
+      var l = 0.0; var b = 0.0
+      var s: Array[Double] = null
+      (r, first) =>
+        if (first) {
+          l = r.close_price; b = 0.0
+          s = new Array[Double](StockAnalytics.Period)
+          HwOut(r.symbol, r.date, r.close_price, l, b, s(r.slot), None)
+        } else {
+          val sOld = s(r.slot)
+          val res = r.close_price - (l + b + sOld)
+          val lNew = Alpha * (r.close_price - sOld) + ca * (l + b)
+          val bNew = Beta * (lNew - l) + cb * b
+          val sNew = Gamma * (r.close_price - l - b) + cg * sOld
+          l = lNew; b = bNew; s(r.slot) = sNew
+          HwOut(r.symbol, r.date, r.close_price, l, b, sNew, Some(res))
         }
-      }
-      .toDF()
+    }
   }
 
   /** Holt's linear-trend smoothing (Holt 1957; fpp3 §8.2) — the
@@ -224,45 +237,28 @@ object Indicators {
     * Recurrence: l_t = α·x_t + (1−α)(l_{t−1} + b_{t−1});
     * b_t = β(l_t − l_{t−1}) + (1−β)b_{t−1}. Stated conventions:
     * seed l₁ = x₁, b₁ = 0 (the parameter-free seed — fpp3's
-    * optimized initial states need a solver); α, β default to the
-    * DYADIC 0.5/0.25 so even the literals are exact.
+    * optimized initial states need a solver); α, β are the DYADIC
+    * 0.5/0.25, so even the literals are exact.
     *
-    * Like every recurrence here it runs on the sequential-scan node
-    * (the emaMacd escalation): hash-partition by symbol, sort within
-    * partitions, one linear pass, O(1) state (two doubles per
-    * series) — parallelism = series count. The fold's arithmetic is
-    * a fixed IEEE-754 evaluation order, bit-identical to the
-    * oracle's recursive-CTE fold. */
-  def holtSmooth(daily: DataFrame, alpha: Double = 0.5,
-                 beta: Double = 0.25): DataFrame = {
-    require(alpha > 0 && alpha < 1 && beta > 0 && beta < 1,
-      "alpha and beta must be in (0, 1)")
-    val ca = 1.0 - alpha; val cb = 1.0 - beta
-    implicit val inEnc = org.apache.spark.sql.Encoders.product[HoltIn]
-    implicit val outEnc = org.apache.spark.sql.Encoders.product[HoltOut]
-    daily.select(col("symbol").cast("string").as("symbol"),
-        col("date").cast("date").as("date"),
-        col("close_price").cast("double").as("close_price"))
-      .as[HoltIn]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("date"))
-      .mapPartitions { it =>
-        var sym: String = null
-        var l = 0.0; var b = 0.0
-        it.map { r =>
-          if (sym == null || r.symbol != sym) {
-            sym = r.symbol; l = r.close_price; b = 0.0
-            HoltOut(r.symbol, r.date, r.close_price, l, b, l + b, None)
-          } else {
-            val res = r.close_price - (l + b)
-            val lNew = alpha * r.close_price + ca * (l + b)
-            val bNew = beta * (lNew - l) + cb * b
-            l = lNew; b = bNew
-            HoltOut(r.symbol, r.date, r.close_price, l, b, l + b, Some(res))
-          }
+    * Like every recurrence here it runs on [[sequentialScan]], two
+    * doubles of state per series, in a fixed IEEE-754 evaluation
+    * order. */
+  def holtSmooth(daily: DataFrame): DataFrame = {
+    val ca = 1.0 - Alpha; val cb = 1.0 - Beta
+    sequentialScan[HoltIn, HoltOut](closeSeries(daily), _.symbol) { () =>
+      var l = 0.0; var b = 0.0
+      (r, first) =>
+        if (first) {
+          l = r.close_price; b = 0.0
+          HoltOut(r.symbol, r.date, r.close_price, l, b, l + b, None)
+        } else {
+          val res = r.close_price - (l + b)
+          val lNew = Alpha * r.close_price + ca * (l + b)
+          val bNew = Beta * (lNew - l) + cb * b
+          l = lNew; b = bNew
+          HoltOut(r.symbol, r.date, r.close_price, l, b, l + b, Some(res))
         }
-      }
-      .toDF()
+    }
   }
 
   /** On-balance volume (Granville 1963) — the classic volume-flow
@@ -295,6 +291,7 @@ object Indicators {
     * GUARANTEE (≥ 1−α whenever residuals are exchangeable — no
     * normality, no variance model): half-width q̂ = the
     * ⌈(n+1)(1−α)⌉-th smallest |residual|; forecast ± q̂ is the band.
+    * α = 10% (a 90% band), per `symbol` over its `residual` column.
     *
     * Exact conventions: the target rank is the integer
     * ((n+1)·(1000−α‰) + 999) div 1000 (ceil, never a float quantile);
@@ -306,22 +303,19 @@ object Indicators {
     *
     * Shape: one group-keyed rank window + one group aggregate;
     * output bounded by the group universe. */
-  def conformalBand(scored: DataFrame, groupCol: String = "symbol",
-                    residualCol: String = "residual",
-                    alphaPermille: Long = 100L): DataFrame = {
-    require(alphaPermille >= 1 && alphaPermille <= 999,
-      "alphaPermille must be in [1, 999]")
-    val g = col(groupCol)
-    val r = scored.filter(col(residualCol).isNotNull)
+  def conformalBand(scored: DataFrame): DataFrame = {
+    val g = col("symbol")
+    val res = col("residual")
+    val r = scored.filter(res.isNotNull)
       .withColumn("__rnk", row_number().over(
-        Window.partitionBy(g).orderBy(abs(col(residualCol)))))
+        Window.partitionBy(g).orderBy(abs(res))))
       .withColumn("__n", count(lit(1)).over(Window.partitionBy(g)))
       .withColumn("__k",
-        expr(s"((__n + 1) * ${1000L - alphaPermille} + 999) div 1000"))
+        expr(s"((__n + 1) * ${1000L - BandAlphaPermille} + 999) div 1000"))
     r.groupBy(g).agg(
       max(col("__n")).as("n_res"),
       max(col("__k")).as("target_rank"),
-      max(when(col("__rnk") === col("__k"), abs(col(residualCol))))
+      max(when(col("__rnk") === col("__k"), abs(res)))
         .as("halfwidth"))
   }
 
@@ -384,8 +378,8 @@ object Indicators {
     * center μ = the per-series FLOOR mean (Σc div n, stated);
     * allowance k = half the floor mean absolute deviation
     * (Σ|c−μ| div 2n — the σ/2 convention with MAD standing in for σ,
-    * exact where σ is not); threshold h = hFactor·k (default 5,
-    * ~Montgomery's h=5σ with the same stand-in). A constant series
+    * exact where σ is not); threshold h = 5·k (~Montgomery's h=5σ
+    * with the same stand-in). A constant series
     * has k = 0 and every deviation 0, so S stays 0 and the STRICT
     * `> h` never fires — degenerate series are silent, not alarming.
     *
@@ -397,8 +391,7 @@ object Indicators {
     * count, each series sorted once within its partition; overflow
     * headroom = |prefix| ≤ n·max|dev| (~2³³ at a century of cents),
     * far inside BIGINT. */
-  def cusumAlarms(daily: DataFrame, hFactor: Int = 5): DataFrame = {
-    require(hFactor >= 1, "hFactor must be >= 1")
+  def cusumAlarms(daily: DataFrame): DataFrame = {
     val cents = daily.select(col("symbol"), col("date"),
       expr("CAST(round(close_price * 100) AS BIGINT)").as("__c"))
     val mu = cents.groupBy(col("symbol")).agg(
@@ -418,7 +411,7 @@ object Indicators {
         col("__p_hi") - least(lit(0L), min(col("__p_hi")).over(w)))
       .withColumn("__s_lo",
         greatest(lit(0L), max(col("__p_lo")).over(w)) - col("__p_lo"))
-      .withColumn("__h", col("__k") * hFactor)
+      .withColumn("__h", col("__k") * HFactor)
       .filter(col("__s_hi") > col("__h") || col("__s_lo") > col("__h"))
       .select(col("symbol"), col("date"),
         col("__s_hi").as("cusum_hi"), col("__s_lo").as("cusum_lo"),

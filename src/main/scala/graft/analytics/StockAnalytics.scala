@@ -4,60 +4,79 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Exact
+
 /** The reference's analytic query surface
   * (reference `plugins/helpers/queries.py:22-163`) as five DataFrame
   * transformations over the canonical bar table (SURVEY.md §2.5 A3–A6,
-  * §2.6 W1/W2, §2.4 J2). Each is a pure plan — partition pruning,
-  * pushdown and whole-stage codegen come from Catalyst.
+  * §2.6 W1/W2, §2.4 J2), plus the per-symbol daily-series operators
+  * built on them. Each is a pure plan — partition pruning, pushdown
+  * and whole-stage codegen come from Catalyst.
   *
-  * `pick` parameterizes the representative-value aggregate: the SQL
-  * reference uses ANY_VALUE (nondeterministic); oracle-checked runs
-  * pass `min` to stay deterministic.
+  * Where the SQL reference picks a day's representative close with
+  * ANY_VALUE (nondeterministic), these operators take the day's `min`
+  * close, and the average volatility goes through an exact decimal
+  * sum ([[graft.core.Exact.exactAvg]] at scale 4), so every result is
+  * deterministic and hash-equal to its DuckDB twin. [[dailyClose]] is
+  * the one per-(symbol, date) pre-aggregation the series operators
+  * share.
   */
 object StockAnalytics {
 
+  /** The trailing moving-average widths, in rows. */
+  private val MaWindows = Seq(5, 10, 20, 50)
+  /** The divergence, in percent, past which a multi-source day is
+    * reported by [[inconsistencies]]. */
+  private val MinPctDiff = 2.0
+  /** The seasonal period, in days: one week, the slot count of
+    * [[weekdaySlot]]. */
+  private[analytics] val Period = 7
+
+  /** The weekday slot of `date`, 0 = Monday: days since 1970-01-05 (a
+    * Monday) mod 7. Date-based, so calendar gaps keep their weekday;
+    * the season index of [[seasonalDecompose]],
+    * [[Indicators.holtWinters]] and [[Correlation.seasonalMannKendall]]. */
+  private[analytics] def weekdaySlot: Column =
+    pmod(datediff(col("date"), lit("1970-01-05")), lit(Period))
+
+  /** One bar per (symbol, date): the day's min close as `close_price`
+    * — the pre-aggregation behind [[movingAverages]],
+    * [[movingAveragesPandasStyle]] and the registry's daily series
+    * (oracle twin: OracleSql's dailyCloseCte). Without it the MA
+    * windows would mix rows from both sources. */
+  def dailyClose(bars: DataFrame): DataFrame =
+    bars.groupBy(col("symbol"), col("date"))
+      .agg(min(col("close")).as("close_price"))
+
   /** Daily metrics view (A3/K9, reference `queries.py:22-34`):
-    * per (date, symbol): representative close, avg volatility,
-    * source count. */
-  def dailyMetrics(bars: DataFrame, pick: Column => Column = any_value(_),
-      avgF: Column => Column = avg(_)): DataFrame =
+    * per (date, symbol): min close, exact average volatility, source
+    * count (SQL twin: [[graft.store.Store.createDailyMetricsView]]). */
+  def dailyMetrics(bars: DataFrame): DataFrame =
     bars.groupBy(col("date"), col("symbol"))
       .agg(
-        pick(col("close")).as("close_price"),
-        avgF(col("daily_volatility")).as("avg_volatility"),
+        min(col("close")).as("close_price"),
+        Exact.exactAvg(col("daily_volatility"), 4).as("avg_volatility"),
         countDistinct(col("data_source")).as("source_count"))
 
   /** Moving averages, SQL frame semantics (W2, reference
-    * `queries.py:76-115`): pre-aggregate multi-source rows to one bar
-    * per (symbol, date), then 5/10/20/50-row trailing averages.
-    * The pre-agg CTE is semantic, not a perf trick: without it the MA
-    * windows would mix rows from both sources.
-    * One shuffle for the group-by; the window reuses the same
-    * (symbol) partitioning — Catalyst elides the second exchange.
-    */
-  def movingAverages(bars: DataFrame, pick: Column => Column = any_value(_),
-      windows: Seq[Int] = Seq(5, 10, 20, 50)): DataFrame = {
-    val daily = bars.groupBy(col("symbol"), col("date"))
-      .agg(pick(col("close")).as("close_price"))
-    val w = Window.partitionBy(col("symbol")).orderBy(col("date"))
-    windows.foldLeft(daily) { (df, n) =>
-      df.withColumn(s"ma_${n}d",
-        avg(col("close_price")).over(w.rowsBetween(-(n - 1), Window.currentRow)))
-    }
-  }
+    * `queries.py:76-115`): 5/10/20/50-row trailing averages over
+    * [[dailyClose]]. One shuffle for the group-by; the window reuses
+    * the same (symbol) partitioning — Catalyst elides the second
+    * exchange. */
+  def movingAverages(bars: DataFrame): DataFrame =
+    trailingAverages(bars, fullOnly = false)
 
   /** Moving averages, pandas semantics (W1, reference
     * `transformers.py:128-151`): NULL until a full window of rows
     * exists (`rolling(n)` with default min_periods=n). */
-  def movingAveragesPandasStyle(bars: DataFrame, pick: Column => Column = any_value(_),
-      windows: Seq[Int] = Seq(5, 10, 20, 50)): DataFrame = {
-    val daily = bars.groupBy(col("symbol"), col("date"))
-      .agg(pick(col("close")).as("close_price"))
+  def movingAveragesPandasStyle(bars: DataFrame): DataFrame =
+    trailingAverages(bars, fullOnly = true)
+
+  private def trailingAverages(bars: DataFrame, fullOnly: Boolean): DataFrame = {
     val w = Window.partitionBy(col("symbol")).orderBy(col("date"))
-    windows.foldLeft(daily) { (df, n) =>
-      df.withColumn(s"ma_${n}d",
-        when(row_number().over(w) >= n,
-          avg(col("close_price")).over(w.rowsBetween(-(n - 1), Window.currentRow))))
+    MaWindows.foldLeft(dailyClose(bars)) { (df, n) =>
+      val ma = avg(col("close_price")).over(w.rowsBetween(-(n - 1), Window.currentRow))
+      df.withColumn(s"ma_${n}d", if (fullOnly) when(row_number().over(w) >= n, ma) else ma)
     }
   }
 
@@ -67,7 +86,7 @@ object StockAnalytics {
     * as a post-agg filter. The detail array is sorted for determinism
     * (the SQL's ARRAY_AGG has no ORDER BY — ours is strictly more
     * defined). */
-  def inconsistencies(bars: DataFrame, minPctDiff: Double = 2.0): DataFrame =
+  def inconsistencies(bars: DataFrame): DataFrame =
     bars.groupBy(col("date"), col("symbol"))
       .agg(
         min(col("close")).as("min_close"),
@@ -79,7 +98,7 @@ object StockAnalytics {
       .filter(col("source_count") > 1)
       .withColumn("price_diff_pct",
         (col("max_close") - col("min_close")) / col("min_close") * 100)
-      .filter(col("price_diff_pct") > minPctDiff)
+      .filter(col("price_diff_pct") > MinPctDiff)
 
   /** Data-quality metrics (A5, reference `queries.py:118-147`): one
     * global aggregation row — counts, distinct counts, null counts
@@ -120,32 +139,13 @@ object StockAnalytics {
     * partitioning, so the recompute scan reads a day's worth of files
     * per staged day. */
   def incrementalDailyMetrics(rollup: DataFrame, updatedBars: DataFrame,
-      staging: DataFrame, pick: Column => Column = any_value(_),
-      avgF: Column => Column = avg(_)): DataFrame = {
+      staging: DataFrame): DataFrame = {
     val touched = staging.select(col("date")).distinct()
     val recomputed = dailyMetrics(
-      updatedBars.join(broadcast(touched), Seq("date"), "left_semi"),
-      pick, avgF)
+      updatedBars.join(broadcast(touched), Seq("date"), "left_semi"))
     rollup.join(broadcast(touched), Seq("date"), "left_anti")
       .unionByName(recomputed)
   }
-
-  /** A5 at 100 TB: `countDistinct` expands to a two-phase plan that
-    * shuffles every distinct value; the HLL sketch shuffles a fixed
-    * ~KB register set per group instead. Bounded error (`rsd`),
-    * unbounded scale — the swap-in when the exact form's shuffle
-    * becomes the bottleneck. Not oracle-checked (approximate by
-    * design); the suite bounds its error against the exact form. */
-  def qualityMetricsApprox(bars: DataFrame, rsd: Double = 0.02): DataFrame =
-    bars.agg(
-      count(lit(1)).as("total_rows"),
-      approx_count_distinct(col("date"), rsd).as("unique_dates"),
-      approx_count_distinct(col("symbol"), rsd).as("unique_symbols"),
-      approx_count_distinct(col("data_source"), rsd).as("unique_sources"),
-      min(col("date")).as("earliest_date"),
-      max(col("date")).as("latest_date"),
-      min(col("close")).as("min_close"),
-      max(col("close")).as("max_close"))
 
   /** Ingestion stats (A6, reference `queries.py:150-163`): per
     * ingestion day (DATE(processed_at)): volumes, distinct symbols and
@@ -204,21 +204,28 @@ object StockAnalytics {
     * The oracle twin deliberately derives the same answer by a
     * STRUCTURALLY different route (DuckDB ASOF JOIN) — a real
     * cross-check on the fill semantics, not an echo. */
-  def fillDailyForward(daily: DataFrame, symbolCol: String = "symbol",
-                       dateCol: String = "date",
-                       valueCol: String = "close"): DataFrame = {
-    val spine = daily.groupBy(col(symbolCol))
-      .agg(min(col(dateCol)).as("__d0"), max(col(dateCol)).as("__d1"))
-      .select(col(symbolCol),
-        explode(expr("sequence(__d0, __d1, interval 1 day)")).as(dateCol))
-    val w = Window.partitionBy(col(symbolCol)).orderBy(col(dateCol))
+  def fillDailyForward(daily: DataFrame): DataFrame =
+    calendarSpine(daily, "close")
+      .withColumn("is_filled", col("close").isNull)
+      .withColumn("close", last(col("close"), ignoreNulls = true)
+        .over(runningBy(col("date"))))
+
+  /** Every calendar day between each symbol's first and last
+    * observation, left-joined to `daily`'s `value` column: the spine
+    * of [[fillDailyForward]] and [[fillDailyInterpolate]]. */
+  private def calendarSpine(daily: DataFrame, value: String): DataFrame =
+    daily.groupBy(col("symbol"))
+      .agg(min(col("date")).as("__d0"), max(col("date")).as("__d1"))
+      .select(col("symbol"),
+        explode(expr("sequence(__d0, __d1, interval 1 day)")).as("date"))
+      .join(daily.select(col("symbol"), col("date"), col(value)),
+        Seq("symbol", "date"), "left")
+
+  /** The per-symbol running frame (first row through the current one)
+    * under the `order` sort. */
+  private def runningBy(order: Column) =
+    Window.partitionBy(col("symbol")).orderBy(order)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine
-      .join(daily.select(col(symbolCol), col(dateCol), col(valueCol)),
-        Seq(symbolCol, dateCol), "left")
-      .withColumn("is_filled", col(valueCol).isNull)
-      .withColumn(valueCol, last(col(valueCol), ignoreNulls = true).over(w))
-  }
 
   /** Linear-interpolation gap fill — the level-tracking complement to
     * [[fillDailyForward]]'s step fill: a missing day between two
@@ -247,36 +254,27 @@ object StockAnalytics {
     * incremental growing frame — O(n) — at the cost of one extra
     * per-partition sort. Both passes stay on the symbol-keyed
     * shuffle. */
-  def fillDailyInterpolate(daily: DataFrame, symbolCol: String = "symbol",
-                           dateCol: String = "date",
-                           valueCol: String = "close_i"): DataFrame = {
-    val spine = daily.groupBy(col(symbolCol))
-      .agg(min(col(dateCol)).as("__d0"), max(col(dateCol)).as("__d1"))
-      .select(col(symbolCol),
-        explode(expr("sequence(__d0, __d1, interval 1 day)")).as(dateCol))
-    val wP = Window.partitionBy(col(symbolCol)).orderBy(col(dateCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+  def fillDailyInterpolate(daily: DataFrame): DataFrame = {
+    val wP = runningBy(col("date"))
     // forward pass: running last under the reversed order — the O(n)
     // growing frame — NOT first() over a shrinking frame (O(n²))
-    val wN = Window.partitionBy(col(symbolCol)).orderBy(col(dateCol).desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val numer = s"(__nv - __pv) * datediff($dateCol, __pd)"
-    val denom = s"datediff(__nd, __pd)"
-    spine
-      .join(daily.select(col(symbolCol), col(dateCol), col(valueCol)),
-        Seq(symbolCol, dateCol), "left")
-      .withColumn("is_interp", col(valueCol).isNull)
-      .withColumn("__pv", last(col(valueCol), ignoreNulls = true).over(wP))
-      .withColumn("__pd", last(when(col(valueCol).isNotNull, col(dateCol)),
+    val wN = runningBy(col("date").desc)
+    val v = col("close_i")
+    val numer = "(__nv - __pv) * datediff(date, __pd)"
+    val denom = "datediff(__nd, __pd)"
+    calendarSpine(daily, "close_i")
+      .withColumn("is_interp", v.isNull)
+      .withColumn("__pv", last(v, ignoreNulls = true).over(wP))
+      .withColumn("__pd", last(when(v.isNotNull, col("date")),
         ignoreNulls = true).over(wP))
-      .withColumn("__nv", last(col(valueCol), ignoreNulls = true).over(wN))
-      .withColumn("__nd", last(when(col(valueCol).isNotNull, col(dateCol)),
+      .withColumn("__nv", last(v, ignoreNulls = true).over(wN))
+      .withColumn("__nd", last(when(v.isNotNull, col("date")),
         ignoreNulls = true).over(wN))
-      .withColumn(valueCol,
-        when(!col("is_interp"), col(valueCol))
+      .withColumn("close_i",
+        when(!col("is_interp"), v)
           .otherwise(expr(
             s"__pv + ($numer - pmod($numer, $denom)) div $denom")))
-      .select(col(symbolCol), col(dateCol), col(valueCol), col("is_interp"))
+      .select(col("symbol"), col("date"), v, col("is_interp"))
   }
 
   /** Trading-gap report — the data-completeness complement of
@@ -292,15 +290,14 @@ object StockAnalytics {
     * Shape: ONE symbol-keyed lag window + one per-symbol aggregate.
     * Weekend/holiday caveat stated: against a trading calendar,
     * join a calendar table first — this reports CALENDAR gaps. */
-  def tradingGaps(daily: DataFrame, symbolCol: String = "symbol",
-                  dateCol: String = "date"): DataFrame = {
-    val w = Window.partitionBy(col(symbolCol)).orderBy(col(dateCol))
-    daily.select(col(symbolCol), col(dateCol))
+  def tradingGaps(daily: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("symbol")).orderBy(col("date"))
+    daily.select(col("symbol"), col("date"))
       .withColumn("__gap",
-        datediff(col(dateCol), lag(col(dateCol), 1).over(w)) - 1)
-      .groupBy(col(symbolCol))
+        datediff(col("date"), lag(col("date"), 1).over(w)) - 1)
+      .groupBy(col("symbol"))
       .agg(count(lit(1)).as("n_days"),
-        (datediff(max(col(dateCol)), min(col(dateCol))) + 1).cast("long")
+        (datediff(max(col("date")), min(col("date"))) + 1).cast("long")
           .as("span_days"),
         sum(when(col("__gap") > 0, 1L).otherwise(0L)).as("n_gaps"),
         coalesce(sum(when(col("__gap") > 0, col("__gap"))), lit(0L))
@@ -319,14 +316,12 @@ object StockAnalytics {
     * Shape: one per-customer min aggregate, one customer-keyed join,
     * one (cohort, offset) aggregate, and a cumulative window over
     * OFFSETS within a cohort (bounded by the corpus month span). */
-  def ltvCurve(orders: DataFrame, custCol: String = "o_custkey",
-               dateCol: String = "o_orderdate",
-               priceCol: String = "o_totalprice"): DataFrame = {
-    val cents = (round(col(priceCol).cast("decimal(28,10)"), 2)
+  def ltvCurve(orders: DataFrame): DataFrame = {
+    val cents = (round(col("o_totalprice").cast("decimal(28,10)"), 2)
       .cast("decimal(18,2)") * 100).cast("long")
     def monthIdx(c: Column) = year(c) * 12 + (month(c) - 1)
-    val o = orders.select(col(custCol).as("customer"),
-      to_date(col(dateCol)).as("__d"), cents.as("__cents"))
+    val o = orders.select(col("o_custkey").as("customer"),
+      to_date(col("o_orderdate")).as("__d"), cents.as("__cents"))
     val first = o.groupBy(col("customer"))
       .agg(min(col("__d")).as("__f"))
       .select(col("customer"), monthIdx(col("__f")).as("__m0"),
@@ -344,11 +339,10 @@ object StockAnalytics {
   }
 
   /** Time-window filter helper (P15, reference `queries.py:46,83-84`):
-    * `date >= anchor - n days`, optional symbol IN list. `anchor`
-    * defaults to current_date; oracle runs pass a literal. */
-  def recentWindow(bars: DataFrame, days: Int,
-      anchor: Column = current_date(),
-      symbols: Seq[String] = Nil): DataFrame = {
+    * `date >= anchor - n days`, and `symbol IN symbols` unless
+    * `symbols` is empty. Oracle runs pass a literal anchor. */
+  def recentWindow(bars: DataFrame, days: Int, anchor: Column,
+      symbols: Seq[String]): DataFrame = {
     val base = bars.filter(col("date") >= date_sub(anchor, days))
     if (symbols.isEmpty) base else base.filter(col("symbol").isin(symbols: _*))
   }
@@ -358,10 +352,10 @@ object StockAnalytics {
     * close = trend + seasonal + residual, the time-series shelf's
     * missing DECOMPOSITION next to the smoothers (E-EMA/Holt) and
     * level/trend tests (Pettitt/Mann–Kendall): trend = centered
-    * `period`-row moving average (FULL windows only — NULL at each
-    * series' edges, the statsmodels convention), seasonal = per
-    * (symbol, weekday-slot) mean of the detrended series CENTERED so
-    * the period's indices sum to ≈0, residual = the rest.
+    * 7-row moving average (FULL windows only — NULL at each series'
+    * edges, the statsmodels convention), seasonal = per (symbol,
+    * weekday-slot) mean of the detrended series CENTERED so the
+    * week's indices sum to ≈0, residual = the rest.
     *
     * Exactness contract: `close` is the q01-exact integer-valued bar
     * double, so EVERYTHING here is exact BIGINT in floor-quantized
@@ -370,33 +364,25 @@ object StockAnalytics {
     * count then centered by the per-symbol index mean — deterministic
     * under any partitioning and bit-identical cross-engine (both
     * engines' integer division truncates toward zero — measured).
-    * The seasonal slot is pmod(days since 1970-01-05 (a Monday),
-    * period) — engine-neutral where dayofweek()'s origin is not, and
-    * it follows `period` (at the default 7 it is exactly the weekday,
-    * 0=Mon), so the seasonal grouping always matches the MA window.
+    * The seasonal slot is [[weekdaySlot]], pmod(days since
+    * 1970-01-05 (a Monday), 7) — engine-neutral where dayofweek()'s
+    * origin is not — so the seasonal grouping matches the MA window.
     *
     * Input: one bar per (symbol, date) — the q174 caller-dedup
     * contract. Shape: one symbol-partitioned window pass + one
     * (symbol, slot) aggregate (period-bounded) + one broadcast-sized
     * join back; rows never widen. */
-  def seasonalDecompose(daily: DataFrame, period: Int = 7): DataFrame = {
-    require(period >= 3 && period % 2 == 1,
-      s"period must be odd >= 3 (centered MA), got $period")
-    val half = period / 2
+  def seasonalDecompose(daily: DataFrame): DataFrame = {
+    val half = Period / 2
     val frame = Window.partitionBy(col("symbol")).orderBy(col("date"))
       .rowsBetween(-half, half)
     val base = daily.select(col("symbol"), col("date"),
-      col("close").cast("long").as("close_units"),
-      // slot follows `period` (days-since-anchor mod period), so a
-      // non-weekly period groups by its own cycle instead of silently
-      // mixing a period-length trend window with weekday-7 indices;
-      // for the default 7 this is exactly the weekday slot (0 = Mon)
-      pmod(datediff(col("date"), lit("1970-01-05")), lit(period)).as("slot"))
+      col("close").cast("long").as("close_units"), weekdaySlot.as("slot"))
     val t = base
       .withColumn("__n", count(lit(1)).over(frame))
       .withColumn("__s", sum(col("close_units")).over(frame))
       .withColumn("trend_micro",
-        expr(s"CASE WHEN __n = $period THEN (__s * 1000000) div $period END"))
+        expr(s"CASE WHEN __n = $Period THEN (__s * 1000000) div $Period END"))
       .withColumn("detrended_micro",
         col("close_units") * 1000000L - col("trend_micro"))
       .drop("__n", "__s")
@@ -435,8 +421,8 @@ object StockAnalytics {
     * double computed from those exact integers by an identical
     * operation tree in both engines (the q62 device). Per-symbol
     * output, one aggregate over the decomposition. */
-  def decompositionStrength(daily: DataFrame, period: Int = 7): DataFrame = {
-    val d = seasonalDecompose(daily, period)
+  def decompositionStrength(daily: DataFrame): DataFrame = {
+    val d = seasonalDecompose(daily)
       .filter(col("residual_micro").isNotNull)
       .select(col("symbol"),
         col("residual_micro").cast("decimal(38,0)").as("r"),

@@ -176,9 +176,12 @@ object Store {
   }
 
   /** K9: the reference's `stock_daily_metrics` view over a registered
-    * bar table (deterministic `min` in place of ANY_VALUE; the average
-    * goes through an exact decimal sum — see [[graft.core.Exact]] —
-    * so the view's numbers are summation-order-independent). */
+    * bar table, the SQL twin of
+    * [[graft.analytics.StockAnalytics.dailyMetrics]] (deterministic
+    * `min` in place of ANY_VALUE; the average goes through an exact
+    * decimal sum — see [[graft.core.Exact]] — so the view's numbers
+    * are summation-order-independent). It stays SQL because the
+    * product path reads the view by name. */
   def createDailyMetricsView(spark: SparkSession, barsTable: String,
                              viewName: String = "stock_daily_metrics"): Unit =
     spark.sql(s"""

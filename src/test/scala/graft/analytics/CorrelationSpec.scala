@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -71,15 +71,15 @@ class CorrelationSpec extends SparkSpec {
       StructField("volume", LongType, nullable = false))
     // up: volume moves linearly WITH close -> corr +1 in every frame;
     // dn: volume moves linearly AGAINST close -> corr -1.
-    val closes = Seq(100.0, 110.0, 99.0, 120.0, 108.0, 131.0)
+    val closes = (0 until 23).map(i => 100.0 + (i * 37 % 41))
     val rows =
       closes.zipWithIndex.map { case (c, i) =>
         Row("up", day(i + 1), c, (c * 100).toLong) } ++
       closes.zipWithIndex.map { case (c, i) =>
         Row("dn", day(i + 1), c, (30000 - c * 100).toLong) }
-    val out = Correlation.rollingPriceVolumeCorr(df(vSchema, rows: _*), 3)
+    val out = Correlation.rollingPriceVolumeCorr(df(vSchema, rows: _*))
       .as[(String, java.sql.Date, Double)].collect()
-    // 6 rows per symbol, window 3 -> 4 full frames each
+    // 23 rows per symbol, window 20 -> 4 full frames each
     out.count(_._1 == "up") shouldBe 4
     out.count(_._1 == "dn") shouldBe 4
     out.filter(_._1 == "up").foreach(_._3 shouldBe 1.0 +- 1e-9)
@@ -91,7 +91,7 @@ class CorrelationSpec extends SparkSpec {
       StructField("volume", LongType, nullable = false))
     val d = df(vSchema, (1 to 5).map(i =>
       Row("s", day(i), 10.0 + i, (i * 100).toLong)): _*)
-    val plan = Correlation.rollingPriceVolumeCorr(d, 3)
+    val plan = Correlation.rollingPriceVolumeCorr(d)
       .queryExecution.executedPlan.toString
     // the six aggregates must collapse into the running-sum WindowExec
     // plus the offset/row_number pass — NOT one WindowExec per
@@ -104,8 +104,8 @@ class CorrelationSpec extends SparkSpec {
   test("rollingPriceVolumeCorr: zero-variance frame yields NULL") {
     val vSchema = StructType(schema.fields :+
       StructField("volume", LongType, nullable = false))
-    val rows = (1 to 4).map(i => Row("flat", day(i), 50.0, (i * 1000).toLong))
-    val out = Correlation.rollingPriceVolumeCorr(df(vSchema, rows: _*), 3)
+    val rows = (1 to 21).map(i => Row("flat", day(i), 50.0, (i * 1000).toLong))
+    val out = Correlation.rollingPriceVolumeCorr(df(vSchema, rows: _*))
       .collect()
     out.length shouldBe 2
     out.foreach(r => r.isNullAt(2) shouldBe true)
@@ -152,7 +152,7 @@ class CorrelationSpec extends SparkSpec {
       .collect().foreach(_.isNullAt(0) shouldBe true)
   }
 
-  test("returnAutocorr: alternating returns -1, linear drift +1, lag-2 flips sign back") {
+  test("returnAutocorr: alternating returns -1, linear drift +1") {
     def d(i: Int) = java.sql.Date.valueOf(f"2024-01-${i}%02d")
     def rets(rows: (String, Int, String)*) =
       rows.map { case (s, i, r) => (s, d(i), r) }.toDF("symbol", "date", "r")
@@ -171,13 +171,6 @@ class CorrelationSpec extends SparkSpec {
     out.map(o => (o._1, o._2)).toSeq shouldBe Seq(("A", 4L), ("B", 3L))
     out(0)._3 shouldBe -1.0
     out(1)._3 shouldBe 1.0 +- 1e-12
-    // Same alternation at lag 2: pairs are y = x -> +1.
-    val two = rets(
-      ("A", 1, "10"), ("A", 2, "-10"), ("A", 3, "10"),
-      ("A", 4, "-10"), ("A", 5, "10"), ("A", 6, "-10"))
-    Correlation.returnAutocorr(two, lagDays = 2)
-      .select("n_pairs", "autocorr")
-      .as[(Long, Double)].collect().toSeq shouldBe Seq((4L, 1.0))
   }
 
   test("returnAutocorr: zero-variance NULL, short series dropped by minDays") {
@@ -304,13 +297,16 @@ class CorrelationSpec extends SparkSpec {
   }
 
   test("seasonalMannKendall: window governor, validation, partition invariance") {
-    val rows = (1 to 28).map(i => ("S", i, 7L * i))
-    // windowRows = 14 keeps the last 14 days -> 7 slots x C(2,2)=1 pair
-    val out = Correlation.seasonalMannKendall(mk(rows: _*), "v",
-      windowRows = 14).collect().head
-    out.getAs[Long]("n_pairs") shouldBe 7L
+    // 98 days, falling for the first 14: the 84-row window keeps only
+    // the rising last 84 days -> 7 slots x C(12,2) = 462 pairs, all up
+    val rows = (1 to 98).map(i => ("S", i, if (i <= 14) 1000L - i else 7L * i))
+    val out = Correlation.seasonalMannKendall(mk(rows: _*), "v").collect().head
+    out.getAs[Long]("n_pairs") shouldBe 462L
+    out.getAs[Long]("s_stat") shouldBe 462L
+    // the overflow guard validates the window's magnitudes
     an[IllegalArgumentException] should be thrownBy
-      Correlation.seasonalMannKendall(mk(rows: _*), "v", period = 1)
+      Correlation.seasonalMannKendall(
+        mk(("G", 1, 0L), ("G", 8, 3000000000000L)), "v")
     val d = mk(rows ++ (1 to 28).map(i => ("Z", i, 1000L - 3L * i)): _*)
     assertSameRows(Correlation.seasonalMannKendall(d, "v"),
       Correlation.seasonalMannKendall(d.repartition(7), "v"))
@@ -339,7 +335,7 @@ class CorrelationSpec extends SparkSpec {
     // early falling segment is outside the window, so S stays maximal
     val rows = (1 to 40).map(i => ("G", i, 1000L - i)) ++
       (41 to 100).map(i => ("G", i, 1000L + i))
-    val out = Correlation.mannKendall(mk(rows: _*), "v", windowRows = 60)
+    val out = Correlation.mannKendall(mk(rows: _*), "v")
       .collect().head
     out.getAs[Long]("n_pairs") shouldBe 1770L
     out.getAs[Long]("s_stat") shouldBe 1770L
@@ -352,24 +348,32 @@ class CorrelationSpec extends SparkSpec {
   }
 
   test("historicalVaR: hand tail on 20 returns, ES at-or-beyond VaR") {
-    // returns -10, -9, ..., +9 (constructed via closes); alpha=100:
-    // k = ceil(20*0.1) = 2 -> VaR = 2nd worst, ES = mean of 2 worst
-    val rets = ((-10 to 9).map(_.toDouble)).zipWithIndex.map {
-      case (r, i) => Row("A", day(i + 1),
+    // the 5% tail: A's returns -10, -9, ..., +9 give k = ceil(20*0.05)
+    // = 1 -> VaR = ES = the worst; B's -20 .. +19 give k = ceil(40*0.05)
+    // = 2 -> VaR = 2nd worst, ES = mean of the 2 worst
+    def rets(sym: String, lo: Int, hi: Int) = (lo to hi).zipWithIndex.map {
+      case (r, i) => Row(sym, new java.sql.Date(i * 86400000L),
         new java.math.BigDecimal(r).setScale(6))
     }
     val schema6 = StructType(Seq(
       StructField("symbol", StringType, nullable = false),
       StructField("date", DateType, nullable = false),
       StructField("ret", DecimalType(18, 6), nullable = false)))
-    val out = Correlation.historicalVaR(df(schema6, rets: _*),
-      alphaPermille = 100L).collect().head
-    out.getAs[Long]("n_days") shouldBe 20L
-    out.getAs[Long]("tail_k") shouldBe 2L
-    out.getAs[Double]("var_ret") shouldBe -9.0
-    out.getAs[Double]("es_ret") shouldBe -9.5
+    val out = Correlation.historicalVaR(
+      df(schema6, rets("A", -10, 9) ++ rets("B", -20, 19): _*))
+      .collect().map(r => r.getAs[String]("symbol") -> r).toMap
+    out("A").getAs[Long]("n_days") shouldBe 20L
+    out("A").getAs[Long]("tail_k") shouldBe 1L
+    out("A").getAs[Double]("var_ret") shouldBe -10.0
+    out("A").getAs[Double]("es_ret") shouldBe -10.0
+    out("B").getAs[Long]("n_days") shouldBe 40L
+    out("B").getAs[Long]("tail_k") shouldBe 2L
+    out("B").getAs[Double]("var_ret") shouldBe -19.0
+    out("B").getAs[Double]("es_ret") shouldBe -19.5
     // ES is never better than VaR (coherence direction)
-    out.getAs[Double]("es_ret") should be <= out.getAs[Double]("var_ret")
+    out.values.foreach { r =>
+      r.getAs[Double]("es_ret") should be <= r.getAs[Double]("var_ret")
+    }
   }
 
   private val ktSchema = StructType(Seq(
@@ -409,6 +413,86 @@ class CorrelationSpec extends SparkSpec {
       kt((1, 5L, 7L), (2, 5L, 7L)), "x", "y").collect().head
     bt.getAs[Long]("ties_both") shouldBe 1L
     bt.getAs[Long]("ties_x") shouldBe 0L
+  }
+
+  /** Brute-force statistics of one series' last `k` rows, pairing
+    * rows i < j (by day) within the same `slot`: pair count, S and
+    * tie count of x, the lower-median floor-quantized Sen slope, and
+    * the five τ-b classes of (x, y). */
+  private def pairsByHand(rows: Seq[(Long, Long, Long)], k: Int,
+                          slot: Long => Long): Map[String, Long] = {
+    val recent = rows.sortBy(_._1).takeRight(k)
+    val pairs = for {
+      i <- recent.indices; j <- recent.indices
+      if i < j && slot(recent(i)._1) == slot(recent(j)._1)
+    } yield (recent(i), recent(j))
+    def sgn(a: Long, b: Long) = java.lang.Long.signum(b - a)
+    val sx = pairs.map { case (a, b) => sgn(a._2, b._2) }
+    val sy = pairs.map { case (a, b) => sgn(a._3, b._3) }
+    val slopes = pairs.map { case (a, b) =>
+      Math.floorDiv((b._2 - a._2) * 1000000L, b._1 - a._1) }.sorted
+    val both = sx.zip(sy)
+    Map("n_pairs" -> pairs.size.toLong, "s_stat" -> sx.sum.toLong,
+      "n_ties" -> sx.count(_ == 0).toLong,
+      "sen_slope_e6" -> slopes((slopes.size + 1) / 2 - 1),
+      "concordant" -> both.count { case (a, b) => a * b == 1 }.toLong,
+      "discordant" -> both.count { case (a, b) => a * b == -1 }.toLong,
+      "ties_x" -> both.count { case (a, b) => a == 0 && b != 0 }.toLong,
+      "ties_y" -> both.count { case (a, b) => a != 0 && b == 0 }.toLong,
+      "ties_both" -> both.count { case (a, b) => a == 0 && b == 0 }.toLong)
+  }
+
+  test("property: the recency pair tests equal a brute-force O(K^2) count") {
+    val pSchema = StructType(Seq(
+      StructField("symbol", StringType, nullable = false),
+      StructField("date", DateType, nullable = false),
+      StructField("x", LongType, nullable = false),
+      StructField("y", LongType, nullable = false)))
+    // 1970-01-05 (epoch day 4) is a Monday: the weekday slot of day t
+    val weekday = (t: Long) => Math.floorMod(t - 4L, 7L)
+    for (seed <- Seq(7L, 11L)) {
+      val rnd = new scala.util.Random(seed)
+      // per symbol 100-139 rows (past both governors, so the recency
+      // cut applies), calendar gaps of 1-3 days, a rising, a falling
+      // and a flat drift under small noise (ties in x, in y and in both)
+      val series = Seq("A" -> 3, "B" -> -2, "C" -> 0).map { case (sym, drift) =>
+        var t = 3L + rnd.nextInt(5)
+        sym -> (0 until 100 + rnd.nextInt(40)).map { i =>
+          t += (if (rnd.nextInt(4) == 0) 2 + rnd.nextInt(3) else 1)
+          (t, (i * drift / 5 + rnd.nextInt(9) - 4).toLong, rnd.nextInt(6).toLong)
+        }
+      }
+      val d = df(pSchema, series.flatMap { case (sym, rows) =>
+        rows.map { case (t, x, y) =>
+          Row(sym, java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(t)), x, y)
+        }
+      }: _*)
+      def bySymbol(out: DataFrame, cols: Seq[String]) =
+        out.collect().map(r => r.getAs[String]("symbol") ->
+          cols.map(c => c -> r.getAs[Long](c)).toMap).toMap
+      val mkCols = Seq("n_pairs", "s_stat", "n_ties", "sen_slope_e6")
+      val ktCols = Seq("n_pairs", "concordant", "discordant", "ties_x",
+        "ties_y", "ties_both")
+      val mk = bySymbol(Correlation.mannKendall(d, "x"), mkCols)
+      val smk = bySymbol(Correlation.seasonalMannKendall(d, "x"), mkCols)
+      val kt = Correlation.kendallTau(d, "x", "y").collect()
+        .map(r => r.getAs[String]("symbol") -> r).toMap
+      series.foreach { case (sym, rows) =>
+        withClue(s"seed $seed, symbol $sym: ") {
+          val plain = pairsByHand(rows, 60, _ => 0L)
+          mk(sym) shouldBe plain.filter(kv => mkCols.contains(kv._1))
+          smk(sym) shouldBe pairsByHand(rows, 84, weekday)
+            .filter(kv => mkCols.contains(kv._1))
+          ktCols.foreach(c => kt(sym).getAs[Long](c) shouldBe plain(c))
+          val n0 = plain("n_pairs").toDouble
+          val dx = n0 - (plain("ties_x") + plain("ties_both")).toDouble
+          val dy = n0 - (plain("ties_y") + plain("ties_both")).toDouble
+          kt(sym).getAs[Double]("tau_b") shouldBe
+            (plain("concordant") - plain("discordant")).toDouble /
+              (math.sqrt(dx) * math.sqrt(dy))
+        }
+      }
+    }
   }
 
   test("pettittTest: clean step series locates the jump with the brute-force U") {

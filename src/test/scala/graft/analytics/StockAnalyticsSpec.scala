@@ -29,36 +29,37 @@ class StockAnalyticsSpec extends SparkSpec {
   test("dailyMetrics groups per (date,symbol) with source count (A3)") {
     val out = StockAnalytics.dailyMetrics(
       df(schema, bar("2024-01-01", "A", 10.0), bar("2024-01-01", "A", 12.0, src = "yh"),
-        bar("2024-01-02", "A", 11.0)),
-      pick = min(_)).orderBy("date")
+        bar("2024-01-02", "A", 11.0))).orderBy("date")
     val rows = out.collect()
     rows should have length 2
     rows(0).getAs[Double]("close_price") shouldBe 10.0
     rows(0).getAs[Long]("source_count") shouldBe 2L
   }
 
+  /** Symbol A closing 10, 20, ..., 10·n on consecutive January days. */
+  private def risingBars(n: Int) =
+    df(schema, (1 to n).map(i => bar(f"2024-01-$i%02d", "A", 10.0 * i)): _*)
+
   test("movingAverages: SQL frame semantics average available rows (W2)") {
-    val out = StockAnalytics.movingAverages(
-      df(schema, bar("2024-01-01", "A", 10.0), bar("2024-01-02", "A", 20.0),
-        bar("2024-01-03", "A", 30.0)),
-      pick = min(_), windows = Seq(2)).orderBy("date").collect()
-    out.map(_.getAs[Double]("ma_2d")).toSeq shouldBe Seq(10.0, 15.0, 25.0)
+    val out = StockAnalytics.movingAverages(risingBars(7)).orderBy("date").collect()
+    out.map(_.getAs[Double]("ma_5d")).toSeq shouldBe
+      Seq(10.0, 15.0, 20.0, 25.0, 30.0, 40.0, 50.0)
+    out.map(_.getAs[Double]("ma_10d")).last shouldBe 40.0
   }
 
   test("movingAveragesPandasStyle NULLs until a full window exists (W1)") {
-    val out = StockAnalytics.movingAveragesPandasStyle(
-      df(schema, bar("2024-01-01", "A", 10.0), bar("2024-01-02", "A", 20.0),
-        bar("2024-01-03", "A", 30.0)),
-      pick = min(_), windows = Seq(2)).orderBy("date").collect()
-    out(0).isNullAt(out(0).fieldIndex("ma_2d")) shouldBe true
-    out(1).getAs[Double]("ma_2d") shouldBe 15.0
-    out(2).getAs[Double]("ma_2d") shouldBe 25.0
+    val out = StockAnalytics.movingAveragesPandasStyle(risingBars(6))
+      .orderBy("date").collect()
+    out.take(4).foreach(r => r.isNullAt(r.fieldIndex("ma_5d")) shouldBe true)
+    out(4).getAs[Double]("ma_5d") shouldBe 30.0
+    out(5).getAs[Double]("ma_5d") shouldBe 40.0
+    out.foreach(r => r.isNullAt(r.fieldIndex("ma_10d")) shouldBe true)
   }
 
   test("moving average pre-agg collapses multi-source rows first (W2 CTE semantics)") {
     val out = StockAnalytics.movingAverages(
-      df(schema, bar("2024-01-01", "A", 10.0), bar("2024-01-01", "A", 99.0, src = "yh")),
-      pick = min(_), windows = Seq(5)).collect()
+      df(schema, bar("2024-01-01", "A", 10.0), bar("2024-01-01", "A", 99.0, src = "yh")))
+      .collect()
     out should have length 1 // one row per (symbol, date), not per source
     out(0).getAs[Double]("ma_5d") shouldBe 10.0
   }
@@ -68,8 +69,8 @@ class StockAnalyticsSpec extends SparkSpec {
       df(schema,
         bar("2024-01-01", "A", 100.0), bar("2024-01-01", "A", 110.0, src = "yh"), // 10% > 2%
         bar("2024-01-02", "B", 100.0), bar("2024-01-02", "B", 100.5, src = "yh"), // 0.5%
-        bar("2024-01-03", "C", 50.0)), // single source
-      minPctDiff = 2.0).collect()
+        bar("2024-01-03", "C", 50.0))) // single source
+      .collect()
     out should have length 1
     out(0).getAs[String]("symbol") shouldBe "A"
     val details = out(0).getSeq[Row](out(0).fieldIndex("source_details"))
@@ -105,12 +106,11 @@ class StockAnalyticsSpec extends SparkSpec {
     val updated = base.union(staging)
     // poison the untouched date's rollup row: if the splice recomputed
     // it, the poison would be healed — incrementality demands it survive
-    val poisoned = StockAnalytics.dailyMetrics(base, pick = min(_))
+    val poisoned = StockAnalytics.dailyMetrics(base)
       .withColumn("close_price",
         when(col("date") === lit("2024-01-01").cast("date"), lit(-777.0))
           .otherwise(col("close_price")))
-    val out = StockAnalytics.incrementalDailyMetrics(
-      poisoned, updated, staging, pick = min(_))
+    val out = StockAnalytics.incrementalDailyMetrics(poisoned, updated, staging)
       .orderBy("date").collect()
     out(0).getAs[Double]("close_price") shouldBe -777.0 // untouched: spliced, not recomputed
     out(1).getAs[Double]("close_price") shouldBe 20.0   // touched: recomputed from base+staging
@@ -244,7 +244,7 @@ class StockAnalyticsSpec extends SparkSpec {
       ("S", java.sql.Date.valueOf(d), if (i % 7 == 2) 103.0 else 100.0)
     }
     val out = graft.analytics.StockAnalytics.seasonalDecompose(
-      rows.toDF("symbol", "date", "close"), period = 7)
+      rows.toDF("symbol", "date", "close"))
       .orderBy("date").collect()
     out.length shouldBe 28
     // edges: first/last 3 rows have NULL trend + residual, seasonal set
@@ -279,7 +279,7 @@ class StockAnalyticsSpec extends SparkSpec {
       ("S", java.sql.Date.valueOf(java.time.LocalDate.of(2024, 3, 4).plusDays(i)), 50.0)
     }
     val out = graft.analytics.StockAnalytics.seasonalDecompose(
-      rows.toDF("symbol", "date", "close"), period = 7)
+      rows.toDF("symbol", "date", "close"))
       .filter(col("trend_micro").isNotNull).collect()
     out.foreach { r =>
       r.getLong(3) shouldBe 50000000L
@@ -314,17 +314,13 @@ class StockAnalyticsSpec extends SparkSpec {
       graft.analytics.StockAnalytics.decompositionStrength(d.repartition(7)))
   }
 
-  test("seasonalDecompose: rejects even/short periods; invariant under partitioning") {
+  test("seasonalDecompose is invariant under input partitioning") {
     import spark.implicits._
     val rows = (0 until 30).map { i =>
       ("S", java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i)),
         100.0 + i % 5)
     }
     val d = rows.toDF("symbol", "date", "close")
-    an[IllegalArgumentException] should be thrownBy
-      graft.analytics.StockAnalytics.seasonalDecompose(d, period = 6)
-    an[IllegalArgumentException] should be thrownBy
-      graft.analytics.StockAnalytics.seasonalDecompose(d, period = 1)
     assertSameRows(
       graft.analytics.StockAnalytics.seasonalDecompose(d),
       graft.analytics.StockAnalytics.seasonalDecompose(d.repartition(7)))

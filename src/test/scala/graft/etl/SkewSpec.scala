@@ -156,20 +156,6 @@ class SkewSpec extends SparkSpec {
     }
   }
 
-  test("approximate distinct counts stay within tolerance of exact") {
-    val bars = graft.SparkEntry.mergedBars(spark, "/root/testdata/sf0.001")
-    val approx = graft.analytics.StockAnalytics.qualityMetricsApprox(bars)
-      .select("unique_dates", "unique_symbols", "unique_sources")
-      .collect()(0)
-    val exact = bars.agg(
-      countDistinct(col("date")), countDistinct(col("symbol")),
-      countDistinct(col("data_source"))).collect()(0)
-    for (i <- 0 until 3) {
-      val a = approx.getLong(i).toDouble
-      val e = exact.getLong(i).toDouble
-      math.abs(a - e) / e should be <= 0.05
-    }
-  }
 test("joinCardinality: per-key products, shares, top-k order, null exclusion") {
     import spark.implicits._
     val l = (Seq.fill(6)("a") ++ Seq.fill(2)("b") ++ Seq("c") ++

@@ -102,8 +102,7 @@ class PipelineSpec extends SparkSpec {
       .select(merged.columns.map(col): _*)
     val after = graft.etl.Upsert.upsert(target, staging,
       graft.etl.Schemas.mergeKey)
-    val twin = graft.analytics.StockAnalytics.dailyMetrics(after,
-      pick = min(_), avgF = graft.core.Exact.exactAvg(_, 4))
+    val twin = graft.analytics.StockAnalytics.dailyMetrics(after)
     assertSameRows(out, twin)
   }
 
